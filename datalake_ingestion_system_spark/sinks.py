@@ -24,6 +24,7 @@ import os
 import re as _re_mod
 import time as _time_mod
 import uuid
+from contextlib import contextmanager
 from functools import reduce, wraps
 
 from pyspark.sql import DataFrame, SparkSession
@@ -2493,12 +2494,6 @@ class TxnLogFormat(TableFormat):
                         props[k] = v
         return props
 
-    #: property keys writers adopt from the table (everything else —
-    #: isolation, checkpoint cadence — is a per-writer choice)
-    _TABLE_PROPS = ("constraints", "bloom_filter_columns",
-                    "change_data_feed", "generated_columns",
-                    "identity_columns")
-
     @staticmethod
     def _resolve_protocol(commits: list[dict]) -> dict:
         """The table's protocol — ``{"reader": set, "writer": set}`` of
@@ -4796,52 +4791,6 @@ class TxnLogFormat(TableFormat):
             out.update(a.get("defaults") or {})
         return out
 
-    def _surviving_dv_rel(self, spark: SparkSession, path: str,
-                          commits: list[dict],
-                          hot: list[str]) -> str | None:
-        """Consolidated deletion-vector dir for a targeted
-        ``rewrite_files`` commit: entries referencing the rewritten (or
-        already-retired) files are MATERIALIZED by the rewrite and
-        retire with it; the rest stay live, consolidated into one
-        staged dir (``rewrite_files`` resolution replaces the whole DV
-        set).  None when nothing survives."""
-        dvs = self._resolve_dvs(commits)
-        if not dvs:
-            return None
-        dv_all = reduce(
-            DataFrame.unionByName,
-            [spark.read.parquet(os.path.join(path, d)) for d in dvs])
-        already = sorted(self._resolve_removed_files(commits))
-        remaining = (dv_all.filter(~F.col("_dv_file").isin(sorted(hot)))
-                     .filter(~F.col("_dv_file").isin(already))
-                     .distinct())
-        if not remaining.head(1):
-            return None
-        return self._stage(remaining, path, None, check=False,
-                           index=False)
-
-    def _stage_cdf(self, path: str, changed: DataFrame,
-                   rec: dict) -> None:
-        """Stage the CHANGE DATA FEED sidecar (Delta ``_change_data``
-        parity): ``changed`` is the op's exact per-row change set, data
-        columns plus ``_change_type`` — written once, recorded in the
-        commit as ``cdf_dir`` + ``cdf_files`` so the change-feed planner
-        emits it without a storage listing.  The sidecar is NOT table
-        data: it never becomes a live entry, contributes no skipping
-        stats, and is vacuum-protected exactly like a vector dir.
-        Callers must have passed ``_check_cdf_reserved_columns``."""
-        rel = self._stage(changed, path, None, check=False, index=False)
-        rec["cdf_dir"] = rel
-        rec["cdf_files"] = self._pending_files(path, rel)
-
-    def _hot_files(self, matching: DataFrame) -> tuple[list[str], int]:
-        """(files holding matching live rows, matching-row count) in ONE
-        Spark job — the targeting step of file-targeted DELETE/UPDATE."""
-        per_file = matching.groupBy("_dv_file") \
-            .agg(F.count("*").alias("_n")).collect()
-        return (sorted(r["_dv_file"] for r in per_file),
-                int(sum(r["_n"] for r in per_file)))
-
     @_conflict_retryable
     def delete_where(self, spark: SparkSession, path: str,
                      predicate: str) -> int:
@@ -4866,80 +4815,7 @@ class TxnLogFormat(TableFormat):
         interleave raises ``ConcurrentWriteError``.  Constraints are
         not re-validated (deleting rows cannot introduce a violation).
         Returns rows deleted."""
-        commits = self._commits(path)
-        if not commits:
-            raise FileNotFoundError(f"no committed table at {path}")
-        head = commits[-1]["version"]
-        self._check_dv_reserved_columns(spark, path)
-        pred = F.expr(predicate)
-        track = bool(self._resolve_properties(commits).get(
-            "row_tracking"))
-        # stats-pruned candidate scan, SINGLE-PASS when small (round 17,
-        # guide §1.2/§6): the candidate files are read once without the
-        # row filter and cached, so the hot-file discovery, the survivor
-        # restage, and the change-feed pass share one scan; large or
-        # inexact candidate sets keep the two-pass shape (narrow probe +
-        # exact hot-file scan) — see ``_fuse_candidates``
-        plan_info: dict = {}
-        cand = self.read(spark, path, where=predicate, _with_pos=True,
-                         with_row_ids=track, _prune_only=True,
-                         _plan_info=plan_info)
-        if "_dv_file" not in cand.columns:
-            return 0  # zero-live-row table: nothing to delete
-        fused = self._fuse_candidates(
-            plan_info, self._effective_config(commits)[2], track)
-        if fused:
-            cand = cand.persist()
-        hot, n_del = self._hot_files(cand.filter(pred))
-        if n_del == 0:
-            if fused:
-                cand.unpersist()
-            return 0
-        # exact-scan the hot files; their SURVIVORS restage — carrying
-        # their stable row ids as the materialized column when the
-        # table tracks rows (physical movement must not change identity)
-        cur_hot = (cand.filter(F.col("_dv_file").isin(hot)) if fused
-                   else self.read(spark, path, _with_pos=True,
-                                  _only_files=set(hot),
-                                  with_row_ids=track))
-        survivors = (cur_hot.filter(~pred | pred.isNull())
-                     .drop("_dv_file", "_dv_pos"))
-        if track:
-            survivors = survivors.withColumnRenamed(
-                "_row_id", self._ROW_ID_COL)
-        rec = {"action": "rewrite_files",
-               "removed_files": hot,
-               # Delta's dataChange flag: unlike compaction (bytes move,
-               # rows identical), this rewrite CHANGES rows — streams and
-               # the change feed must not skip it silently
-               "data_change": True,
-               "_row_track": track,
-               "partition_col": None, "partitions": [],
-               "schema": self._logical_schema_json(survivors.schema)}
-        self._stage_rewrite(survivors, path, commits, rec, check=False)
-        if self._effective_config(commits)[2]:
-            cdf_rows = (cur_hot.filter(F.coalesce(pred, F.lit(False)))
-                        .drop("_dv_file", "_dv_pos"))
-            if track:
-                # delete rows carry their id (materialized __row_id):
-                # a row-id mirror needs the identity of what vanished
-                cdf_rows = cdf_rows.withColumnRenamed(
-                    "_row_id", self._ROW_ID_COL)
-            self._check_cdf_reserved_columns(
-                [c for c in cdf_rows.columns if c != self._ROW_ID_COL])
-            self._stage_cdf(path, cdf_rows
-                            .withColumn("_change_type", F.lit("delete")),
-                            rec)
-        dv_rel = self._surviving_dv_rel(spark, path, commits, hot)
-        if dv_rel is not None:
-            rec["dv_dir"] = dv_rel
-        try:
-            self._commit(path, rec, expected_version=head + 1,
-                         base_schema=self._resolve_schema(commits))
-        finally:
-            if fused:
-                cand.unpersist()
-        return n_del
+        return self._rewrite_where(spark, path, predicate)
 
     @_conflict_retryable
     def delete_where_dv(self, spark: SparkSession, path: str,
@@ -5012,6 +4888,24 @@ class TxnLogFormat(TableFormat):
                 f"table columns {sorted(bad)} are reserved for deletion "
                 "vectors; rename them before using merge-on-read ops")
 
+    def _check_update_targets(self, commits: list[dict], cols,
+                              assignments: dict[str, str]) -> None:
+        """UPDATE SET may assign only data columns of the table: never
+        the scan's ``_dv_*``/``_row_id`` identity columns, never a
+        GENERATED ALWAYS identity column."""
+        unknown = [c for c in assignments
+                   if c not in cols or c.startswith("_dv_")
+                   or c == "_row_id"]
+        if unknown:
+            raise ValueError(
+                f"UPDATE SET references columns not in the table: {unknown}")
+        ident_set = sorted(set(self._resolve_properties(commits).get(
+            "identity_columns") or {}) & set(assignments))
+        if ident_set:
+            raise ValueError(
+                f"columns {ident_set} are GENERATED ALWAYS AS IDENTITY "
+                "— UPDATE cannot assign them")
+
     def _check_cdf_reserved_columns(self, cols) -> None:
         """With the change data feed on, the CDF metadata names must not
         collide with data columns — the sidecar tags rows with
@@ -5052,17 +4946,7 @@ class TxnLogFormat(TableFormat):
                             with_row_ids=track)
         if "_dv_file" not in current.columns:
             return 0  # zero-live-row table: nothing to update
-        unknown = [c for c in assignments
-                   if c not in current.columns or c.startswith("_dv_")]
-        if unknown:
-            raise ValueError(
-                f"UPDATE SET references columns not in the table: {unknown}")
-        ident_set = sorted(set(self._resolve_properties(commits).get(
-            "identity_columns") or {}) & set(assignments))
-        if ident_set:
-            raise ValueError(
-                f"columns {ident_set} are GENERATED ALWAYS AS IDENTITY "
-                "— UPDATE cannot assign them")
+        self._check_update_targets(commits, current.columns, assignments)
         matching = current.filter(F.expr(predicate))
         n_upd = matching.count()
         if n_upd == 0:
@@ -5109,97 +4993,68 @@ class TxnLogFormat(TableFormat):
         other interleave raises ``ConcurrentWriteError``.  Constraints,
         if configured, re-validate the restaged rows (the only new
         data).  Returns rows updated."""
+        return self._rewrite_where(spark, path, predicate, assignments)
+
+    def _rewrite_where(self, spark: SparkSession, path: str,
+                       predicate: str,
+                       assignments: dict[str, str] | None = None) -> int:
+        """Body of ``delete_where`` (``assignments`` None) and
+        ``update_where``: rewrite the files holding rows that match
+        ``predicate`` (a NULL predicate leaves a row as it is, SQL
+        semantics).  Returns the number of matching rows."""
         commits = self._commits(path)
         if not commits:
             raise FileNotFoundError(f"no committed table at {path}")
-        head = commits[-1]["version"]
         self._check_dv_reserved_columns(spark, path)
         pred = F.expr(predicate)
+        hit = F.coalesce(pred, F.lit(False))
         track = bool(self._resolve_properties(commits).get(
             "row_tracking"))
-        # same SINGLE-PASS candidate scan as delete_where (round 17):
-        # one cached read serves hot-file discovery, the rewrite, and
-        # the change-feed pre/post images when the candidate set is
-        # provably small; two-pass otherwise
-        plan_info: dict = {}
-        cand = self.read(spark, path, where=predicate, _with_pos=True,
-                         with_row_ids=track, _prune_only=True,
-                         _plan_info=plan_info)
-        if "_dv_file" not in cand.columns:
-            return 0  # zero-live-row table: nothing to update
-        unknown = [c for c in assignments
-                   if c not in cand.columns or c.startswith("_dv_")
-                   or c == "_row_id"]
-        if unknown:
-            raise ValueError(
-                f"UPDATE SET references columns not in the table: {unknown}")
-        ident_set = sorted(set(self._resolve_properties(commits).get(
-            "identity_columns") or {}) & set(assignments))
-        if ident_set:
-            raise ValueError(
-                f"columns {ident_set} are GENERATED ALWAYS AS IDENTITY "
-                "— UPDATE cannot assign them")
-        fused = self._fuse_candidates(
-            plan_info, self._effective_config(commits)[2], track)
-        if fused:
-            cand = cand.persist()
-        hot, n_upd = self._hot_files(cand.filter(pred))
-        if n_upd == 0:
-            if fused:
-                cand.unpersist()
-            return 0
-        cur_hot = (cand.filter(F.col("_dv_file").isin(hot)) if fused
-                   else self.read(spark, path, _with_pos=True,
-                                  _only_files=set(hot),
-                                  with_row_ids=track))
-        # SQL UPDATE semantics: a NULL predicate leaves the row unchanged
-        hit = F.coalesce(pred, F.lit(False))
-        tcols = [c for c in cur_hot.columns
-                 if c not in ("_dv_file", "_dv_pos", "_row_id")]
-        types = dict(cur_hot.dtypes)
-        updated = cur_hot.select(*(
-            [(F.when(hit, F.expr(assignments[c]).cast(types[c]))
-              .otherwise(F.col(c)).alias(c)) if c in assignments
-             else F.col(c)
-             for c in tcols]
-            # an UPDATE changes values, never identity: the rewritten
-            # row keeps its id (Delta row-tracking UPDATE semantics)
-            + ([F.col("_row_id").alias(self._ROW_ID_COL)]
-               if track else [])))
-        rec = {"action": "rewrite_files",
-               "removed_files": hot,
-               "data_change": True,  # rows changed, not just bytes moved
-               "_row_track": track,
-               "partition_col": None, "partitions": [],
-               "schema": self._logical_schema_json(updated.schema)}
-        self._stage_rewrite(updated, path, commits, rec)  # constraints run
-        if self._effective_config(commits)[2]:
-            self._check_cdf_reserved_columns(tcols)
-            # on a row-tracked table the sidecar rows CARRY their row id
-            # (materialized ``__row_id`` — the CDF reader's rowIds
-            # option coalesces it): pre/post images of the same logical
-            # row share the id, the lineage key that stays joinable
-            # even when the update REWRITES a business-key column
+        cdf_on = self._effective_config(commits)[2]
+        with self._cow_candidates(spark, path, commits, predicate,
+                                  track) as (cand, hot_rows):
+            if "_dv_file" not in cand.columns:
+                return 0  # zero-live-row table: nothing to change
+            if assignments is not None:
+                self._check_update_targets(commits, cand.columns,
+                                           assignments)
+            # the targeting step: files holding matching live rows and
+            # the matching-row count, in ONE Spark job
+            per_file = (cand.filter(pred).groupBy("_dv_file")
+                        .agg(F.count("*").alias("_n")).collect())
+            hot = sorted(r["_dv_file"] for r in per_file)
+            if not hot:
+                return 0
+            cur_hot = hot_rows(hot)
+            tcols = [c for c in cur_hot.columns
+                     if c not in ("_dv_file", "_dv_pos", "_row_id")]
+            # restaged rows keep their stable ids (moving a row, or an
+            # UPDATE of its values, never changes its identity); the
+            # sidecar rows carry them too, so a row-id mirror knows what
+            # a delete removed, and pre/post images of one row share the
+            # id even when the update rewrites a business-key column
             idc = ([F.col("_row_id").alias(self._ROW_ID_COL)]
                    if track else [])
-            pre = (cur_hot.filter(hit).select(*tcols, *idc)
-                   .withColumn("_change_type", F.lit("update_preimage")))
-            post = cur_hot.filter(hit).select(*([
-                (F.expr(assignments[c]).cast(types[c]).alias(c))
-                if c in assignments else F.col(c) for c in tcols]
-                + idc)) \
-                .withColumn("_change_type", F.lit("update_postimage"))
-            self._stage_cdf(path, pre.unionByName(post), rec)
-        dv_rel = self._surviving_dv_rel(spark, path, commits, hot)
-        if dv_rel is not None:
-            rec["dv_dir"] = dv_rel
-        try:
-            self._commit(path, rec, expected_version=head + 1,
-                         base_schema=self._resolve_schema(commits))
-        finally:
-            if fused:
-                cand.unpersist()
-        return n_upd
+            if assignments is None:
+                new_data = cur_hot.filter(~hit).select(*tcols, *idc)
+                images = [(tcols, "delete")]
+            else:
+                types = dict(cur_hot.dtypes)
+                val = {c: F.expr(e).cast(types[c])
+                       for c, e in assignments.items()}
+                new_data = cur_hot.select(*(
+                    [F.when(hit, val[c]).otherwise(F.col(c)).alias(c)
+                     if c in val else F.col(c) for c in tcols] + idc))
+                images = [(tcols, "update_preimage"),
+                          ([val[c].alias(c) if c in val else F.col(c)
+                            for c in tcols], "update_postimage")]
+            cdf = ([(cur_hot.filter(hit).select(*cols, *idc), kind)
+                    for cols, kind in images] if cdf_on else None)
+            # a delete cannot introduce a constraint violation; an
+            # update re-validates the restaged rows (the only new data)
+            self._commit_rewrite(spark, path, commits, new_data, hot,
+                                 track, cdf, check=assignments is not None)
+            return int(sum(r["_n"] for r in per_file))
 
     #: max distinct source merge-key tuples collected for exact IN-list
     #: file pruning; larger CDC batches degrade to per-key min/max
@@ -5216,15 +5071,11 @@ class TxnLogFormat(TableFormat):
     #: read-plan construction (and every change-feed pass re-reads it
     #: free); for an unprunable predicate over a 100 TB table it would
     #: materialize the table, so those fall back to the classic two-pass
-    #: shape (narrow probe + exact hot-file scan).  The byte cap is
-    #: env-tunable for real clusters (``SPARK_GRAFT_COW_FUSE_MAX_BYTES``;
-    #: executors hold the cache, so scale it with aggregate memory).
+    #: shape (narrow probe + exact hot-file scan).  Both caps are
+    #: constants, not options; the cache lives on the executors, so the
+    #: byte cap stays well under any executor's storage memory.
     _FUSE_MAX_FILES = 1024
-
-    @staticmethod
-    def _fuse_bytes_cap() -> int:
-        return int(os.environ.get("SPARK_GRAFT_COW_FUSE_MAX_BYTES",
-                                  str(256 << 20)))
+    _FUSE_MAX_BYTES = 256 << 20
 
     @classmethod
     def _fuse_candidates(cls, info: dict, cdf_on: bool,
@@ -5250,15 +5101,128 @@ class TxnLogFormat(TableFormat):
         if not info.get("exact") or paths is None \
                 or len(paths) > cls._FUSE_MAX_FILES:
             return False
-        cap, total = cls._fuse_bytes_cap(), 0
+        total = 0
         for p in paths:
             try:
                 total += os.path.getsize(p)
             except OSError:
                 return False  # let the exact-scan path raise its error
-            if total > cap:
+            if total > cls._FUSE_MAX_BYTES:
                 return False
         return True
+
+    @contextmanager
+    def _cow_candidates(self, spark: SparkSession, path: str,
+                        commits: list[dict], where: str | None,
+                        track: bool):
+        """The candidate scan of one copy-on-write DML call and its
+        cache lifecycle: the stats-pruned ``_prune_only`` scan of
+        ``where``, cached when ``_fuse_candidates`` admits it, and
+        otherwise NARROW (no row ids: only the exact hot-file scan pays
+        the row-id join).  Yields ``(cand, hot_rows)``; ``cand`` lacks
+        ``_dv_file`` when the table holds no live row, ``hot_rows(hot)``
+        returns the live rows of the files ``hot`` — the cached slice,
+        or the exact ``_only_files`` scan when not fused or when ``hot``
+        reaches past the candidates (merge's NOT MATCHED BY SOURCE
+        sweep), which releases the cache.  Every exit releases it."""
+        cdf_on = self._effective_config(commits)[2]
+        info: dict = {}
+
+        def scan(row_ids: bool) -> DataFrame:
+            return self.read(spark, path, where=where, _with_pos=True,
+                             with_row_ids=row_ids, _prune_only=True,
+                             _plan_info=info)
+
+        wide = bool(cdf_on and track)  # the only shape the gate can fuse
+        cand = scan(wide)
+        live = "_dv_file" in cand.columns
+        fused = live and self._fuse_candidates(info, cdf_on, track)
+        if fused:
+            cand = cand.persist()
+            cand_files = {_relfile(p) for p in info["paths"]}
+        elif wide and live:
+            cand = scan(False)  # one more driver-side plan, no job
+
+        def hot_rows(hot: list[str]) -> DataFrame:
+            nonlocal fused
+            if fused and set(hot) <= cand_files:
+                return cand.filter(F.col("_dv_file").isin(hot))
+            if fused:
+                cand.unpersist()
+                fused = False
+            return self.read(spark, path, _with_pos=True,
+                             _only_files=set(hot), with_row_ids=track)
+
+        try:
+            yield cand, hot_rows
+        finally:
+            if fused:
+                cand.unpersist()
+
+    def _commit_rewrite(self, spark: SparkSession, path: str,
+                        commits: list[dict], new_data: DataFrame,
+                        hot: list[str], track: bool,
+                        cdf: list | None, check: bool = True,
+                        evolved_add: dict | None = None,
+                        identity: tuple | None = None) -> None:
+        """Publish a copy-on-write rewrite of the files ``hot`` as ONE
+        ``rewrite_files`` commit at the snapshot's ``head + 1``:
+        ``new_data`` restages (``check`` runs the CHECK constraints),
+        ``cdf`` — ``(rows, change type)`` pairs — stages as the change-
+        feed sidecar, the deletion vectors that survive consolidate.
+        ``identity`` is ``(identity columns, new high watermarks)``
+        when a merge insert allocated values."""
+        if cdf is not None:
+            self._check_cdf_reserved_columns(new_data.columns)
+        rec = {"action": "rewrite_files",
+               "removed_files": hot,
+               # Delta's dataChange flag: unlike compaction (bytes move,
+               # rows identical), this rewrite CHANGES rows — streams and
+               # the change feed must not skip it silently
+               "data_change": True,
+               "_row_track": track,
+               "partition_col": None, "partitions": [],
+               "schema": self._logical_schema_json(new_data.schema)}
+        self._stage_rewrite(new_data, path, commits, rec, check=check)
+        if evolved_add:
+            # record WHICH columns a merge added (source-typed DDL):
+            # _resolve_alters synthesizes the matching alter entry, so
+            # every UNTOUCHED live file — and pre-merge files via the
+            # change feed / time travel — maps the new columns to typed
+            # NULLs instead of failing the strict missing-column check
+            rec["evolved_add"] = evolved_add
+        if cdf is not None:
+            # the CHANGE DATA FEED sidecar (Delta ``_change_data``
+            # parity): the op's exact per-row change set, written once
+            # and recorded as ``cdf_dir`` + ``cdf_files`` so the change-
+            # feed planner emits it without a storage listing.  It is NOT
+            # table data: never a live entry, no skipping stats, vacuum-
+            # protected exactly like a vector dir
+            changed = reduce(DataFrame.unionByName, [
+                rows.withColumn("_change_type", F.lit(kind))
+                for rows, kind in cdf])
+            rec["cdf_dir"] = self._stage(changed, path, None, check=False,
+                                         index=False)
+            rec["cdf_files"] = self._pending_files(path, rec["cdf_dir"])
+        # vectors on rewritten (or already-retired) files materialized
+        # above and retire with them; vectors on untouched files
+        # consolidate into one staged dir and STAY LIVE (rewrite_files
+        # replay replaces the whole vector set)
+        dvs = self._resolve_dvs(commits)
+        if dvs:
+            retired = [*hot, *sorted(self._resolve_removed_files(commits))]
+            remaining = (reduce(DataFrame.unionByName, [
+                spark.read.parquet(os.path.join(path, d)) for d in dvs])
+                .filter(~F.col("_dv_file").isin(retired)).distinct())
+            if remaining.head(1):
+                rec["dv_dir"] = self._stage(remaining, path, None,
+                                            check=False, index=False)
+        ident_cols = None
+        if identity:
+            ident_cols, rec["identity_high"] = identity
+        self._commit(path, rec, expected_version=commits[-1]["version"] + 1,
+                     base_schema=self._resolve_schema(commits),
+                     identity_cols=ident_cols)
 
     @staticmethod
     def _prune_literal(v) -> str | None:
@@ -5332,26 +5296,99 @@ class TxnLogFormat(TableFormat):
         "between distinct interval as cast div".split())
 
     @classmethod
-    def _rewrite_merge_assignment(cls, expr: str, keys: list[str],
-                                  tcols: list[str], source_cols: list[str],
-                                  s_plane: dict[str, str]) -> str:
-        """Rewrite a MERGE ``UPDATE SET col = expr`` VALUE expression
-        onto the merge join plane (round 13 — VERDICT r12 item 4):
-        ``t.x`` → the bare target column, ``s.x`` → its aliased source
-        column, a bare name → its only side (keys resolve to the
-        coalesced join column; a name live on BOTH sides raises Delta's
-        ambiguous-reference error and must be qualified).  All lookups
-        are CASE-INSENSITIVE, matching Spark's resolver (``T.X`` and
-        ``s.Delta`` are legal spellings).  Quoted string literals pass
-        through untouched."""
+    def _rewrite_merge_expr(cls, expr: str, resolve) -> str:
+        """Rewrite a MERGE clause's VALUE expression onto the merge join
+        plane: every column reference — ``t.x``, ``s.x`` (either
+        qualifier case) or a bare name — becomes ``resolve(qual, name)``
+        with ``qual`` one of ``"t"``, ``"s"``, ``None`` (the clause's
+        resolver, ``_merge_resolver``).  SQL keywords and literal words,
+        function names and quoted string literals pass through
+        untouched."""
+        def sub(m) -> str:
+            qual, name = m.group(1), m.group(2)
+            if qual is None and name.lower() in cls._MERGE_EXPR_KEYWORDS:
+                return m.group(0)
+            return resolve(qual.lower() if qual else None, name)
+
+        out = []
+        for i, seg in enumerate(_re_mod.split(r"('(?:[^']|'')*')", expr)):
+            if i % 2:
+                out.append(seg)  # quoted literal
+                continue
+            out.append(_re_mod.sub(
+                r"(?<![\w.`])(?:\b([tTsS])\s*\.\s*)?([A-Za-z_]\w*)\b"
+                r"(?!\s*\()", sub, seg))
+        return "".join(out)
+
+    @staticmethod
+    def _merge_targets(asg: dict[str, str], tcols: list[str],
+                       keys: list[str], ident,
+                       insert: bool = False) -> dict[str, str]:
+        """A MERGE clause's ``{column: expr}`` with every column
+        normalized onto its stored name — CASE-INSENSITIVE, Spark's
+        resolver rule, so ``SET V = ...`` binds and case-variant
+        duplicates still raise.  Unknown and identity columns refuse;
+        so do merge keys as UPDATE SET targets (``insert`` False)."""
+        canon = {c.lower(): c for c in tcols}
+        keyset = {k.lower() for k in keys}
+        identset = {c.lower() for c in ident}
+        what = "MERGE INSERT" if insert else "MERGE assignment"
+        norm: dict[str, str] = {}
+        for c, ex in asg.items():
+            cl = c.lower()
+            # INSERT checks identity first: a declared identity column
+            # may not exist physically yet (allocated on next write), so
+            # the unknown-column check would mask the real error
+            if insert and cl in identset:
+                raise ValueError(
+                    f"column {c!r} is GENERATED ALWAYS AS "
+                    "IDENTITY — merge inserts never supply it")
+            if cl not in canon:
+                raise ValueError(f"{what} targets unknown column {c!r}")
+            if cl in keyset and not insert:
+                raise ValueError(
+                    f"MERGE assignment targets merge key {c!r} — "
+                    "key columns route the upsert and cannot be "
+                    "reassigned")
+            if cl in identset:
+                raise ValueError(
+                    f"column {c!r} is GENERATED ALWAYS AS IDENTITY "
+                    "— merge never reassigns it")
+            if canon[cl] in norm:
+                raise ValueError(
+                    f"duplicate {'MERGE INSERT' if insert else 'MERGE'} "
+                    f"assignment to column {canon[cl]!r}")
+            norm[canon[cl]] = ex
+        return norm
+
+    @staticmethod
+    def _merge_resolver(keys: list[str], tcols: list[str],
+                        source_cols: list[str], s_plane: dict[str, str],
+                        insert: bool = False):
+        """The column resolver of one MERGE clause for
+        ``_rewrite_merge_expr``, CASE-INSENSITIVE like Spark's (``T.X``
+        and ``s.Delta`` are legal): ``s.x`` and bare source names map
+        through ``s_plane`` (the aliased join plane, or identity on the
+        pure-insert path), merge keys to the coalesced join column.  In
+        ``UPDATE SET col = expr`` (round 13) ``t.x`` and bare target
+        names are the target column, and a bare name live on BOTH sides
+        raises Delta's ambiguous-reference error; an ``INSERT VALUES``
+        row (``insert``, round 16) has no target side, so ``t.x`` and
+        bare target-only names refuse loudly."""
         tset = {c.lower() for c in tcols}
         sset = {c.lower() for c in source_cols}
         keyset = {k.lower() for k in keys}
         plane = {c.lower(): v for c, v in s_plane.items()}
+        clause = "MERGE INSERT VALUES" if insert else "MERGE assignment"
 
         def resolve(qual: str | None, name: str) -> str:
             low = name.lower()
             if qual == "t":
+                if insert:
+                    raise ValueError(
+                        f"MERGE INSERT VALUES references t.{name} — an "
+                        "inserted row has no target side; use source "
+                        "columns")
                 if low not in tset:
                     raise ValueError(
                         f"MERGE assignment references t.{name}, not a "
@@ -5360,94 +5397,27 @@ class TxnLogFormat(TableFormat):
             if qual == "s":
                 if low not in sset:
                     raise ValueError(
-                        f"MERGE assignment references s.{name}, not a "
-                        "source column")
+                        f"{clause} references s.{name}, not a source "
+                        "column")
                 return name if low in keyset else plane[low]
             if low in keyset:
                 return name  # equi-joined: one coalesced column
-            if low in tset and low in sset:
-                raise ValueError(
-                    f"ambiguous column {name!r} in MERGE assignment — "
-                    "qualify it as t.{0} or s.{0}".format(name))
-            if low in tset:
-                return name
             if low in sset:
-                return plane[low]
-            return name  # SQL keyword / literal word: untouched
-
-        def sub(m) -> str:
-            qual, name = m.group(1), m.group(2)
-            if qual is None and name.lower() in cls._MERGE_EXPR_KEYWORDS:
-                return m.group(0)
-            return resolve(qual.lower() if qual else None, name)
-
-        out = []
-        for i, seg in enumerate(_re_mod.split(r"('(?:[^']|'')*')", expr)):
-            if i % 2:
-                out.append(seg)  # quoted literal
-                continue
-            out.append(_re_mod.sub(
-                r"(?<![\w.`])(?:\b([tTsS])\s*\.\s*)?([A-Za-z_]\w*)\b"
-                r"(?!\s*\()", sub, seg))
-        return "".join(out)
-
-    @classmethod
-    def _rewrite_insert_assignment(cls, expr: str, keys: list[str],
-                                   tcols: list[str],
-                                   source_cols: list[str],
-                                   s_plane: dict[str, str]) -> str:
-        """Rewrite a MERGE ``INSERT (col, ...) VALUES (expr, ...)``
-        value expression onto the given SOURCE plane (round 16): an
-        insert row has no target side, so ``t.x`` and bare target-only
-        names refuse loudly; ``s.x`` and bare source names map through
-        ``s_plane`` (identity on the pure-insert path, the aliased
-        join plane otherwise); merge keys resolve to the coalesced
-        join column.  Same case-insensitive resolver and quoted-
-        literal discipline as ``_rewrite_merge_assignment``."""
-        tset = {c.lower() for c in tcols}
-        sset = {c.lower() for c in source_cols}
-        keyset = {k.lower() for k in keys}
-        plane = {c.lower(): v for c, v in s_plane.items()}
-
-        def resolve(qual: str | None, name: str) -> str:
-            low = name.lower()
-            if qual == "t":
-                raise ValueError(
-                    f"MERGE INSERT VALUES references t.{name} — an "
-                    "inserted row has no target side; use source "
-                    "columns")
-            if qual == "s":
-                if low not in sset:
+                if low in tset and not insert:
                     raise ValueError(
-                        f"MERGE INSERT VALUES references s.{name}, "
-                        "not a source column")
-                return name if low in keyset else plane[low]
-            if low in keyset:
-                return name
-            if low in sset:
+                        f"ambiguous column {name!r} in MERGE assignment "
+                        "— qualify it as t.{0} or s.{0}".format(name))
                 return plane[low]
             if low in tset:
-                raise ValueError(
-                    f"MERGE INSERT VALUES references target-only "
-                    f"column {name!r} — an inserted row has no target "
-                    "side")
+                if insert:
+                    raise ValueError(
+                        f"MERGE INSERT VALUES references target-only "
+                        f"column {name!r} — an inserted row has no "
+                        "target side")
+                return name
             return name  # SQL keyword / literal word: untouched
 
-        def sub(m) -> str:
-            qual, name = m.group(1), m.group(2)
-            if qual is None and name.lower() in cls._MERGE_EXPR_KEYWORDS:
-                return m.group(0)
-            return resolve(qual.lower() if qual else None, name)
-
-        out = []
-        for i, seg in enumerate(_re_mod.split(r"('(?:[^']|'')*')", expr)):
-            if i % 2:
-                out.append(seg)  # quoted literal
-                continue
-            out.append(_re_mod.sub(
-                r"(?<![\w.`])(?:\b([tTsS])\s*\.\s*)?([A-Za-z_]\w*)\b"
-                r"(?!\s*\()", sub, seg))
-        return "".join(out)
+        return resolve
 
     @_conflict_retryable
     def merge(self, spark: SparkSession, path: str, source: DataFrame,
@@ -5560,7 +5530,6 @@ class TxnLogFormat(TableFormat):
         commits = self._commits(path)
         if not commits:
             raise FileNotFoundError(f"no committed table at {path}")
-        head = commits[-1]["version"]
         ident = self._resolve_properties(commits).get(
             "identity_columns") or {}
         if ident:
@@ -5602,563 +5571,443 @@ class TxnLogFormat(TableFormat):
         # the same — every source key must satisfy it.
         prune = (_key_prune_where if _key_prune_where is not None
                  else self._merge_key_prune_where(source, keys))
-        # SINGLE-PASS probe-and-restage (round 17, guide §1.2/§6): read
-        # the candidate files ONCE without the row filter (pruning is
-        # purely access-path — ``_prune_only``) and, when the candidate
-        # set is provably small (``_fuse_candidates``), cache it: the
-        # probe aggregation, the hot-file rewrite, and every change-feed
-        # pass share ONE scan instead of re-reading the hot files per
-        # consumer.  Large/inexact candidate sets keep the classic
-        # two-pass shape (narrow probe agg + exact hot-file scan).  The
-        # probe below re-applies ``prune`` as a plain filter — row-
-        # equivalent to the old ``read(where=prune)`` form, and every
+        # SINGLE-PASS probe-and-restage when ``_cow_candidates`` fuses
+        # (round 17): the probe aggregation, the hot-file rewrite, and
+        # every change-feed pass share ONE cached candidate scan, read
+        # without the row filter (pruning is purely access-path —
+        # ``_prune_only``).  The probe re-applies ``prune`` as a plain
+        # filter — row-equivalent to ``read(where=prune)``, and every
         # consumer joins on the merge keys, so the unfiltered rows of
         # the cache are never counted.
-        plan_info: dict = {}
-        cand = self.read(spark, path, where=prune, _with_pos=True,
-                         with_row_ids=track, _prune_only=True,
-                         _plan_info=plan_info)
-        empty_target = "_dv_file" not in cand.columns
-        fused = not empty_target and self._fuse_candidates(
-            plan_info, self._effective_config(commits)[2], track)
-        if fused:
-            cand = cand.persist()
-        probe = (cand.filter(F.expr(prune)) if prune is not None
-                 else cand)
-        tcols = [c for c in probe.columns
-                 if c not in ("_dv_file", "_dv_pos", "_row_id")]
-        assignments = matched_update_assignments
-        if assignments is not None:
-            if schema_evolution:
-                raise ValueError(
-                    "matched_update_assignments and schema_evolution "
-                    "are mutually exclusive — evolve with UPDATE SET * "
-                    "or pre-shape the source")
-            # CASE-INSENSITIVE target resolution (Spark's resolver
-            # rule): normalize each assignment onto the stored column
-            # name, so `SET V = ...` binds and case-variant duplicates
-            # still raise
-            canon = {c.lower(): c for c in tcols}
-            keyset = {k.lower() for k in keys}
-            identset = {c.lower() for c in ident}
-            norm: dict[str, str] = {}
-            for c, ex in assignments.items():
-                cl = c.lower()
-                if cl not in canon:
-                    raise ValueError(
-                        f"MERGE assignment targets unknown column {c!r}")
-                if cl in keyset:
-                    raise ValueError(
-                        f"MERGE assignment targets merge key {c!r} — "
-                        "key columns route the upsert and cannot be "
-                        "reassigned")
-                if cl in identset:
-                    raise ValueError(
-                        f"column {c!r} is GENERATED ALWAYS AS IDENTITY "
-                        "— merge never reassigns it")
-                if canon[cl] in norm:
-                    raise ValueError(
-                        f"duplicate MERGE assignment to column "
-                        f"{canon[cl]!r}")
-                norm[canon[cl]] = ex
-            assignments = norm
-        ins_asg = insert_assignments
-        if ins_asg is not None:
-            # column-list INSERT (round 16): same case-insensitive
-            # normalization discipline as the SET assignments
-            if schema_evolution:
-                raise ValueError(
-                    "insert_assignments and schema_evolution are "
-                    "mutually exclusive — INSERT * evolves, or "
-                    "pre-shape the source")
-            if not ins_asg:
-                raise ValueError(
-                    "insert_assignments needs at least one column")
-            canon_i = {c.lower(): c for c in tcols}
-            identset_i = {c.lower() for c in ident}
-            norm_i: dict[str, str] = {}
-            for c, ex in ins_asg.items():
-                cl = c.lower()
-                # identity first: a declared identity column may not
-                # exist physically yet (allocated on next write), so
-                # the unknown-column check would mask the real error
-                if cl in identset_i:
-                    raise ValueError(
-                        f"column {c!r} is GENERATED ALWAYS AS "
-                        "IDENTITY — merge inserts never supply it")
-                if cl not in canon_i:
-                    raise ValueError(
-                        f"MERGE INSERT targets unknown column {c!r}")
-                if canon_i[cl] in norm_i:
-                    raise ValueError(
-                        f"duplicate MERGE INSERT assignment to "
-                        f"column {canon_i[cl]!r}")
-                norm_i[canon_i[cl]] = ex
-            missing_keys = [k for k in keys if k not in norm_i]
-            if missing_keys:
-                raise ValueError(
-                    f"MERGE INSERT column list must include every "
-                    f"merge key — missing {missing_keys} (a NULL-"
-                    "keyed insert is refused)")
-            ins_asg = norm_i
-        missing = [c for c in tcols
-                   if c not in source.columns and c not in ident]
-        no_insert = (insert_condition is not None
-                     and insert_condition.strip().lower() == "false")
-        if missing and (assignments is None
-                        or not (no_insert or ins_asg is not None)):
-            raise ValueError(
-                f"merge source is missing target columns: {missing}"
-                + ("" if assignments is None else
-                   " — with column assignments a PARTIAL source is "
-                   "legal only without an INSERT * clause (pass "
-                   "insert_condition='false' or give "
-                   "insert_assignments); INSERT * needs every "
-                   "target column"))
-        if schema_evolution:
-            # Delta schema autoMerge (UPDATE SET * / INSERT * with
-            # spark.databricks.delta.schema.autoMerge.enabled): every
-            # source column ABSENT from the target becomes a new target
-            # column — matched/inserted rows take the source values,
-            # untouched target rows materialize typed NULLs in the
-            # rewrite, and the widened schema publishes with the
-            # rewrite_files commit like any schema change (untouched
-            # FILES map through the synthesized ``evolved_add`` alter —
-            # reads null-fill them).  Exactly
-            # Delta's rule, including its sharp edge: helper columns
-            # (CDC op flags) get ADDED too — project them off the
-            # source first.  Default stays False: extra source columns
-            # are consulted by the conditions, then projected away.
-            stypes = dict(source.dtypes)
-            extra = [c for c in source.columns if c not in tcols]
-            tcols = tcols + extra
-        del_cond = (F.coalesce(F.expr(matched_delete_condition), F.lit(False))
-                    if matched_delete_condition is not None else F.lit(False))
-        ins_cond = (F.coalesce(F.expr(insert_condition), F.lit(False))
-                    if insert_condition is not None else F.lit(True))
-        upd_cond = (F.coalesce(F.expr(matched_update_condition),
-                               F.lit(False))
-                    if matched_update_condition is not None
-                    else F.lit(True))
-        # DETERMINISTIC marker names (round 17, guide §5 — plan/codegen
-        # caches): a per-call uuid tag made every merge plan textually
-        # unique, so repeated merges re-paid Janino compilation of an
-        # identical plan shape.  The tag only needs to dodge caller
-        # column names (the docstring invites extra source columns) —
-        # derive it from what it must avoid, bumping on collision, so
-        # same-shaped merges emit identical generated code.
-        _avoid = set(source.columns) | set(tcols)
-        _n = 0
-        while any(c.startswith("_mrg_") and c.endswith(f"_{_n}")
-                  for c in _avoid):
-            _n += 1
-        tag = str(_n)
-        c_del, c_ins = f"_mrg_del_{tag}", f"_mrg_ins_{tag}"
-        c_upd = f"_mrg_upd_{tag}"
-        c_scnt, c_tcnt = f"_mrg_scnt_{tag}", f"_mrg_tcnt_{tag}"
-        types = dict(probe.dtypes)
-        if schema_evolution:
-            types.update({c: stypes[c] for c in extra})
-        src = (source.withColumn(c_del, del_cond)
-               .withColumn(c_ins, ins_cond).withColumn(c_upd, upd_cond))
-        # one combined guard + metrics + HOT-FILE pass over the PROBE:
-        # both ambiguity checks, all three clause counts, AND the set of
-        # files holding matched rows come out of a single aggregation
-        # job (the per-key file sets flatten driver-side at hot-file
-        # scale).  The probe's candidate set contains every target row
-        # whose key the source carries (pruning only drops files that
-        # provably hold none), so matched-key counts are exact.
-        s_agg = src.groupBy(*keys).agg(F.count("*").alias(c_scnt),
-                                       F.first(c_del).alias(c_del),
-                                       F.first(c_ins).alias(c_ins),
-                                       F.first(c_upd).alias(c_upd))
-        if empty_target:
-            row = s_agg.agg(
-                F.max(c_scnt).alias("max_s"),
-                F.lit(None).cast("long").alias("max_t"),
-                F.lit(0).cast("long").alias("updated"),
-                F.lit(0).cast("long").alias("deleted"),
-                F.sum(F.col(c_ins).cast("long")).alias("inserted"),
-                F.lit(None).cast("array<string>").alias("hot")).head()
-        else:
-            c_tf = f"_mrg_tf_{tag}"
-            t_cnt = probe.groupBy(*keys).agg(
-                F.count("*").alias(c_tcnt),
-                F.collect_set("_dv_file").alias(c_tf))
-            matched_flag = F.col(c_tcnt).isNotNull()
-            effective = F.col(c_del) | F.col(c_upd)
-            row = (s_agg.join(t_cnt, keys, "left")
-                   .agg(F.max(c_scnt).alias("max_s"),
-                        F.max(c_tcnt).alias("max_t"),
-                        F.sum((matched_flag & ~F.col(c_del)
-                               & F.col(c_upd)).cast("long"))
-                         .alias("updated"),
-                        F.sum((matched_flag & F.col(c_del)).cast("long"))
-                         .alias("deleted"),
-                        F.sum((~matched_flag & F.col(c_ins)).cast("long"))
-                         .alias("inserted"),
-                        # only files whose matched rows actually CHANGE
-                        # (delete or condition-passing update) are hot —
-                        # a conditional update must not rewrite files
-                        # it leaves untouched
-                        F.array_sort(F.array_distinct(F.flatten(
-                            F.collect_list(F.when(effective,
-                                                  F.col(c_tf))))))
-                        .alias("hot")).head())
-        if row["max_s"] is not None and row["max_s"] > 1:
-            if fused:
-                cand.unpersist()
-            raise ValueError(
-                "multiple source rows share a merge key — UPDATE SET * is "
-                "ambiguous (pre-aggregate the source to one row per key, "
-                "e.g. latest-wins by a CDC ordering column)")
-        if row["max_t"] is not None and row["max_t"] > 1:
-            if fused:
-                cand.unpersist()
-            raise ValueError(
-                "target holds multiple rows for a merge key the source "
-                "matches — the upsert would silently collapse them; "
-                "dedupe the target first (compact/apply-latest)")
-        as_target = [F.col(c).cast(types[c]).alias(c) for c in tcols]
-        if matched_update_condition is not None and not empty_target:
-            # With a CONDITIONAL update the hot set names only files
-            # with EFFECTIVE changes — a matched key whose condition
-            # fails keeps its target row in an untouched, unscanned
-            # file, so the routing join below would mistake its source
-            # row for an insert.  Gate the insert flag on true
-            # unmatchedness (one probe-keys anti pass, paid only by
-            # conditional-update merges).
-            c_um = f"_mrg_um_{tag}"
-            unmatched_keys = (src.join(probe.select(*keys), keys,
-                                       "left_anti")
-                              .select(*keys)
-                              .withColumn(c_um, F.lit(True)))
-            src = (src.join(unmatched_keys, keys, "left")
-                   .withColumn(c_ins,
-                               F.col(c_ins) & F.col(c_um).isNotNull())
-                   .drop(c_um))
-        # FILE TARGETING step 2 — the HOT SET (from the fused pass
-        # above): only files holding a matched live row with an
-        # EFFECTIVE change rewrite; everything else keeps its physical
-        # identity (and its rows' stable ids)
-        hot: list[str] = sorted(row["hot"] or [])
-        n_ins = int(row["inserted"] or 0)
-        nmbs = not_matched_by_source_delete_condition
-        n_nmbs = 0
-        if nmbs is not None and not empty_target:
-            # NOT MATCHED BY SOURCE discovery: files that may hold a
-            # condition-true row come from the ordinary stats tier
-            # (where=nmbs), their actual unmatched hits from one
-            # anti-join pass — a selective condition keeps the sweep
-            # targeted, "true" is a declared full sweep
-            nm_scan = self.read(spark, path, where=nmbs,
-                                _with_pos=True)
-            if "_dv_file" in nm_scan.columns:
-                per_file = (nm_scan
-                            .join(src.select(*keys), keys, "left_anti")
-                            .groupBy("_dv_file")
-                            .agg(F.count("*").alias("_n")).collect())
-                n_nmbs = int(sum(r["_n"] for r in per_file))
-                hot = sorted(set(hot)
-                             | {r["_dv_file"] for r in per_file})
-                if fused and not set(hot) <= {
-                        _relfile(p) for p in plan_info["paths"]}:
-                    # NMBS widened the hot set BEYOND the key-pruned
-                    # candidate scan: the cached plan cannot supply
-                    # those files' rows (they would silently drop
-                    # instead of restaging) — fall back to the exact
-                    # hot-file read for this merge
-                    cand.unpersist()
-                    fused = False
-        if not hot and n_ins == 0:
-            # no touched files, nothing to insert: a no-op merge
-            # publishes nothing (Delta likewise skips the commit)
-            if fused:
-                cand.unpersist()
-            return {"updated": 0, "deleted": 0, "inserted": 0}
-        cur_hot = None
-        ins_alloc = ident_high = None
-        if hot:
-            # exact-scan the hot files (vectors applied) and route EVERY
-            # output row through ONE full-outer join — matched keys are
-            # always in hot files, so cur_hot ∪ src covers the whole
-            # rewrite: target-only rows restage byte-identical, both-
-            # sides rows take the source values (UPDATE SET *) or drop
-            # (delete clause), source-only rows insert.  One shuffle
-            # join instead of kept-anti + upsert-semi + insert-anti +
-            # row-id graft — and the row id rides the join (NULL on the
-            # source-only side ⇒ fresh ids from this commit's range).
-            cur_hot = (cand.filter(F.col("_dv_file").isin(hot)) if fused
-                       else self.read(spark, path, _with_pos=True,
-                                      _only_files=set(hot),
-                                      with_row_ids=track))
-            base_cols = [c for c in cur_hot.columns
-                         if c not in ("_dv_file", "_dv_pos", "_row_id")]
-            data_cols = [c for c in tcols if c not in keys]
-            # the source plane carries EVERY non-key source column
-            # (helper columns included): column-level assignments may
-            # reference any of them via s.<name>
-            s_src = [c for c in source.columns if c not in keys]
-            scol = {c: f"_mrg_s{i}_{tag}" for i, c in enumerate(
-                dict.fromkeys(s_src))}
-            src_j = src.select(*keys,
-                               *[F.col(c).alias(scol[c]) for c in scol],
-                               c_del, c_ins, c_upd)
-            c_t = f"_mrg_t_{tag}"
-            t_j = (cur_hot.drop("_dv_file", "_dv_pos")
-                   .withColumn(c_t, F.lit(True)))
-            j = t_j.join(src_j, keys, "full_outer")
-            s_present = F.col(c_ins).isNotNull()
-            t_present = F.col(c_t).isNotNull()
-            keep_tonly = t_present & ~s_present
-            if nmbs is not None:
-                # NOT MATCHED BY SOURCE ... DELETE: a target-only row
-                # passing the condition drops (condition over TARGET
-                # columns — present under their own names on this side)
-                keep_tonly = keep_tonly & ~F.coalesce(F.expr(nmbs),
-                                                      F.lit(False))
-            routed = j.filter(keep_tonly
-                              | (t_present & s_present & ~F.col(c_del))
-                              | (~t_present & s_present & F.col(c_ins)))
-            ins_j = ({c: F.expr(self._rewrite_insert_assignment(
-                          ex, keys, tcols, list(source.columns), scol))
-                      for c, ex in ins_asg.items()}
-                     if ins_asg is not None else None)
-            if ins_j is None:
-                sel = [F.col(k).cast(types[k]).alias(k) for k in keys]
-            else:
-                # column-list INSERT: an inserted row's key takes its
-                # VALUES expression (validated to cover every key);
-                # matched/kept rows keep the coalesced join key
-                sel = [F.when(~F.col(c_t).isNotNull()
-                              & F.col(c_ins).isNotNull(), ins_j[k])
-                       .otherwise(F.col(k))
-                       .cast(types[k]).alias(k) for k in keys]
-            # a matched row takes the source values only when the
-            # update condition passes (a failing condition leaves it
-            # byte-identical); inserts always take the source side
-            take_src = s_present & (F.col(c_upd) | ~t_present)
-            upd_row = t_present & s_present & F.col(c_upd)
-            ins_row = s_present & ~t_present
+        with self._cow_candidates(spark, path, commits, prune,
+                                  track) as (cand, hot_rows):
+            empty_target = "_dv_file" not in cand.columns
+            probe = (cand.filter(F.expr(prune)) if prune is not None
+                     else cand)
+            tcols = [c for c in probe.columns
+                     if c not in ("_dv_file", "_dv_pos", "_row_id")]
+            assignments = matched_update_assignments
             if assignments is not None:
-                # COLUMN-LEVEL UPDATE SET (round 13 — Delta's most
-                # common merge form): assigned columns evaluate their
-                # expression on the join plane (t.*/s.* qualified);
-                # unassigned columns KEEP the target value on matched
-                # rows; inserts still take the source side whole
-                assigned = {
-                    c: F.expr(self._rewrite_merge_assignment(
-                        ex, keys, tcols, list(source.columns), scol))
-                    for c, ex in assignments.items()}
-                for c in data_cols:
-                    upd_val = assigned.get(c, F.col(c))
-                    pieces = F.when(upd_row, upd_val)
-                    if ins_j is not None:
-                        # column-list INSERT: listed columns take their
-                        # expression; unlisted fall through to the
-                        # target side, NULL on an insert row
-                        if c in ins_j:
-                            pieces = pieces.when(ins_row, ins_j[c])
-                    elif c in scol:  # source carries it: inserts take it
-                        pieces = pieces.when(ins_row, F.col(scol[c]))
-                    sel.append(pieces.otherwise(F.col(c))
-                               .cast(types[c]).alias(c))
-            else:
-                for c in data_cols:
-                    if c in ident:
-                        # GENERATED ALWAYS: matched/kept rows keep the
-                        # target value; the insert slice allocates below
-                        sel.append(F.col(c).cast(types[c]).alias(c))
-                        continue
-                    tgt_side = (F.lit(None) if (schema_evolution
-                                                and c in extra)
-                                else F.col(c))
-                    if ins_j is not None:
-                        # UPDATE SET * + column-list INSERT: updates
-                        # take the source value, inserts their VALUES
-                        # expression (NULL when unlisted)
-                        sel.append(
-                            F.when(upd_row, F.col(scol[c]))
-                            .when(ins_row, ins_j.get(c, F.lit(None)))
-                            .otherwise(tgt_side)
-                            .cast(types[c]).alias(c))
-                    else:
-                        sel.append(F.when(take_src, F.col(scol[c]))
-                                   .otherwise(tgt_side)
-                                   .cast(types[c]).alias(c))
-            if track:
-                # target-side id for kept/updated rows, NULL (fresh
-                # range) for inserts — Delta row-tracking semantics
-                sel.append(F.col("_row_id").alias(self._ROW_ID_COL))
-            if ident and n_ins:
-                # identity allocation rides ONLY the insert slice: the
-                # kept/updated slice keeps its values byte-identical,
-                # the slice allocates from the commit-snapshot
-                # watermark (pinned by _with_identity's checkpoint)
-                out_cols = ([*keys, *data_cols]
-                            + ([self._ROW_ID_COL] if track else []))
-                named = dict(zip(out_cols, sel))
-                kept_part = routed.filter(~ins_row).select(*sel)
-                ins_raw = routed.filter(ins_row).select(
-                    *[named[c] for c in out_cols if c not in ident])
-                ins_alloc, ident_high = self._with_identity(
-                    ins_raw, commits)
-                ins_alloc = ins_alloc.select(
-                    *[F.col(c).cast(types[c]).alias(c)
-                      if c in ident else F.col(c) for c in out_cols])
-                new_data = kept_part.unionByName(ins_alloc)
-            else:
-                new_data = routed.select(*sel)
-        else:
-            # pure-insert merge (no matched files): no join needed
-            ins_cols = [c for c in tcols if c not in ident]
+                if schema_evolution:
+                    raise ValueError(
+                        "matched_update_assignments and schema_evolution "
+                        "are mutually exclusive — evolve with UPDATE SET * "
+                        "or pre-shape the source")
+                assignments = self._merge_targets(assignments, tcols,
+                                                  keys, ident)
+            ins_asg = insert_assignments
             if ins_asg is not None:
-                # column-list INSERT on the raw source plane
-                idp = {c: c for c in source.columns}
-                new_data = src.filter(F.col(c_ins)).select(
-                    *[(F.expr(self._rewrite_insert_assignment(
-                           ins_asg[c], keys, tcols,
-                           list(source.columns), idp))
-                       if c in ins_asg else F.lit(None))
-                      .cast(types[c]).alias(c) for c in ins_cols])
+                # column-list INSERT (round 16): same case-insensitive
+                # normalization discipline as the SET assignments
+                if schema_evolution:
+                    raise ValueError(
+                        "insert_assignments and schema_evolution are "
+                        "mutually exclusive — INSERT * evolves, or "
+                        "pre-shape the source")
+                if not ins_asg:
+                    raise ValueError(
+                        "insert_assignments needs at least one column")
+                ins_asg = self._merge_targets(ins_asg, tcols, keys, ident,
+                                              insert=True)
+                missing_keys = [k for k in keys if k not in ins_asg]
+                if missing_keys:
+                    raise ValueError(
+                        f"MERGE INSERT column list must include every "
+                        f"merge key — missing {missing_keys} (a NULL-"
+                        "keyed insert is refused)")
+            missing = [c for c in tcols
+                       if c not in source.columns and c not in ident]
+            no_insert = (insert_condition is not None
+                         and insert_condition.strip().lower() == "false")
+            if missing and (assignments is None
+                            or not (no_insert or ins_asg is not None)):
+                raise ValueError(
+                    f"merge source is missing target columns: {missing}"
+                    + ("" if assignments is None else
+                       " — with column assignments a PARTIAL source is "
+                       "legal only without an INSERT * clause (pass "
+                       "insert_condition='false' or give "
+                       "insert_assignments); INSERT * needs every "
+                       "target column"))
+            if schema_evolution:
+                # Delta schema autoMerge (UPDATE SET * / INSERT * with
+                # spark.databricks.delta.schema.autoMerge.enabled): every
+                # source column ABSENT from the target becomes a new target
+                # column — matched/inserted rows take the source values,
+                # untouched target rows materialize typed NULLs in the
+                # rewrite, and the widened schema publishes with the
+                # rewrite_files commit like any schema change (untouched
+                # FILES map through the synthesized ``evolved_add`` alter —
+                # reads null-fill them).  Exactly
+                # Delta's rule, including its sharp edge: helper columns
+                # (CDC op flags) get ADDED too — project them off the
+                # source first.  Default stays False: extra source columns
+                # are consulted by the conditions, then projected away.
+                stypes = dict(source.dtypes)
+                extra = [c for c in source.columns if c not in tcols]
+                tcols = tcols + extra
+            del_cond = (F.coalesce(F.expr(matched_delete_condition),
+                                   F.lit(False))
+                        if matched_delete_condition is not None
+                        else F.lit(False))
+            ins_cond = (F.coalesce(F.expr(insert_condition), F.lit(False))
+                        if insert_condition is not None else F.lit(True))
+            upd_cond = (F.coalesce(F.expr(matched_update_condition),
+                                   F.lit(False))
+                        if matched_update_condition is not None
+                        else F.lit(True))
+            # DETERMINISTIC marker names (round 17, guide §5 — plan/codegen
+            # caches): a per-call uuid tag made every merge plan textually
+            # unique, so repeated merges re-paid Janino compilation of an
+            # identical plan shape.  The tag only needs to dodge caller
+            # column names (the docstring invites extra source columns) —
+            # derive it from what it must avoid, bumping on collision, so
+            # same-shaped merges emit identical generated code.
+            _avoid = set(source.columns) | set(tcols)
+            _n = 0
+            while any(c.startswith("_mrg_") and c.endswith(f"_{_n}")
+                      for c in _avoid):
+                _n += 1
+            tag = str(_n)
+            c_del, c_ins = f"_mrg_del_{tag}", f"_mrg_ins_{tag}"
+            c_upd = f"_mrg_upd_{tag}"
+            c_scnt, c_tcnt = f"_mrg_scnt_{tag}", f"_mrg_tcnt_{tag}"
+            types = dict(probe.dtypes)
+            if schema_evolution:
+                types.update({c: stypes[c] for c in extra})
+            src = (source.withColumn(c_del, del_cond)
+                   .withColumn(c_ins, ins_cond).withColumn(c_upd, upd_cond))
+            # one combined guard + metrics + HOT-FILE pass over the PROBE:
+            # both ambiguity checks, all three clause counts, AND the set of
+            # files holding matched rows come out of a single aggregation
+            # job (the per-key file sets flatten driver-side at hot-file
+            # scale).  The probe's candidate set contains every target row
+            # whose key the source carries (pruning only drops files that
+            # provably hold none), so matched-key counts are exact.
+            s_agg = src.groupBy(*keys).agg(F.count("*").alias(c_scnt),
+                                           F.first(c_del).alias(c_del),
+                                           F.first(c_ins).alias(c_ins),
+                                           F.first(c_upd).alias(c_upd))
+            if empty_target:
+                row = s_agg.agg(
+                    F.max(c_scnt).alias("max_s"),
+                    F.lit(None).cast("long").alias("max_t"),
+                    F.lit(0).cast("long").alias("updated"),
+                    F.lit(0).cast("long").alias("deleted"),
+                    F.sum(F.col(c_ins).cast("long")).alias("inserted"),
+                    F.lit(None).cast("array<string>").alias("hot")).head()
             else:
-                new_data = src.filter(F.col(c_ins)).select(
-                    *[F.col(c).cast(types[c]).alias(c)
-                      for c in ins_cols])
-            if ident:
-                new_data, ident_high = self._with_identity(
-                    new_data, commits)
-                new_data = new_data.select(
-                    *[F.col(c).cast(types[c]).alias(c) for c in tcols])
-            if track:
-                new_data = new_data.withColumn(
-                    self._ROW_ID_COL, F.lit(None).cast("long"))
-            ins_alloc = new_data
-        rec = {"action": "rewrite_files",
-               "removed_files": hot,
-               "data_change": True,  # rows changed, not just bytes moved
-               "_row_track": track,
-               "partition_col": None, "partitions": [],
-               "schema": self._logical_schema_json(new_data.schema)}
-        self._stage_rewrite(new_data, path, commits, rec)  # checks run
-        if schema_evolution and extra:
-            # record WHICH columns this merge added (source-typed DDL):
-            # _resolve_alters synthesizes the matching alter entry, so
-            # every UNTOUCHED live file — and pre-merge files via the
-            # change feed / time travel — maps the new columns to typed
-            # NULLs instead of failing the strict missing-column check
-            rec["evolved_add"] = {c: stypes[c] for c in extra}
-        if self._effective_config(commits)[2]:
-            self._check_cdf_reserved_columns(tcols)
-            # exact per-row changes, each side keyed off the already-
-            # pinned source (localCheckpoint above), so the sidecar and
-            # the committed state cannot diverge.  Every matched target
-            # row lives in a hot file, so pre-images, post-images, and
-            # the matched/unmatched split all come from cur_hot + src
-            # (an extra O(changed rows) pass only when the feed is on).
-            pieces = []
-            # row-tracked sidecars carry each change row's id
-            # (materialized __row_id): pre/post images of one logical
-            # row share it — the key-independent lineage join.  Merge
-            # INSERTS read NULL (their ids are allocated at commit
-            # time, after the sidecar stages).
-            idc = ([F.col("_row_id").alias(self._ROW_ID_COL)]
-                   if track else [])
-            ins_id = ([F.lit(None).cast("long")
-                       .alias(self._ROW_ID_COL)] if track else [])
+                c_tf = f"_mrg_tf_{tag}"
+                t_cnt = probe.groupBy(*keys).agg(
+                    F.count("*").alias(c_tcnt),
+                    F.collect_set("_dv_file").alias(c_tf))
+                matched_flag = F.col(c_tcnt).isNotNull()
+                effective = F.col(c_del) | F.col(c_upd)
+                row = (s_agg.join(t_cnt, keys, "left")
+                       .agg(F.max(c_scnt).alias("max_s"),
+                            F.max(c_tcnt).alias("max_t"),
+                            F.sum((matched_flag & ~F.col(c_del)
+                                   & F.col(c_upd)).cast("long"))
+                             .alias("updated"),
+                            F.sum((matched_flag & F.col(c_del)).cast("long"))
+                             .alias("deleted"),
+                            F.sum((~matched_flag & F.col(c_ins)).cast("long"))
+                             .alias("inserted"),
+                            # only files whose matched rows actually CHANGE
+                            # (delete or condition-passing update) are hot —
+                            # a conditional update must not rewrite files
+                            # it leaves untouched
+                            F.array_sort(F.array_distinct(F.flatten(
+                                F.collect_list(F.when(effective,
+                                                      F.col(c_tf))))))
+                            .alias("hot")).head())
+            if row["max_s"] is not None and row["max_s"] > 1:
+                raise ValueError(
+                    "multiple source rows share a merge key — UPDATE SET * "
+                    "is ambiguous (pre-aggregate the source to one row per "
+                    "key, e.g. latest-wins by a CDC ordering column)")
+            if row["max_t"] is not None and row["max_t"] > 1:
+                raise ValueError(
+                    "target holds multiple rows for a merge key the source "
+                    "matches — the upsert would silently collapse them; "
+                    "dedupe the target first (compact/apply-latest)")
+            as_target = [F.col(c).cast(types[c]).alias(c) for c in tcols]
+            if matched_update_condition is not None and not empty_target:
+                # With a CONDITIONAL update the hot set names only files
+                # with EFFECTIVE changes — a matched key whose condition
+                # fails keeps its target row in an untouched, unscanned
+                # file, so the routing join below would mistake its source
+                # row for an insert.  Gate the insert flag on true
+                # unmatchedness (one probe-keys anti pass, paid only by
+                # conditional-update merges).
+                c_um = f"_mrg_um_{tag}"
+                unmatched_keys = (src.join(probe.select(*keys), keys,
+                                           "left_anti")
+                                  .select(*keys)
+                                  .withColumn(c_um, F.lit(True)))
+                src = (src.join(unmatched_keys, keys, "left")
+                       .withColumn(c_ins,
+                                   F.col(c_ins) & F.col(c_um).isNotNull())
+                       .drop(c_um))
+            # FILE TARGETING step 2 — the HOT SET (from the fused pass
+            # above): only files holding a matched live row with an
+            # EFFECTIVE change rewrite; everything else keeps its physical
+            # identity (and its rows' stable ids)
+            hot: list[str] = sorted(row["hot"] or [])
+            n_ins = int(row["inserted"] or 0)
+            nmbs = not_matched_by_source_delete_condition
+            n_nmbs = 0
+            if nmbs is not None and not empty_target:
+                # NOT MATCHED BY SOURCE discovery: files that may hold a
+                # condition-true row come from the ordinary stats tier
+                # (where=nmbs), their actual unmatched hits from one
+                # anti-join pass — a selective condition keeps the sweep
+                # targeted, "true" is a declared full sweep
+                nm_scan = self.read(spark, path, where=nmbs,
+                                    _with_pos=True)
+                if "_dv_file" in nm_scan.columns:
+                    per_file = (nm_scan
+                                .join(src.select(*keys), keys, "left_anti")
+                                .groupBy("_dv_file")
+                                .agg(F.count("*").alias("_n")).collect())
+                    n_nmbs = int(sum(r["_n"] for r in per_file))
+                    # may widen the hot set BEYOND the key-pruned
+                    # candidates: ``hot_rows`` then reads the exact files
+                    hot = sorted(set(hot)
+                                 | {r["_dv_file"] for r in per_file})
+            if not hot and n_ins == 0:
+                # no touched files, nothing to insert: a no-op merge
+                # publishes nothing (Delta likewise skips the commit)
+                return {"updated": 0, "deleted": 0, "inserted": 0}
+            ins_alloc = ident_high = None
+            raw_ins: dict = {}
+            if ins_asg is not None:
+                # column-list INSERT values on the RAW source plane: the
+                # pure-insert rows and the sidecar's insert rows
+                raw = self._merge_resolver(
+                    keys, tcols, source.columns,
+                    {c: c for c in source.columns}, insert=True)
+                raw_ins = {c: F.expr(self._rewrite_merge_expr(ex, raw))
+                           for c, ex in ins_asg.items()}
             if hot:
-                t_pre = cur_hot.select(*base_cols, *idc)
-                if schema_evolution and extra:
-                    t_pre = t_pre.withColumns(
-                        {c: F.lit(None).cast(stypes[c]) for c in extra})
-                t_pre = t_pre.select(*tcols, *(
-                    [self._ROW_ID_COL] if track else []))
-                pieces.append(
-                    t_pre.join(src.filter(F.col(c_del)).select(*keys),
-                               keys, "left_semi")
-                    .withColumn("_change_type", F.lit("delete")))
-                pieces.append(
-                    t_pre.join(src.filter(~F.col(c_del) & F.col(c_upd))
-                               .select(*keys), keys, "left_semi")
-                    .withColumn("_change_type",
-                                F.lit("update_preimage")))
+                # exact-scan the hot files (vectors applied) and route EVERY
+                # output row through ONE full-outer join — matched keys are
+                # always in hot files, so cur_hot ∪ src covers the whole
+                # rewrite: target-only rows restage byte-identical, both-
+                # sides rows take the source values (UPDATE SET *) or drop
+                # (delete clause), source-only rows insert.  One shuffle
+                # join instead of kept-anti + upsert-semi + insert-anti +
+                # row-id graft — and the row id rides the join (NULL on the
+                # source-only side ⇒ fresh ids from this commit's range).
+                cur_hot = hot_rows(hot)
+                base_cols = [c for c in cur_hot.columns
+                             if c not in ("_dv_file", "_dv_pos", "_row_id")]
+                data_cols = [c for c in tcols if c not in keys]
+                # the source plane carries EVERY non-key source column
+                # (helper columns included): column-level assignments may
+                # reference any of them via s.<name>
+                s_src = [c for c in source.columns if c not in keys]
+                scol = {c: f"_mrg_s{i}_{tag}" for i, c in enumerate(
+                    dict.fromkeys(s_src))}
+                src_j = src.select(*keys,
+                                   *[F.col(c).alias(scol[c]) for c in scol],
+                                   c_del, c_ins, c_upd)
+                c_t = f"_mrg_t_{tag}"
+                t_j = (cur_hot.drop("_dv_file", "_dv_pos")
+                       .withColumn(c_t, F.lit(True)))
+                j = t_j.join(src_j, keys, "full_outer")
+                s_present = F.col(c_ins).isNotNull()
+                t_present = F.col(c_t).isNotNull()
+                keep_tonly = t_present & ~s_present
                 if nmbs is not None:
-                    pieces.append(
-                        t_pre.join(src.select(*keys), keys, "left_anti")
-                        .filter(F.coalesce(F.expr(nmbs), F.lit(False)))
-                        .withColumn("_change_type", F.lit("delete")))
+                    # NOT MATCHED BY SOURCE ... DELETE: a target-only row
+                    # passing the condition drops (condition over TARGET
+                    # columns — present under their own names on this side)
+                    keep_tonly = keep_tonly & ~F.coalesce(F.expr(nmbs),
+                                                          F.lit(False))
+                routed = j.filter(keep_tonly
+                                  | (t_present & s_present & ~F.col(c_del))
+                                  | (~t_present & s_present & F.col(c_ins)))
+                ins_res = self._merge_resolver(
+                    keys, tcols, source.columns, scol, insert=True)
+                ins_j = ({c: F.expr(self._rewrite_merge_expr(ex, ins_res))
+                          for c, ex in ins_asg.items()}
+                         if ins_asg is not None else None)
+                # a matched row takes the source values only when the
+                # update condition passes (a failing condition leaves it
+                # byte-identical); inserts always take the source side
+                take_src = s_present & (F.col(c_upd) | ~t_present)
+                upd_row = t_present & s_present & F.col(c_upd)
+                ins_row = s_present & ~t_present
+                # a column-list INSERT's row takes its key from its VALUES
+                # expression (validated to cover every key); matched/kept
+                # rows keep the coalesced join key
+                sel = [(F.col(k) if ins_j is None else
+                        F.when(ins_row, ins_j[k]).otherwise(F.col(k)))
+                       .cast(types[k]).alias(k) for k in keys]
                 if assignments is not None:
-                    # column-level SET: the postimage is the routed
-                    # join's own output for update rows (assigned
-                    # expressions applied, unassigned columns kept) —
-                    # `sel` already carries the row id when tracked
-                    pieces.append(
-                        routed.filter(upd_row).select(*sel)
-                        .withColumn("_change_type",
-                                    F.lit("update_postimage")))
+                    # COLUMN-LEVEL UPDATE SET (round 13 — Delta's most
+                    # common merge form): assigned columns evaluate their
+                    # expression on the join plane (t.*/s.* qualified);
+                    # unassigned columns KEEP the target value on matched
+                    # rows; inserts still take the source side whole
+                    set_res = self._merge_resolver(keys, tcols,
+                                                   source.columns, scol)
+                    assigned = {
+                        c: F.expr(self._rewrite_merge_expr(ex, set_res))
+                        for c, ex in assignments.items()}
+                    for c in data_cols:
+                        upd_val = assigned.get(c, F.col(c))
+                        pieces = F.when(upd_row, upd_val)
+                        if ins_j is not None:
+                            # column-list INSERT: listed columns take their
+                            # expression; unlisted fall through to the
+                            # target side, NULL on an insert row
+                            if c in ins_j:
+                                pieces = pieces.when(ins_row, ins_j[c])
+                        elif c in scol:  # source carries it: inserts take it
+                            pieces = pieces.when(ins_row, F.col(scol[c]))
+                        sel.append(pieces.otherwise(F.col(c))
+                                   .cast(types[c]).alias(c))
                 else:
-                    hot_keys = cur_hot.select(*keys, *idc)
-                    post = (src.join(hot_keys, keys,
-                                     "left_semi" if not track
-                                     else "inner")
-                            .filter(~F.col(c_del) & F.col(c_upd)))
-                    pieces.append(
-                        post.select(*as_target, *(
-                            [self._ROW_ID_COL] if track else []))
-                        .withColumn("_change_type",
-                                    F.lit("update_postimage")))
-                ins_src = src.join(cur_hot.select(*keys), keys,
-                                   "left_anti")
-            else:
-                ins_src = src
-            if ident:
-                # the allocated insert slice IS the post-state: ride it
-                # so the sidecar carries the generated values (empty
-                # when this merge inserted nothing)
-                if ins_alloc is not None and n_ins:
-                    pieces.append(ins_alloc.withColumn(
-                        "_change_type", F.lit("insert")))
-            else:
-                if ins_asg is not None:
-                    # the sidecar's insert rows carry the ASSIGNED
-                    # values (raw source plane — ins_src is src-shaped)
-                    idp = {c: c for c in source.columns}
-                    ins_tgt = [
-                        (F.expr(self._rewrite_insert_assignment(
-                             ins_asg[c], keys, tcols,
-                             list(source.columns), idp))
-                         if c in ins_asg else F.lit(None))
-                        .cast(types[c]).alias(c) for c in tcols]
+                    for c in data_cols:
+                        if c in ident:
+                            # GENERATED ALWAYS: matched/kept rows keep the
+                            # target value; the insert slice allocates below
+                            sel.append(F.col(c).cast(types[c]).alias(c))
+                            continue
+                        tgt_side = (F.lit(None) if (schema_evolution
+                                                    and c in extra)
+                                    else F.col(c))
+                        if ins_j is not None:
+                            # UPDATE SET * + column-list INSERT: updates
+                            # take the source value, inserts their VALUES
+                            # expression (NULL when unlisted)
+                            sel.append(
+                                F.when(upd_row, F.col(scol[c]))
+                                .when(ins_row, ins_j.get(c, F.lit(None)))
+                                .otherwise(tgt_side)
+                                .cast(types[c]).alias(c))
+                        else:
+                            sel.append(F.when(take_src, F.col(scol[c]))
+                                       .otherwise(tgt_side)
+                                       .cast(types[c]).alias(c))
+                if track:
+                    # target-side id for kept/updated rows, NULL (fresh
+                    # range) for inserts — Delta row-tracking semantics
+                    sel.append(F.col("_row_id").alias(self._ROW_ID_COL))
+                if ident and n_ins:
+                    # identity allocation rides ONLY the insert slice: the
+                    # kept/updated slice keeps its values byte-identical,
+                    # the slice allocates from the commit-snapshot
+                    # watermark (pinned by _with_identity's checkpoint)
+                    out_cols = ([*keys, *data_cols]
+                                + ([self._ROW_ID_COL] if track else []))
+                    named = dict(zip(out_cols, sel))
+                    kept_part = routed.filter(~ins_row).select(*sel)
+                    ins_raw = routed.filter(ins_row).select(
+                        *[named[c] for c in out_cols if c not in ident])
+                    ins_alloc, ident_high = self._with_identity(
+                        ins_raw, commits)
+                    ins_alloc = ins_alloc.select(
+                        *[F.col(c).cast(types[c]).alias(c)
+                          if c in ident else F.col(c) for c in out_cols])
+                    new_data = kept_part.unionByName(ins_alloc)
                 else:
-                    ins_tgt = as_target
-                pieces.append(ins_src.filter(F.col(c_ins))
-                              .select(*ins_tgt, *ins_id)
-                              .withColumn("_change_type",
-                                          F.lit("insert")))
-            self._stage_cdf(path, reduce(DataFrame.unionByName, pieces),
-                            rec)
-        # vectors on rewritten files materialized above and retire with
-        # them; vectors on untouched files consolidate and STAY LIVE
-        # (rewrite_files replay replaces the whole vector set)
-        dv_rel = self._surviving_dv_rel(spark, path, commits, hot)
-        if dv_rel is not None:
-            rec["dv_dir"] = dv_rel
-        if ident_high:
-            rec["identity_high"] = ident_high
-        try:
-            self._commit(path, rec, expected_version=head + 1,
-                         base_schema=self._resolve_schema(commits),
-                         identity_cols=(frozenset(ident)
-                                        if ident_high else None))
-        finally:
-            # the staged output is durable — the cache served its last
-            # consumer (a failed commit also releases it; the weak-ref
-            # ContextCleaner would reclaim a leak, this is just prompt)
-            if fused:
-                cand.unpersist()
-        return {"updated": int(row["updated"] or 0),
-                "deleted": int(row["deleted"] or 0) + n_nmbs,
-                "inserted": n_ins}
+                    new_data = routed.select(*sel)
+            else:
+                # pure-insert merge (no matched files): no join needed
+                ins_cols = [c for c in tcols if c not in ident]
+                new_data = src.filter(F.col(c_ins)).select(
+                    *[(raw_ins.get(c, F.lit(None)) if ins_asg is not None
+                       else F.col(c)).cast(types[c]).alias(c)
+                      for c in ins_cols])
+                if ident:
+                    new_data, ident_high = self._with_identity(
+                        new_data, commits)
+                    new_data = new_data.select(
+                        *[F.col(c).cast(types[c]).alias(c) for c in tcols])
+                if track:
+                    new_data = new_data.withColumn(
+                        self._ROW_ID_COL, F.lit(None).cast("long"))
+                ins_alloc = new_data
+            cdf = None
+            if self._effective_config(commits)[2]:
+                # exact per-row changes, each side keyed off the already-
+                # pinned source (localCheckpoint above), so the sidecar and
+                # the committed state cannot diverge.  Every matched target
+                # row lives in a hot file, so pre-images, post-images, and
+                # the matched/unmatched split all come from cur_hot + src
+                # (an extra O(changed rows) pass only when the feed is on).
+                cdf = []
+                # row-tracked sidecars carry each change row's id
+                # (materialized __row_id): pre/post images of one logical
+                # row share it — the key-independent lineage join.  Merge
+                # INSERTS read NULL (their ids are allocated at commit
+                # time, after the sidecar stages).
+                idc = ([F.col("_row_id").alias(self._ROW_ID_COL)]
+                       if track else [])
+                ins_id = ([F.lit(None).cast("long")
+                           .alias(self._ROW_ID_COL)] if track else [])
+                if hot:
+                    t_pre = cur_hot.select(*base_cols, *idc)
+                    if schema_evolution and extra:
+                        t_pre = t_pre.withColumns(
+                            {c: F.lit(None).cast(stypes[c]) for c in extra})
+                    t_pre = t_pre.select(*tcols, *(
+                        [self._ROW_ID_COL] if track else []))
+                    cdf += [
+                        (t_pre.join(src.filter(F.col(c_del)).select(*keys),
+                                    keys, "left_semi"), "delete"),
+                        (t_pre.join(src.filter(~F.col(c_del) & F.col(c_upd))
+                                    .select(*keys), keys, "left_semi"),
+                         "update_preimage")]
+                    if nmbs is not None:
+                        cdf.append((
+                            t_pre.join(src.select(*keys), keys, "left_anti")
+                            .filter(F.coalesce(F.expr(nmbs), F.lit(False))),
+                            "delete"))
+                    if assignments is not None:
+                        # column-level SET: the postimage is the routed
+                        # join's own output for update rows (assigned
+                        # expressions applied, unassigned columns kept) —
+                        # `sel` already carries the row id when tracked
+                        post = routed.filter(upd_row).select(*sel)
+                    else:
+                        hot_keys = cur_hot.select(*keys, *idc)
+                        post = (src.join(hot_keys, keys,
+                                         "left_semi" if not track
+                                         else "inner")
+                                .filter(~F.col(c_del) & F.col(c_upd))
+                                .select(*as_target, *(
+                                    [self._ROW_ID_COL] if track else [])))
+                    cdf.append((post, "update_postimage"))
+                # no insert rows, no insert piece: a PARTIAL source
+                # (column assignments, no INSERT clause) cannot even
+                # project the target columns an insert row would need
+                if n_ins and ident:
+                    # the allocated insert slice IS the post-state: ride
+                    # it so the sidecar carries the generated values
+                    cdf.append((ins_alloc, "insert"))
+                elif n_ins:
+                    ins_src = (src.join(cur_hot.select(*keys), keys,
+                                        "left_anti") if hot else src)
+                    # a column-list INSERT's sidecar rows carry the
+                    # ASSIGNED values (ins_src is src-shaped)
+                    ins_tgt = ([raw_ins.get(c, F.lit(None)).cast(types[c])
+                                .alias(c) for c in tcols]
+                               if ins_asg is not None else as_target)
+                    cdf.append((ins_src.filter(F.col(c_ins))
+                                .select(*ins_tgt, *ins_id), "insert"))
+            self._commit_rewrite(
+                spark, path, commits, new_data, hot, track, cdf,
+                evolved_add=({c: stypes[c] for c in extra}
+                             if schema_evolution else None),
+                identity=((frozenset(ident), ident_high) if ident_high
+                          else None))
+            return {"updated": int(row["updated"] or 0),
+                    "deleted": int(row["deleted"] or 0) + n_nmbs,
+                    "inserted": n_ins}
 
     def restore(self, spark: SparkSession, path: str,
                 version: int | None = None,

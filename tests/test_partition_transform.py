@@ -402,7 +402,6 @@ def test_transform_evolution_each_era_prunes_under_its_spec(
     assert r3.count() == 1 and _nfiles(r3) == 1
 
 
-@pytest.mark.slow
 def test_rewrites_preserve_the_transform_layout(spark, tmp_path):
     """Row-level rewrites keep HIDDEN PARTITIONING (round 12 — Iceberg
     keeps its spec on rewrites): after targeted UPDATE, DELETE, MERGE,

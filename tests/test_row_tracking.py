@@ -270,7 +270,6 @@ def test_concurrent_appends_reserve_disjoint_ranges(spark, tmp_path):
     assert sorted(ids.values()) == list(range(10))
 
 
-@pytest.mark.slow
 def test_model_random_op_sequences_keep_ids_stable_and_unique(
         spark, tmp_path):
     """The id-stability invariant on the model check (VERDICT r10 item

@@ -2680,7 +2680,6 @@ def test_maintenance_never_starved_by_append_storm(spark, tmp_path):
     assert "append" in actions  # the storm genuinely interleaved the log
 
 
-@pytest.mark.slow
 def test_targeted_delete_update_preserve_untouched_files(spark, tmp_path):
     """File-targeted DELETE/UPDATE (Delta parity): only files holding
     matching rows are rewritten — every other file keeps its physical
@@ -3668,7 +3667,6 @@ def test_merge_not_matched_by_source_delete(spark, tmp_path):
         == {(8, 888)}
 
 
-@pytest.mark.slow
 def test_merge_crash_between_stage_and_commit_is_clean(spark, tmp_path,
                                                        monkeypatch):
     """A writer dying after staging but before the commit link leaves
@@ -3783,7 +3781,6 @@ def test_timestamp_skipping_gated_off_non_utc(spark, tmp_path):
         ("ts", "<", "2024-02-01 00:00:00.000000")]
 
 
-@pytest.mark.slow
 def test_merge_identity_insert(spark, tmp_path):
     """Round 13 (VERDICT r12 item 7): MERGE into an identity table —
     the INSERT branch allocates fresh values from the r11 watermark
@@ -3902,7 +3899,6 @@ def test_dml_subquery_predicates_all_paths(spark, tmp_path):
     assert fmt.read(spark, path, as_of_version=v0).count() == 10
 
 
-@pytest.mark.slow
 def test_merge_insert_assignments_api(spark, tmp_path):
     """Round 16: column-list INSERT — listed columns take their
     expression over SOURCE columns, unlisted read NULL, the CDF
@@ -3944,7 +3940,6 @@ def test_merge_insert_assignments_api(spark, tmp_path):
         (r.k, r.name, r.v) for r in fmt.read(spark, path).collect()}
 
 
-@pytest.mark.slow
 def test_merge_insert_assignments_reject_shapes(spark, tmp_path):
     from pyspark.sql import functions as F
     fmt = TxnLogFormat(checkpoint_interval=None)
