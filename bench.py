@@ -597,8 +597,12 @@ def main() -> None:
     # COMPACT line (round 16): the driver captures only the last 2000
     # chars of stdout, and every BENCH_r1..r15 recorded `parsed: null`
     # because the runs/canary blocks pushed the line past that window.
+    # The sidecar is keyed by the session's core count, so runs at
+    # different local[N] sizes (8 and 32 cores) keep separate files.
+    cpus = spark.sparkContext.defaultParallelism
+    detail_name = f"BENCH_DETAIL_c{cpus}.json"
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_DETAIL.json"), "w") as fh:
+                           detail_name), "w") as fh:
         json.dump(detail, fh, indent=1)
     print(f"# detail: {json.dumps(detail)}", file=sys.stderr)
     line = json.dumps({
@@ -614,7 +618,7 @@ def main() -> None:
         "meta_plan_sec": meta_plan["plan_first_action_sec"],
         "meta_deep_sec": meta_deep["plan_first_action_sec"],
         "clone_deep_sec": clone_deep["clone_sec"],
-        "detail": "BENCH_DETAIL.json",
+        "detail": detail_name,
         "sf": sf,
     })
     if len(line) >= 1900 and os.environ.get("SPARK_GRAFT_BENCH_ALL"):
@@ -623,7 +627,7 @@ def main() -> None:
         # keep its "queries" map parseable); the SPARK_GRAFT_BENCH_ALL
         # coverage sweep has ~240 per-query entries and used to CRASH
         # on the length guard after doing all the work — drop the
-        # per-query map from ITS stdout line (BENCH_DETAIL.json
+        # per-query map from ITS stdout line (the detail sidecar
         # carries it) instead of dying
         slim = json.loads(line)
         slim.pop("queries", None)  # ADVICE r16: no-op when absent

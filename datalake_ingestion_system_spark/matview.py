@@ -304,11 +304,16 @@ def refresh(spark: SparkSession, mv_path: str,
     nmbs, dview = None, None
     import hashlib
 
-    # deterministic per-MV view name (round 17 — plan-text stability):
-    # a per-call uuid made every semi-join refresh plan textually
-    # unique; refreshes of the same MV can reuse compiled plan shapes.
-    # Concurrent refreshes of the SAME MV are already a write conflict.
-    dname = f"__mv_rm_{hashlib.md5(mv_path.encode()).hexdigest()[:12]}"
+    # deterministic view name (round 17 — plan-text stability): a
+    # per-call uuid made every semi-join refresh plan textually unique;
+    # refreshes of the same MV over the same window reuse compiled plan
+    # shapes.  The refresh window (last-refreshed and head versions) is
+    # part of the name, so a concurrent same-session refresh of this MV
+    # over another window can never replace this refresh's view before
+    # the commit conflict between the two fires (one over the SAME
+    # window builds an identical view).
+    dname = "__mv_rm_" + hashlib.md5(
+        f"{mv_path}@{last}..{head}".encode()).hexdigest()[:12]
     mpw = None
     if pruned:
         if any(r[k] is None for r in probe for k in keys):

@@ -43,8 +43,10 @@ _FORCE_FRONT: tuple[str, ...] = (
     # (d) q_pagerank_bipartite body (pre-partitioned+pre-sorted static
     # sides, scalar node count).  All entries re-verified green at ALL
     # THREE SFs this session; remaining prefix slots fill with
-    # rotated-green entries.
-    "q_pagerank_bipartite",
+    # rotated-green entries.  q_refs_sql joins them with the other
+    # tables.sql consumers once the router parses SELECT / UPDATE /
+    # DELETE / MERGE with Spark's own parser.
+    "q_pagerank_bipartite", "q_refs_sql",
     "q_merge_upsert", "q_merge_targeted_read", "q_merge_set_columns",
     "q_merge_identity_insert", "q_merge_full_sync",
     "q_merge_schema_evolution", "q_merge_insert_values",

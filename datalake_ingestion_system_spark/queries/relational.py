@@ -2483,9 +2483,9 @@ def q_time_travel_sql(spark, sf_dir):
     (``UPDATE`` then ``DELETE``), then BOTH eras are queried purely as
     SQL strings — the pre-mutation snapshot via ``VERSION AS OF 0`` and
     the head via the ``t@v2`` shorthand — joined per event_type in ONE
-    statement.  ``tables.sql`` rewrites each historical reference into
-    a temp view over the full-featured log-prefix replay
-    (``_sql_time_travel_passthrough``); Spark 4.1 parses the clause but
+    statement.  ``tables.sql`` splices each historical reference Spark's
+    parse tree finds into a temp view over the full-featured log-prefix
+    replay (``tables._route_query``); Spark 4.1 parses the clause but
     its Python-DS bridge cannot dispatch it, so this rewrite IS query-
     level time travel for txnlog tables — the most-used lakehouse
     metadata feature for a SQL-first user base (reference
@@ -2729,7 +2729,7 @@ def q_table_changes_sql(spark, sf_dir):
     the commit-version bounds per change type must match the oracle's
     declarative reconstruction.  The router substitutes a temp view
     over the batch change-feed reader (commit-recorded sidecar files,
-    no listing, no snapshot diff — ``tables._rewrite_table_changes``).
+    no listing, no snapshot diff — ``tables._table_changes``).
 
     Scale shape: the feed plans O(commits in range) metadata and scans
     only the recorded sidecar files — a day's changes off a 100 TB

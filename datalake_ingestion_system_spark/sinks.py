@@ -5974,10 +5974,13 @@ class TxnLogFormat(TableFormat):
                         # `sel` already carries the row id when tracked
                         post = routed.filter(upd_row).select(*sel)
                     else:
-                        hot_keys = cur_hot.select(*keys, *idc)
+                        # identity columns (never in the source) and
+                        # the row id come from the TARGET side: the
+                        # postimage keeps the matched row's values
+                        hot_keys = cur_hot.select(*keys, *ident, *idc)
                         post = (src.join(hot_keys, keys,
-                                         "left_semi" if not track
-                                         else "inner")
+                                         "inner" if track or ident
+                                         else "left_semi")
                                 .filter(~F.col(c_del) & F.col(c_upd))
                                 .select(*as_target, *(
                                     [self._ROW_ID_COL] if track else [])))

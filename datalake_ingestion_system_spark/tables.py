@@ -54,7 +54,7 @@ import json
 import os
 import re as _re
 
-from pyspark.errors import AnalysisException
+from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
@@ -124,6 +124,17 @@ def table_path(spark: SparkSession, name: str) -> str:
         if row.col_name.strip() == "Location":
             return _plain_path(row.data_type.strip())
     raise ValueError(f"cannot resolve a location for table {name}")
+
+
+def _txnlog_path(spark: SparkSession, name: str) -> str | None:
+    """Location of catalog table ``name`` (quoted or not) when it is a
+    txnlog table; None for unresolvable names and for other providers
+    (parquet, Delta), whose statements stay Spark's own."""
+    try:
+        path = table_path(spark, _unquote_ident(name))
+    except Exception:
+        return None
+    return path if os.path.isdir(TxnLogFormat()._log_dir(path)) else None
 
 
 def show_create(spark: SparkSession, name: str) -> str:
@@ -250,8 +261,6 @@ def details_df(spark: SparkSession, name: str) -> DataFrame:
     """``DESCRIBE DETAIL t`` as a one-row DataFrame (the SQL-router
     shape): integer metadata keeps its type, nested structures render
     as canonical JSON text."""
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
     d = details(spark, name)
     fields, vals = [], []
     for k, v in d.items():
@@ -359,55 +368,52 @@ def _comment_end(s: str, i: int) -> int:
     return j
 
 
-def _split_top(s: str, sep: str = ",") -> list[str]:
-    """Split ``s`` on ``sep`` at paren depth 0, outside string literals
-    and comments — the minimal SQL-aware tokenizer the DML router needs
-    (assignment lists, conjunct lists).  SQL's doubled-quote escape
-    falls out of close-then-reopen; backslash escapes are tracked
-    explicitly so the tokenizer and ``_mask_quoted`` agree on where a
-    literal ends (a ``\\'`` inside a literal must not close it and
-    expose a comma).  Comments (quote state first, comment state
-    second — round 15) are dropped from the pieces: a separator inside
-    one never splits, and a quote inside one never opens a literal."""
-    parts, cur, depth, q, esc = [], [], 0, None, False
+def _lex(s: str):
+    """``(kind, start, end)`` of every comment, string literal and
+    backquoted identifier in ``s``, left to right — the ONE scanner
+    behind the quote-mask, the comment stripper and the tokenizer, so
+    they can never disagree on where a literal or comment ends.  Quote
+    state first, comment state second (round 15), as in Spark's lexer:
+    ``--`` / ``/*`` inside a literal or a backquoted name is content,
+    and a quote inside a comment (``-- don't``) opens nothing.
+    Literals honour backslash and doubled-quote escapes; ``end`` is
+    exclusive, and an unterminated span runs past the end of ``s``."""
     i, n = 0, len(s)
     while i < n:
-        ch = s[i]
-        if q:
-            cur.append(ch)
-            if esc:
-                esc = False
-            elif ch == "\\":
-                esc = True
-            elif ch == q:
-                q = None
-        elif _comment_start(s, i):
-            cur.append(" ")
-            i = _comment_end(s, i)
-            continue
-        elif ch == "`":
-            # backquoted identifier: verbatim — `a--b` is a name, not
-            # a comment (round 15 review fix)
-            j = s.find("`", i + 1)
-            j = n if j == -1 else j + 1
-            cur.append(s[i:j])
-            i = j
-            continue
-        elif ch in "'\"":
-            q = ch
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == sep and depth == 0:
-            parts.append("".join(cur))
-            cur = []
+        if _comment_start(s, i):
+            kind, j = "comment", _comment_end(s, i)
+        elif s[i] == "`":
+            kind, j = "ident", s.find("`", i + 1) + 1 or n
+        elif s[i] in "'\"":
+            kind, j = "literal", i + 1
+            while j < n and (s[j] != s[i] or s.startswith(s[i], j + 1)):
+                j += 2 if s[j] in ("\\", s[i]) else 1
+            j += 1  # past the closing quote
         else:
-            cur.append(ch)
-        i += 1
+            i += 1
+            continue
+        yield kind, i, j
+        i = j
+
+
+def _split_top(s: str, sep: str = ",") -> list[str]:
+    """Split ``s`` on ``sep`` at paren depth 0, outside string literals
+    and comments — the minimal SQL-aware tokenizer the DDL arms need
+    (column, key and property lists).  Literal spans come from
+    :func:`_lex`, so a ``\\'`` inside a literal can never close it and
+    expose a comma; comments drop out of the pieces, so a separator
+    inside one never splits."""
+    parts, cur, depth, last = [], [], 0, 0
+    for kind, i, j in [*_lex(s), ("end", len(s), len(s))]:
+        for ch in s[last:i]:
+            depth += (ch == "(") - (ch == ")")
+            if ch == sep and depth == 0:
+                parts.append("".join(cur))
+                cur = []
+            else:
+                cur.append(ch)
+        cur.append(" " if kind == "comment" else s[i:j])
+        last = j
     parts.append("".join(cur))
     return [p.strip() for p in parts if p.strip()]
 
@@ -420,43 +426,12 @@ def _strip_comments(s: str) -> str:
     the routed arms' ``$``-anchored regexes then see comment-free text,
     and a quote inside a comment (``-- don't``) can never derail the
     quote-mask of any downstream slice."""
-    out, i, n = [], 0, len(s)
-    q: str | None = None
-    while i < n:
-        ch = s[i]
-        if q:
-            out.append(ch)
-            if q != "`" and ch == "\\" and i + 1 < n:
-                out.append(s[i + 1])
-                i += 2
-                continue
-            if ch == q:
-                q = None
-            i += 1
-        elif _comment_start(s, i):
-            i = _comment_end(s, i)
-            out.append(" ")
-        elif ch in "'\"`":
-            q = ch
-            out.append(ch)
-            i += 1
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out)
-
-
-def _strip_alias(expr: str, aliases: list[str | None]) -> str:
-    """Remove ``alias.`` qualifier prefixes from column references —
-    the routed format API takes UNQUALIFIED predicates/assignments
-    (single-table scope by construction).  Prefixes are located on the
-    quote-mask so an alias-shaped token inside a string literal is
-    never touched."""
-    for a in aliases:
-        if a:
-            pat = _re.compile(rf"\b{_re.escape(a)}\s*\.\s*")
-            expr = _sub_masked(pat, lambda m: "", expr)
-    return expr.strip()
+    out, last = [], 0
+    for kind, i, j in _lex(s):
+        if kind == "comment":
+            out += [s[last:i], " "]
+            last = j
+    return "".join(out) + s[last:]
 
 
 _IDENT = r"[A-Za-z_][\w.]*|`[^`]+`(?:\s*\.\s*`[^`]+`)*"
@@ -466,359 +441,418 @@ def _unquote_ident(name: str) -> str:
     return name.replace("`", "").strip()
 
 
-#: tokens that may legally FOLLOW a table reference — never captured as
-#: an implicit alias by the time-travel rewrite below
-_TT_KW = ("WHERE|GROUP|ORDER|LIMIT|JOIN|ON|LEFT|RIGHT|FULL|INNER|CROSS"
-          "|NATURAL|UNION|INTERSECT|EXCEPT|MINUS|HAVING|WHEN|USING"
-          "|SEMI|ANTI|LATERAL|WINDOW|QUALIFY|SELECT|VALUES|WITH"
-          "|TABLESAMPLE|PIVOT|UNPIVOT|DISTRIBUTE|CLUSTER|SORT|AS"
-          "|OFFSET")
-
-#: ``FROM|JOIN <table> VERSION AS OF n | TIMESTAMP AS OF 'ts' | @vN``
-#: with an optional trailing ``[AS] alias``
-_TT_PAT = _re.compile(
-    rf"\b(FROM|JOIN)\s+({_IDENT})\s*"
-    rf"(?:@v(\d+)\b"
-    # SQL:2011 / Iceberg spellings accepted alongside Delta's (round
-    # 16): FOR SYSTEM_TIME AS OF 'ts' / FOR SYSTEM_VERSION AS OF n —
-    # Spark's own grammar parses the FOR-temporal clause identically
-    rf"|\b(?:FOR\s+)?(VERSION|TIMESTAMP|SYSTEM_VERSION|SYSTEM_TIME)"
-    rf"\s+AS\s+OF\s+"
-    rf"(\d+(?:\.\d+)?|'[^']*'|\"[^\"]*\"))"
-    rf"(?:\s+(?:AS\s+)?(?!(?:{_TT_KW})\b)([A-Za-z_]\w*|`[^`]+`))?",
-    _re.IGNORECASE | _re.DOTALL)
+#: the ``t@vN`` time-travel shorthand — not Spark grammar (a parse
+#: error at ``@``), so the one text rewrite left in front of the parse
+_AT_VERSION = _re.compile(r"@v(\d+)\b")
 
 
-#: ``FROM|JOIN table_changes('t', start [, end])`` — Delta's CDF SQL
-#: surface; start/end are version ints or quoted timestamps
-_TC_PAT = _re.compile(
-    rf"\b(FROM|JOIN)\s+TABLE_CHANGES\s*\(\s*'([^']+)'\s*,\s*"
-    rf"(\d+|'[^']*')\s*(?:,\s*(\d+|'[^']*')\s*)?\)"
-    rf"(?:\s+(?:AS\s+)?(?!(?:{_TT_KW})\b)([A-Za-z_]\w*|`[^`]+`))?",
-    _re.IGNORECASE | _re.DOTALL)
+def _splice(s: str, edits: list[tuple[int, int, str]]) -> str:
+    """``s`` with each non-overlapping ``(start, end, text)`` replaced."""
+    for a, b, text in sorted(edits, reverse=True):
+        s = s[:a] + text + s[b:]
+    return s
 
 
-def _rewrite_table_changes(spark: SparkSession, s: str
-                           ) -> tuple[str, list[str]]:
-    """Substitute each ``table_changes('t', start[, end])`` reference
-    (Delta's CDF SQL function — the feed's daily-driver surface) with a
-    temp view over the txnlog batch change-feed reader: per-row changes
-    tagged ``_change_type`` with ``_commit_version`` /
-    ``_commit_timestamp``, planned from commit-recorded sidecar files
-    (no listing, no snapshot diffing).  Integer bounds are versions,
-    quoted bounds are timestamps — exactly Delta's argument shapes."""
-    views: list[str] = []
-
-    def repl(m: "_re.Match[str]") -> str:
-        kw, name, start, end, alias = m.groups()
-        try:
-            path = table_path(spark, _unquote_ident(name))
-        except Exception:
-            return m.group(0)  # not a registered table: Spark's own
-        ensure_registered(spark)
-        reader = (spark.read.format("txnlog")
-                  .option("readChangeFeed", "true"))
-        reader = reader.option(
-            *(("startingVersion", start) if start.isdigit()
-              else ("startingTimestamp", start.strip("'"))))
-        if end is not None:
-            reader = reader.option(
-                *(("endingVersion", end) if end.isdigit()
-                  else ("endingTimestamp", end.strip("'"))))
-        import uuid as _uuid
-        vname = f"__tc_{_uuid.uuid4().hex[:12]}"
-        reader.load(path).createOrReplaceTempView(vname)
-        views.append(vname)
-        return (f"{kw} {vname} AS "
-                f"{alias or '`' + name.split('.')[-1].replace('`', '') + '`'}")
-
-    return _sub_masked(_TC_PAT, repl, s), views
+def _nodes(tree) -> list[tuple[str, object]]:
+    """Every node of a parsed plan or expression as ``(nodeName, node)``
+    in ``TreeNode.apply(i)`` numbering: pre-order, subquery and CTE
+    bodies (``innerChildren``) ahead of children — two py4j calls per
+    node, and the parent of a node whose parent has no inner children
+    (``SubqueryAlias``, ``Sample``) is the node just before it."""
+    out = []
+    while (n := tree.apply(len(out))) is not None:
+        out.append((n.nodeName(), n))
+    return out
 
 
-def _rewrite_time_travel(spark: SparkSession, s: str
-                         ) -> tuple[str, list[str]]:
-    """Substitute each time-travel table reference with a temp view over
-    the full-featured historical scan.  Returns (rewritten SQL, view
-    names to drop after analysis).  A reference whose name does not
-    resolve to a registered txnlog table is left untouched — Spark's
-    own sources keep their native time-travel behavior."""
-    views: list[str] = []
-
-    def repl(m: "_re.Match[str]") -> str:
-        kw, name, atv, kind, val, alias = m.groups()
-        tname = _unquote_ident(name)
-        try:
-            path = table_path(spark, tname)
-        except Exception:
-            return m.group(0)
-        kind_u = (kind or "").upper().replace(
-            "SYSTEM_VERSION", "VERSION").replace(
-            "SYSTEM_TIME", "TIMESTAMP")
-        if atv is not None:
-            kwargs = {"as_of_version": int(atv)}
-        elif kind_u == "VERSION":
-            if val[:1] in "'\"":
-                # Iceberg parity (round 14): VERSION AS OF '<name>'
-                # resolves a named ref — branch head or tag pin
-                kwargs = {"ref": val.strip().strip("'\"")}
-            elif not val.isdigit():
-                raise ValueError(
-                    f"VERSION AS OF takes an integer version or a "
-                    f"quoted ref name, got {val!r}")
-            else:
-                kwargs = {"as_of_version": int(val)}
-        else:
-            v = val.strip().strip("'\"")
-            kwargs = {"as_of_timestamp":
-                      float(v) if _re.fullmatch(r"\d+(?:\.\d+)?", v)
-                      else v}
-        df = TxnLogFormat().read(spark, path, **kwargs)
-        import uuid as _uuid
-        vname = f"__tt_{_uuid.uuid4().hex[:12]}"
-        df.createOrReplaceTempView(vname)
-        views.append(vname)
-        # leaf re-emitted backquoted with embedded backticks stripped
-        # (ADVICE r15 — `_rewrite_table_changes` parity: a quoted name
-        # containing a backtick must not emit unparseable SQL)
-        return (f"{kw} {vname} AS "
-                f"{alias or '`' + tname.split('.')[-1].replace('`', '') + '`'}")
-
-    return _sub_masked(_TT_PAT, repl, s), views
+def _span(node) -> tuple[int, int]:
+    """``[start, end)`` of the statement text ``node`` was parsed from."""
+    o = node.origin()
+    return o.startIndex().get(), o.stopIndex().get() + 1
 
 
-def _rewrite_plain_refs(spark: SparkSession, s: str
-                        ) -> tuple[str, list[str]]:
-    """Substitute each PLAIN (current-version) reference to a
-    registered txnlog table with a temp view over the full-featured
-    JVM parquet scan (round 15 — VERDICT r14 item 4): Spark 4.1's
-    Python-DS bridge reports no statistics (``PythonScan`` has no
-    SupportsReportStatistics — ``tables.stats`` docstring), so a
-    catalog scan can never broadcast pre-AQE; the JVM relation carries
-    REAL commit-recorded file sizes and Catalyst plans small
-    dimensions as BroadcastHashJoin with no hint and no runtime
-    rescue.  Resolution is PER STATEMENT — the view is built fresh
-    from the live commit log each call, so there is no pinned file
-    list to go stale (the reason this substitution lives on the SQL
-    surface and not in the catalog registration itself).  Names that
-    do not resolve to a registered txnlog table — CTE names, user temp
-    views (which shadow catalog tables, preserving Spark's
-    resolution), other providers — pass through untouched."""
-    views: list[str] = []
-    masked = _mask_quoted(s)
-    # names DEFINED by this statement — CTEs and WINDOW clauses
-    # (``name AS (``) — are never catalog references, even when a
-    # catalog table of the same name exists (the CTE shadows it in
-    # Spark's own resolution; review fix)
-    local_names = {
-        (m.group(1) or m.group(2)).lower()
-        for m in _re.finditer(
-            r"(?:`([^`]+)`|\b([A-Za-z_]\w*))\s+AS\s*\(", masked,
-            _re.IGNORECASE)}
-    memo: dict[str, str | None] = {}
-
-    def _in_relation_position(pos: int) -> bool:
-        """False when the FROM/JOIN at ``pos`` sits inside a paren
-        group that is NOT a subquery — e.g. ``extract(year FROM ts)``,
-        ``trim(BOTH x FROM y)``, ``substring(a FROM 1)`` — where the
-        word after the innermost open paren is an expression, not
-        SELECT/WITH/VALUES.  Conservative: a non-subquery group only
-        SKIPS the rewrite (the reference falls back to the catalog
-        scan — correct rows either way, review fix)."""
-        depth_stack: list[int] = []
-        for i, ch in enumerate(masked[:pos]):
-            if ch == "(":
-                depth_stack.append(i)
-            elif ch == ")" and depth_stack:
-                depth_stack.pop()
-        if not depth_stack:
-            return True
-        after = masked[depth_stack[-1] + 1:pos].lstrip()
-        word = after.split(None, 1)[0].upper() if after.split() else ""
-        word = word.lstrip("(")
-        return word in ("SELECT", "WITH", "VALUES", "")
-
-    def repl(m: "_re.Match[str]") -> str:
-        kw, name, sample, alias = m.groups()
-        tname = _unquote_ident(name)
-        if tname.startswith(("__tt_", "__tc_", "__jv_")) \
-                or tname.lower() in local_names:
-            return m.group(0)
-        if not _in_relation_position(m.start(2)):
-            return m.group(0)
-        if tname not in memo:
-            memo[tname] = None
-            try:
-                # resolution-order guard (review fix): a TEMP or
-                # PERSISTENT VIEW of the same name — including one
-                # DERIVED from a txnlog table, whose field metadata
-                # inherits the location breadcrumb — must keep its own
-                # plan; only real TABLE entries rewrite
-                if spark.catalog.getTable(tname).tableType \
-                        not in ("EXTERNAL", "MANAGED"):
-                    return m.group(0)
-                df_cat = spark.table(_quote(tname))
-                path = _meta_path(df_cat.schema)
-                if path:
-                    df = TxnLogFormat().read(spark, path)
-                    cat_cols = df_cat.columns
-                    if df.columns != cat_cols \
-                            and sorted(df.columns) == sorted(cat_cols):
-                        # hive-partition discovery appends partition
-                        # columns last; conform to the registered order
-                        # so SELECT * is identical on both routes
-                        df = df.select(*cat_cols)
-                    import uuid as _uuid
-                    vname = f"__jv_{_uuid.uuid4().hex[:12]}"
-                    df.createOrReplaceTempView(vname)
-                    views.append(vname)
-                    memo[tname] = vname
-            except Exception:
-                pass  # unresolvable name: Spark's own error surfaces
-        if memo[tname] is None:
-            return m.group(0)
-        smp = f" {sample}" if sample else ""
-        # implicit alias re-emitted BACKQUOTED: the leaf may start
-        # with a digit or otherwise not parse bare (review fix);
-        # embedded backticks stripped (ADVICE r15)
-        return (f"{kw} {memo[tname]}{smp} "
-                f"AS {alias or '`' + tname.split('.')[-1].replace('`', '') + '`'}")
-
-    return _sub_masked(_PLAIN_REF_PAT, repl, s), views
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
 
 
-#: ``FROM|JOIN <table> [[AS] alias]`` with no time-travel clause left
-#: (the TT/TC rewrites run first) — the plain-reference shape
-#: ``_rewrite_plain_refs`` substitutes
-_PLAIN_REF_PAT = _re.compile(
-    rf"\b(FROM|JOIN)\s+({_IDENT})"
-    # optional TABLESAMPLE, captured so the rewrite can re-emit it
-    # BEFORE the alias (Spark's grammar: sample precedes tableAlias —
-    # `FROM v AS t TABLESAMPLE(...)` is a parse error)
-    # three paren levels cover BUCKET ... ON f(g(x), n); deeper nesting
-    # fails the capture and errors loudly at parse, never silently
-    rf"(?:\s+(TABLESAMPLE\s*\((?:[^()]"
-    rf"|\((?:[^()]|\([^()]*\))*\))*\)"
-    rf"(?:\s+REPEATABLE\s*\(\d+\))?))?"
-    rf"(?:\s+(?:AS\s+)?(?!(?:{_TT_KW})\b)([A-Za-z_]\w*|`[^`]+`))?",
-    _re.IGNORECASE | _re.DOTALL)
+def _name(relation) -> str:
+    return relation.multipartIdentifier().mkString(".")
 
 
-def _sql_time_travel_passthrough(spark: SparkSession, s: str,
-                                 statement: str):
-    """Pass-through arm of :func:`sql` — rewrites time-travel table
-    references (round 13 — VERDICT r12 item 3: ``SELECT ... FROM t
-    VERSION AS OF n | TIMESTAMP AS OF 'ts'`` and the ``t@vN``
-    shorthand) before handing the statement to ``spark.sql``.  Spark
-    4.1 parses the clause but its Python-DS catalog bridge cannot
-    dispatch it (``PythonTable`` exposes no version-aware loadTable),
-    so the statement is rewritten against the registered path: each
-    historical reference becomes a session temp view over
-    ``TxnLogFormat.read(as_of_version=...)`` — the SAME log prefix
-    replay the DataFrame API uses, checkpoint-aware, O(tail) metadata
-    — aliased to the original table name so qualified column
-    references keep resolving.  Views are dropped once the plan is
-    analyzed (the analyzer inlines view plans, so execution never
-    re-reads them)."""
-    masked = _mask_quoted(s)
-    head = s.split(None, 1)[0].upper() if s else ""
-    need_tt = bool(_TT_PAT.search(masked) or _TC_PAT.search(masked))
-    if not need_tt and head not in ("SELECT", "WITH"):
-        return spark.sql(statement)
-    rewritten, views = s, []
-    if need_tt:
-        rewritten, views = _rewrite_time_travel(spark, s)
-        rewritten, tc_views = _rewrite_table_changes(spark, rewritten)
-        views += tc_views
-    if head in ("SELECT", "WITH"):
-        # plain references go to the planner-visible JVM scan (round
-        # 15) — AFTER the time-travel rewrites, whose views the plain
-        # pattern skips by prefix
-        rewritten, jv_views = _rewrite_plain_refs(spark, rewritten)
-        views += jv_views
-    if not views:
-        return spark.sql(statement)
+def _expr_text(s: str, expr, quals: dict[str, str] | None = None) -> str:
+    """Statement text of parsed expression ``expr`` — what the format
+    API receives — with each column qualifier in ``quals`` (lower-cased
+    alias → replacement prefix, ``""`` drops it) rewritten on its
+    attribute's own span, so literals stay byte-identical.  A node's
+    span can be narrower than its text — a predicate's starts at its
+    operator (``(a) IN (1)`` spans ``IN (1)``) — so the text is the
+    subtree's union, widened left over parens it leaves unmatched.
+    ``EXISTS`` carries the enclosing clause's origin, not its own: a
+    root one is located from its query, any other is inside its
+    parent's span."""
+    if expr.nodeName() == "Exists":
+        plan = _nodes(expr.plan())
+        lo = min(_span(n)[0] for _k, n in plan)
+        lo = len(s[:s.rindex("(", 0, lo)].rstrip()) - len("EXISTS")
+        return s[lo:s.index(")", max(_span(n)[1] for _k, n in plan)) + 1]
+    nodes = [(k, n, _span(n)) for k, n in _nodes(expr) if k != "Exists"]
+    lo = min(a for _k, _n, (a, _b) in nodes)
+    hi = max(b for _k, _n, (_a, b) in nodes)
+    depth = 0
+    for ch in _mask_quoted(s[lo:hi]):
+        depth += (ch == "(") - (ch == ")")
+        if depth < 0:
+            depth, lo = 0, s.rindex("(", 0, lo)
+    edits = []
+    for kind, _n, (a, b) in nodes:
+        t = s[a:b]  # the qualifier ends at the first dot outside `...`
+        dot = t.find(".", t.find("`", 1) + 1 if t[:1] == "`" else 0)
+        q = t[:max(dot, 0)].strip(" `").lower()
+        if kind == "UnresolvedAttribute" and dot > 0 and q in (quals or {}):
+            edits.append((a - lo, b - lo, quals[q] + t[dot + 1:].lstrip()))
+    return _splice(s[lo:hi], edits).strip()
+
+
+def _column(attr, aliases: list[str | None]) -> str:
+    """Column an assignment key / INSERT column names, from its
+    ``nameParts`` (key spans cover the whole SET list), a leading
+    statement alias dropped."""
+    parts = [str(p) for p in _seq(attr.nameParts())]
+    return ".".join(parts[1:] if len(parts) > 1
+                    and parts[0].lower() in aliases else parts)
+
+
+def _target(plan) -> tuple[str, str | None]:
+    """``(table name, lower-cased alias or None)`` of a DML target."""
+    if plan.nodeName() == "SubqueryAlias":
+        return _name(plan.child()), plan.alias().lower()
+    return _name(plan), None
+
+
+def _temp_view(df: DataFrame, prefix: str) -> str:
+    import uuid as _uuid
+    vname = f"{prefix}{_uuid.uuid4().hex[:12]}"
+    df.createOrReplaceTempView(vname)
+    return vname
+
+
+def _jvm_view(spark: SparkSession, name: str) -> str | None:
+    """Temp view over the JVM parquet scan of registered txnlog TABLE
+    ``name``, else None (round 15 — VERDICT r14 item 4): the Python-DS
+    bridge reports no statistics (``tables.stats`` docstring), so a
+    catalog scan never broadcasts pre-AQE, while the JVM relation
+    carries REAL commit-recorded file sizes.  Built from the live log
+    each statement: no pinned file list to go stale (why this lives on
+    the SQL surface, not in the catalog registration)."""
     try:
-        df = spark.sql(rewritten)
-        df.schema  # force analysis: view subplans inline into the plan
-        return df
-    except AnalysisException:
-        # A PLAIN-ref rewrite that breaks resolution — e.g. columns
-        # qualified with the multi-part table name (``SELECT
-        # default.t.c FROM default.t``), which no single-part view
-        # alias can satisfy — degrades to the pre-rewrite plan: the
-        # catalog scan Spark can dispatch natively (ADVICE r15).
-        # Time-travel rewrites have no native fallback (the Python-DS
-        # bridge cannot dispatch VERSION/TIMESTAMP AS OF), so their
-        # analysis errors stay loud.
-        if need_tt:
-            raise
-        return spark.sql(statement)
+        # resolution-order guard (review fix): a TEMP or PERSISTENT
+        # VIEW of the same name — including one DERIVED from a txnlog
+        # table, whose field metadata inherits the location breadcrumb
+        # — must keep its own plan; only real TABLE entries rewrite
+        if spark.catalog.getTable(name).tableType \
+                not in ("EXTERNAL", "MANAGED"):
+            return None
+        df_cat = spark.table(_quote(name))
+        path = _meta_path(df_cat.schema)
+        if not path:
+            return None
+        df = TxnLogFormat().read(spark, path)
+        cat_cols = df_cat.columns
+        if df.columns != cat_cols and sorted(df.columns) == sorted(cat_cols):
+            # hive-partition discovery appends partition columns last;
+            # conform to the registered order so SELECT * is identical
+            # on both routes
+            df = df.select(*cat_cols)
+        return _temp_view(df, "__jv_")
+    except Exception:
+        return None  # unresolvable name: Spark's own error surfaces
+
+
+def _as_of(s: str, tt, end: int) -> dict:
+    """``TxnLogFormat.read`` kwargs of a ``RelationTimeTravel`` node:
+    ``VERSION AS OF n | '<ref-name>'`` (a branch head or tag pin —
+    Iceberg parity, round 14) or ``TIMESTAMP AS OF 'ts' | epoch``; the
+    SQL:2011 ``FOR SYSTEM_VERSION|SYSTEM_TIME`` spellings parse to the
+    same node (round 16); ``end`` is the node's span end."""
+    ver = tt.version()
+    if ver.isDefined():  # an integer or a string literal
+        return ({"ref": ver.get()} if s[end - 1] in "'\""
+                else {"as_of_version": int(ver.get())})
+    a, b = _span(tt.timestamp().get())
+    v = s[a:b].strip("'\"")
+    return {"as_of_timestamp":
+            float(v) if v.replace(".", "", 1).isdigit() else v}
+
+
+def _table_changes(spark: SparkSession, s: str, tvf):
+    """``(view, table name, end of call)`` for ``table_changes('t',
+    start[, end])`` — Delta's CDF SQL function — over the txnlog batch
+    change-feed reader (rows tagged ``_change_type`` /
+    ``_commit_version`` / ``_commit_timestamp``, planned from
+    commit-recorded sidecars); integer bounds are versions, quoted ones
+    timestamps.  None for other calls and unregistered names."""
+    spans = [_span(a) for a in _seq(tvf.functionArgs())]
+    args = [s[a:b] for a, b in spans]
+    if _seq(tvf.name())[-1].lower() != "table_changes" \
+            or len(args) not in (2, 3) or args[0][:1] not in "'\"" \
+            or not all(a.isdigit() or a[:1] in "'\"" for a in args[1:]):
+        return None
+    try:
+        path = table_path(spark, args[0][1:-1])
+    except Exception:
+        return None
+    ensure_registered(spark)
+    reader = spark.read.format("txnlog").option("readChangeFeed", "true")
+    for bound, a in zip(("starting", "ending"), args[1:]):
+        reader = reader.option(*((f"{bound}Version", a) if a.isdigit()
+                                 else (f"{bound}Timestamp", a[1:-1])))
+    return (_temp_view(reader.load(path), "__tc_"), args[0][1:-1],
+            s.index(")", spans[-1][1]) + 1)
+
+
+def _route_query(spark: SparkSession, s: str, statement: str, head: str):
+    """Pass-through arm of :func:`sql`: every relation in Spark's parse
+    tree of ``s`` (subqueries and CTE bodies included) that names a
+    registered txnlog table is spliced, at its parsed offsets, into a
+    temp view the Python-DS bridge could not provide — ``VERSION|
+    TIMESTAMP AS OF`` over ``TxnLogFormat.read`` (the SAME checkpoint-
+    aware log replay the DataFrame API uses), ``table_changes`` over
+    the change feed, and in SELECT/WITH plain references over the JVM
+    scan (one view per table per statement).  A view keeps the table's
+    name as alias unless the statement aliased it; CTE names, temp
+    views and other providers pass through.  Views drop once the plan
+    is analyzed (analysis inlines view plans)."""
+    s = _splice(s, [(m.start(), m.end(), f" VERSION AS OF {m.group(1)}")
+                    for m in _AT_VERSION.finditer(_mask_quoted(s))])
+    try:
+        tree = spark._jsparkSession.sessionState().sqlParser().parsePlan(s)
+    except ParseException:
+        return spark.sql(statement)  # Spark's own error
+    # EXPLAIN holds its query as a field, not a child
+    nodes = _nodes(tree.logicalPlan() if head == "EXPLAIN" else tree)
+    ctes = {str(c._1()).lower() for kind, n in nodes
+            if kind == "UnresolvedWith" for c in _seq(n.cteRelations())}
+    views, edits, memo, historical = [], [], {}, False
+    try:
+        for i, (kind, n) in enumerate(nodes):
+            if kind == "RelationTimeTravel":
+                name = _name(rel := n.relation())
+                try:
+                    path = table_path(spark, name)
+                except Exception:
+                    continue  # Spark's own time travel, or its error
+                start, end = _span(rel)[0], _span(n)[1]
+                view = _temp_view(TxnLogFormat().read(
+                    spark, path, **_as_of(s, n, end)), "__tt_")
+            elif kind == "UnresolvedTableValuedFunction":
+                tc = _table_changes(spark, s, n)
+                if tc is None:
+                    continue
+                (view, name, end), start = tc, _span(n)[0]
+            elif kind == "UnresolvedRelation" and head in ("SELECT", "WITH"):
+                name = _name(n)
+                if name.lower() in ctes:
+                    continue  # a CTE shadows the catalog table
+                if name not in memo:
+                    memo[name] = _jvm_view(spark, name)
+                    views += [memo[name]] if memo[name] else []
+                if not memo[name]:
+                    continue
+                view, (start, end) = memo[name], _span(n)
+            else:
+                continue
+            if kind != "UnresolvedRelation":
+                views.append(view)
+                historical = True
+            edits.append((start, end, view))
+            parent, pnode = nodes[i - 1]
+            if parent != "SubqueryAlias":
+                # implicit alias, BACKQUOTED (the name may not parse
+                # bare), after any TABLESAMPLE (it precedes an alias)
+                if parent in ("Sample", "LocalLimit") and s[_span(pnode)[
+                        0]:].upper().startswith("TABLESAMPLE"):
+                    end = _span(pnode)[1]
+                leaf = name.split(".")[-1].replace("`", "``")
+                edits.append((end, end, f" AS `{leaf}`"))
+        if not views:
+            return spark.sql(statement)
+        try:
+            df = spark.sql(_splice(s, edits))
+            df.schema  # force analysis: view subplans inline into the plan
+            return df
+        except AnalysisException:
+            # A PLAIN-ref rewrite that breaks resolution — e.g. columns
+            # qualified with the multi-part table name (``SELECT
+            # default.t.c FROM default.t``), which no single-part view
+            # alias can satisfy — degrades to the catalog scan Spark can
+            # dispatch natively (ADVICE r15).  Time-travel rewrites have
+            # no native fallback, so their analysis errors stay loud.
+            if historical:
+                raise
+            return spark.sql(statement)
     finally:
         for v in views:
             spark.catalog.dropTempView(v)
 
 
+def _assignments(s: str, action, aliases: list, quals: dict,
+                 dup: str) -> dict[str, str]:
+    """``{column: expression text}`` of a SET / INSERT list."""
+    out: dict[str, str] = {}
+    for a in _seq(action.assignments()):
+        col = _column(a.key(), aliases)
+        if col in out:
+            raise ValueError(f"{dup} {col!r}")  # Delta's duplicate-SET
+        out[col] = _expr_text(s, a.value(), quals)
+    return out
+
+
+def _route_dml(spark: SparkSession, s: str, head: str):
+    """UPDATE / DELETE / MERGE from Spark's parse tree (see :func:`sql`)."""
+    try:
+        tree = spark._jsparkSession.sessionState().sqlParser().parsePlan(s)
+    except ParseException as e:
+        if e.getCondition() == "_LEGACY_ERROR_TEMP_0006":
+            raise ValueError("MERGE INSERT lists its columns but a "
+                             "different number of VALUES expressions") from e
+        raise ValueError(f"unsupported {head} shape — expected: " + {
+            "UPDATE": "UPDATE t SET col = expr[, ...] [WHERE pred]",
+            "DELETE": "DELETE FROM t [WHERE pred]",
+            "MERGE": "MERGE INTO t [AS a] USING (subquery)|src [AS b] ON "
+                     "equality-conjunction WHEN ... THEN DELETE|UPDATE "
+                     "SET *|INSERT *"}[head]) from e
+    fmt = TxnLogFormat()
+    if head != "MERGE":
+        name, alias = _target(tree.table())
+        drop, cond = {alias: ""}, tree.condition()
+        if head == "DELETE":
+            # no WHERE: the parser's default TRUE carries the whole
+            # statement's origin
+            return fmt.delete_where(
+                spark, table_path(spark, name),
+                _expr_text(s, cond, drop) if _span(cond)[0] else "true")
+        return fmt.update_where(
+            spark, table_path(spark, name),
+            _expr_text(s, cond.get(), drop) if cond.isDefined() else "true",
+            _assignments(s, tree, [alias], drop,
+                         "duplicate UPDATE assignment to column"))
+    tname, ta = _target(tree.targetTable())
+    src = tree.sourceTable()
+    sa = src.alias().lower() if src.nodeName() == "SubqueryAlias" else None
+    # the source is its own parsed subtree, analyzed as spark.sql would
+    source = DataFrame(spark._jvm.org.apache.spark.sql.classic.Dataset
+                       .ofRows(spark._jsparkSession, src), spark)
+    drop, canon = {ta: "", sa: ""}, {ta: "t.", sa: "s."}
+
+    def keys(c) -> list[str]:
+        # ON: a flat conjunction of same-column equalities
+        if c.nodeName() == "And":
+            return keys(c.left()) + keys(c.right())
+        if c.nodeName() != "EqualTo":
+            raise ValueError(f"unsupported MERGE ON conjunct (equality "
+                             f"only): {_expr_text(s, c)!r}")
+        l, r = (_column(x, [ta, sa])
+                if x.nodeName() == "UnresolvedAttribute"
+                else _expr_text(s, x) for x in (c.left(), c.right()))
+        if l != r:
+            raise ValueError(
+                "MERGE ON must equate the SAME column name on both "
+                f"sides for the routed API, got {l!r} = {r!r}")
+        return [l]
+
+    def clause(a, dup: str | None = None):
+        """``(condition, assignments)`` of a WHEN clause."""
+        c = a.condition()
+        return (_expr_text(s, c.get(), drop) if c.isDefined() else None,
+                _assignments(s, a, [ta], canon, dup)
+                if a.nodeName() in ("UpdateAction", "InsertAction") else None)
+
+    upd = ins = matched_delete = nmbs_delete = None
+    for a in _seq(tree.matchedActions()):
+        if a.nodeName() == "DeleteAction":
+            matched_delete = clause(a)[0] or "true"
+        elif upd:
+            raise ValueError("at most one WHEN MATCHED ... UPDATE clause")
+        else:
+            upd = clause(a, "duplicate MERGE assignment to column")
+    for a in _seq(tree.notMatchedActions()):
+        if ins:
+            # review fix: last-wins would silently drop the earlier
+            # clause (the routed API carries ONE insert condition and
+            # one column list)
+            raise ValueError(
+                "at most one WHEN NOT MATCHED ... INSERT clause")
+        ins = clause(a, "duplicate MERGE INSERT column")
+    for a in _seq(tree.notMatchedBySourceActions()):
+        if a.nodeName() != "DeleteAction":
+            raise ValueError(
+                "the BY SOURCE form supports only WHEN NOT MATCHED BY "
+                "SOURCE [AND c] THEN DELETE")
+        nmbs_delete = clause(a)[0] or "true"
+    if not upd:
+        raise ValueError(
+            "the routed MERGE requires WHEN MATCHED THEN UPDATE SET * "
+            "or UPDATE SET col = expr (the API's upsert contract)")
+    return fmt.merge(
+        spark, table_path(spark, tname), source,
+        keys(tree.mergeCondition()),
+        matched_delete_condition=matched_delete,
+        matched_update_condition=upd[0],
+        not_matched_by_source_delete_condition=nmbs_delete,
+        matched_update_assignments=upd[1],
+        insert_assignments=ins[1] if ins else None,
+        insert_condition=ins[0] if ins else "false")
+
+
 def sql(spark: SparkSession, statement: str):
-    """SQL-statement router for the DML/maintenance verbs Spark 4.1's
-    Python-DS catalog bridge CANNOT dispatch to a Python data source
-    (round 12 — VERDICT r11 item 3).  The reference's entire user
-    surface is SQL text (reference README.md:34,:51 — queries go to
-    Athena); Delta gets ``MERGE INTO``/``UPDATE``/``DELETE``/
-    ``OPTIMIZE``/``VACUUM``/``RESTORE``/``DESCRIBE HISTORY`` because it
+    """SQL-statement router for the verbs Spark 4.1's Python-DS
+    catalog bridge CANNOT dispatch to a Python data source (round 12 —
+    VERDICT r11 item 3).  The reference's entire user surface is SQL
+    text (reference README.md:34,:51 — queries go to Athena); Delta
+    gets ``MERGE``/``UPDATE``/``DELETE``/``OPTIMIZE``/... because it
     ships a JVM Catalyst extension, and ``PythonDataSourceV2`` exposes
     no row-level-operation or procedure hooks (scan/write only —
-    verified against the 4.1.2 bytecode, same class of seam as
-    ``DeltaFormat``).  This shim parses exactly those statement shapes
-    and routes them to the format API against the CATALOG-REGISTERED
-    table; every other statement passes through ``spark.sql``
-    untouched, so it can front arbitrary SQL:
+    verified against the 4.1.2 bytecode).  The statement's first word
+    picks the arm; every statement no arm claims passes through
+    ``spark.sql`` untouched, so the router can front arbitrary SQL.
 
-    - ``UPDATE t SET c = expr[, ...] [WHERE pred]`` → ``update_where``
-    - ``DELETE FROM t [WHERE pred]`` → ``delete_where``
-    - ``MERGE INTO t [AS a] USING (subquery)|src [AS b] ON a.k = b.k
-      [AND ...] [WHEN MATCHED AND c THEN DELETE] [WHEN MATCHED [AND c]
-      THEN UPDATE SET * | UPDATE SET col = expr[, ...]]
-      [WHEN NOT MATCHED [AND c] THEN INSERT * |
-       INSERT (col, ...) VALUES (expr, ...)]
-      [WHEN NOT MATCHED BY SOURCE [AND c] THEN DELETE]``
-      → ``merge`` (conditions over source columns; SET expressions may
-      mix sides via the statement aliases — round 13 column-level SET)
-    - ``OPTIMIZE t [WHERE pred] [ZORDER BY (c1, c2)]`` → ``compact``
-    - ``VACUUM t [RETAIN n HOURS]`` → ``vacuum``
-    - ``RESTORE TABLE t TO VERSION AS OF n | TO TIMESTAMP AS OF 'ts'``
-      → ``restore``
-    - ``DESCRIBE HISTORY t`` → ``history_df``
-    - ``SELECT ... FROM t VERSION AS OF n | TIMESTAMP AS OF 'ts'``
-      (and the ``t@vN`` shorthand) → historical temp-view substitution
-      (round 13; see ``_sql_time_travel_passthrough``)
-    - ``SELECT ... FROM table_changes('t', start[, end])`` → the batch
-      change-feed reader (Delta's CDF SQL function; integer bounds are
-      versions, quoted bounds timestamps — round 13)
-    - ``DESCRIBE DETAIL t`` → ``details_df``
-    - ``ALTER TABLE t ADD|RENAME|DROP COLUMN ... / ALTER COLUMN c TYPE
-      t / ADD|DROP CONSTRAINT / [UN]SET TBLPROPERTIES`` →
-      ``alter_table`` / ``set_properties`` (catalog refreshed;
-      non-txnlog ALTERs pass through — round 13)
-    - ``ALTER TABLE t CREATE|DROP BRANCH|TAG name [AS OF VERSION n] /
-      PUBLISH BRANCH b [AND DROP]`` → the refs/WAP surface, and
-      ``SELECT ... FROM t VERSION AS OF '<ref-name>'`` reads a branch
-      head or tag pin by name (Iceberg parity — round 14)
-    - ``CREATE [OR REPLACE] TABLE t (col type [, ...]) USING txnlog
-      OPTIONS (path)|LOCATION`` → schema-first empty-table DDL
-      (round 14)
-    - ``CREATE [OR REPLACE] TABLE n USING txnlog OPTIONS (path)|
-      LOCATION AS SELECT ...`` → CTAS (round 13)
-    - ``INSERT OVERWRITE [TABLE] t <select>`` → ``overwrite_table``
-      (plain INSERT INTO stays on Spark's bridge — round 13)
-    - ``CREATE MATERIALIZED VIEW n [USING txnlog] LOCATION '<p>' AS
-      SELECT <keys, agg AS alias, ...> FROM t [WHERE p] GROUP BY keys``
-      / ``REFRESH MATERIALIZED VIEW n`` / ``DROP MATERIALIZED VIEW
-      [IF EXISTS] n`` → ``matview`` (round 16): an incrementally-
-      maintained aggregate — REFRESH recomputes only the groups the
-      source's change feed dirtied since the last refresh
-    - ``SET TBLPROPERTIES`` additionally accepts ARBITRARY keys
-      (round 16 — Delta parity): unknown names store as string-valued
-      user properties, surfaced flat by ``SHOW TBLPROPERTIES``
+    Statements in Spark's own grammar route from Spark's own parse
+    tree (``sqlParser().parsePlan``), never from pattern matching:
+
+    - ``UPDATE t [a] SET c = expr[, ...] [WHERE pred]`` →
+      ``update_where``; ``DELETE FROM t [a] [WHERE pred]`` →
+      ``delete_where``; ``MERGE INTO t [a] USING src|(query) [b] ON
+      a.k = b.k [AND ...] WHEN MATCHED [AND c] THEN DELETE | UPDATE
+      SET * | UPDATE SET col = expr[, ...] / WHEN NOT MATCHED [AND c]
+      THEN INSERT * | INSERT (col, ...) VALUES (expr, ...) / WHEN NOT
+      MATCHED BY SOURCE [AND c] THEN DELETE`` → ``merge``.  The tree
+      names target, source, keys and clauses; conditions and values
+      reach the format API as the statement's own text, sliced at the
+      parsed spans, with statement aliases dropped from conditions and
+      mapped to the API's ``t.``/``s.`` in MERGE values (round 13
+      column-level SET, round 16 column-list INSERT).  A statement
+      Spark cannot parse raises ``ValueError`` naming the form.
+    - SELECT / WITH and every other pass-through statement: relations
+      naming a registered txnlog table splice into temp views at their
+      parsed offsets (:func:`_route_query`) — ``VERSION AS OF n |
+      'ref' | TIMESTAMP AS OF 'ts'`` (and the ``t@vN`` shorthand, the
+      one text rewrite before the parse; round 13/14/16),
+      ``table_changes('t', start[, end])`` (Delta's CDF function), and
+      in SELECT/WITH plain references to the planner-visible JVM scan
+      (round 15).
+
+    Engine extensions Spark cannot parse, and the DDL shapes its
+    bridge cannot run, keep ``$``-anchored matches over the
+    quote-masked text: ``OPTIMIZE t [WHERE p] [ZORDER BY (c, ...)]``,
+    ``VACUUM t [RETAIN n HOURS] [DRY RUN]``, ``RESTORE TABLE t TO
+    VERSION|TIMESTAMP AS OF v``, ``DESCRIBE HISTORY|DETAIL t``,
+    ``ALTER TABLE`` column / constraint / TBLPROPERTIES / branch-tag
+    forms (:func:`_route_alter`), schema-first ``CREATE TABLE``, CTAS,
+    ``INSERT OVERWRITE``, ``CONVERT TO TXNLOG``, ``ANALYZE TABLE``,
+    ``SHOW TBLPROPERTIES|REFS`` and ``CREATE|REFRESH|DROP
+    MATERIALIZED VIEW`` (round 16, ``matview``).  The head switch
+    stays in front of the parse: ``DESCRIBE HISTORY t`` would parse as
+    a DESCRIBE of a table named ``HISTORY``.
 
     Returns what the routed API returns (a DataFrame for pass-through /
     DESCRIBE HISTORY, affected-row counts / metrics dicts for DML).
@@ -832,38 +866,8 @@ def sql(spark: SparkSession, statement: str):
     head = s.split(None, 1)[0].upper() if s else ""
     flags = _re.IGNORECASE | _re.DOTALL
 
-    if head == "UPDATE":
-        m = _match_masked(rf"UPDATE\s+({_IDENT})\s+SET\s+(.*?)"
-                          rf"(?:\s+WHERE\s+(.*))?$", s, flags)
-        if not m:
-            raise ValueError(
-                "unsupported UPDATE shape — expected: UPDATE t SET col "
-                "= expr[, ...] [WHERE pred]")
-        name, set_part, pred = m.groups()
-        assignments = {}
-        for a in _split_top(set_part):
-            ca, _, ea = a.partition("=")
-            if not _:
-                raise ValueError(f"bad assignment in UPDATE SET: {a!r}")
-            assignments[_unquote_ident(ca)] = ea.strip()
-        return TxnLogFormat().update_where(
-            spark, table_path(spark, _unquote_ident(name)),
-            pred.strip() if pred else "true", assignments)
-
-    if head == "DELETE":
-        m = _match_masked(rf"DELETE\s+FROM\s+({_IDENT})"
-                          rf"(?:\s+WHERE\s+(.*))?$", s, flags)
-        if not m:
-            raise ValueError(
-                "unsupported DELETE shape — expected: DELETE FROM t "
-                "[WHERE pred]")
-        name, pred = m.groups()
-        return TxnLogFormat().delete_where(
-            spark, table_path(spark, _unquote_ident(name)),
-            pred.strip() if pred else "true")
-
-    if head == "MERGE":
-        return _route_merge(spark, s, flags)
+    if head in ("UPDATE", "DELETE", "MERGE"):
+        return _route_dml(spark, s, head)
 
     if head == "ALTER":
         routed = _route_alter(spark, s, flags)
@@ -879,14 +883,10 @@ def sql(spark: SparkSession, statement: str):
             # dispatches plain INSERT INTO): full-table replace as one
             # atomic replace_all commit, old state stays time-travelable
             name, select = m.groups()
-            try:
-                path = table_path(spark, _unquote_ident(name))
-            except Exception:
+            path = _txnlog_path(spark, name)
+            if path is None:
                 return spark.sql(statement)  # non-txnlog: Spark's own
-            fmt = TxnLogFormat()
-            if not os.path.isdir(fmt._log_dir(path)):
-                return spark.sql(statement)
-            fmt.overwrite_table(sql(spark, select), path)
+            TxnLogFormat().overwrite_table(sql(spark, select), path)
             return None
         return spark.sql(statement)  # plain INSERT INTO: the bridge
 
@@ -1125,14 +1125,8 @@ def sql(spark: SparkSession, statement: str):
         # ANALYZE — the router's pass-through contract.
         m = _match_masked(rf"ANALYZE\s+TABLE\s+({_IDENT})\s+COMPUTE"
                           rf"\s+STATISTICS$", s, flags)
-        if not m:
+        if not (m and _txnlog_path(spark, m.group(1))):
             return spark.sql(statement)
-        try:
-            path = table_path(spark, _unquote_ident(m.group(1)))
-        except Exception:
-            return spark.sql(statement)
-        if not os.path.isdir(TxnLogFormat()._log_dir(path)):
-            return spark.sql(statement)  # registered, but not txnlog
         st = stats(spark, _unquote_ident(m.group(1)))
         return spark.createDataFrame(
             [(st["size_in_bytes"], st["num_rows"], st["num_files"])],
@@ -1148,16 +1142,12 @@ def sql(spark: SparkSession, statement: str):
             # transforms, ...) — Spark's own SHOW TBLPROPERTIES sees
             # only the catalog entry's stored options, which for a
             # Python-DS table carry none of the format's state
-            try:
-                path = table_path(spark, _unquote_ident(m.group(1)))
-            except Exception:
-                return spark.sql(statement)  # unresolvable: Spark's own
-            fmt = TxnLogFormat()
-            if not os.path.isdir(fmt._log_dir(path)):
-                # registered but NOT a txnlog table (parquet/Delta):
-                # Spark's own SHOW TBLPROPERTIES sees its real props
+            path = _txnlog_path(spark, m.group(1))
+            if path is None:
+                # Spark's own SHOW TBLPROPERTIES sees the real
+                # properties of a parquet/Delta table
                 return spark.sql(statement)
-            props = dict(fmt.properties(path))
+            props = dict(TxnLogFormat().properties(path))
             # user properties surface FLAT, their own key per row —
             # exactly how the user set them (round 16)
             props.update(props.pop("user_properties", None) or {})
@@ -1194,7 +1184,7 @@ def sql(spark: SparkSession, statement: str):
         # plain DESCRIBE forms are Spark's own
         return spark.sql(statement)
 
-    return _sql_time_travel_passthrough(spark, s, statement)
+    return _route_query(spark, s, statement, head)
 
 
 #: canonical property-name aliases accepted by SET TBLPROPERTIES —
@@ -1253,14 +1243,10 @@ def _route_alter(spark: SparkSession, s: str, flags: int):
     if not m:
         return NotImplemented
     name, rest = m.groups()
-    name = _unquote_ident(name)
-    try:
-        path = table_path(spark, name)
-    except Exception:
+    name, path = _unquote_ident(name), _txnlog_path(spark, name)
+    if path is None:
         return NotImplemented
     fmt = TxnLogFormat()
-    if not os.path.isdir(fmt._log_dir(path)):
-        return NotImplemented  # catalog table, but not a txnlog one
 
     mm = _match_masked(r"ADD\s+COLUMNS?\s*\(?\s*(.*?)\)?\s*$", rest,
                        flags)
@@ -1418,8 +1404,8 @@ def _mask_quoted(s: str) -> str:
     scans over the mask cannot match keywords inside string literals,
     while match SPANS still index the raw text for extraction.  EVERY
     router regex arm must scan the mask and slice the raw statement by
-    span (round 14 — VERDICT r13 item 1: the unmasked ``_TT_PAT``
-    rewrite silently edited string literals containing ``FROM t
+    span (round 14 — VERDICT r13 item 1: an unmasked time-travel
+    regex silently edited string literals containing ``FROM t
     VERSION AS OF n``).  COMMENTS blank too (round 15 — VERDICT r14
     item 2, quote state first, comment state second, matching Spark's
     lexer): a quote inside ``-- don't`` can no longer blank the rest
@@ -1430,38 +1416,13 @@ def _mask_quoted(s: str) -> str:
     supported: sessions running with ANSI ``doubleQuotedIdentifiers``
     (the router would blank identifier content) — the routed verbs use
     backtick identifiers throughout."""
-    out, i, n = list(s), 0, len(s)
-    while i < n:
-        if _comment_start(s, i):
-            j = _comment_end(s, i)
-            for k in range(i, min(j, n)):
-                out[k] = " "
-            i = j
-        elif s[i] == "`":
-            # BACKQUOTED IDENTIFIER: skip the span untouched — a quote
-            # or comment marker inside `a--b` / `it's` is identifier
-            # content, never a literal or comment start (round 15
-            # review fix: blanking here broke routing of such names)
-            j = s.find("`", i + 1)
-            i = n if j == -1 else j + 1
-        elif s[i] in "'\"":
-            q = s[i]
-            j = i + 1
-            while j < n:
-                if s[j] == "\\" and j + 1 < n:
-                    j += 2
-                    continue
-                if s[j] == q:
-                    if j + 1 < n and s[j + 1] == q:
-                        j += 2
-                        continue
-                    break
-                j += 1
-            for k in range(i + 1, min(j, n)):
-                out[k] = " "
-            i = j + 1
-        else:
-            i += 1
+    out = list(s)
+    for kind, i, j in _lex(s):
+        # a backquoted identifier stays verbatim: a quote or comment
+        # marker inside `a--b` / `it's` is name content (round 15)
+        if kind != "ident":
+            lo, hi = (i, j) if kind == "comment" else (i + 1, j - 1)
+            out[lo:hi] = " " * (min(hi, len(s)) - lo)
     return "".join(out)
 
 
@@ -1472,235 +1433,21 @@ class _RawMatch:
     ``groups`` here slice the RAW text, recovering literal content the
     mask hid from the keyword scan."""
 
-    __slots__ = ("_m", "_raw")
-
     def __init__(self, m: "_re.Match[str]", raw: str) -> None:
         self._m, self._raw = m, raw
 
-    def group(self, *idx):
-        if not idx:
-            idx = (0,)
-        vals = tuple(
-            None if self._m.start(i) == -1
-            else self._raw[self._m.start(i):self._m.end(i)]
-            for i in idx)
-        return vals[0] if len(vals) == 1 else vals
+    def group(self, i: int):
+        a, b = self._m.span(i)
+        return None if a == -1 else self._raw[a:b]
 
     def groups(self):
-        return tuple(
-            None if self._m.start(i) == -1
-            else self._raw[self._m.start(i):self._m.end(i)]
-            for i in range(1, self._m.re.groups + 1))
-
-    def start(self, g: int = 0) -> int:
-        return self._m.start(g)
-
-    def end(self, g: int = 0) -> int:
-        return self._m.end(g)
+        return tuple(map(self.group, range(1, self._m.re.groups + 1)))
 
 
 def _match_masked(pattern: str, s: str, flags: int = 0):
     """``re.match`` over the quote-mask; groups read from raw text."""
     m = _re.match(pattern, _mask_quoted(s), flags)
     return _RawMatch(m, s) if m else None
-
-
-def _sub_masked(pat: "_re.Pattern[str]", repl, s: str) -> str:
-    """``pat.sub`` with matching over the quote-mask: occurrences are
-    located on ``_mask_quoted(s)`` (so quoted literals can never
-    match), ``repl`` receives a raw-slicing :class:`_RawMatch`, and
-    unmatched stretches pass through from the RAW text."""
-    masked = _mask_quoted(s)
-    out, last = [], 0
-    for m in pat.finditer(masked):
-        out.append(s[last:m.start()])
-        out.append(repl(_RawMatch(m, s)))
-        last = m.end()
-    out.append(s[last:])
-    return "".join(out)
-
-
-def _split_masked(s: str, sep_pattern: str,
-                  flags: int = _re.IGNORECASE) -> list[str]:
-    """Split ``s`` on a regex separator found OUTSIDE string literals
-    (separator occurrences located on the quote-mask, pieces sliced
-    from the raw text)."""
-    masked = _mask_quoted(s)
-    parts, last = [], 0
-    for m in _re.finditer(sep_pattern, masked, flags):
-        parts.append(s[last:m.start()])
-        last = m.end()
-    parts.append(s[last:])
-    return parts
-
-
-def _route_merge(spark: SparkSession, s: str, flags: int):
-    """Parse the supported ``MERGE INTO`` surface and route to
-    ``TxnLogFormat.merge`` (see ``sql``)."""
-    m = _match_masked(
-        rf"MERGE\s+INTO\s+({_IDENT})(?:\s+AS\s+(\w+)|\s+(?!USING)(\w+))?"
-        rf"\s+USING\s+(\((?:[^()]|\([^()]*\))*\)|{_IDENT})"
-        rf"(?:\s+AS\s+(\w+)|\s+(?!ON)(\w+))?"
-        rf"\s+ON\s+(.*?)\s+(WHEN\s+.*)$", s, flags)
-    if not m:
-        raise ValueError(
-            "unsupported MERGE shape — expected: MERGE INTO t [AS a] "
-            "USING (subquery)|src [AS b] ON equality-conjunction "
-            "WHEN ... THEN DELETE|UPDATE SET *|INSERT *")
-    (tname, ta1, ta2, src_sql, sa1, sa2, on, whens) = m.groups()
-    t_alias, s_alias = (ta1 or ta2), (sa1 or sa2)
-    src_sql = src_sql.strip()
-    if src_sql.startswith("("):
-        source = spark.sql(src_sql[1:-1])
-    else:
-        source = spark.table(_quote(_unquote_ident(src_sql)))
-    # ON: flat conjunction of same-column equalities → the merge keys
-    keys = []
-    for conj in _split_masked(on, r"\bAND\b"):
-        eq = _split_top(conj, "=")
-        if len(eq) != 2:
-            raise ValueError(
-                f"unsupported MERGE ON conjunct (equality only): "
-                f"{conj.strip()!r}")
-        l, r = (_strip_alias(x, [t_alias, s_alias]) for x in eq)
-        l, r = _unquote_ident(l), _unquote_ident(r)
-        if l != r:
-            raise ValueError(
-                "MERGE ON must equate the SAME column name on both "
-                f"sides for the routed API, got {l!r} = {r!r}")
-        keys.append(l)
-    matched_delete, insert_cond, matched_update = None, None, None
-    nmbs_delete, assignments, ins_assignments = None, None, None
-    saw_update, saw_insert = False, False
-    pat = _re.compile(
-        r"WHEN\s+(NOT\s+)?MATCHED(\s+BY\s+SOURCE)?"
-        r"(?:\s+AND\s+(.*?))?\s+THEN\s+"
-        r"(DELETE|INSERT\s+\*"
-        r"|INSERT\s*\([^()]*\)\s*VALUES\s*\(.+?\)"
-        r"|UPDATE\s+SET\s+.+?)"
-        r"(?=\s+WHEN\s+(?:NOT\s+)?MATCHED|\s*$)", flags)
-    # scan the QUOTE-MASKED text so a literal containing "when
-    # matched" (or clause keywords) can never mis-split the statement;
-    # groups are sliced from the RAW text by span
-    pos, matches = 0, list(pat.finditer(_mask_quoted(whens)))
-    if not matches or matches[0].start() != 0:
-        raise ValueError(f"unsupported MERGE WHEN clauses: {whens!r}")
-    for w in matches:
-        notm, bysrc = w.group(1), w.group(2)
-        cond = (whens[w.start(3):w.end(3)]
-                if w.group(3) is not None else None)
-        raw_act = whens[w.start(4):w.end(4)]
-        act = _re.sub(r"\s+", " ", raw_act.upper()).strip()
-        cond = (_strip_alias(cond, [s_alias, t_alias])
-                if cond else None)
-        if bysrc:
-            if not notm or act != "DELETE":
-                raise ValueError(
-                    "the BY SOURCE form supports only WHEN NOT MATCHED "
-                    "BY SOURCE [AND c] THEN DELETE")
-            nmbs_delete = cond or "true"
-        elif notm:
-            if saw_insert:
-                # review fix: last-wins would silently drop the
-                # earlier clause's shape (the routed API carries ONE
-                # insert condition + one column list)
-                raise ValueError(
-                    "at most one WHEN NOT MATCHED ... INSERT clause")
-            if act == "INSERT *":
-                saw_insert, insert_cond = True, (cond or None)
-            elif act.startswith("INSERT"):
-                # column-list INSERT (round 16): INSERT (c, ...)
-                # VALUES (e, ...) — parsed from the RAW clause text,
-                # statement aliases normalized to t./s.
-                im = _match_masked(
-                    r"INSERT\s*\(([^()]*)\)\s*VALUES\s*\((.+)\)\s*$",
-                    raw_act, flags)
-                if not im:
-                    raise ValueError(
-                        f"unsupported MERGE INSERT form: {raw_act!r} "
-                        "— expected INSERT * or INSERT (col, ...) "
-                        "VALUES (expr, ...)")
-                cols = [_unquote_ident(_strip_alias(c, [t_alias]))
-                        for c in _split_top(im.group(1))]
-                exprs = _split_top(im.group(2))
-                if len(cols) != len(exprs) or not cols:
-                    raise ValueError(
-                        f"MERGE INSERT lists {len(cols)} columns but "
-                        f"{len(exprs)} VALUES expressions")
-                ins_assignments = {}
-                for c, ex in zip(cols, exprs):
-                    if c in ins_assignments:
-                        raise ValueError(
-                            f"duplicate MERGE INSERT column {c!r}")
-                    ins_assignments[c] = _requalify(ex.strip(),
-                                                    t_alias, s_alias)
-                saw_insert, insert_cond = True, (cond or None)
-            else:
-                raise ValueError(
-                    "WHEN NOT MATCHED supports only THEN INSERT * or "
-                    "INSERT (col, ...) VALUES (expr, ...)")
-        elif act == "DELETE":
-            matched_delete = cond or "true"
-        elif act == "UPDATE SET *":
-            if saw_update:
-                raise ValueError(
-                    "at most one WHEN MATCHED ... UPDATE clause")
-            saw_update, matched_update = True, (cond or None)
-        elif act.startswith("UPDATE SET"):
-            # column-level SET (round 13): parse `col = expr[, ...]`
-            # from the RAW clause text; statement aliases normalize to
-            # the API's canonical t./s. qualifiers
-            if saw_update:
-                raise ValueError(
-                    "at most one WHEN MATCHED ... UPDATE clause")
-            saw_update, matched_update = True, (cond or None)
-            raw_set = _re.match(r"UPDATE\s+SET\s+(.*)$", raw_act,
-                                flags).group(1)
-            assignments = {}
-            for a in _split_top(raw_set):
-                ca, eq, ea = a.partition("=")
-                if not eq:
-                    raise ValueError(
-                        f"bad assignment in MERGE UPDATE SET: {a!r}")
-                tgt = _unquote_ident(_strip_alias(ca, [t_alias]))
-                if tgt in assignments:
-                    # Delta's duplicate-SET-column error
-                    raise ValueError(
-                        f"duplicate MERGE assignment to column {tgt!r}")
-                assignments[tgt] = _requalify(ea.strip(),
-                                              t_alias, s_alias)
-        else:
-            raise ValueError(f"unsupported MERGE action: {act!r}")
-        pos = w.end()
-    if whens[pos:].strip():
-        raise ValueError(
-            f"unsupported trailing MERGE text: {whens[pos:].strip()!r}")
-    if not saw_update:
-        raise ValueError(
-            "the routed MERGE requires WHEN MATCHED THEN UPDATE SET * "
-            "or UPDATE SET col = expr (the API's upsert contract)")
-    return TxnLogFormat().merge(
-        spark, table_path(spark, _unquote_ident(tname)), source, keys,
-        matched_delete_condition=matched_delete,
-        matched_update_condition=matched_update,
-        not_matched_by_source_delete_condition=nmbs_delete,
-        matched_update_assignments=assignments,
-        insert_assignments=ins_assignments,
-        insert_condition=(insert_cond if saw_insert else "false"))
-
-
-def _requalify(expr: str, t_alias: str | None,
-               s_alias: str | None) -> str:
-    """Normalize a MERGE assignment expression's statement aliases to
-    the format API's canonical ``t.`` / ``s.`` qualifiers (alias
-    occurrences located on the quote-mask — string literals keep
-    their content)."""
-    for alias, canon in ((t_alias, "t."), (s_alias, "s.")):
-        if alias and alias.lower() not in ("t", "s"):
-            pat = _re.compile(rf"\b{_re.escape(alias)}\s*\.\s*",
-                              _re.IGNORECASE)
-            expr = _sub_masked(pat, lambda m: canon, expr)
-    return expr.strip()
 
 
 def drop_table(spark: SparkSession, name: str) -> None:

@@ -155,9 +155,12 @@ def test_mixed_writer_reads_and_batch_grouping(spark, tmp_path):
     scan per serializer."""
     fmt = TxnLogFormat()
     path = str(tmp_path / "t")
-    fmt.append(spark.createDataFrame([(0,), (1,)], "id long"), path)
+    # one file per append (whatever the default parallelism): four
+    # tiny files, each its own scan partition
+    fmt.append(spark.createDataFrame([(0,), (1,)], "id long").coalesce(1),
+               path)
     _foreign_append(fmt, path, "f0", [10, 11])
-    fmt.append(spark.createDataFrame([(2,)], "id long"), path)
+    fmt.append(spark.createDataFrame([(2,)], "id long").coalesce(1), path)
     _foreign_append(fmt, path, "f1", [12])
     df = fmt.read(spark, path)
     assert sorted(r.id for r in df.collect()) == [0, 1, 2, 10, 11, 12]

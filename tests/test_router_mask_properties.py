@@ -7,14 +7,15 @@ the whole class BY CONSTRUCTION: statements are generated from known
 computed independently of the implementation — any future scanner
 change that disagrees on where a literal ends fails here with a
 shrunken counterexample, not in production with a silently rewritten
-string.  Pure Python (no SparkSession), so hypothesis can afford
-hundreds of examples.
+string.  The tokenizer properties are pure Python, so hypothesis can
+afford hundreds of examples; the two routing properties drive
+``tables.sql`` end to end on a session (Spark's parse tree decides
+what is a literal there) and keep to ten examples each.
 """
 
 from __future__ import annotations
 
-import re
-
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -79,36 +80,56 @@ def test_split_top_never_splits_inside_literals(items):
     assert tables._split_top(", ".join(parts)) == parts
 
 
+_SPARK_SET = settings(max_examples=10, deadline=None)
+
+
+@pytest.fixture(scope="module")
+def lit_table(spark, tmp_path_factory):
+    """A registered txnlog table ``(k long, c string, note string)``."""
+    from datalake_ingestion_system_spark.sinks import TxnLogFormat
+    path = str(tmp_path_factory.mktemp("lit") / "t")
+    TxnLogFormat(checkpoint_interval=None).append(spark.createDataFrame(
+        [(0, "", None)], "k long, c string, note string"), path)
+    name = "lit_props"
+    tables.create_table(spark, name, path, replace=True)
+    yield name, path
+    tables.drop_table(spark, name)
+
+
 @given(lit1=_CONTENT, lit2=_CONTENT)
-@_SET
-def test_update_arm_parses_arbitrary_literals(lit1, lit2):
-    """The UPDATE arm's masked match + tokenizer recover the SET
-    assignments and the WHERE predicate byte-for-byte, whatever the
-    literals contain (including ' WHERE ', ' VERSION AS OF 3 ',
-    escapes, and clause punctuation)."""
-    a1 = f"note = '{_esc(lit1)}'"
-    pred = f"c = '{_esc(lit2)}'"
-    s = f"UPDATE t SET {a1}, b = 2 WHERE {pred}"
-    m = tables._match_masked(
-        rf"UPDATE\s+({tables._IDENT})\s+SET\s+(.*?)"
-        rf"(?:\s+WHERE\s+(.*))?$", s, re.IGNORECASE | re.DOTALL)
-    assert m is not None
-    name, set_part, got_pred = m.groups()
-    assert name == "t"
-    assert got_pred == pred
-    assert tables._split_top(set_part) == [a1, "b = 2"]
+@_SPARK_SET
+def test_update_sets_arbitrary_literals_on_matching_rows(
+        spark, lit_table, lit1, lit2):
+    """Routed through Spark's parse tree, an UPDATE whose SET and WHERE
+    literals hold anything (' WHERE ', ' VERSION AS OF 3 ', escapes,
+    clause punctuation) updates exactly the rows matching the WHERE
+    literal, to exactly the SET literal."""
+    from datalake_ingestion_system_spark.sinks import TxnLogFormat
+    name, path = lit_table
+    TxnLogFormat(checkpoint_interval=None).overwrite_table(
+        spark.createDataFrame([(0, lit2, None), (1, lit2 + "x", None),
+                               (2, "x" + lit2, None)],
+                              "k long, c string, note string"), path)
+    n = tables.sql(spark, f"UPDATE {name} SET note = '{_esc(lit1)}', "
+                          f"k = k + 10 WHERE c = '{_esc(lit2)}'")
+    assert n == 1
+    got = {r.k: (r.c, r.note) for r in tables.table(spark, name).collect()}
+    assert got == {10: (lit2, lit1), 1: (lit2 + "x", None),
+                   2: ("x" + lit2, None)}
 
 
 @given(lit=_CONTENT)
-@_SET
-def test_time_travel_pattern_never_fires_inside_literals(lit):
-    """A literal containing the full time-travel clause (the r13 judge
-    repro, generalized) must never match on the mask; the same clause
-    OUTSIDE a literal must always match."""
-    inside = f"SELECT '{_esc(lit)} FROM t VERSION AS OF 3 {_esc(lit)}' AS x"
-    assert not tables._TT_PAT.search(tables._mask_quoted(inside))
-    outside = f"SELECT * FROM t VERSION AS OF 3 WHERE x = '{_esc(lit)}'"
-    assert tables._TT_PAT.search(tables._mask_quoted(outside))
+@_SPARK_SET
+def test_time_travel_clause_inside_literal_comes_back_verbatim(
+        spark, lit_table, lit):
+    """A literal holding a full time-travel clause for the REGISTERED
+    table (the r13 judge repro, generalized) is never rewritten: it
+    comes back verbatim, next to a real historical reference."""
+    name, _path = lit_table
+    text = f"{lit} FROM {name} VERSION AS OF 3 {name}@v3 {lit}"
+    row = tables.sql(spark, f"SELECT '{_esc(text)}' AS x, count(*) AS n "
+                            f"FROM {name} VERSION AS OF 0").head()
+    assert (row.x, row.n) == (text, 1)
 
 
 # -- comments (round 15): quote state first, comment state second ---------
@@ -119,9 +140,11 @@ _NO_NL = st.text(
     max_size=20)
 _NO_CLOSE = _NO_NL.filter(
     # no nested open/close, and no leading "+" — "/*+" is a Spark JOIN
-    # HINT (HENT_START), deliberately NOT treated as a comment
+    # HINT (HENT_START), deliberately NOT treated as a comment; no
+    # trailing "/" either — with the closing "*/" it spells a nested
+    # "/*" opener, which Spark's lexer (and the scanner) count
     lambda t: "*/" not in t and "/*" not in t
-    and not t.startswith("+"))
+    and not t.startswith("+") and not t.endswith("/"))
 
 
 @given(pre=_PLAIN, comment=_NO_NL, post=_PLAIN)

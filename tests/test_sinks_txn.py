@@ -3858,6 +3858,35 @@ def test_merge_identity_insert(spark, tmp_path):
     assert {r.k for r in final} == {1, 2, 7, 8, 90, 50}
 
 
+def test_merge_identity_change_feed_postimage(spark, tmp_path):
+    """A change-feed MERGE into an identity table: the source never
+    carries the identity column, so the UPDATE SET * postimage takes
+    it from the target row — the matched row's own value."""
+    fmt = TxnLogFormat(checkpoint_interval=None)
+    path = str(tmp_path / "t")
+    fmt.append(spark.createDataFrame([], "k long, v long"), path)
+    fmt.set_properties(spark, path, change_data_feed=True,
+                       identity_columns={"rid": {"start": 1, "step": 1}})
+    fmt.append(spark.createDataFrame(
+        [(1, 11), (2, 22), (3, 33)], "k long, v long"), path)
+    before = {r.k: r.rid for r in fmt.read(spark, path).collect()}
+    v = fmt._commits(path)[-1]["version"]
+    got = fmt.merge(spark, path, spark.createDataFrame(
+        [(2, 222), (9, 99)], "k long, v long"), ["k"])
+    assert got == {"updated": 1, "deleted": 0, "inserted": 1}
+    from datalake_ingestion_system_spark.sources.txnlog_stream import (
+        TxnLogDataSource)
+    spark.dataSource.register(TxnLogDataSource)
+    feed = {(r._change_type, r.k): (r.v, r.rid) for r in
+            spark.read.format("txnlog").option("readChangeFeed", "true")
+            .option("startingVersion", str(v + 1)).load(path).collect()}
+    assert feed[("update_preimage", 2)] == (22, before[2])
+    assert feed[("update_postimage", 2)] == (222, before[2])
+    rows = {r.k: (r.v, r.rid) for r in fmt.read(spark, path).collect()}
+    assert rows[2] == (222, before[2])
+    assert feed[("insert", 9)] == rows[9]
+
+
 @pytest.mark.slow
 def test_dml_subquery_predicates_all_paths(spark, tmp_path):
     """Round 16: IN / correlated-EXISTS / scalar subqueries resolve in

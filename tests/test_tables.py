@@ -226,7 +226,9 @@ def test_file_manifest_by_name_and_transform_values(spark, tmp_path):
     name = f"fm_{uuid.uuid4().hex[:10]}"
     path = str(tmp_path / "fm")
     fmt = TxnLogFormat(checkpoint_interval=None)
-    fmt.append(spark.range(8).select(
+    # one row per file (whatever the default parallelism), so the
+    # a = 0 row below sits alone in its file
+    fmt.append(spark.range(8, numPartitions=8).select(
         F.col("id").alias("a"), (F.col("id") % 4).alias("b")), path)
     fmt.set_properties(spark, path,
                        partition_transform={"source": "b",
@@ -1085,22 +1087,43 @@ def test_sql_rewrite_respects_shadowing_and_hints(spark, cat, tmp_path):
         tables.drop_table(spark, "rv_dashy")
 
 
-def test_sql_rewrite_memoizes_self_joins(spark, cat):
+def test_sql_rewrite_memoizes_self_joins(spark, cat, monkeypatch):
     """One temp view per distinct table per statement — a self-join
-    resolves the log once (round-15 review efficiency fix) — and the
-    join result is correct."""
-    from datalake_ingestion_system_spark.tables import _rewrite_plain_refs
+    resolves the log once (round-15 review efficiency fix) — the join
+    result is correct, and the view is dropped after analysis."""
     name = cat["name"]
-    _rw, views = _rewrite_plain_refs(
-        spark, f"SELECT * FROM {name} x JOIN {name} y ON x.a = y.a")
-    try:
-        assert len(views) == 1
-    finally:
-        for v in views:
-            spark.catalog.dropTempView(v)
+    views = []
+    make = tables._temp_view
+    monkeypatch.setattr(tables, "_temp_view",
+                        lambda df, prefix: views.append(
+                            make(df, prefix)) or views[-1])
     assert tables.sql(
         spark, f"SELECT count(*) AS n FROM {name} x "
                f"JOIN {name} y ON x.a = y.a").collect()[0].n == 10
+    assert len(views) == 1
+    assert not spark.catalog.tableExists(views[0])
+
+
+def test_sql_dml_text_cut_at_parsed_spans(spark, cat):
+    """UPDATE / DELETE conditions and values reach the format API as
+    statement text cut at Spark's parsed spans: a predicate whose own
+    span starts at its operator keeps its parenthesized operand, a
+    root EXISTS keeps its keyword, and a target alias is dropped from
+    conditions and values.  EXPLAIN of a time-travel query plans the
+    spliced historical scan."""
+    n = cat["name"]  # a = 0..9, b = 2a
+    spark.createDataFrame([(4,), (5,)], "x long") \
+        .createOrReplaceTempView("span_keys")
+    assert tables.sql(spark, f"DELETE FROM {n} WHERE (a % 5) IN (0)") == 2
+    assert tables.sql(
+        spark, f"UPDATE {n} AS u SET b = u.b + 100 WHERE EXISTS "
+               f"(SELECT 1 FROM span_keys k WHERE k.x = a)") == 1
+    got = dict(map(tuple, tables.table(spark, n).collect()))
+    assert 0 not in got and 5 not in got
+    assert got[4] == 108 and got[3] == 6
+    plan = tables.sql(
+        spark, f"EXPLAIN SELECT * FROM {n} VERSION AS OF 0").head()[0]
+    assert "FileScan parquet" in plan, plan
 
 
 def test_batch_source_renamed_compact_staging_column(spark, tmp_path):

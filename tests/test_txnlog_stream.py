@@ -1239,8 +1239,10 @@ def test_max_files_per_trigger_caps_each_batch(spark, tmp_path):
         TxnLogStreamReader)
     fmt = TxnLogFormat(checkpoint_interval=None)
     path = str(tmp_path / "t")
-    mk = lambda n, lo: spark.createDataFrame(
-        [(lo + i,) for i in range(n)], "v int").repartition(n)
+    # exactly n files: one row per range partition (a round-robin
+    # repartition can leave partitions empty)
+    mk = lambda n, lo: spark.range(lo, lo + n, numPartitions=n).select(
+        F.col("id").cast("int").alias("v"))
     fmt.append(mk(2, 0), path)           # v0: 2 files
     fmt.append(mk(2, 10), path)          # v1: 2 files
     fmt.append(mk(4, 20), path)          # v2: 4 files (> budget, alone)
