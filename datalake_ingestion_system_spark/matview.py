@@ -62,7 +62,7 @@ PRUNE_KEY_LIMIT = 1024
 
 
 def _spec(fmt: TxnLogFormat, mv_path: str) -> dict:
-    props = fmt._resolve_properties(fmt._commits(mv_path))
+    props = fmt.properties(mv_path)
     raw = (props.get("user_properties") or {}).get(MV_SPEC_PROP)
     if not raw:
         raise ValueError(
@@ -91,10 +91,10 @@ def create_materialized_aggregate(
     set from it."""
     fmt = TxnLogFormat(checkpoint_interval=None)
     src = os.path.abspath(source_path)
-    commits = fmt._commits(src)
-    if not commits:
+    head_snap = fmt._snapshot(src)
+    if not head_snap.commits:
         raise FileNotFoundError(f"no committed source table at {src}")
-    if not fmt._resolve_properties(commits).get("change_data_feed"):
+    if not head_snap.properties.get("change_data_feed"):
         raise ValueError(
             f"source {src} does not record a change feed — run "
             "set_properties(change_data_feed=True) on it first; "
@@ -116,7 +116,7 @@ def create_materialized_aggregate(
         raise ValueError(
             f"aliases {sorted(overlap)} are both group keys and "
             "aggregate outputs")
-    head = commits[-1]["version"]
+    head = head_snap.version
     snap = fmt.read(spark, src, as_of_version=head)
     # canonicalize key case onto the stored column names (review fix:
     # DataFrame resolution is case-insensitive, but the refresh-time

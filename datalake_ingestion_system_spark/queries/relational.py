@@ -2322,7 +2322,7 @@ def q_merge_targeted_read(spark, sf_dir):
     # range staging: the narrow key batch provably leaves files cold
     fmt.append(base.repartitionByRange(8, "o_custkey"), path)
     pre_version = fmt._commits(path)[-1]["version"]
-    pre_files = {f for e in fmt._resolve_live(fmt._commits(path))
+    pre_files = {f for e in fmt._snapshot(path).live
                  for f in (e.get("files") or [])}
     mx = base.agg(F.max("o_custkey")).head()[0]
     cut, ins0 = int(mx) // 20, int(mx) + 1

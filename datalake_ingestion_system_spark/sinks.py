@@ -25,6 +25,7 @@ import re as _re_mod
 import time as _time_mod
 import uuid
 from contextlib import contextmanager
+from dataclasses import dataclass, field
 from functools import reduce, wraps
 
 from pyspark.sql import DataFrame, SparkSession
@@ -243,6 +244,23 @@ def retry_on_conflict(op, attempts: int = 3):
                 raise
 
 
+def _fold_once(fn):
+    """Share ONE log fold across a table write's own snapshot reads:
+    while the decorated call runs, ``TxnLogFormat._fold`` hands back
+    the snapshot it already folded for an unchanged log (a moved head
+    folds anew).  Nested calls share the outermost call's memo."""
+    @wraps(fn)
+    def wrapper(self, *args, **kwargs):
+        if self._op_snaps is not None:
+            return fn(self, *args, **kwargs)
+        self._op_snaps = []
+        try:
+            return fn(self, *args, **kwargs)
+        finally:
+            self._op_snaps = None
+    return wrapper
+
+
 def _conflict_retryable(fn):
     """Give a read-modify-write table op a built-in bounded
     ``retries=N`` keyword (Delta retries conflicting commits internally;
@@ -254,7 +272,8 @@ def _conflict_retryable(fn):
     re-reading the log and stages under a fresh uuid (a lost attempt
     leaves only an unreferenced staging dir for ``vacuum``).  Default
     ``retries=0`` keeps the explicit fail-fast contract; callers
-    needing unbounded policies still compose ``retry_on_conflict``."""
+    needing unbounded policies still compose ``retry_on_conflict``.
+    The op folds the log once (``_fold_once``)."""
     @wraps(fn)
     def wrapper(self, *args, retries: int = 0, **kwargs):
         if retries < 0:
@@ -268,7 +287,310 @@ def _conflict_retryable(fn):
                                      attempts=retries + 1)
         finally:
             self._op_depth -= 1
-    return wrapper
+    return _fold_once(wrapper)
+
+
+@dataclass(frozen=True)
+class Snapshot:
+    """The table state at one log version: ONE replay of a commit list
+    (``TxnLogFormat._commits`` assembles it — a checkpoint record seeds
+    the state, the tail folds on top), Delta's snapshot.  Every reader
+    and writer of one operation plans from one of these; treat every
+    field as read-only (live entries and alters may share objects with
+    the process-wide log cache, which is never mutated).
+
+    Restore-aware terms — ``live``, ``removed_files``, ``dvs``,
+    ``alters``, ``schema``, ``properties`` — are swapped by a
+    ``restore`` for the fold of its target prefix.  Monotone terms —
+    ``protocol``, ``identity_high``, ``row_high`` — fold over every
+    commit, restored-away ones included: a protocol upgrade is
+    permanent, and an identity value or row id handed out on a
+    restored-away branch is never re-issued, because time travel can
+    still see its rows.
+
+    ``live`` holds one entry per data commit still (partly) visible:
+    ``{dir, removed, pcol, staged_pcol, transform, row_base, parts,
+    version, action, files, schema}``, where ``removed`` maps a column
+    to the partition values LATER dynamic overwrites replaced (the
+    anti-filter), ``replace_all`` resets the list, and a vector dir or
+    metadata commit adds nothing.  ``removed_files`` are the
+    table-relative files ``rewrite_files`` retired, ``dvs`` the live
+    deletion-vector dirs (a ``rewrite_files`` consolidates them, a
+    ``replace_all`` retires them), ``alters`` the live ALTER records
+    (a schema-evolving merge's ``evolved_add`` synthesizes one)."""
+
+    version: int
+    live: list
+    removed_files: frozenset
+    dvs: list
+    alters: list
+    schema: str | None
+    properties: dict
+    protocol: dict
+    identity_high: dict
+    row_high: int
+    #: the folded list itself: per-file stats, sizes and txn
+    #: watermarks are read from the records, never replayed
+    commits: list = field(compare=False, repr=False)
+
+    @classmethod
+    def fold(cls, commits: list[dict]) -> "Snapshot":
+        """Fold ``commits`` — any list ``_commits`` returns, or a prefix
+        of one — into a snapshot (an empty list folds to version -1)."""
+        return cls(version=commits[-1]["version"] if commits else -1,
+                   commits=commits, **cls._replay(commits))
+
+    @staticmethod
+    def _entry(c: dict, pcol=None, staged_pcol=None) -> dict:
+        return {"dir": c["dir"], "removed": {}, "pcol": pcol,
+                "staged_pcol": staged_pcol, "transform": c.get("transform"),
+                "row_base": c.get("row_base"),
+                "parts": frozenset(c.get("partitions") or []),
+                "version": c["version"], "action": c["action"],
+                "files": c.get("files"), "schema": c.get("schema")}
+
+    @staticmethod
+    def _seed(state: dict) -> list[dict]:
+        """A checkpoint's live entries in fold form (new dicts — the
+        record is shared through the log cache, which ``_commits``
+        hydrates with this list once per checkpoint as ``_live_seed``;
+        no fold mutates an entry).  Schemas come back through the
+        state's dictionary (``schema_idx``); pre-dictionary checkpoints
+        carry inline ``schema`` strings."""
+        schemas = state.get("schemas") or []
+        return [{"dir": e["dir"],
+                 "removed": {col: frozenset(vals)
+                             for col, vals in e["removed"].items()},
+                 "pcol": e["pcol"], "staged_pcol": e.get("staged_pcol"),
+                 "transform": e.get("transform"),
+                 "row_base": e.get("row_base"),
+                 "parts": frozenset(e["parts"]), "version": e["version"],
+                 "action": e.get("action"), "files": e.get("files"),
+                 "schema": (e["schema"] if "schema" in e
+                            else schemas[e["schema_idx"]]
+                            if e.get("schema_idx") is not None else None)}
+                for e in state["live"]]
+
+    @staticmethod
+    def _features(c: dict) -> tuple:
+        """``(reader, writer)`` feature names one commit requires: a
+        ``set_protocol`` upgrade's, or a checkpoint's folded protocol.
+        Shared with the protocol gate, which checks them without a
+        fold."""
+        if c["action"] == "set_protocol":
+            return (c.get("reader_features") or (),
+                    c.get("writer_features") or ())
+        if c["action"] == "checkpoint":
+            p = c["state"].get("protocol") or {}
+            return p.get("reader") or (), p.get("writer") or ()
+        return (), ()
+
+    @classmethod
+    def _replay(cls, commits: list[dict]) -> dict:
+        live: list[dict] = []
+        dvs: list[str] = []
+        alters: list[dict] = []
+        removed: frozenset = frozenset()
+        schema, props = None, {}
+        reader: set = set()
+        writer: set = set()
+        ident: dict = {}
+        row_high = 0
+        for c in commits:
+            act = c["action"]
+            # monotone terms first: a restore never rolls them back
+            r, w = cls._features(c)
+            reader.update(r)
+            writer.update(w)
+            for col, h in (c.get("identity_high") or {}).items():
+                if col not in ident or h > ident[col]:
+                    ident[col] = h
+            row_high = max(row_high, c.get("row_id_high") or 0)
+            if act == "restore":
+                # THE restore rule, for every restore-aware term: the
+                # state is the target prefix's (metadata only — the
+                # restored dirs are the ORIGINAL ones, re-referenced)
+                base = cls._replay(
+                    [x for x in commits if x["version"] <= c["to_version"]])
+                live, dvs, alters = base["live"], base["dvs"], base["alters"]
+                removed, schema = base["removed_files"], base["schema"]
+                props = base["properties"]
+                continue
+            if c.get("schema"):
+                schema = c["schema"]
+            if act == "checkpoint":
+                st = c["state"]
+                seeded = c.get("_live_seed")
+                live = list(seeded) if seeded is not None else cls._seed(st)
+                dvs, alters = list(st["dvs"]), list(st["alters"])
+                removed = frozenset(st["removed_files"])
+                props = dict(st.get("properties") or {})
+            elif act == "replace_all":
+                # pcol stays None (not value-subtractable), but the
+                # STAGING layout may be hive-partitioned
+                # (compact(partition_col=...)) — recorded so the scan
+                # batcher never mixes partitioned and flat layouts
+                live = [cls._entry(c, staged_pcol=c.get("partition_col"))]
+                dvs, removed = [], frozenset()
+            elif act in ("dv_update", "rewrite_files"):
+                # the rewritten rows are an append; the vector dir /
+                # retired FILES are subtracted below
+                live.append(cls._entry(c))
+            elif act not in ("add_dv", "alter", "set_properties",
+                             "set_protocol"):
+                # append / overwrite (and, on an ungated list, any
+                # foreign action: append-shaped)
+                if act == "overwrite":
+                    col, vals = c["partition_col"], frozenset(c["partitions"])
+                    live = [{**e, "removed": {
+                        **e["removed"],
+                        col: e["removed"].get(col, frozenset()) | vals}}
+                        for e in live]
+                live.append(cls._entry(c, pcol=c.get("partition_col")))
+            if act == "add_dv":
+                dvs.append(c["dir"])
+            elif act == "dv_update":
+                dvs.append(c["dv_dir"])
+            elif act == "rewrite_files":
+                dvs = [c["dv_dir"]] if c.get("dv_dir") else []
+                removed = removed | frozenset(c["removed_files"])
+            elif act == "set_properties":
+                props = {**props, **c["props"]}
+                props = {k: v for k, v in props.items() if v is not None}
+            if act == "alter":
+                alters.append(c)
+            elif c.get("evolved_add"):
+                # a schema-evolving MERGE widened the table inside its
+                # rewrite commit (Delta autoMerge): the equivalent alter
+                # record lets every schema-era consumer see the columns
+                # appear at this version through the ONE alter path
+                alters.append({"action": "alter", "version": c["version"],
+                               "add": dict(c["evolved_add"]),
+                               "rename": {}, "drop": [],
+                               "schema": c.get("schema")})
+        return {"live": live, "removed_files": removed, "dvs": dvs,
+                "alters": alters, "schema": schema, "properties": props,
+                "protocol": {"reader": frozenset(reader),
+                             "writer": frozenset(writer)},
+                "identity_high": ident, "row_high": row_high}
+
+    def column_types(self) -> dict[str, str]:
+        """``{column: simple type name}`` of the current schema (complex
+        types omitted) — the pruning tiers' type lookups."""
+        if not self.schema:
+            return {}
+        return {f["name"]: f["type"]
+                for f in json.loads(self.schema)["fields"]
+                if isinstance(f["type"], str)}
+
+    def plan_scan(self, path: str, clauses=(),
+                  only_files: set | None = None) -> "ScanPlan":
+        """The live files a scan of this snapshot must read, as
+        ``(live index, entry, table-relative files)`` per surviving
+        entry — files ``None`` means "the whole staged dir" (a legacy
+        record without a file list, none of its files retired).  Applied
+        in order: all-replaced and partition-value / transform dir
+        pruning on ``clauses``, stats / bloom / transform file pruning
+        (``_clause_excluded_files``; the checkpoint's kept-map form reads
+        O(survivors)), retired files, and ``only_files`` — an EXACT scan
+        restriction (a copy-on-write rewrite must restage precisely its
+        hot files).  ONE planner for ``TxnLogFormat.read``, the txnlog
+        batch source and the change feed's overwrite pre-state.
+
+        Raises ``FileNotFoundError`` for a live dir the scan needs that
+        is gone (vacuumed time travel, corruption) — probed only for
+        entries the plan keeps, so a deep predicate read that prunes
+        thousands of dirs pays no stat call for them."""
+        fmt = TxnLogFormat
+        types = self.column_types() if clauses else {}
+        gone: frozenset | set = self.removed_files
+        kept_cpv = kept_by_dir = None
+        if clauses:
+            skip, kept = fmt._clause_excluded_files(path, self, clauses,
+                                                    _want_kept=True)
+            gone = gone | skip
+            if kept is not None:
+                kept_cpv, kept_by_dir = kept
+        gone_dirs: list = []
+
+        def dir_has_gone(d: str) -> bool:
+            # dir prefixes of retired/pruned files, consumed only by the
+            # legacy no-file-list walk — built lazily (O(gone))
+            if not gone_dirs:
+                gone_dirs.append({"/".join(p.split("/", 2)[:2])
+                                  for p in gone})
+            return d in gone_dirs[0]
+
+        def require_dir(e: dict) -> None:
+            if not os.path.isdir(os.path.join(path, e["dir"])):
+                raise FileNotFoundError(
+                    f"data dir {e['dir']} for a live commit is missing at "
+                    f"{path} (vacuumed version or corrupted table)")
+
+        out = []
+        for idx, e in enumerate(self.live):
+            pcol, parts, tr = e["pcol"], e["parts"], e["transform"]
+            if pcol and parts <= e["removed"].get(pcol, frozenset()):
+                continue  # every partition this dir holds re-overwritten
+            if clauses and pcol and fmt._partition_provably_empty(
+                    pcol, parts, clauses, types.get(pcol)):
+                continue  # no recorded partition value can match
+            if clauses and tr and parts and fmt._transform_provably_empty(
+                    tr, parts, clauses, types.get(tr["source"])):
+                continue  # no recorded derived value can match
+            files = e["files"]
+            if (kept_by_dir is not None and files is not None
+                    and e["version"] <= kept_cpv
+                    and e["dir"].startswith("_txn_data/")
+                    and "/" not in e["dir"][10:]):
+                # checkpoint-covered entry under the standard staging
+                # layout: the sidecar recorded every one of its files,
+                # so the kept map IS its unpruned list
+                files = kept_by_dir.get(e["dir"], [])
+            if files is not None and not files:
+                # no part files (an empty staged frame), or fully
+                # pruned: zero rows, before any path join or stat call
+                continue
+            if files is None:
+                require_dir(e)
+                if not fmt._has_data_files(os.path.join(path, e["dir"])):
+                    continue
+                if only_files is None and not dir_has_gone(e["dir"]):
+                    out.append((idx, e, None))
+                    continue
+                files = fmt._dir_files(path, e["dir"])
+            files = [rf for rf in files if rf not in gone
+                     and (only_files is None or rf in only_files)]
+            if not files:
+                continue  # every file pruned, retired or not asked for
+            require_dir(e)
+            out.append((idx, e, files))
+        return ScanPlan(self, path, tuple(clauses),
+                        None if only_files is None
+                        else frozenset(only_files), out)
+
+
+@dataclass(frozen=True)
+class ScanPlan:
+    """``Snapshot.plan_scan``'s answer: the planned ``entries`` of
+    ``snap`` for the table at ``root``, with the inputs that produced
+    them (a reader whose log moved re-plans from those)."""
+    snap: Snapshot
+    root: str
+    clauses: tuple
+    only_files: frozenset | None
+    entries: list
+
+    @property
+    def exact(self) -> bool:
+        """False when a legacy whole-dir scan hides its file list."""
+        return all(files is not None for _i, _e, files in self.entries)
+
+    @property
+    def paths(self) -> list[str]:
+        """Absolute paths of every listed file."""
+        return [os.path.join(self.root, rf)
+                for _i, _e, files in self.entries for rf in files or ()]
 
 
 class TxnLogFormat(TableFormat):
@@ -372,7 +694,7 @@ class TxnLogFormat(TableFormat):
     #: (``ProtocolError``) — the complement of the tolerant-reader rule
     #: for unknown KEYS: extra fields on a known action cannot change
     #: what the action means, but an unknown action could subtract rows
-    #: in a way ``_resolve_live``'s append-shaped fallback would
+    #: in a way the snapshot fold's append-shaped fallback would
     #: silently miss.  Strict on verbs, tolerant on adjectives.
     KNOWN_ACTIONS = frozenset(
         {"append", "overwrite", "replace_all", "restore", "add_dv",
@@ -444,6 +766,9 @@ class TxnLogFormat(TableFormat):
         #: fire is not retried on every subsequent read)
         self._op_depth = 0
         self._compact_due_done: set[str] = set()
+        #: the snapshots folded inside the running table op (``None``
+        #: outside one) — see ``_fold_once``
+        self._op_snaps: list | None = None
         # ``bloom_filter_columns`` (Delta bloom-filter-index parity):
         # per-file BLOOM FILTERS for the named columns ride each
         # commit's stats as a 5th per-column element, giving
@@ -508,7 +833,8 @@ class TxnLogFormat(TableFormat):
                 "constraint")
 
     # -- log plumbing -----------------------------------------------------
-    def _log_dir(self, path: str) -> str:
+    @staticmethod
+    def _log_dir(path: str) -> str:
         return os.path.join(path, "_txn_log")
 
     @staticmethod
@@ -583,8 +909,8 @@ class TxnLogFormat(TableFormat):
         version ``upto`` (default: head) — CHECKPOINT-AWARE: when a
         checkpoint at or below the target exists, the returned list is
         ``[checkpoint record, tail commits...]`` (the checkpoint record
-        has ``action == "checkpoint"`` and every resolver folds it as the
-        initial state), so planning cost is O(tail), not O(history).
+        has ``action == "checkpoint"`` and ``Snapshot.fold`` seeds from
+        it), so planning cost is O(tail), not O(history).
 
         Falls back to older checkpoints or the raw prefix when the tail
         is not dense above a checkpoint (impossible by protocol — means
@@ -630,13 +956,12 @@ class TxnLogFormat(TableFormat):
         for v in sorted((v for v in cpv if v <= target), reverse=True):
             got = assemble(v)
             if got is not None:
-                if got[0].get("stats_sidecar"):
-                    # sidecar-form checkpoint: live-entry file lists
-                    # live in the sidecar — rehydrate once per
-                    # instance (columnar name read, far cheaper than
-                    # the JSON parse it replaced) so every downstream
-                    # consumer sees ordinary entries
-                    self._hydrate_checkpoint(path, got[0])
+                # sidecar-form checkpoint: live-entry file lists live in
+                # the sidecar — rehydrate once per process (columnar
+                # name read, far cheaper than the JSON parse it
+                # replaced) so every downstream consumer sees ordinary
+                # entries; either form caches its fold-form entries
+                self._hydrate_checkpoint(path, got[0])
                 # PROTOCOL GATE on every assembled plan (reads, streams,
                 # and write snapshots all come through here): unknown
                 # actions or unimplemented required reader features
@@ -649,10 +974,10 @@ class TxnLogFormat(TableFormat):
                 return self._check_protocol(path, got) if _gate else got
         got = assemble(None)
         if got is not None:
-            if got and got[0].get("stats_sidecar"):
+            if got:
                 # a raw head that IS a checkpoint-form record (a clone
                 # seed at version 0 read before/without its checkpoint
-                # twin): hydrate its sidecar markers like any checkpoint
+                # twin): hydrate it like any checkpoint
                 self._hydrate_checkpoint(path, got[0])
             return self._check_protocol(path, got) if _gate else got
         if cpv:
@@ -664,6 +989,31 @@ class TxnLogFormat(TableFormat):
             f"commit records needed for version {target} are missing "
             f"from the log at {path} (corrupted or manually deleted) — "
             "versions are dense by protocol")
+
+    def _snapshot(self, path: str, upto: int | None = None,
+                  _gate: bool = True) -> Snapshot:
+        """The snapshot at ``upto`` (default: head) — an operation takes
+        one and hands it to every helper instead of re-replaying the
+        log."""
+        return self._fold(self._commits(path, upto, _gate))
+
+    def _fold(self, commits: list[dict]) -> Snapshot:
+        """``Snapshot.fold``, once per operation: inside a table op
+        (``_fold_once``) a re-listed log whose records are the
+        very objects an earlier fold of the op used — nothing landed
+        since — reuses that snapshot, so the op's own reads (``read`` is
+        also the racer seam the concurrency tests patch) plan from it
+        without a second replay.  A moved head folds anew, so such a
+        read sees the new head."""
+        memo = self._op_snaps
+        for snap in memo or ():
+            if len(snap.commits) == len(commits) and all(
+                    a is b for a, b in zip(snap.commits, commits)):
+                return snap
+        snap = Snapshot.fold(commits)
+        if memo is not None:
+            memo.append(snap)
+        return snap
 
     def _raw_full(self, path: str) -> list[dict] | None:
         """The complete raw commit list [0..head], or None if pruning
@@ -704,11 +1054,14 @@ class TxnLogFormat(TableFormat):
                 "errorifexists").partitionBy(partition_col)
         writer.parquet(os.path.join(path, rel))
         # table-level properties bind EVERY writer (instance settings
-        # union on top) — resolved here so an instance constructed with
-        # no config still builds the table's bloom filters and enforces
-        # its constraints
-        commits = self._commits(path)
-        constraints, blooms, _ = self._effective_config(commits)
+        # union on top) — read from the head AFTER the data write, so an
+        # instance constructed with no config still builds the table's
+        # bloom filters and enforces its constraints, and a constraint
+        # set while the frame was written binds it too (inside a table
+        # op, ``_fold`` hands back the op's snapshot while the log has
+        # not moved)
+        snap = self._snapshot(path)
+        constraints, blooms, _ = self._effective_config(snap)
         # GENERATED columns validate like implicit CHECK constraints at
         # the same chokepoint (Delta rejects writes that contradict a
         # GENERATED ALWAYS AS expression): any write path that carries
@@ -717,8 +1070,7 @@ class TxnLogFormat(TableFormat):
         # writers that OMIT the column happens in the public entry
         # points (append / overwrite*), where the recorded schema is
         # derived from the final DataFrame.
-        gen = self._resolve_properties(commits).get(
-            "generated_columns") or {}
+        gen = snap.properties.get("generated_columns") or {}
         if gen:
             constraints = {**constraints,
                            **{f"generated:{c}": f"{c} <=> ({x})"
@@ -800,15 +1152,18 @@ class TxnLogFormat(TableFormat):
             out.setdefault(rf, {})[c] = f"{k}:{bits:0{m // 4}x}"
         # files whose every value is NULL produced no rows — they still
         # need an (empty) filter so absence is provable there too
-        for rf in self._pending_files(path, rel):
+        for rf in self._dir_files(path, rel):
             for c, m in cols.items():
                 out.setdefault(rf, {}).setdefault(
                     c, f"{k}:{0:0{m // 4}x}")
         return out
 
-    def _pending_files(self, path: str, rel: str) -> list[str]:
-        """Relfile names of a just-staged dir (one walk at write time —
-        the same files the stats harvest visits)."""
+    @staticmethod
+    def _dir_files(path: str, rel: str) -> list[str]:
+        """Relfile names of every data file under the table dir ``rel``,
+        sorted — one walk: a just-staged dir, or a legacy record
+        written before commits recorded their file lists (a missing dir
+        walks as empty; readers raise on it separately)."""
         return sorted(
             _relfile(os.path.join(dp, fn))
             for dp, _d, fns in os.walk(os.path.join(path, rel))
@@ -1046,11 +1401,7 @@ class TxnLogFormat(TableFormat):
                 record["files"] = sorted(st)
                 record["file_bytes"] = sizes
             else:  # pragma: no cover - pyarrow is baked into this env
-                record["files"] = sorted(
-                    _relfile(os.path.join(dp, fn))
-                    for dp, _d, fns in os.walk(
-                        os.path.join(path, record["dir"]))
-                    for fn in fns if fn.endswith(".parquet"))
+                record["files"] = self._dir_files(path, record["dir"])
         # ROW TRACKING allocation (round 11, Delta row-id parity):
         # callers on row-tracked tables mark the record; per-file row
         # counts come from the stats just collected (the rows element),
@@ -1146,7 +1497,7 @@ class TxnLogFormat(TableFormat):
                 cs = self._commits(path)
                 if (cs[-1]["version"] if cs else -1) != v - 1:
                     continue
-                base = self._resolve_row_high(cs)
+                base = Snapshot.fold(cs).row_high
                 rb = {}
                 for rf in sorted(row_rows):
                     rb[rf] = base
@@ -1269,7 +1620,8 @@ class TxnLogFormat(TableFormat):
         self._write_checkpoint(path, v)
         return v
 
-    def _stats_entries(self, path: str, commits: list[dict]):
+    @classmethod
+    def _stats_entries(cls, path: str, commits: list[dict]):
         """Yield ``(recorded_version, relfile, per_col_stats)`` across a
         commit list — ONE iteration shape over all three carriers:
         inline commit ``stats`` (recorded at that commit's version),
@@ -1280,7 +1632,7 @@ class TxnLogFormat(TableFormat):
         under)."""
         for c in commits:
             if c["action"] == "checkpoint":
-                stats = (self._sidecar_maps(path, c)[0]
+                stats = (cls._sidecar_maps(path, c)[0]
                          if c.get("stats_sidecar")
                          else (c.get("stats") or {}))
                 for rf, (v, cols) in stats.items():
@@ -1298,7 +1650,8 @@ class TxnLogFormat(TableFormat):
             return self._sidecar_maps(path, c)[1]
         return c.get("file_bytes") or {}
 
-    def _sidecar_table(self, path: str, rec: dict):
+    @classmethod
+    def _sidecar_table(cls, path: str, rec: dict):
         """The checkpoint's parquet sidecar as a pyarrow table, read at
         most once per (instance, checkpoint) — cached ON the parsed
         record, which lives in the per-instance log cache.  ``None``
@@ -1313,13 +1666,14 @@ class TxnLogFormat(TableFormat):
         try:
             import pyarrow.parquet as pq
             tbl = pq.read_table(
-                os.path.join(self._log_dir(path), rec["stats_sidecar"]))
+                os.path.join(cls._log_dir(path), rec["stats_sidecar"]))
         except (FileNotFoundError, ImportError):
             pass
         rec["_sidecar_tbl"] = tbl
         return tbl
 
-    def _sidecar_maps(self, path: str, rec: dict) -> tuple[dict, dict]:
+    @classmethod
+    def _sidecar_maps(cls, path: str, rec: dict) -> tuple[dict, dict]:
         """Lazily decode a checkpoint sidecar into its ``(stats,
         file_bytes)`` maps, cached on the record — only the paths that
         consult per-file metadata (skipping, size compaction, details)
@@ -1330,7 +1684,7 @@ class TxnLogFormat(TableFormat):
             return cached
         stats: dict = {}
         fbytes: dict = {}
-        tbl = self._sidecar_table(path, rec)
+        tbl = cls._sidecar_table(path, rec)
         if tbl is not None:
             relfiles = tbl["relfile"].to_pylist()
             svs = tbl["stat_version"].to_pylist()
@@ -1358,10 +1712,12 @@ class TxnLogFormat(TableFormat):
         the entry's sorted file names, regrouped by staged-dir prefix —
         including files later RETIRED by rewrite_files, which stay in
         their entry's list and are subtracted at read time exactly like
-        the inline form).  Runs once per (instance, checkpoint), in
-        place on the cached record; an unreadable sidecar degrades the
-        markers to ``None`` — the documented legacy walk fallback, rows
-        always correct."""
+        the inline form), then caches the entries in fold form
+        (``_live_seed``, either form) so a fold seeds in O(1) entry
+        builds.  Runs once per checkpoint per process, in place on the
+        cached record; an unreadable sidecar degrades the markers to
+        ``None`` — the documented legacy walk fallback, rows always
+        correct."""
         if cp.get("action") != "checkpoint" or cp.get("_files_hydrated"):
             return
         with _LOG_CACHE_LOCK:
@@ -1376,6 +1732,7 @@ class TxnLogFormat(TableFormat):
         live = cp["state"]["live"]
         if not any(e.get("files") == "sidecar"
                    or e.get("row_base") == "sidecar" for e in live):
+            cp["_live_seed"] = Snapshot._seed(cp["state"])
             cp["_files_hydrated"] = True
             return
         tbl = self._sidecar_table(path, cp)
@@ -1426,6 +1783,7 @@ class TxnLogFormat(TableFormat):
                 e["row_base"] = {rf: base_map[rf]
                                  for rf in (e["files"] or [])
                                  if rf in base_map}
+        cp["_live_seed"] = Snapshot._seed(cp["state"])
         cp["_files_hydrated"] = True
 
     def _write_stats_sidecar(self, path: str, name: str,
@@ -1563,36 +1921,6 @@ class TxnLogFormat(TableFormat):
         return None
 
     @staticmethod
-    def _resolve_identity_high(commits: list[dict]) -> dict:
-        """Per-column IDENTITY high watermark: the max over every
-        commit's recorded ``identity_high`` (checkpoint records fold
-        one in).  Deliberately NOT restore-aware — the watermark never
-        decreases, exactly Delta's identity semantics: re-ISSUING a
-        value that ever existed (even on a restored-away branch) is
-        worse than a gap, because time travel can still see the old
-        rows."""
-        high: dict = {}
-        for c in commits:
-            for col, h in (c.get("identity_high") or {}).items():
-                if col not in high or h > high[col]:
-                    high[col] = h
-        return high
-
-    @staticmethod
-    def _resolve_row_high(commits: list[dict]) -> int:
-        """Row-tracking allocation watermark: the max over every
-        commit's recorded ``row_id_high`` (checkpoints fold one in).
-        Like the identity watermark, deliberately NOT restore-aware —
-        an id range reserved on a restored-away branch is never
-        re-issued, because time travel can still see its rows."""
-        high = 0
-        for c in commits:
-            h = c.get("row_id_high")
-            if h is not None and h > high:
-                high = h
-        return high
-
-    @staticmethod
     def _vacuum_protect(commits: list[dict]) -> set[str]:
         """Dirs (data + vector) referenced by any commit at or after the
         last ``replace_all`` — vacuum's time-travel retention set, ONE
@@ -1628,7 +1956,7 @@ class TxnLogFormat(TableFormat):
         non-append live entry / overwrite subtraction means changes,
         and a VERSION GAP among the folded append + alter entries
         betrays a change a restore replayed into pure append entries
-        (ADVICE r8 medium — ``_resolve_live`` folds a restore into the
+        (ADVICE r8 medium — the snapshot fold turns a restore into the
         target prefix's appends, which the old live-entry heuristic
         could not see)."""
         st = cp["state"]
@@ -1685,26 +2013,15 @@ class TxnLogFormat(TableFormat):
         ``_write_checkpoint`` (emit back into the same log) and
         ``clone`` (emit into a NEW log; every path in the record is
         table-relative, which is what makes the record portable)."""
-        commits = self._commits(path, upto=v)
+        snap = self._snapshot(path, upto=v)
+        commits, live, removed = snap.commits, snap.live, snap.removed_files
         if not commits:
             raise FileNotFoundError(f"no committed table at {path}")
-        live = self._resolve_live(commits)
-        removed = self._resolve_removed_files(commits)
         run_max = None
         for c in commits:
             ts = c.get("ts")
             if ts is not None:
                 run_max = ts if run_max is None else max(run_max, ts)
-        txn: dict[str, list] = {}
-        for c in commits:
-            if c["action"] == "checkpoint":
-                for app, pair in (c.get("txn_latest") or {}).items():
-                    if app not in txn or pair[0] > txn[app][0]:
-                        txn[app] = list(pair)
-            elif c.get("txn_app") is not None:
-                app = c["txn_app"]
-                if app not in txn or c["txn_version"] >= txn[app][0]:
-                    txn[app] = [c["txn_version"], c["version"]]
         live_dirs = {e["dir"] for e in live}
         stats: dict[str, list] = {}
         for sv, rf, cols in self._stats_entries(path, commits):
@@ -1721,7 +2038,7 @@ class TxnLogFormat(TableFormat):
         # LIVE ENTRY — for a wide-schema streaming table (10⁶ uniform
         # append entries x multi-KB schema string) the single largest
         # checkpoint term, dwarfing even the stats.  Entries index into
-        # one deduped list instead; resolvers map back on read.
+        # one deduped list instead; the fold maps back on read.
         schema_list: list[str] = []
         schema_ix: dict[str, int] = {}
 
@@ -1752,7 +2069,6 @@ class TxnLogFormat(TableFormat):
         # answer is carried forward (its own flag, or the conservative
         # reconstruction for pre-upgrade records) so the property
         # survives arbitrarily many fold-overs and log prunes.
-        proto = self._resolve_protocol(commits)
         changed = False
         for c in commits:
             if c["action"] == "checkpoint":
@@ -1761,21 +2077,21 @@ class TxnLogFormat(TableFormat):
                                      "set_properties", "set_protocol"):
                 changed = True
         rec = {"action": "checkpoint", "version": v, "ts": run_max,
-               "dir": None, "schema": self._resolve_schema(commits),
+               "dir": None, "schema": snap.schema,
                "state": {"live": ser_live,
                          "schemas": schema_list,
-                         "dvs": self._resolve_dvs(commits),
+                         "dvs": list(snap.dvs),
                          "removed_files": sorted(removed),
-                         "alters": self._resolve_alters(commits),
-                         "properties": self._resolve_properties(commits),
+                         "alters": list(snap.alters),
+                         "properties": dict(snap.properties),
                          "protocol": {
-                             "reader": sorted(proto["reader"]),
-                             "writer": sorted(proto["writer"])},
+                             "reader": sorted(snap.protocol["reader"]),
+                             "writer": sorted(snap.protocol["writer"])},
                          "data_changed": changed,
                          "compact_due": self._compact_due(commits)},
-               "txn_latest": txn,
-               "identity_high": self._resolve_identity_high(commits),
-               "row_id_high": self._resolve_row_high(commits) or None,
+               "txn_latest": self._txn_latest(commits),
+               "identity_high": dict(snap.identity_high),
+               "row_id_high": snap.row_high or None,
                "vacuum_protect": sorted(self._vacuum_protect(commits))}
         # SIDECAR threshold (VERDICT r8 item 1): past it, every
         # per-FILE term — the stats/bytes maps AND the live entries'
@@ -1865,6 +2181,7 @@ class TxnLogFormat(TableFormat):
         os.replace(ptr_tmp, os.path.join(log, "_last_checkpoint"))
 
     # -- TableFormat contract --------------------------------------------
+    @_fold_once
     def overwrite_partitions(self, df: DataFrame, path: str,
                              partition_col: str) -> None:
         # partition values are config-scale (a handful of snapshot dates per
@@ -1873,9 +2190,9 @@ class TxnLogFormat(TableFormat):
         # partition is recorded as JSON null so replay can anti-filter it
         # null-safely (cast-to-string of null is null, which a bare isin
         # would silently mishandle).
-        df = self._with_generated(df, path)
-        if self._resolve_properties(self._commits(path)).get(
-                "identity_columns"):
+        snap = self._snapshot(path)
+        df = self._with_generated(df, snap)
+        if snap.properties.get("identity_columns"):
             # two concurrent partition overwrites allocate from the
             # same watermark and BOTH survive in disjoint partitions —
             # duplicate values; partitioned ingest should carry its
@@ -1891,11 +2208,12 @@ class TxnLogFormat(TableFormat):
         self._commit(path, {"action": "overwrite", "dir": rel,
                             "partition_col": partition_col,
                             "partitions": parts,
-                            "_row_track": bool(self._resolve_properties(
-                                self._commits(path)).get("row_tracking")),
+                            "_row_track": bool(snap.properties.get(
+                                "row_tracking")),
                             "schema": _log_schema_json(df.schema)})
         self._maybe_auto_compact(df.sparkSession, path)
 
+    @_fold_once
     def overwrite_table(self, df: DataFrame, path: str,
                         txn_app: str | None = None,
                         txn_version: int | None = None) -> None:
@@ -1907,19 +2225,19 @@ class TxnLogFormat(TableFormat):
         epoch id and stop relying on convergence arguments."""
         if self._txn_already_applied(path, txn_app, txn_version):
             return  # fast path: skip the staging write entirely
-        df = self._with_generated(df, path)
         # replace_all needs no identity conflict check: a racing
         # allocation's rows are replaced wholesale, and the watermark
-        # resolver maxes over EVERY commit, so no value ever re-issues
-        commits0 = self._commits(path)
-        props0 = self._resolve_properties(commits0)
+        # fold maxes over EVERY commit, so no value ever re-issues
+        snap = self._snapshot(path)
+        df = self._with_generated(df, snap)
+        props0 = snap.properties
         if props0.get("row_tracking") and (
                 self._ROW_ID_COL in df.columns
                 or "_row_id" in df.columns):
             raise ValueError(
                 "_row_id/__row_id are engine-assigned under row "
                 "tracking — writers never supply them")
-        df, new_high = self._with_identity(df, commits0)
+        df, new_high = self._with_identity(df, snap)
         tr = props0.get("partition_transform")
         if tr:
             rel, tparts = self._stage_transformed(df, path, tr)
@@ -1939,7 +2257,7 @@ class TxnLogFormat(TableFormat):
         self._maybe_auto_compact(df.sparkSession, path)
 
     def _auto_compact_needed(self, path: str,
-                             commits: list[dict]) -> dict | None:
+                             snap: Snapshot) -> dict | None:
         """The ``auto_compact`` spec when the table property is set AND
         at least ``min_files`` live files fall below
         ``small_file_bytes`` — one pass over commit-recorded sizes
@@ -1947,13 +2265,13 @@ class TxnLogFormat(TableFormat):
         commits are simply not counted (the same rule the compaction
         itself uses).  Shared by the post-write trigger and the DSv2
         streaming sink's ``compact_due`` marker evaluation."""
-        ac = self._resolve_properties(commits).get("auto_compact")
+        ac = snap.properties.get("auto_compact")
         if not ac:
             return None
-        live_dirs = {e["dir"] for e in self._resolve_live(commits)}
-        removed = self._resolve_removed_files(commits)
+        live_dirs = {e["dir"] for e in snap.live}
+        removed = snap.removed_files
         small = 0
-        for c in commits:
+        for c in snap.commits:
             for rf, b in self._file_bytes_of(path, c).items():
                 if (b < ac["small_file_bytes"] and rf not in removed
                         and "/".join(rf.split("/", 2)[:2]) in live_dirs):
@@ -1988,8 +2306,7 @@ class TxnLogFormat(TableFormat):
         simply not counted (the same rule the compaction itself uses).
         The check is one pass over commit-recorded sizes: driver-side
         metadata scale, free at any table size."""
-        commits = self._commits(path)
-        ac = self._auto_compact_needed(path, commits)
+        ac = self._auto_compact_needed(path, self._snapshot(path))
         if not ac:
             return
         try:
@@ -2014,7 +2331,7 @@ class TxnLogFormat(TableFormat):
             return False
         if not self._compact_due(commits):
             return False
-        ac = self._resolve_properties(commits).get("auto_compact")
+        ac = Snapshot.fold(commits).properties.get("auto_compact")
         if not ac:
             # property unset after the marker landed: nothing to run,
             # and nothing will ever consume it — remember and move on
@@ -2038,7 +2355,7 @@ class TxnLogFormat(TableFormat):
             return False
         return True
 
-    def _with_identity(self, df: DataFrame, commits: list[dict]):
+    def _with_identity(self, df: DataFrame, snap: Snapshot):
         """Allocate IDENTITY values for every configured column
         (``(df_with_ids, new_watermarks)``; ``(df, None)`` when the
         table has no identity columns).
@@ -2055,8 +2372,7 @@ class TxnLogFormat(TableFormat):
         depend on the frame's partitioning — like Delta, identity
         promises uniqueness and monotone watermarks, not an
         order-determined sequence."""
-        ident = self._resolve_properties(commits).get(
-            "identity_columns") or {}
+        ident = snap.properties.get("identity_columns") or {}
         if not ident:
             return df, None
         supplied = sorted(set(ident) & set(df.columns))
@@ -2066,7 +2382,7 @@ class TxnLogFormat(TableFormat):
                 "— writers never supply them (drop the columns; the "
                 "engine allocates values)")
         df = df.localCheckpoint()
-        high = self._resolve_identity_high(commits)
+        high = snap.identity_high
         pid = F.spark_partition_id()
         sizes = {r["p"]: r["n"] for r in
                  df.groupBy(pid.alias("p"))
@@ -2096,14 +2412,13 @@ class TxnLogFormat(TableFormat):
             new_high[col] = base + spec["step"] * acc
         return df, (new_high or None)
 
-    def _with_generated(self, df: DataFrame, path: str) -> DataFrame:
+    def _with_generated(self, df: DataFrame, snap: Snapshot) -> DataFrame:
         """Compute the table's GENERATED columns the writer omitted
         (write-time semantics: the value materializes physically, so
         its stats/bloom skipping works like any stored column).
         Supplied columns pass through — the staging chokepoint
         validates them against the expression instead."""
-        gen = self._resolve_properties(self._commits(path)).get(
-            "generated_columns") or {}
+        gen = snap.properties.get("generated_columns") or {}
         for col, expr in gen.items():
             if col not in df.columns:
                 df = df.withColumn(col, F.expr(expr))
@@ -2196,7 +2511,7 @@ class TxnLogFormat(TableFormat):
         return rel, parts
 
     def _stage_rewrite(self, df: DataFrame, path: str,
-                       commits: list[dict], rec: dict,
+                       snap: Snapshot, rec: dict,
                        check: bool = True) -> None:
         """Stage a ROW-LEVEL REWRITE's output, preserving HIDDEN
         PARTITIONING (round 12): under a ``partition_transform``
@@ -2207,7 +2522,7 @@ class TxnLogFormat(TableFormat):
         delete/update/merge/compact decays pruning until the next
         explicitly-partitioned rewrite).  Flat staging otherwise.
         Sets ``rec["dir"]`` (+ ``transform``/``partitions``)."""
-        tr = self._resolve_properties(commits).get("partition_transform")
+        tr = snap.properties.get("partition_transform")
         if tr and tr["source"] in df.columns:
             rel, tparts = self._stage_transformed(df, path, tr,
                                                   check=check)
@@ -2217,6 +2532,7 @@ class TxnLogFormat(TableFormat):
         else:
             rec["dir"] = self._stage(df, path, None, check=check)
 
+    @_fold_once
     def append(self, df: DataFrame, path: str,
                txn_app: str | None = None,
                txn_version: int | None = None) -> None:
@@ -2232,18 +2548,18 @@ class TxnLogFormat(TableFormat):
         interleaves retarget benignly."""
         if self._txn_already_applied(path, txn_app, txn_version):
             return
-        df = self._with_generated(df, path)
+        df = self._with_generated(df, self._snapshot(path))
 
         def attempt() -> None:
-            commits = self._commits(path)
-            props = self._resolve_properties(commits)
+            snap = self._snapshot(path)
+            props = snap.properties
             if props.get("row_tracking") and (
                     self._ROW_ID_COL in df.columns
                     or "_row_id" in df.columns):
                 raise ValueError(
                     "_row_id/__row_id are engine-assigned under row "
                     "tracking — writers never supply them")
-            df2, new_high = self._with_identity(df, commits)
+            df2, new_high = self._with_identity(df, snap)
             tr = props.get("partition_transform")
             if tr:
                 rel, tparts = self._stage_transformed(df2, path, tr)
@@ -2258,8 +2574,7 @@ class TxnLogFormat(TableFormat):
                 rec.update(txn_app=txn_app, txn_version=txn_version)
             if new_high:
                 rec["identity_high"] = new_high
-                head = commits[-1]["version"] if commits else -1
-                self._commit(path, rec, expected_version=head + 1,
+                self._commit(path, rec, expected_version=snap.version + 1,
                              base_schema=rec["schema"],
                              identity_cols=frozenset(new_high))
             else:
@@ -2293,6 +2608,16 @@ class TxnLogFormat(TableFormat):
         commits = self._commits(path)
         if not commits:
             return -1, None
+        pair = self._txn_latest(commits).get(app)
+        head = commits[-1]["version"]
+        if pair is not None and version <= pair[0]:
+            return head, pair[1]
+        return head, None
+
+    @staticmethod
+    def _txn_latest(commits: list[dict]) -> dict[str, list]:
+        """``{app: [latest txn_version, commit version]}`` over a commit
+        list — checkpoints carry the folded span's map forward."""
         latest: dict[str, list] = {}
         for c in commits:
             if c["action"] == "checkpoint":
@@ -2303,11 +2628,7 @@ class TxnLogFormat(TableFormat):
                 a = c["txn_app"]
                 if a not in latest or c["txn_version"] >= latest[a][0]:
                     latest[a] = [c["txn_version"], c["version"]]
-        head = commits[-1]["version"]
-        pair = latest.get(app)
-        if pair is not None and version <= pair[0]:
-            return head, pair[1]
-        return head, None
+        return latest
 
     def _txn_already_applied(self, path: str, app: str | None,
                              version: int | None) -> bool:
@@ -2321,200 +2642,6 @@ class TxnLogFormat(TableFormat):
             raise ValueError("txn_app requires txn_version")
         return self._txn_scan(path, app, version)[1] is not None
 
-    def _resolve_live(self, commits: list[dict]) -> list[dict]:
-        """Replay a commit list into live (dir, anti-filter) entries: every
-        commit contributes its directory minus the partition values LATER
-        overwrites replaced; ``replace_all`` resets; ``restore`` swaps the
-        state for the resolution of the target-version prefix (metadata
-        only — the restored dirs are the ORIGINAL ones, re-referenced)."""
-        live: list[dict] = []
-        for c in commits:
-            if c["action"] in ("add_dv", "alter", "set_properties",
-                               "set_protocol"):
-                continue  # vectors / metadata commits are not data dirs
-            if c["action"] == "checkpoint":
-                # initial state: DEEP-copied per call — resolvers mutate
-                # entries' removed sets, and the checkpoint record is a
-                # shared cached object.  Schemas come back through the
-                # state's dictionary (``schema_idx``); pre-dictionary
-                # checkpoints carry inline ``schema`` strings.
-                schemas = c["state"].get("schemas") or []
-                live = [{"dir": e["dir"],
-                         "removed": {col: set(vals) for col, vals
-                                     in e["removed"].items()},
-                         "pcol": e["pcol"],
-                         "staged_pcol": e.get("staged_pcol"),
-                         "transform": e.get("transform"),
-                         "row_base": e.get("row_base"),
-                         "parts": set(e["parts"]),
-                         "version": e["version"],
-                         "action": e.get("action"),
-                         "files": e.get("files"),
-                         "schema": (e["schema"] if "schema" in e
-                                    else (schemas[e["schema_idx"]]
-                                          if e.get("schema_idx")
-                                          is not None else None))}
-                        for e in c["state"]["live"]]
-                continue
-            if c["action"] == "dv_update":
-                # the commit's data dir (rewritten rows) is an append; its
-                # vector dir is handled by _resolve_dvs
-                live.append({"dir": c["dir"], "removed": {},
-                             "pcol": None,
-                             "parts": set(c.get("partitions") or []),
-                             "transform": c.get("transform"),
-                             "version": c["version"],
-                             "action": c["action"],
-                             "files": c.get("files"),
-                             "row_base": c.get("row_base"),
-                             "schema": c.get("schema")})
-                continue
-            if c["action"] == "rewrite_files":
-                # targeted DV compaction: the rewritten survivors are an
-                # append; the retired source FILES are subtracted by
-                # _resolve_removed_files (file-granular, not dir)
-                live.append({"dir": c["dir"], "removed": {},
-                             "pcol": None,
-                             "parts": set(c.get("partitions") or []),
-                             "transform": c.get("transform"),
-                             "version": c["version"],
-                             "action": c["action"],
-                             "files": c.get("files"),
-                             "row_base": c.get("row_base"),
-                             "schema": c.get("schema")})
-                continue
-            if c["action"] == "restore":
-                live = self._resolve_live(
-                    [x for x in commits if x["version"] <= c["to_version"]])
-                continue
-            if c["action"] == "replace_all":
-                # pcol stays None (replace_all is not value-subtractable)
-                # but the STAGING layout may be hive-partitioned
-                # (compact(partition_col=...)) — record it so the scan
-                # batcher never mixes partitioned and flat dir layouts
-                live = [{"dir": c["dir"], "removed": {}, "pcol": None,
-                         "staged_pcol": c.get("partition_col"),
-                         "transform": c.get("transform"),
-                         "row_base": c.get("row_base"),
-                         "parts": set(c.get("partitions") or []),
-                         "version": c["version"],
-                         "action": c["action"], "files": c.get("files"),
-                         "schema": c.get("schema")}]
-                continue
-            if c["action"] == "overwrite":
-                for e in live:
-                    e["removed"].setdefault(
-                        c["partition_col"], set()).update(c["partitions"])
-            live.append({"dir": c["dir"], "removed": {},
-                         "pcol": c.get("partition_col"),
-                         "transform": c.get("transform"),
-                         "row_base": c.get("row_base"),
-                         "parts": set(c.get("partitions") or []),
-                         "version": c["version"],
-                         "action": c["action"], "files": c.get("files"),
-                         "schema": c.get("schema")})
-        return live
-
-    def _resolve_dvs(self, commits: list[dict]) -> list[str]:
-        """Replay the commit list into the list of LIVE deletion-vector
-        dirs — same restore/replace_all algebra as ``_resolve_live``:
-        ``replace_all`` (compact) materializes a DV-free state so
-        earlier vectors retire; targeted ``rewrite_files`` (delete/
-        update/merge) CONSOLIDATES survivors into its ``dv_dir`` (or
-        none); ``restore`` swaps in the target prefix's vectors."""
-        dvs: list[str] = []
-        for c in commits:
-            if c["action"] == "checkpoint":
-                dvs = list(c["state"]["dvs"])
-            elif c["action"] == "restore":
-                dvs = self._resolve_dvs(
-                    [x for x in commits if x["version"] <= c["to_version"]])
-            elif c["action"] == "replace_all":
-                dvs = []
-            elif c["action"] == "add_dv":
-                dvs.append(c["dir"])
-            elif c["action"] == "dv_update":
-                dvs.append(c["dv_dir"])
-            elif c["action"] == "rewrite_files":
-                # DV-aware compaction CONSOLIDATES the surviving vector
-                # entries into one dir (or none) — earlier vectors retire
-                dvs = [c["dv_dir"]] if c.get("dv_dir") else []
-        return dvs
-
-    def _resolve_alters(self, commits: list[dict]) -> list[dict]:
-        """Replay the commit list into the ordered list of live ALTER
-        records (same restore algebra as the other resolvers; an alter is
-        never cleared by replace_all — it simply becomes inert once every
-        live dir postdates it, because alters apply only to dirs written
-        BEFORE them)."""
-        alters: list[dict] = []
-        for c in commits:
-            if c["action"] == "checkpoint":
-                alters = list(c["state"]["alters"])
-            elif c["action"] == "restore":
-                alters = self._resolve_alters(
-                    [x for x in commits if x["version"] <= c["to_version"]])
-            elif c["action"] == "alter":
-                alters.append(c)
-            elif c.get("evolved_add"):
-                # a schema-evolving MERGE widened the table inside its
-                # widening commit (Delta autoMerge): synthesize the
-                # equivalent alter record so every schema-era consumer —
-                # the change feed's per-file mapping, time-travel
-                # conformance, rename inversion — sees the columns
-                # appear at this version through the ONE alter path
-                # instead of growing a parallel rule
-                alters.append({"action": "alter",
-                               "version": c["version"],
-                               "add": dict(c["evolved_add"]),
-                               "rename": {}, "drop": [],
-                               "schema": c.get("schema")})
-        return alters
-
-    @staticmethod
-    def _resolve_properties(commits: list[dict]) -> dict:
-        """Replay the commit list into the table's live PROPERTIES
-        (Delta table-property parity): checkpoint state seeds, each
-        ``set_properties`` commit merges (a None value unsets), and a
-        restore swaps in the target prefix's properties like every
-        other resolver."""
-        props: dict = {}
-        for c in commits:
-            if c["action"] == "checkpoint":
-                props = dict(c["state"].get("properties") or {})
-            elif c["action"] == "restore":
-                props = TxnLogFormat._resolve_properties(
-                    [x for x in commits
-                     if x["version"] <= c["to_version"]])
-            elif c["action"] == "set_properties":
-                for k, v in c["props"].items():
-                    if v is None:
-                        props.pop(k, None)
-                    else:
-                        props[k] = v
-        return props
-
-    @staticmethod
-    def _resolve_protocol(commits: list[dict]) -> dict:
-        """The table's protocol — ``{"reader": set, "writer": set}`` of
-        required feature names — resolved MONOTONE over the whole list:
-        every ``set_protocol`` commit and every checkpoint-folded
-        protocol unions in; nothing ever unsets (Delta parity: a
-        protocol upgrade is permanent — RESTORE rolls data back, never
-        the protocol, because post-upgrade commits may already depend
-        on the feature)."""
-        reader: set = set()
-        writer: set = set()
-        for c in commits:
-            if c["action"] == "set_protocol":
-                reader.update(c.get("reader_features") or [])
-                writer.update(c.get("writer_features") or [])
-            elif c["action"] == "checkpoint":
-                p = c["state"].get("protocol") or {}
-                reader.update(p.get("reader") or [])
-                writer.update(p.get("writer") or [])
-        return {"reader": reader, "writer": writer}
-
     def _check_protocol(self, path: str, commits: list[dict],
                         write: bool = False) -> list[dict]:
         """The protocol GATE (Delta protocol-version checking): raise
@@ -2526,6 +2653,8 @@ class TxnLogFormat(TableFormat):
         so no planner can ever act on a log it only half-understands.
         O(tail) set lookups on cached records; returns the list so the
         call can wrap a return."""
+        reader: set = set()
+        writer: set = set()
         for c in commits:
             if c["action"] not in self.KNOWN_ACTIONS:
                 raise ProtocolError(
@@ -2533,15 +2662,17 @@ class TxnLogFormat(TableFormat):
                     f"action {c['action']!r}, which this engine does "
                     "not implement — the table was written by a newer "
                     "or foreign writer; upgrade the engine to read it")
-        proto = self._resolve_protocol(commits)
-        missing = proto["reader"] - self.ENGINE_FEATURES
+            r, w = Snapshot._features(c)
+            reader.update(r)
+            writer.update(w)
+        missing = reader - self.ENGINE_FEATURES
         if missing:
             raise ProtocolError(
                 f"table at {path} requires reader features "
                 f"{sorted(missing)} this engine does not implement — "
                 "upgrade the engine to read it")
         if write:
-            missing = proto["writer"] - self.ENGINE_FEATURES
+            missing = writer - self.ENGINE_FEATURES
             if missing:
                 raise ProtocolError(
                     f"table at {path} requires writer features "
@@ -2566,8 +2697,8 @@ class TxnLogFormat(TableFormat):
         for this one — that is the point of the gate).  Returns the
         commit version (the current head when the upgrade is a
         no-op)."""
-        commits = self._commits(path)
-        if not commits:
+        snap = self._snapshot(path)
+        if not snap.commits:
             raise FileNotFoundError(f"no committed table at {path}")
         for fs in (reader_features, writer_features):
             for f in fs:
@@ -2581,11 +2712,11 @@ class TxnLogFormat(TableFormat):
                         "allow_unknown=True to author a table for a "
                         "newer engine — this engine will then refuse "
                         "it)")
-        cur = self._resolve_protocol(commits)
+        cur = snap.protocol
         new_r = cur["reader"] | set(reader_features)
         new_w = cur["writer"] | set(writer_features)
         if new_r == cur["reader"] and new_w == cur["writer"]:
-            return commits[-1]["version"]  # idempotent upgrade: no-op
+            return snap.version  # idempotent upgrade: no-op
         rec = {"action": "set_protocol",
                "reader_features": sorted(new_r),
                "writer_features": sorted(new_w),
@@ -2595,7 +2726,7 @@ class TxnLogFormat(TableFormat):
     def protocol(self, path: str) -> dict:
         """The table's live protocol requirement:
         ``{"reader_features": [...], "writer_features": [...]}``."""
-        p = self._resolve_protocol(self._commits(path))
+        p = self._snapshot(path).protocol
         return {"reader_features": sorted(p["reader"]),
                 "writer_features": sorted(p["writer"])}
 
@@ -2811,8 +2942,8 @@ class TxnLogFormat(TableFormat):
             if user_properties is None:
                 props["user_properties"] = None
             else:
-                cur_up = dict(self._resolve_properties(
-                    self._commits(path)).get("user_properties") or {})
+                cur_up = dict(self._snapshot(path).properties.get(
+                    "user_properties") or {})
                 for k, v in user_properties.items():
                     if v is None:
                         cur_up.pop(k, None)
@@ -2821,8 +2952,8 @@ class TxnLogFormat(TableFormat):
                 props["user_properties"] = cur_up or None
         if not props:
             raise ValueError("no properties given")
-        commits = self._commits(path)
-        if not commits:
+        snap = self._snapshot(path)
+        if not snap.commits:
             raise FileNotFoundError(f"no committed table at {path}")
         ident_seed: dict = {}
         new_ident = props.get("identity_columns")
@@ -2830,9 +2961,8 @@ class TxnLogFormat(TableFormat):
             # seed the watermark ABOVE any existing stored values, so
             # enabling identity on a populated table never re-issues a
             # value already present (Delta's SYNC IDENTITY)
-            sj = self._resolve_schema(commits)
-            existing = ({f["name"] for f in json.loads(sj)["fields"]}
-                        if sj else set())
+            existing = ({f["name"] for f in json.loads(snap.schema)["fields"]}
+                        if snap.schema else set())
             seeded = [c for c in new_ident if c in existing]
             if seeded:
                 if spark is None:
@@ -2898,15 +3028,15 @@ class TxnLogFormat(TableFormat):
 
     def properties(self, path: str) -> dict:
         """The table's live properties (see ``set_properties``)."""
-        return self._resolve_properties(self._commits(path))
+        return dict(self._snapshot(path).properties)
 
-    def _effective_config(self, commits: list[dict]) -> tuple[
+    def _effective_config(self, snap: Snapshot) -> tuple[
             dict, dict, bool]:
         """(constraints, bloom columns, change_data_feed) a write to
         this table must honor: table properties as the base, this
         writer's instance settings UNIONED on top — so a table property
         binds every writer, and an instance can only add."""
-        props = self._resolve_properties(commits)
+        props = snap.properties
         return ({**(props.get("constraints") or {}), **self.constraints},
                 {**(props.get("bloom_filter_columns") or {}),
                  **self.bloom_filter_columns},
@@ -2960,11 +3090,10 @@ class TxnLogFormat(TableFormat):
         never prune against the wrong column when a rename reuses a
         dropped name (ADVICE r7 high)."""
         from pyspark.sql import types as T
-        commits = self._commits(path)
-        if not commits:
+        snap = self._snapshot(path)
+        if not snap.commits:
             raise FileNotFoundError(f"no committed table at {path}")
-        head = commits[-1]["version"]
-        sj = self._resolve_schema(commits)
+        sj = snap.schema
         if sj is None:
             raise ValueError(f"no schema-bearing commit at {path}")
         schema = T.StructType.fromJson(json.loads(sj))
@@ -3024,7 +3153,7 @@ class TxnLogFormat(TableFormat):
         if missing:
             raise ValueError(f"alter references unknown columns {missing}")
         touched_pcols: set = set()
-        for e in self._resolve_live(commits):
+        for e in snap.live:
             touched_pcols.update(e["removed"].keys())
             if e["pcol"]:
                 touched_pcols.add(e["pcol"])
@@ -3034,7 +3163,7 @@ class TxnLogFormat(TableFormat):
                 f"columns {sorted(bad)} key live partition-overwrite "
                 "bookkeeping; compact() the table before renaming or "
                 "dropping them")
-        tr = self._resolve_properties(commits).get("partition_transform")
+        tr = snap.properties.get("partition_transform")
         if tr and tr["source"] in (set(rename_columns)
                                    | set(drop_columns)):
             raise ValueError(
@@ -3073,40 +3202,8 @@ class TxnLogFormat(TableFormat):
             rec["defaults"] = column_defaults
         if widen_columns:
             rec["widen"] = widen_columns
-        return self._commit(path, rec, expected_version=head + 1,
+        return self._commit(path, rec, expected_version=snap.version + 1,
                             base_schema=sj)
-
-    def _resolve_schema(self, commits: list[dict]) -> str | None:
-        """The current schema JSON under the same restore algebra: the
-        last schema-bearing commit of the resolved history (a RESTORE
-        brings back the target version's schema along with its data)."""
-        sj = None
-        for c in commits:
-            if c["action"] == "restore":
-                sj = self._resolve_schema(
-                    [x for x in commits if x["version"] <= c["to_version"]])
-            elif c.get("schema"):
-                sj = c["schema"]
-        return sj
-
-    def _resolve_removed_files(self, commits: list[dict]) -> set[str]:
-        """Replay the commit list into the set of table-relative data
-        FILES retired by ``rewrite_files`` commits — same restore /
-        replace_all algebra as the dir and vector resolvers.  File
-        identities are the ``_txn_data/...`` suffixes deletion vectors
-        use, so pruning and vectors share one addressing scheme."""
-        removed: set[str] = set()
-        for c in commits:
-            if c["action"] == "checkpoint":
-                removed = set(c["state"]["removed_files"])
-            elif c["action"] == "restore":
-                removed = self._resolve_removed_files(
-                    [x for x in commits if x["version"] <= c["to_version"]])
-            elif c["action"] == "replace_all":
-                removed = set()
-            elif c["action"] == "rewrite_files":
-                removed |= set(c["removed_files"])
-        return removed
 
     @staticmethod
     def _parse_literal(lit: str):
@@ -3130,7 +3227,7 @@ class TxnLogFormat(TableFormat):
                 return None
 
     @classmethod
-    def _skip_clauses(cls, where: str) -> list:
+    def _skip_clauses(cls, where: str | None) -> list:
         """Conservative decomposition of ``where`` into prunable
         ``(col, op, literal)`` conjuncts — binary comparisons against
         int/float/string literals, ``col IS [NOT] NULL`` (ops
@@ -3142,6 +3239,8 @@ class TxnLogFormat(TableFormat):
         any OR / other NOT / other parenthesis disables pruning
         entirely (the filter itself still applies, so pruning is never
         load-bearing for correctness)."""
+        if where is None:
+            return []
         # BETWEEN rewrites FIRST (its embedded AND would break the
         # conjunct split); simple space-free literals only — a quoted
         # literal containing the words degrades the clause to
@@ -3213,8 +3312,9 @@ class TxnLogFormat(TableFormat):
             dt = dt.astimezone(_dt.timezone.utc).replace(tzinfo=None)
         return dt.strftime("%Y-%m-%d %H:%M:%S.%f")
 
-    def _canonicalize_ts_clauses(self, clauses: list,
-                                 commits: list[dict]) -> list:
+    @classmethod
+    def _canonicalize_ts_clauses(cls, clauses: list,
+                                 types: dict[str, str]) -> list:
         """Timestamp data skipping (round 13 — VERDICT r12 item 5):
         clause literals on timestamp columns rewrite into the same
         canonical fixed-width UTC text the stats tier records, so
@@ -3230,14 +3330,6 @@ class TxnLogFormat(TableFormat):
         clauses from pruning instead of lying).  Unparsable literals
         and null tests pass through; every consumer of
         ``_clause_excluded_files`` inherits this rewrite."""
-        if not clauses:
-            return clauses
-        sj = self._resolve_schema(commits)
-        if not sj:
-            return clauses
-        types = {f["name"]: f["type"]
-                 for f in json.loads(sj)["fields"]
-                 if isinstance(f["type"], str)}
         if not any(types.get(c) in ("timestamp", "timestamp_ntz")
                    for c, _op, _lit in clauses):
             return clauses
@@ -3261,20 +3353,18 @@ class TxnLogFormat(TableFormat):
             if t == "timestamp" and not utc:
                 continue  # session-zone literal vs UTC stats: no prune
             if op == "in":
-                cs = tuple(self._canon_ts_literal(v) for v in lit)
+                cs = tuple(cls._canon_ts_literal(v) for v in lit)
                 if all(c is not None for c in cs):
                     out.append((col, op, cs))
             else:
-                c = self._canon_ts_literal(lit)
+                c = cls._canon_ts_literal(lit)
                 if c is not None:
                     out.append((col, op, c))
         return out
 
-    def _clause_excluded_files(self, path: str, commits: list[dict],
-                               alters: list[dict],
-                               clauses: list,
-                               _live: list | None = None,
-                               _want_kept: bool = False):
+    @classmethod
+    def _clause_excluded_files(cls, path: str, snap: Snapshot,
+                               clauses: list, _want_kept: bool = False):
         """Table-relative files PROVABLY excluded by the prunable
         conjuncts, from commit-recorded per-file stats — the data-
         skipping core shared by ``read(where=...)`` and the txnlog
@@ -3303,7 +3393,9 @@ class TxnLogFormat(TableFormat):
         term), while the survivor list is O(files actually scanned).
         Only the one-group fast path emits it; every mixed-clause /
         alter / untyped case keeps the skip-set form."""
-        clauses = self._canonicalize_ts_clauses(clauses, commits)
+        alters = snap.alters
+        types = snap.column_types()
+        clauses = cls._canonicalize_ts_clauses(clauses, types)
         skip: set[str] = set()
         vmap: dict[int, list] = {}
 
@@ -3312,7 +3404,7 @@ class TxnLogFormat(TableFormat):
             if mapped is None:
                 mapped = vmap[sv] = [
                     (src, op, lit) for col, op, lit in clauses
-                    for src in (self._source_column(col, alters, sv),)
+                    for src in (cls._source_column(col, alters, sv),)
                     if src is not None]
             return mapped
 
@@ -3330,10 +3422,10 @@ class TxnLogFormat(TableFormat):
         # rules; the fallback is per-checkpoint, never partial.
         rest: list[dict] = []
         kept = None
-        for c in commits:
+        for c in snap.commits:
             if c["action"] == "checkpoint" and c.get("stats_sidecar"):
-                got = self._sidecar_excluded(path, c, mapped_for,
-                                             _want_kept=_want_kept)
+                got = cls._sidecar_excluded(path, c, mapped_for,
+                                            _want_kept=_want_kept)
                 if got is None:
                     rest.append(c)  # typed columns absent: row-wise
                 elif isinstance(got, tuple):
@@ -3342,8 +3434,8 @@ class TxnLogFormat(TableFormat):
                     skip |= got
             else:
                 rest.append(c)
-        for sv, relfile, per in self._stats_entries(path, rest):
-            if self._provably_empty(per, mapped_for(sv)):
+        for sv, relfile, per in cls._stats_entries(path, rest):
+            if cls._provably_empty(per, mapped_for(sv)):
                 skip.add(relfile)
         # HIDDEN-PARTITIONING pruning (round 11): a transform-bearing
         # entry's commit-recorded file paths carry their derived
@@ -3352,37 +3444,18 @@ class TxnLogFormat(TableFormat):
         # construction — only the transform can prune `id = 42` there).
         # Living here, every consumer gains it: read(), the stream
         # planner's where-option, DSv2 pushFilters, and OPTIMIZE ...
-        # WHERE scoping.  Transform-free tables pay only a key probe
-        # per commit — never a live-state replay (the deep-metadata
-        # plan's budget); read() passes its own replay via ``_live``.
-        # Unhydrated sidecar markers skip conservatively.
-        def _any_transform() -> bool:
-            for c in commits:
-                if c.get("transform"):
-                    return True
-                if c["action"] == "checkpoint" and any(
-                        e.get("transform") for e in c["state"]["live"]):
-                    return True
-            return False
-
-        if _live is not None or _any_transform():
-            live = (_live if _live is not None
-                    else self._resolve_live(commits))
-            if any(e.get("transform") for e in live):
-                sj = self._resolve_schema(commits)
-                types = ({f["name"]: f["type"]
-                          for f in json.loads(sj)["fields"]
-                          if isinstance(f["type"], str)} if sj else {})
-                for e in live:
-                    tr, files = e.get("transform"), e.get("files")
-                    if not tr or not isinstance(files, list):
-                        continue
-                    tkept = set(self._transform_excluded_files(
-                        e, files, clauses, types.get(tr["source"])))
-                    skip.update(rf for rf in files if rf not in tkept)
+        # WHERE scoping.  Unhydrated sidecar markers skip conservatively.
+        for e in snap.live:
+            tr, files = e["transform"], e["files"]
+            if not tr or not isinstance(files, list):
+                continue
+            tkept = set(cls._transform_excluded_files(
+                e, files, clauses, types.get(tr["source"])))
+            skip.update(rf for rf in files if rf not in tkept)
         return (skip, kept) if _want_kept else skip
 
-    def _sidecar_excluded(self, path: str, rec: dict,
+    @classmethod
+    def _sidecar_excluded(cls, path: str, rec: dict,
                           mapped_for, _want_kept: bool = False):
         """Data skipping over a checkpoint's TYPED sidecar columns —
         the vectorized twin of ``_provably_empty`` (same may-contain
@@ -3404,7 +3477,7 @@ class TxnLogFormat(TableFormat):
         every commit path, sinks.py ``_stage``/``convert``/``clone``);
         any other layout in the survivors abandons kept mode for the
         plain skip set, never a wrong grouping."""
-        tbl = self._sidecar_table(path, rec)
+        tbl = cls._sidecar_table(path, rec)
         if tbl is None:
             return set()  # unreadable sidecar: conservative no-prune
         import pyarrow as pa
@@ -3525,7 +3598,7 @@ class TxnLogFormat(TableFormat):
                     cr = pc.filter(rels, cand)
                     drop = {rf for rf, cjs in zip(cr.to_pylist(),
                                                   cj.to_pylist())
-                            if cjs is not None and self._provably_empty(
+                            if cjs is not None and cls._provably_empty(
                                 json.loads(cjs), list(key))}
                     if drop:
                         survivors = [rf for rf in survivors
@@ -3554,7 +3627,7 @@ class TxnLogFormat(TableFormat):
                 cj = pc.filter(sub["cols_json"], cand)
                 cr = pc.filter(rels, cand)
                 for rf, cjs in zip(cr.to_pylist(), cj.to_pylist()):
-                    if cjs is not None and self._provably_empty(
+                    if cjs is not None and cls._provably_empty(
                             json.loads(cjs), list(key)):
                         skip.add(rf)
         return skip
@@ -3751,7 +3824,8 @@ class TxnLogFormat(TableFormat):
     #: at least a full date — shorter literals stay conservative)
     _ISO_PREFIX = _re_mod.compile(r"^\d{4}-\d{2}-\d{2}")
 
-    def _derived_of(self, tr: dict, lit, coltype: str | None):
+    @classmethod
+    def _derived_of(cls, tr: dict, lit, coltype: str | None):
         """The derived partition value (string) a clause LITERAL maps to
         under a hidden partition transform, or None when the (literal,
         column-type) pairing can't be derived exactly — the same
@@ -3766,7 +3840,7 @@ class TxnLogFormat(TableFormat):
         if kind == "bucket":
             if coltype == "string" and isinstance(lit, str):
                 key = lit
-            elif coltype in self._INTEGRAL_TYPES \
+            elif coltype in cls._INTEGRAL_TYPES \
                     and isinstance(lit, int):
                 key = str(lit)
             else:
@@ -3777,17 +3851,18 @@ class TxnLogFormat(TableFormat):
         if kind == "truncate":
             if coltype == "string" and isinstance(lit, str):
                 return lit[:tr["param"]]
-            if coltype in self._INTEGRAL_TYPES and isinstance(lit, int):
+            if coltype in cls._INTEGRAL_TYPES and isinstance(lit, int):
                 return str(lit - lit % tr["param"])
             return None
-        width = self._TRANSFORM_WIDTH[kind]
+        width = cls._TRANSFORM_WIDTH[kind]
         if coltype in ("date", "timestamp", "timestamp_ntz") \
                 and isinstance(lit, str) and len(lit) >= width \
-                and self._ISO_PREFIX.match(lit):
+                and cls._ISO_PREFIX.match(lit):
             return lit[:width]
         return None
 
-    def _transform_provably_empty(self, tr: dict, parts, clauses: list,
+    @classmethod
+    def _transform_provably_empty(cls, tr: dict, parts, clauses: list,
                                   coltype: str | None) -> bool:
         """True iff a clause on the TRANSFORM SOURCE column proves no
         recorded derived partition value of this dir can match —
@@ -3816,7 +3891,7 @@ class TxnLogFormat(TableFormat):
                 return True
             members = list(lit) if op == "in" else [lit]
             if op in ("=", "in"):
-                derived = [self._derived_of(tr, m, coltype)
+                derived = [cls._derived_of(tr, m, coltype)
                            for m in members]
                 if any(d is None for d in derived):
                     continue
@@ -3827,10 +3902,10 @@ class TxnLogFormat(TableFormat):
                 continue
             if kind == "bucket":
                 continue
-            d = self._derived_of(tr, lit, coltype)
+            d = cls._derived_of(tr, lit, coltype)
             if d is None:
                 continue
-            if kind == "truncate" and coltype in self._INTEGRAL_TYPES:
+            if kind == "truncate" and coltype in cls._INTEGRAL_TYPES:
                 # partition value b covers the interval [b, b + w)
                 try:
                     pv = [int(v) for v in vals]
@@ -3873,7 +3948,8 @@ class TxnLogFormat(TableFormat):
         from urllib.parse import unquote
         return True, unquote(v)
 
-    def _transform_excluded_files(self, e: dict, files: list[str],
+    @classmethod
+    def _transform_excluded_files(cls, e: dict, files: list[str],
                                   clauses: list,
                                   coltype: str | None) -> list[str]:
         """FILE-granular hidden-partitioning pruning: each staged file
@@ -3886,12 +3962,12 @@ class TxnLogFormat(TableFormat):
         cache: dict = {}
         kept = []
         for rf in files:
-            has, v = self._tp_value_of(rf)
+            has, v = cls._tp_value_of(rf)
             if not has:
                 kept.append(rf)
                 continue
             if v not in cache:
-                cache[v] = not self._transform_provably_empty(
+                cache[v] = not cls._transform_provably_empty(
                     tr, {v}, clauses, coltype)
             if cache[v]:
                 kept.append(rf)
@@ -3966,9 +4042,7 @@ class TxnLogFormat(TableFormat):
              with_row_ids: bool = False,
              ref: str | None = None,
              _with_pos: bool = False,
-             _only_files: set | None = None,
-             _prune_only: bool = False,
-             _plan_info: dict | None = None) -> DataFrame:
+             _plan: ScanPlan | None = None) -> DataFrame:
         """Current state, or — with ``as_of_version`` — TIME TRAVEL: the
         state after commit ``as_of_version`` landed, by replaying exactly
         that log prefix (versions are the log's serialization order, so
@@ -4002,14 +4076,11 @@ class TxnLogFormat(TableFormat):
         root, time-travel kwargs apply within the branch) or a TAG
         (an immutable version pin — a named time-travel alias).
 
-        ``_prune_only`` (round 17, single-pass copy-on-write): apply
-        ``where`` at the METADATA tiers only (dir/file pruning) and
-        skip the row filter — the caller gets every row of every
-        surviving file.  ``_plan_info`` (same round), when a dict,
-        is filled with the planned scan targets: ``paths`` (absolute
-        file paths) and ``exact`` (False when a legacy dir scan hides
-        the file list) — the driver-side size gate for fusing the
-        probe and rewrite scans."""
+        ``_plan`` (internal rewrite planning): scan this plan of the
+        operation's snapshot instead of planning ``where`` — which is
+        then only the row filter (``None``: every row of the planned
+        files, the copy-on-write candidate scan).  A log that moved
+        since the plan was made is re-planned at the new head."""
         if ref is not None:
             info = self._load_ref(path, ref)
             if info.get("type") == "branch":
@@ -4031,7 +4102,7 @@ class TxnLogFormat(TableFormat):
         commits = self._commits(
             path, _gate=(as_of_version is None and as_of_timestamp is None))
         if (as_of_version is None and as_of_timestamp is None
-                and _only_files is None and not _with_pos and commits
+                and _plan is None and not _with_pos and commits
                 and self._maybe_fire_compact_due(spark, path, commits)):
             # a pending streaming-sink compact_due marker fired: replan
             # on the compacted state (time-travel and internal
@@ -4058,77 +4129,18 @@ class TxnLogFormat(TableFormat):
                     f"version {as_of_version} does not exist at {path}")
         if not commits:
             raise FileNotFoundError(f"no committed table at {path}")
-        live = self._resolve_live(commits)
-        dvs = self._resolve_dvs(commits)
-        removed_files = self._resolve_removed_files(commits)
-        alters = self._resolve_alters(commits)
-        # DATA SKIPPING (Delta per-AddFile stats parity): with ``where``,
-        # files whose commit-recorded min/max prove no row can match are
-        # never opened; the predicate is ALSO applied to the result, so
-        # pruning is purely an access-path optimization — unparsable or
-        # stat-less cases degrade to a plain filtered scan.
-        skip_files: set[str] = set()
-        clauses = self._skip_clauses(where) if where is not None else []
-        # LOG-LEVEL PARTITION PRUNING (VERDICT r8 item 2): each dynamic
-        # overwrite records its partition column + values; a conjunct on
-        # that column drops whole dirs from the plan — before stats,
-        # before any listing — so a partition-predicate read plans
-        # O(matching dirs), not O(live dirs).  Types come from the
-        # resolved schema (a live entry's pcol name is always current:
-        # alter_table refuses renaming/dropping live overwrite keys).
-        pcol_types: dict[str, str] = {}
-        if clauses:
-            sj = self._resolve_schema(commits)
-            if sj:
-                pcol_types = {
-                    f["name"]: f["type"]
-                    for f in json.loads(sj)["fields"]
-                    if isinstance(f["type"], str)}
-        kept_cpv = kept_by_dir = None
-        if clauses:
-            skipped, kept_info = self._clause_excluded_files(
-                path, commits, alters, clauses, _live=live,
-                _want_kept=True)
-            skip_files |= skipped
-            if kept_info is not None:
-                # O(survivors) form for the checkpoint tier: entries at
-                # or below the checkpoint read their unpruned file list
-                # straight from this map (see the live-entry loop)
-                kept_cpv, kept_by_dir = kept_info
-        if _only_files is not None:
-            # EXACT scan restriction (rewrite planning: the targeted
-            # delete/update's second read must scan precisely the hot
-            # files, or untouched rows would restage as duplicates):
-            # every live file not named is treated like a retired file;
-            # legacy entries without a recorded list pay one walk for
-            # the same exact answer
-            for e in live:
-                files_l = e.get("files")
-                if files_l is None:
-                    full = os.path.join(path, e["dir"])
-                    files_l = [
-                        _relfile(os.path.join(dp, fn))
-                        for dp, _d, fns in os.walk(full)
-                        for fn in fns if fn.endswith(".parquet")]
-                skip_files.update(rf for rf in files_l
-                                  if rf not in _only_files)
-        removed_files = removed_files | skip_files
+        snap = self._fold(commits)
+        if _plan is None:
+            plan = snap.plan_scan(path, self._skip_clauses(where))
+        elif _plan.snap is snap:
+            plan = _plan
+        else:
+            plan = snap.plan_scan(path, _plan.clauses, _plan.only_files)
+        alters, dvs = snap.alters, snap.dvs
         # merge-on-read deletes need each row's physical identity; expose
         # it via the scan-time _metadata columns (file path + parquet row
         # index) only when something will consume it
         need_pos = bool(dvs) or _with_pos or with_row_ids
-        # dir prefixes of removed files — consumed only by the legacy
-        # no-recorded-files walk below, and O(removed ∪ skipped) to
-        # build, so LAZY: a deep all-recorded table (48k skip-pruned
-        # files on the metadata_plan_deep fixture) never pays it
-        _removed_dirs_cache: list = []
-
-        def removed_dirs() -> set:
-            if not _removed_dirs_cache:
-                _removed_dirs_cache.append(
-                    {"/".join(p.split("/", 2)[:2])
-                     for p in removed_files})
-            return _removed_dirs_cache[0]
 
         def post_scan(df, e):
             """Everything that happens to a scanned piece after the
@@ -4198,9 +4210,6 @@ class TxnLogFormat(TableFormat):
                 df = df.filter(keep)
             return df
 
-        if _plan_info is not None:
-            _plan_info["exact"] = True
-            _plan_info["paths"] = []
         parts_list = []
         #: SCAN BATCHING: a streaming table accumulates hundreds of
         #: uniform append commits; scanning each as its own DataFrame and
@@ -4214,108 +4223,20 @@ class TxnLogFormat(TableFormat):
         #: solo scans — grouping is by exact signature, so batching can
         #: never change semantics, only plan shape.
         batch: dict = {}
-        for idx, e in enumerate(live):
-            if e["pcol"] and e["parts"] <= e["removed"].get(e["pcol"], set()):
-                continue  # every partition this dir holds was re-overwritten
-            if clauses and e["pcol"] and self._partition_provably_empty(
-                    e["pcol"], e["parts"], clauses,
-                    pcol_types.get(e["pcol"])):
-                continue  # no recorded partition value can match `where`
-            if clauses and e.get("transform") and e["parts"] \
-                    and self._transform_provably_empty(
-                        e["transform"], e["parts"], clauses,
-                        pcol_types.get(e["transform"]["source"])):
-                continue  # hidden-partitioning dir pruning THROUGH the
-                # transform: no recorded derived value can match
-
-            def require_dir():
-                # a LIVE commit whose staged dir is gone: vacuumed time
-                # travel or external corruption — raise, never silently
-                # return partial/empty historical state.  Probed only
-                # for entries the plan will actually SCAN: a deep
-                # predicate read that stats-prunes 6,000 commit dirs
-                # must not pay 6,000 stat calls for them
-                if not os.path.isdir(full):
-                    raise FileNotFoundError(
-                        f"data dir {e['dir']} for a live commit is "
-                        f"missing at {path} (vacuumed version or "
-                        "corrupted table)")
-
-            # (transform FILE-level pruning happens centrally in
-            # _clause_excluded_files — its exclusions are already in
-            # removed_files; the dir-level check above stays as the
-            # cheap whole-commit fast path)
-            files = e.get("files")
-            if (kept_by_dir is not None and files is not None
-                    and e["version"] <= kept_cpv
-                    and e["dir"].startswith("_txn_data/")
-                    and "/" not in e["dir"][10:]):
-                # checkpoint-covered entry under the standard staging
-                # layout: the sidecar recorded every one of its files,
-                # so the kept map IS its unpruned list — O(survivors)
-                # instead of testing each file against a skip set.
-                # Any other entry shape keeps the full list (over-scan
-                # is safe: the predicate still applies to rows).
-                files = kept_by_dir.get(e["dir"], [])
-            if files is not None and not files:
-                # a staged dir with no part files (an empty DataFrame
-                # written partitioned leaves only _SUCCESS — e.g. compact()
-                # of an empty table records it as replace_all with
-                # pcol=None, so the partition-skip above never fires),
-                # or a fully stats-pruned entry: zero rows — before the
-                # path join below, so a deep read's thousands of pruned
-                # entries pay a truthiness test each, nothing more
-                continue
+        for idx, e, files in plan.entries:
             full = os.path.join(path, e["dir"])
-            if files is None:
-                require_dir()
-                if not self._has_data_files(full):
-                    # same zero-row case for pre-upgrade records without
-                    # a commit-recorded file list: one walk answers it
-                    continue
             # Scan EXPLICIT commit-recorded file names, not the dir:
             # (a) the parquet reader skips its per-dir storage listing
             # (at scale an object-store LIST per dir per scan), and
             # (b) a file the FILE-level vacuum swept out of a
             # still-referenced dir fails a historical read LOUDLY at
             # scan instead of silently vanishing from a dir listing —
-            # the never-a-wrong-answer discipline.  File identity is
-            # derived exactly like the _dv_file column: the
-            # `_txn_data/...` suffix.  Retired/stats-pruned files are
-            # dropped here (the read-path win DV compaction exists
-            # for); legacy records without ``files`` keep the dir scan,
-            # paying one walk only when a rewrite touched their dir.
-            if files is not None:
-                flist = [rf for rf in files if rf not in removed_files]
-                if not flist:
-                    continue  # every file pruned or rewritten
-                require_dir()
-                scan_target = [os.path.join(path, rf) for rf in flist]
-            else:
-                scan_target = [full]
-                if e["dir"] in removed_dirs():
-                    kept, pruned = [], 0
-                    for dp, _dns, fns in os.walk(full):
-                        for fn in fns:
-                            if not fn.endswith(".parquet"):
-                                continue
-                            ap = os.path.join(dp, fn)
-                            if _relfile(ap) in removed_files:
-                                pruned += 1
-                            else:
-                                kept.append(ap)
-                    if pruned:
-                        if not kept:
-                            continue  # every file here was rewritten
-                        scan_target = kept
-            if _plan_info is not None:
-                if files is None and scan_target == [full]:
-                    # legacy dir scan: file list unknown driver-side
-                    _plan_info["exact"] = False
-                else:
-                    _plan_info["paths"].extend(scan_target)
-            if (e["pcol"] is None and e.get("staged_pcol") is None
-                    and e.get("schema")):
+            # the never-a-wrong-answer discipline.  Legacy records
+            # without ``files`` keep the dir scan.
+            scan_target = ([full] if files is None
+                           else [os.path.join(path, rf) for rf in files])
+            if (e["pcol"] is None and e["staged_pcol"] is None
+                    and e["schema"]):
                 era = sum(1 for a in alters
                           if a["version"] <= e["version"])
                 rsig = frozenset(
@@ -4362,11 +4283,10 @@ class TxnLogFormat(TableFormat):
             # writes no part files, so the dir itself carries no schema)
             # instead of letting reduce() raise on an empty iterable.
             from pyspark.sql.types import StructType
-            sj = self._resolve_schema(commits)
-            if sj is None:  # pre-schema-recording log with no live data
+            if snap.schema is None:  # pre-schema-recording log
                 raise FileNotFoundError(f"no live data at {path}")
             return spark.createDataFrame(
-                [], StructType.fromJson(json.loads(sj)))
+                [], StructType.fromJson(json.loads(snap.schema)))
         out = reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True),
             parts_list)
@@ -4376,8 +4296,7 @@ class TxnLogFormat(TableFormat):
             # order follows the recorded schema (gated on alters so
             # alter-free tables keep their existing plans untouched)
             from pyspark.sql.types import StructType
-            tsj = self._resolve_schema(commits)
-            target = StructType.fromJson(json.loads(tsj))
+            target = StructType.fromJson(json.loads(snap.schema))
             for f in target.fields:
                 if f.name not in out.columns:
                     out = out.withColumn(f.name,
@@ -4389,10 +4308,9 @@ class TxnLogFormat(TableFormat):
             if with_row_ids and self._ROW_ID_COL in out.columns:
                 keep_cols.append(self._ROW_ID_COL)
             out = out.select(*keep_cols)
-        if where is not None and not _prune_only:
-            # the predicate always applies in full — file skipping above
-            # only narrowed the access path (``_prune_only`` callers
-            # re-apply it themselves where they need it)
+        if where is not None:
+            # the predicate always applies in full — file skipping
+            # only narrowed the access path
             out = out.filter(F.expr(where))
         if dvs:
             if out.columns.count("_dv_file") > 1:
@@ -4428,7 +4346,7 @@ class TxnLogFormat(TableFormat):
             # the file-base table is FILE-COUNT rows of driver metadata
             # (the same order as Delta's add-file state) — broadcast
             # onto the scan's physical file identity
-            rb_rows = [(rf, base) for e in live
+            rb_rows = [(rf, base) for e in snap.live
                        for rf, base in (e.get("row_base") or {}).items()]
             if rb_rows:
                 # Arrow-built (round 16, perf): the list form's pickled
@@ -4603,26 +4521,18 @@ class TxnLogFormat(TableFormat):
         count, alter count, checkpoint version (or None), and the
         current schema JSON.  Driver-side, O(checkpoint + tail) like
         every other planning path."""
-        commits = self._commits(path)
+        snap = self._snapshot(path)
+        commits, live, removed = snap.commits, snap.live, snap.removed_files
         if not commits:
             raise FileNotFoundError(f"no committed table at {path}")
-        live = self._resolve_live(commits)
-        removed = self._resolve_removed_files(commits)
         sizes: dict[str, int] = {}
         for c in commits:
             sizes.update(self._file_bytes_of(path, c))
         live_files = set()
         for e in live:
-            files = e.get("files")
-            if files is None:
-                # legacy record written before file recording: the same
-                # one-off walk every other consumer pays for such
-                # commits (a missing dir walks as empty — the read path
-                # is where missing-live-dir corruption raises)
-                files = [_relfile(os.path.join(dp, fn))
-                         for dp, _dns, fns in os.walk(
-                             os.path.join(path, e["dir"]))
-                         for fn in fns if fn.endswith(".parquet")]
+            files = e["files"]
+            if files is None:  # legacy pre-recording commit: one walk
+                files = self._dir_files(path, e["dir"])
             live_files.update(rf for rf in files if rf not in removed)
         unknown = sum(1 for rf in live_files if rf not in sizes)
         cp = next((c["version"] for c in commits
@@ -4633,23 +4543,21 @@ class TxnLogFormat(TableFormat):
             "size_bytes": sum(sizes.get(rf, 0) for rf in live_files),
             "size_unknown_files": unknown,
             "num_live_dirs": len(live),
-            "num_dv_dirs": len(self._resolve_dvs(commits)),
+            "num_dv_dirs": len(snap.dvs),
             "num_removed_files": len(removed),
-            "num_alters": len(self._resolve_alters(commits)),
+            "num_alters": len(snap.alters),
             "checkpoint_version": cp,
-            "schema": self._resolve_schema(commits),
+            "schema": snap.schema,
             # live column defaults keyed by CURRENT column name (an
             # added-with-default column renamed later reports under its
             # new name; a dropped one disappears)
-            "column_defaults": self._current_defaults(commits),
+            "column_defaults": self._current_defaults(snap.alters),
             # per-column identity watermarks (highest allocated value)
-            "identity_high": self._resolve_identity_high(commits),
+            "identity_high": dict(snap.identity_high),
             # required reader/writer feature sets (see set_protocol)
             "protocol": {
-                "reader_features":
-                    sorted(self._resolve_protocol(commits)["reader"]),
-                "writer_features":
-                    sorted(self._resolve_protocol(commits)["writer"])},
+                "reader_features": sorted(snap.protocol["reader"]),
+                "writer_features": sorted(snap.protocol["writer"])},
         }
 
     def file_manifest(self, spark: SparkSession, path: str,
@@ -4676,19 +4584,15 @@ class TxnLogFormat(TableFormat):
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        commits = self._commits(path, upto=as_of_version)
+        snap = self._snapshot(path, upto=as_of_version)
+        commits, live, removed = snap.commits, snap.live, snap.removed_files
         if not commits:
             raise FileNotFoundError(f"no committed table at {path}")
-        live = self._resolve_live(commits)
-        removed = self._resolve_removed_files(commits)
         rel_p, ver_p, act_p = [], [], []
         for e in live:  # O(live entries), never O(files)
-            files = e.get("files")
+            files = e["files"]
             if files is None:  # legacy pre-recording commit: one walk
-                files = [_relfile(os.path.join(dp, fn))
-                         for dp, _d, fns in os.walk(
-                             os.path.join(path, e["dir"]))
-                         for fn in fns if fn.endswith(".parquet")]
+                files = self._dir_files(path, e["dir"])
             if not files:
                 continue
             rel_p.append(pa.array(files, pa.string()))
@@ -4775,12 +4679,12 @@ class TxnLogFormat(TableFormat):
             "size_bytes": size, "num_records": rows,
             "partition_value": raw}, schema=schema))
 
-    def _current_defaults(self, commits: list[dict]) -> dict:
+    @staticmethod
+    def _current_defaults(alters: list[dict]) -> dict:
         """``{current column name: frozen constant}`` for every live
         column carrying an ADD COLUMN default — the adding alter's
         ``defaults`` entry replayed through subsequent renames/drops
         (the forward twin of ``_added_default``'s backward walk)."""
-        alters = self._resolve_alters(commits)
         out: dict = {}
         for a in alters:
             for dropped in (a.get("drop") or []):
@@ -4844,9 +4748,8 @@ class TxnLogFormat(TableFormat):
         (the vector names snapshot files only, so interleaved pure
         same-schema appends retarget the commit instead of aborting it).
         Returns rows deleted."""
-        commits = self._commits(path)
-        head = commits[-1]["version"]
-        self._check_dv_reserved_columns(spark, path)
+        snap = self._snapshot(path)
+        self._check_dv_reserved_columns(spark, path, snap)
         # where=predicate lets the stats pruner skip files that provably
         # hold no matching row — a point delete opens O(matching files),
         # not O(live files); complex predicates degrade to a full scan
@@ -4861,12 +4764,12 @@ class TxnLogFormat(TableFormat):
         rel = self._stage(hits, path, None, check=False)
         self._commit(path, {"action": "add_dv", "dir": rel,
                             "partition_col": None, "partitions": []},
-                     expected_version=head + 1,
-                     base_schema=self._resolve_schema(commits))
+                     expected_version=snap.version + 1,
+                     base_schema=snap.schema)
         return n_del
 
-    def _check_dv_reserved_columns(self, spark: SparkSession,
-                                   path: str) -> None:
+    def _check_dv_reserved_columns(self, spark: SparkSession, path: str,
+                                   snap: Snapshot) -> None:
         """Vector ops reserve _dv_file/_dv_pos for the physical row
         identity; creating a vector over a table whose DATA carries either
         name would make every subsequent read ambiguous.
@@ -4876,10 +4779,8 @@ class TxnLogFormat(TableFormat):
         building a full read plan here cost every DML entry point a
         driver-side plan construction just to list columns; the read
         fallback only remains for pre-schema-recording legacy logs."""
-        commits = self._commits(path)
-        sj = self._resolve_schema(commits) if commits else None
-        if sj is not None:
-            cols = {f["name"] for f in json.loads(sj)["fields"]}
+        if snap.schema is not None:
+            cols = {f["name"] for f in json.loads(snap.schema)["fields"]}
         else:
             cols = set(self.read(spark, path).columns)
         bad = {"_dv_file", "_dv_pos"} & cols
@@ -4888,7 +4789,7 @@ class TxnLogFormat(TableFormat):
                 f"table columns {sorted(bad)} are reserved for deletion "
                 "vectors; rename them before using merge-on-read ops")
 
-    def _check_update_targets(self, commits: list[dict], cols,
+    def _check_update_targets(self, snap: Snapshot, cols,
                               assignments: dict[str, str]) -> None:
         """UPDATE SET may assign only data columns of the table: never
         the scan's ``_dv_*``/``_row_id`` identity columns, never a
@@ -4899,7 +4800,7 @@ class TxnLogFormat(TableFormat):
         if unknown:
             raise ValueError(
                 f"UPDATE SET references columns not in the table: {unknown}")
-        ident_set = sorted(set(self._resolve_properties(commits).get(
+        ident_set = sorted(set(snap.properties.get(
             "identity_columns") or {}) & set(assignments))
         if ident_set:
             raise ValueError(
@@ -4935,18 +4836,16 @@ class TxnLogFormat(TableFormat):
         and commit leaves two invisible orphans for vacuum.  Vectors and
         rewrite dirs retire together at the next ``replace_all``.
         Returns rows updated."""
-        commits = self._commits(path)
-        head = commits[-1]["version"]
-        self._check_dv_reserved_columns(spark, path)
+        snap = self._snapshot(path)
+        self._check_dv_reserved_columns(spark, path, snap)
         # same stats pruning as delete_where_dv: only files that can hold
         # a matching row are opened to compute the rewrite
-        track = bool(self._resolve_properties(commits).get(
-            "row_tracking"))
+        track = bool(snap.properties.get("row_tracking"))
         current = self.read(spark, path, where=predicate, _with_pos=True,
                             with_row_ids=track)
         if "_dv_file" not in current.columns:
             return 0  # zero-live-row table: nothing to update
-        self._check_update_targets(commits, current.columns, assignments)
+        self._check_update_targets(snap, current.columns, assignments)
         matching = current.filter(F.expr(predicate))
         n_upd = matching.count()
         if n_upd == 0:
@@ -4964,12 +4863,12 @@ class TxnLogFormat(TableFormat):
                if track else [])))
         rec = {"action": "dv_update", "_row_track": track,
                "partition_col": None, "partitions": []}
-        self._stage_rewrite(rewritten, path, commits, rec)  # checks run
+        self._stage_rewrite(rewritten, path, snap, rec)  # checks run
         rec["dv_dir"] = self._stage(
             matching.select("_dv_file", "_dv_pos"), path, None, check=False)
         self._commit(path, rec,
-                     expected_version=head + 1,
-                     base_schema=self._resolve_schema(commits))
+                     expected_version=snap.version + 1,
+                     base_schema=snap.schema)
         return n_upd
 
     @_conflict_retryable
@@ -5002,21 +4901,20 @@ class TxnLogFormat(TableFormat):
         ``update_where``: rewrite the files holding rows that match
         ``predicate`` (a NULL predicate leaves a row as it is, SQL
         semantics).  Returns the number of matching rows."""
-        commits = self._commits(path)
-        if not commits:
+        snap = self._snapshot(path)
+        if not snap.commits:
             raise FileNotFoundError(f"no committed table at {path}")
-        self._check_dv_reserved_columns(spark, path)
+        self._check_dv_reserved_columns(spark, path, snap)
         pred = F.expr(predicate)
         hit = F.coalesce(pred, F.lit(False))
-        track = bool(self._resolve_properties(commits).get(
-            "row_tracking"))
-        cdf_on = self._effective_config(commits)[2]
-        with self._cow_candidates(spark, path, commits, predicate,
+        track = bool(snap.properties.get("row_tracking"))
+        cdf_on = self._effective_config(snap)[2]
+        with self._cow_candidates(spark, path, snap, predicate,
                                   track) as (cand, hot_rows):
             if "_dv_file" not in cand.columns:
                 return 0  # zero-live-row table: nothing to change
             if assignments is not None:
-                self._check_update_targets(commits, cand.columns,
+                self._check_update_targets(snap, cand.columns,
                                            assignments)
             # the targeting step: files holding matching live rows and
             # the matching-row count, in ONE Spark job
@@ -5052,7 +4950,7 @@ class TxnLogFormat(TableFormat):
                     for cols, kind in images] if cdf_on else None)
             # a delete cannot introduce a constraint violation; an
             # update re-validates the restaged rows (the only new data)
-            self._commit_rewrite(spark, path, commits, new_data, hot,
+            self._commit_rewrite(spark, path, snap, new_data, hot,
                                  track, cdf, check=assignments is not None)
             return int(sum(r["_n"] for r in per_file))
 
@@ -5078,11 +4976,11 @@ class TxnLogFormat(TableFormat):
     _FUSE_MAX_BYTES = 256 << 20
 
     @classmethod
-    def _fuse_candidates(cls, info: dict, cdf_on: bool,
+    def _fuse_candidates(cls, plan: "ScanPlan", cdf_on: bool,
                          track: bool) -> bool:
-        """True when the planned candidate scan (``read(_plan_info=)``)
-        is small enough to cache for the single-pass rewrite AND the
-        cache replaces enough repeated work to pay for itself.  Both
+        """True when the planned candidate scan is small enough to
+        cache for the single-pass rewrite AND the cache replaces enough
+        repeated work to pay for itself.  Both
         conditions were set empirically (same-session env-flip A/Bs,
         sf0.1): without the change data feed the rewrite reads the hot
         rows ONCE, so fusing trades a narrow column-pruned probe scan
@@ -5097,9 +4995,10 @@ class TxnLogFormat(TableFormat):
         what is hoped."""
         if not (cdf_on and track):
             return False
-        paths = info.get("paths")
-        if not info.get("exact") or paths is None \
-                or len(paths) > cls._FUSE_MAX_FILES:
+        if not plan.exact:
+            return False
+        paths = plan.paths
+        if len(paths) > cls._FUSE_MAX_FILES:
             return False
         total = 0
         for p in paths:
@@ -5113,35 +5012,35 @@ class TxnLogFormat(TableFormat):
 
     @contextmanager
     def _cow_candidates(self, spark: SparkSession, path: str,
-                        commits: list[dict], where: str | None,
+                        snap: Snapshot, where: str | None,
                         track: bool):
         """The candidate scan of one copy-on-write DML call and its
-        cache lifecycle: the stats-pruned ``_prune_only`` scan of
-        ``where``, cached when ``_fuse_candidates`` admits it, and
-        otherwise NARROW (no row ids: only the exact hot-file scan pays
-        the row-id join).  Yields ``(cand, hot_rows)``; ``cand`` lacks
+        cache lifecycle: every row of the files ``snap.plan_scan``
+        keeps for ``where`` (metadata pruning only, no row filter),
+        cached when ``_fuse_candidates`` admits the plan, and otherwise
+        NARROW (no row ids: only the exact hot-file scan pays the
+        row-id join).  Yields ``(cand, hot_rows)``; ``cand`` lacks
         ``_dv_file`` when the table holds no live row, ``hot_rows(hot)``
         returns the live rows of the files ``hot`` — the cached slice,
-        or the exact ``_only_files`` scan when not fused or when ``hot``
+        or the exact ``only_files`` scan when not fused or when ``hot``
         reaches past the candidates (merge's NOT MATCHED BY SOURCE
         sweep), which releases the cache.  Every exit releases it."""
-        cdf_on = self._effective_config(commits)[2]
-        info: dict = {}
+        cdf_on = self._effective_config(snap)[2]
+        plan = snap.plan_scan(path, self._skip_clauses(where))
 
         def scan(row_ids: bool) -> DataFrame:
-            return self.read(spark, path, where=where, _with_pos=True,
-                             with_row_ids=row_ids, _prune_only=True,
-                             _plan_info=info)
+            return self.read(spark, path, _with_pos=True,
+                             with_row_ids=row_ids, _plan=plan)
 
         wide = bool(cdf_on and track)  # the only shape the gate can fuse
         cand = scan(wide)
         live = "_dv_file" in cand.columns
-        fused = live and self._fuse_candidates(info, cdf_on, track)
+        fused = live and self._fuse_candidates(plan, cdf_on, track)
         if fused:
             cand = cand.persist()
-            cand_files = {_relfile(p) for p in info["paths"]}
+            cand_files = {rf for _i, _e, fs in plan.entries for rf in fs}
         elif wide and live:
-            cand = scan(False)  # one more driver-side plan, no job
+            cand = scan(False)  # one more DataFrame, no job
 
         def hot_rows(hot: list[str]) -> DataFrame:
             nonlocal fused
@@ -5151,7 +5050,8 @@ class TxnLogFormat(TableFormat):
                 cand.unpersist()
                 fused = False
             return self.read(spark, path, _with_pos=True,
-                             _only_files=set(hot), with_row_ids=track)
+                             with_row_ids=track,
+                             _plan=snap.plan_scan(path, only_files=set(hot)))
 
         try:
             yield cand, hot_rows
@@ -5160,7 +5060,7 @@ class TxnLogFormat(TableFormat):
                 cand.unpersist()
 
     def _commit_rewrite(self, spark: SparkSession, path: str,
-                        commits: list[dict], new_data: DataFrame,
+                        snap: Snapshot, new_data: DataFrame,
                         hot: list[str], track: bool,
                         cdf: list | None, check: bool = True,
                         evolved_add: dict | None = None,
@@ -5183,10 +5083,10 @@ class TxnLogFormat(TableFormat):
                "_row_track": track,
                "partition_col": None, "partitions": [],
                "schema": self._logical_schema_json(new_data.schema)}
-        self._stage_rewrite(new_data, path, commits, rec, check=check)
+        self._stage_rewrite(new_data, path, snap, rec, check=check)
         if evolved_add:
             # record WHICH columns a merge added (source-typed DDL):
-            # _resolve_alters synthesizes the matching alter entry, so
+            # the snapshot fold synthesizes the matching alter entry, so
             # every UNTOUCHED live file — and pre-merge files via the
             # change feed / time travel — maps the new columns to typed
             # NULLs instead of failing the strict missing-column check
@@ -5203,14 +5103,14 @@ class TxnLogFormat(TableFormat):
                 for rows, kind in cdf])
             rec["cdf_dir"] = self._stage(changed, path, None, check=False,
                                          index=False)
-            rec["cdf_files"] = self._pending_files(path, rec["cdf_dir"])
+            rec["cdf_files"] = self._dir_files(path, rec["cdf_dir"])
         # vectors on rewritten (or already-retired) files materialized
         # above and retire with them; vectors on untouched files
         # consolidate into one staged dir and STAY LIVE (rewrite_files
         # replay replaces the whole vector set)
-        dvs = self._resolve_dvs(commits)
+        dvs = snap.dvs
         if dvs:
-            retired = [*hot, *sorted(self._resolve_removed_files(commits))]
+            retired = [*hot, *sorted(snap.removed_files)]
             remaining = (reduce(DataFrame.unionByName, [
                 spark.read.parquet(os.path.join(path, d)) for d in dvs])
                 .filter(~F.col("_dv_file").isin(retired)).distinct())
@@ -5220,9 +5120,8 @@ class TxnLogFormat(TableFormat):
         ident_cols = None
         if identity:
             ident_cols, rec["identity_high"] = identity
-        self._commit(path, rec, expected_version=commits[-1]["version"] + 1,
-                     base_schema=self._resolve_schema(commits),
-                     identity_cols=ident_cols)
+        self._commit(path, rec, expected_version=snap.version + 1,
+                     base_schema=snap.schema, identity_cols=ident_cols)
 
     @staticmethod
     def _prune_literal(v) -> str | None:
@@ -5527,11 +5426,10 @@ class TxnLogFormat(TableFormat):
         rewrites and adds atomicity, conflict detection, and time
         travel."""
         keys = [key] if isinstance(key, str) else list(key)
-        commits = self._commits(path)
-        if not commits:
+        snap = self._snapshot(path)
+        if not snap.commits:
             raise FileNotFoundError(f"no committed table at {path}")
-        ident = self._resolve_properties(commits).get(
-            "identity_columns") or {}
+        ident = snap.properties.get("identity_columns") or {}
         if ident:
             # MERGE into identity tables (round 13 — VERDICT r12 item
             # 7): the INSERT branch allocates fresh values from the
@@ -5549,9 +5447,8 @@ class TxnLogFormat(TableFormat):
                 raise ValueError(
                     f"identity columns {bad} cannot be merge keys — "
                     "a source can never carry generated values")
-        track = bool(self._resolve_properties(commits).get(
-            "row_tracking"))
-        self._check_dv_reserved_columns(spark, path)
+        track = bool(snap.properties.get("row_tracking"))
+        self._check_dv_reserved_columns(spark, path, snap)
         # The source is evaluated by SEVERAL jobs (key collection for
         # pruning, the guard/stats aggregation, the staged write).  A
         # non-deterministic source — sampling, now(), shuffle-order-
@@ -5574,12 +5471,12 @@ class TxnLogFormat(TableFormat):
         # SINGLE-PASS probe-and-restage when ``_cow_candidates`` fuses
         # (round 17): the probe aggregation, the hot-file rewrite, and
         # every change-feed pass share ONE cached candidate scan, read
-        # without the row filter (pruning is purely access-path —
-        # ``_prune_only``).  The probe re-applies ``prune`` as a plain
+        # without the row filter (pruning is purely access-path — the
+        # planned scan).  The probe re-applies ``prune`` as a plain
         # filter — row-equivalent to ``read(where=prune)``, and every
         # consumer joins on the merge keys, so the unfiltered rows of
         # the cache are never counted.
-        with self._cow_candidates(spark, path, commits, prune,
+        with self._cow_candidates(spark, path, snap, prune,
                                   track) as (cand, hot_rows):
             empty_target = "_dv_file" not in cand.columns
             probe = (cand.filter(F.expr(prune)) if prune is not None
@@ -5908,7 +5805,7 @@ class TxnLogFormat(TableFormat):
                     ins_raw = routed.filter(ins_row).select(
                         *[named[c] for c in out_cols if c not in ident])
                     ins_alloc, ident_high = self._with_identity(
-                        ins_raw, commits)
+                        ins_raw, snap)
                     ins_alloc = ins_alloc.select(
                         *[F.col(c).cast(types[c]).alias(c)
                           if c in ident else F.col(c) for c in out_cols])
@@ -5924,7 +5821,7 @@ class TxnLogFormat(TableFormat):
                       for c in ins_cols])
                 if ident:
                     new_data, ident_high = self._with_identity(
-                        new_data, commits)
+                        new_data, snap)
                     new_data = new_data.select(
                         *[F.col(c).cast(types[c]).alias(c) for c in tcols])
                 if track:
@@ -5932,7 +5829,7 @@ class TxnLogFormat(TableFormat):
                         self._ROW_ID_COL, F.lit(None).cast("long"))
                 ins_alloc = new_data
             cdf = None
-            if self._effective_config(commits)[2]:
+            if self._effective_config(snap)[2]:
                 # exact per-row changes, each side keyed off the already-
                 # pinned source (localCheckpoint above), so the sidecar and
                 # the committed state cannot diverge.  Every matched target
@@ -6003,7 +5900,7 @@ class TxnLogFormat(TableFormat):
                     cdf.append((ins_src.filter(F.col(c_ins))
                                 .select(*ins_tgt, *ins_id), "insert"))
             self._commit_rewrite(
-                spark, path, commits, new_data, hot, track, cdf,
+                spark, path, snap, new_data, hot, track, cdf,
                 evolved_add=({c: stypes[c] for c in extra}
                              if schema_evolution else None),
                 identity=((frozenset(ident), ident_high) if ident_high
@@ -6041,24 +5938,24 @@ class TxnLogFormat(TableFormat):
         # checkpoint-aware prefix (versions at or below a checkpoint are
         # folded): _commits(upto) re-assembles from an older checkpoint
         # or the raw records, raising once vacuum pruned them
-        prefix = self._commits(path, upto=version)
-        if not prefix:
+        target = self._snapshot(path, upto=version)
+        if not target.commits:
             raise ValueError(f"version {version} does not exist at {path}")
         # same fully-shadowed skip as read(): a live entry whose every
         # partition was re-overwritten contributes no rows, so its dir
         # being vacuumed must not block the restore
-        missing = [e["dir"] for e in self._resolve_live(prefix)
+        missing = [e["dir"] for e in target.live
                    if not (e["pcol"]
                            and e["parts"] <= e["removed"].get(e["pcol"],
                                                               set()))
                    and not os.path.isdir(os.path.join(path, e["dir"]))]
-        missing += [d for d in self._resolve_dvs(prefix)
+        missing += [d for d in target.dvs
                     if not os.path.isdir(os.path.join(path, d))]
         if missing:
             raise FileNotFoundError(
                 f"cannot restore to version {version}: data dirs {missing} "
                 "were vacuumed")
-        schema = next((c["schema"] for c in reversed(prefix)
+        schema = next((c["schema"] for c in reversed(target.commits)
                        if c.get("schema")), None)
         return self._commit(path, {"action": "restore",
                                    "to_version": version, "dir": None,
@@ -6216,8 +6113,8 @@ class TxnLogFormat(TableFormat):
             raise FileExistsError(
                 f"destination {dst} already holds a table")
         rec, stats, fbytes, all_files = self._fold_record(src, v)
-        live = self._resolve_live(commits)
-        removed = self._resolve_removed_files(commits)
+        snap = Snapshot.fold(commits)
+        live, removed = snap.live, snap.removed_files
 
         def link(rf: str) -> None:
             self._link_rel(src, dst, rf)
@@ -6226,21 +6123,16 @@ class TxnLogFormat(TableFormat):
             # every live dir must exist at dst even when empty — read()
             # treats a missing live dir as vacuum corruption
             os.makedirs(os.path.join(dst, e["dir"]), exist_ok=True)
-            files = e.get("files")
+            files = e["files"]
             if files is None:  # legacy pre-recording entry: one walk
-                full = os.path.join(src, e["dir"])
-                files = [_relfile(os.path.join(dp, fn))
-                         for dp, _dns, fns in os.walk(full)
-                         for fn in fns if fn.endswith(".parquet")]
+                files = self._dir_files(src, e["dir"])
             for rf in files:
                 if rf not in removed:  # retired files are never read
                     link(rf)
         for dvd in rec["state"]["dvs"]:
             os.makedirs(os.path.join(dst, dvd), exist_ok=True)
-            for dp, _dns, fns in os.walk(os.path.join(src, dvd)):
-                for fn in fns:
-                    if fn.endswith(".parquet"):
-                        link(_relfile(os.path.join(dp, fn)))
+            for rf in self._dir_files(src, dvd):
+                link(rf)
         os.makedirs(dlog, exist_ok=True)
         # seed record publishes as BOTH the raw head and the checkpoint
         # (raw first): _commit assigns versions from raw names, and
@@ -6417,8 +6309,8 @@ class TxnLogFormat(TableFormat):
         the branch's head state folds through ``_fold_record`` (the
         same portable state record checkpoints and clones use), branch
         data files hardlink into main, and the record publishes with
-        ``action == "checkpoint"`` at ``fork + 1`` — a shape every
-        resolver already replays as a state RESET wherever it appears,
+        ``action == "checkpoint"`` at ``fork + 1`` — a shape the
+        snapshot fold already replays as a state RESET wherever it appears,
         so reads at or above the publish plan from it while every
         pre-publish version stays time-travelable from the raw prefix
         (both eras queryable).  Strict fast-forward: if main advanced
@@ -6471,7 +6363,7 @@ class TxnLogFormat(TableFormat):
                 "re-apply the audited writes")
         history = [tuple(h) for h in info.get("publish_history", [])]
         span_lo = history[-1][0] if history else seed
-        balters = self._resolve_alters(bcommits)
+        balters = Snapshot.fold(bcommits).alters
         # ADDITIVE-ONLY branch schema evolution publishes (round 15 —
         # VERDICT r14 item 3): an intra-branch ALTER that only ADDS
         # columns flattens losslessly PROVIDED no data commit in this
@@ -6507,7 +6399,7 @@ class TxnLogFormat(TableFormat):
             # bypass the gate and mis-mark the folded files as
             # carrying the column).  dv_update stays counted — it
             # appends rewritten-row dirs at its own version
-            # (see _resolve_live).
+            # (see ``Snapshot``).
             data_versions = [
                 c["version"] for c in bcommits
                 if c["version"] > span_lo
@@ -6554,7 +6446,7 @@ class TxnLogFormat(TableFormat):
         for app, pair in (rec.get("txn_latest") or {}).items():
             pair[1] = _mapv(pair[1])
         # alter era markers flatten with everything else (COPIES — the
-        # resolver returns the cached commit records themselves); see
+        # snapshot holds the cached commit records themselves); see
         # the additive-only gate above for why this is lossless
         rec["state"]["alters"] = [
             {**a, "version": _mapv(a["version"])}
@@ -6573,20 +6465,14 @@ class TxnLogFormat(TableFormat):
             os.makedirs(os.path.join(path, e["dir"]), exist_ok=True)
             files = e.get("files")
             if files is None:  # legacy pre-recording entry: one walk
-                full = os.path.join(bpath, e["dir"])
-                files = [_relfile(os.path.join(dp, fn))
-                         for dp, _dns, fns in os.walk(full)
-                         for fn in fns if fn.endswith(".parquet")]
+                files = self._dir_files(bpath, e["dir"])
             for rf in files:
                 if rf not in removed:
                     self._link_rel(bpath, path, rf)
         for dvd in rec["state"]["dvs"]:
             os.makedirs(os.path.join(path, dvd), exist_ok=True)
-            for dp, _dns, fns in os.walk(os.path.join(bpath, dvd)):
-                for fn in fns:
-                    if fn.endswith(".parquet"):
-                        self._link_rel(bpath, path,
-                                       _relfile(os.path.join(dp, fn)))
+            for rf in self._dir_files(bpath, dvd):
+                self._link_rel(bpath, path, rf)
         v = self._commit(path, rec, expected_version=v_pub)
         # immediate proper checkpoint at the publish: O(tail) plans and
         # the sidecar form for deep tables (the inline squash record
@@ -6771,10 +6657,8 @@ class TxnLogFormat(TableFormat):
             # The targeted forms below always had this guard; the full
             # form must too.  Strict by design — replace_all is not
             # append-tolerant (the appended rows are not in the rewrite).
-            snap = self._commits(path)
-            head = snap[-1]["version"] if snap else -1
-            track = bool(self._resolve_properties(snap).get(
-                "row_tracking"))
+            snap = self._snapshot(path)
+            track = bool(snap.properties.get("row_tracking"))
             current = self.read(spark, path, with_row_ids=track)
             if track:
                 # ids survive the rewrite MATERIALIZED; rows that
@@ -6829,7 +6713,7 @@ class TxnLogFormat(TableFormat):
                 self._stage_rewrite(current, path, snap, rec)
             else:
                 rec["dir"] = self._stage(current, path, partition_col)
-            self._commit(path, rec, expected_version=head + 1)
+            self._commit(path, rec, expected_version=snap.version + 1)
             return None
         if cluster_by:
             raise ValueError(
@@ -6845,12 +6729,11 @@ class TxnLogFormat(TableFormat):
                 "partition_col only applies to the full rewrite — the "
                 "targeted form re-stages hot files' survivors as-is "
                 "(pass one or the other, not both)")
-        commits = self._commits(path)
-        if not commits:
+        snap = self._snapshot(path)
+        if not snap.commits:
             raise FileNotFoundError(f"no committed table at {path}")
-        head = commits[-1]["version"]
-        dvs = self._resolve_dvs(commits)
-        already_removed = sorted(self._resolve_removed_files(commits))
+        dvs = snap.dvs
+        already_removed = sorted(snap.removed_files)
         dv_all = None
         if dvs:
             dv_all = reduce(
@@ -6860,8 +6743,7 @@ class TxnLogFormat(TableFormat):
                 and not dvs:
             return {"rewritten_files": 0, "retired_dv_entries": 0}
         hot_set: set[str] = set()
-        track = bool(self._resolve_properties(commits).get(
-            "row_tracking"))
+        track = bool(snap.properties.get("row_tracking"))
         cur = self.read(spark, path, _with_pos=True, with_row_ids=track)
         if rewrite_dv_threshold is not None and dv_all is not None:
             live_counts = (cur.groupBy("_dv_file")
@@ -6872,7 +6754,7 @@ class TxnLogFormat(TableFormat):
             # against the live row counts CANNOT drop them here because
             # a FULLY-deleted file has no live rows yet is exactly the
             # file most worth retiring, so dead entries are excluded
-            # via the resolver's removed set.
+            # via the snapshot's removed set.
             dv_counts = (dv_all
                          .filter(~F.col("_dv_file").isin(already_removed))
                          .groupBy("_dv_file")
@@ -6887,9 +6769,9 @@ class TxnLogFormat(TableFormat):
                  .select("_dv_file").collect()))
         sizes: dict[str, int] = {}
         if small_file_bytes is not None:
-            for c in commits:
+            for c in snap.commits:
                 sizes.update(self._file_bytes_of(path, c))
-            live_files = {rf for e in self._resolve_live(commits)
+            live_files = {rf for e in snap.live
                           for rf in (e.get("files") or [])}
             small = {rf for rf in live_files
                      if rf not in already_removed
@@ -6909,8 +6791,7 @@ class TxnLogFormat(TableFormat):
             # are optimized, never any row.  (may-contain selection: a
             # file without stats stays in scope, conservative.)
             scoped_out = self._clause_excluded_files(
-                path, commits, self._resolve_alters(commits),
-                self._skip_clauses(where))
+                path, snap, self._skip_clauses(where))
             hot_set -= scoped_out
         hot = sorted(hot_set - set(already_removed))
         if not hot or "_dv_file" not in cur.columns:
@@ -6929,7 +6810,7 @@ class TxnLogFormat(TableFormat):
                "partition_col": None, "partitions": [],
                "schema": self._logical_schema_json(survivors.schema)}
         # check=False: every survivor is already a committed, validated row
-        self._stage_rewrite(survivors, path, commits, rec, check=False)
+        self._stage_rewrite(survivors, path, snap, rec, check=False)
         retired = 0
         if dv_all is not None:
             remaining = (dv_all.filter(~F.col("_dv_file").isin(hot))
@@ -6941,8 +6822,8 @@ class TxnLogFormat(TableFormat):
             if n_remaining:
                 rec["dv_dir"] = self._stage(remaining, path, None,
                                             check=False)
-        self._commit(path, rec, expected_version=head + 1,
-                     base_schema=self._resolve_schema(commits))
+        self._commit(path, rec, expected_version=snap.version + 1,
+                     base_schema=snap.schema)
         return {"rewritten_files": len(hot),
                 "retired_dv_entries": retired}
 
@@ -6978,7 +6859,8 @@ class TxnLogFormat(TableFormat):
         a dry run never writes), so retention settings can be rehearsed
         against a production table."""
         import shutil
-        commits = self._commits(path)
+        snap = self._snapshot(path)
+        commits = snap.commits
         # dirs referenced by any commit at or after the last replace_all
         # (a checkpoint record carries the same set for the span it
         # folded) — keeps recent history time-travelable
@@ -6986,8 +6868,8 @@ class TxnLogFormat(TableFormat):
         # a restore commit re-references dirs OLDER than the last
         # replace_all — the current resolution's dirs must survive too,
         # data and deletion vectors alike
-        referenced |= {e["dir"] for e in self._resolve_live(commits)}
-        referenced |= set(self._resolve_dvs(commits))
+        referenced |= {e["dir"] for e in snap.live}
+        referenced |= set(snap.dvs)
         data_root = os.path.join(path, "_txn_data")
         try:
             names = os.listdir(data_root)
@@ -7022,9 +6904,9 @@ class TxnLogFormat(TableFormat):
             elif c["action"] == "rewrite_files":
                 for rf in c.get("removed_files", []):
                     retire_ts[rf] = c.get("ts", _time_mod.time())
-        # membership via the resolver: a RESTORE past a rewrite makes
+        # membership via the snapshot: a RESTORE past a rewrite makes
         # its files live again — they must never sweep
-        for rf in sorted(self._resolve_removed_files(commits)):
+        for rf in sorted(snap.removed_files):
             ts = retire_ts.get(rf)
             if ts is None or ts > cutoff:
                 continue

@@ -74,7 +74,7 @@ import json
 import os
 from urllib.parse import unquote, urlparse
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     DataSourceStreamReader,
@@ -84,7 +84,7 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
 from pyspark.sql.types import StructType
 
 from ..sinks import (PATH_METADATA_KEY as _sinks_path_meta_key,
-                     TxnLogFormat, _log_schema_json, _relfile)
+                     Snapshot, TxnLogFormat, _log_schema_json, _relfile)
 
 
 def _plain_path(p: str) -> str:
@@ -586,7 +586,7 @@ def _writer_versions(commits: list[dict]) -> dict[str, int]:
     return m
 
 
-def _cdf_partitions(fmt: TxnLogFormat, path: str,
+def _cdf_partitions(fmt: TxnLogFormat, snap: Snapshot, path: str,
                     data_schema: StructType, start_v: int, end_v: int,
                     ignore_changes: bool,
                     clauses: list | None = None,
@@ -631,10 +631,8 @@ def _cdf_partitions(fmt: TxnLogFormat, path: str,
     cannot yield a matching pre-state row either.  Sidecar ``cdf_dir``
     files carry no harvested stats, so they are never pruned —
     conservative, not wrong."""
-    commits = fmt._commits(path)
-    alters = fmt._resolve_alters(commits)
-    skip: set[str] = (fmt._clause_excluded_files(path, commits, alters,
-                                                 clauses)
+    commits, alters = snap.commits, snap.alters
+    skip: set[str] = (fmt._clause_excluded_files(path, snap, clauses)
                       if clauses else set())
     #: row-tracking identity per file (option("rowIds", "true")): the
     #: feed's rows carry _row_id = coalesce(materialized, base + pos) —
@@ -797,24 +795,24 @@ def _cdf_partitions(fmt: TxnLogFormat, path: str,
                 parts.append(_FilePartition(
                     ap, mapping, cdf=("insert", v, ts),
                     row_ids=rid(rf), constants=consts))
-            pre = [x for x in commits if x["version"] < v]
-            pre_live = fmt._resolve_live(pre)
-            pre_removed = fmt._resolve_removed_files(pre)
+            pre = Snapshot.fold([x for x in commits if x["version"] < v])
             pre_dvmap: dict[str, list[int]] = {}
-            for dv_rel in fmt._resolve_dvs(pre):
+            for dv_rel in pre.dvs:
                 if dv_rel not in _dv_memo:
                     _dv_memo[dv_rel] = _dv_pairs(path, dv_rel)
                 for f, ps in _dv_memo[dv_rel].items():
                     pre_dvmap.setdefault(f, []).extend(ps)
             pre_dvmap = {f: sorted(set(ps))
                          for f, ps in pre_dvmap.items()}
-            for e in pre_live:
-                if e["pcol"] == pcol and e["parts"] \
-                        and not (set(e["parts"]) & vset):
-                    continue  # no replaced value lives in this dir
-                if e["pcol"] and e["parts"] <= e["removed"].get(
-                        e["pcol"], set()):
-                    continue  # dir fully re-overwritten before v
+            # the pre-state's live files (retired files and dirs fully
+            # re-overwritten before v already out), planned over just
+            # the dirs that may hold a replaced value — the stats tier's
+            # ``skip`` stays the HEAD's: clause columns are current names
+            pre = replace(pre, live=[
+                e for e in pre.live
+                if not (e["pcol"] == pcol and e["parts"]
+                        and not (e["parts"] & vset))])
+            for _i, e, files in pre.plan_scan(path).entries:
                 emap = _mapping_for(e["version"], alters, data_schema)
                 esrc = {m[0] for m in emap if m[0] is not None}
                 # WRITE-TIME names here (path constants are keyed by
@@ -824,9 +822,9 @@ def _cdf_partitions(fmt: TxnLogFormat, path: str,
                     (col, sorted(x for x in av if x is not None),
                      None in av)
                     for col, av in e["removed"].items()]
-                for ap in _data_files(path, e["dir"], e.get("files")):
+                for ap in _data_files(path, e["dir"], files):
                     rf = _relfile(ap)
-                    if rf in pre_removed or rf in skip:
+                    if rf in skip:
                         continue
                     consts, anti, drop_file = _consts_and_anti(
                         rf, e["dir"], esrc, anti_all)
@@ -1084,8 +1082,8 @@ class TxnLogStreamReader(DataSourceStreamReader):
         # rate-limit bookkeeping: whatever range got planned (fresh or
         # recovery-replay), the next latestOffset caps relative to it
         self._planned_through = end["version"]
-        commits = self._fmt._commits(self.path)
-        alters = self._fmt._resolve_alters(commits)
+        snap = self._fmt._snapshot(self.path)
+        commits, alters = snap.commits, snap.alters
         if not self.ignore_schema_evolution:
             # covers folded-span alters too: the checkpoint state keeps
             # each alter record with its original version
@@ -1134,7 +1132,7 @@ class TxnLogStreamReader(DataSourceStreamReader):
                         "pinned schema (new columns are never emitted)")
         if self.read_change_feed:
             return _cdf_partitions(
-                self._fmt, self.path, self._data_schema(),
+                self._fmt, snap, self.path, self._data_schema(),
                 start["version"], end["version"], self.ignore_changes,
                 clauses=self.skip_clauses, row_ids=self.row_ids)
         # streaming filter pushdown: files provably empty for the
@@ -1142,7 +1140,7 @@ class TxnLogStreamReader(DataSourceStreamReader):
         # the commit records / checkpoint sidecar already replayed
         # above — pruning adds no extra storage reads)
         skip: set[str] = (self._fmt._clause_excluded_files(
-            self.path, commits, alters, self.skip_clauses)
+            self.path, snap, self.skip_clauses)
             if self.skip_clauses else set())
         by_version: dict[int, dict] = {}
         cp = None
@@ -1435,7 +1433,8 @@ class TxnLogBatchReader(DataSourceReader):
 
     def partitions(self):
         fmt = TxnLogFormat()
-        commits = fmt._commits(self.path)
+        snap = fmt._snapshot(self.path)
+        commits = snap.commits
         if not commits:
             raise FileNotFoundError(f"no committed table at {self.path}")
         if self.read_change_feed:
@@ -1460,7 +1459,7 @@ class TxnLogBatchReader(DataSourceReader):
                                      else set())
             data_schema = StructType(
                 [f for f in self.schema.fields if f.name not in drop])
-            return _cdf_partitions(fmt, self.path, data_schema,
+            return _cdf_partitions(fmt, snap, self.path, data_schema,
                                    start - 1, end,
                                    self.ignore_changes,
                                    clauses=self._clauses,
@@ -1473,43 +1472,15 @@ class TxnLogBatchReader(DataSourceReader):
         # ``spark.table(name)`` serves DV tables with the SAME rows as
         # ``TxnLogFormat.read``
         dvmap: dict[str, list[int]] = {}
-        for dv_rel in fmt._resolve_dvs(commits):
+        for dv_rel in snap.dvs:
             for f, ps in _dv_pairs(self.path, dv_rel).items():
                 dvmap.setdefault(f, []).extend(ps)
         dvmap = {f: sorted(set(ps)) for f, ps in dvmap.items()}
-        live = fmt._resolve_live(commits)
-        removed = fmt._resolve_removed_files(commits)
-        alters = fmt._resolve_alters(commits)
-        skip: set[str] = set()
-        pcol_types: dict[str, str] = {}
-        if self._clauses:
-            skip = fmt._clause_excluded_files(
-                self.path, commits, alters, self._clauses)
-            sj = fmt._resolve_schema(commits)
-            if sj:
-                pcol_types = {
-                    f["name"]: f["type"]
-                    for f in json.loads(sj)["fields"]
-                    if isinstance(f["type"], str)}
+        pcol_types = snap.column_types()
         parts = []
-        for e in live:
-            # LOG-LEVEL partition pruning + all-replaced dirs — the
-            # same dir-granular checks TxnLogFormat.read applies before
-            # any file work (round 15: hive-partitioned and
-            # partition-overwrite tables now serve through this scan)
-            if e["pcol"] and e["parts"] <= e["removed"].get(
-                    e["pcol"], set()):
-                continue  # every partition this dir holds re-overwritten
-            if self._clauses and e["pcol"] \
-                    and TxnLogFormat._partition_provably_empty(
-                        e["pcol"], e["parts"], self._clauses,
-                        pcol_types.get(e["pcol"])):
-                continue
-            if self._clauses and e.get("transform") and e["parts"] \
-                    and fmt._transform_provably_empty(
-                        e["transform"], e["parts"], self._clauses,
-                        pcol_types.get(e["transform"]["source"])):
-                continue
+        # the SAME plan TxnLogFormat.read scans (dir and file pruning,
+        # retired files); per file, hive constants and anti-filters
+        for _i, e, files in snap.plan_scan(self.path, self._clauses).entries:
             # a later dynamic overwrite's value subtraction, split at
             # plan time: terms on a column whose value is a PATH
             # CONSTANT for a given file resolve here (whole-file skip
@@ -1518,16 +1489,14 @@ class TxnLogBatchReader(DataSourceReader):
                 (col, sorted(v for v in vals if v is not None),
                  None in vals)
                 for col, vals in e["removed"].items()]
-            mapping = _mapping_for(e["version"], alters, self.schema)
+            mapping = _mapping_for(e["version"], snap.alters, self.schema)
             # path keys carry the column's WRITE-TIME name — filter by
             # the mapping's SOURCE names, not current schema names, so
             # a renamed compact() staging column (staged_pcol carries
             # no rename guard) still resolves (round 15 review fix)
             src_names = {m[0] for m in mapping if m[0] is not None}
-            for ap in _data_files(self.path, e["dir"], e.get("files")):
+            for ap in _data_files(self.path, e["dir"], files):
                 rf = _relfile(ap)
-                if rf in removed or rf in skip:
-                    continue
                 consts, anti, drop_file = _consts_and_anti(
                     rf, e["dir"], src_names, anti_all)
                 if drop_file:
@@ -1690,8 +1659,7 @@ class TxnLogWriter(DataSourceWriter):
         self._gather(messages, dest_rel)
         fmt = TxnLogFormat()
         rec = self._record(dest_rel)
-        if fmt._resolve_properties(fmt._commits(self.path)).get(
-                "row_tracking"):
+        if fmt.properties(self.path).get("row_tracking"):
             rec["_row_track"] = True
         fmt._commit(self.path, rec)
 
@@ -1750,10 +1718,10 @@ class TxnLogStreamWriter(TxnLogWriter, DataSourceStreamWriter):
         # same one every batch writer already pays post-commit.
         fmt = TxnLogFormat()
         try:
-            commits = fmt._commits(self.path)
-            if fmt._auto_compact_needed(self.path, commits):
+            snap = fmt._snapshot(self.path)
+            if fmt._auto_compact_needed(self.path, snap):
                 rec["compact_due"] = True
-            if fmt._resolve_properties(commits).get("row_tracking"):
+            if snap.properties.get("row_tracking"):
                 rec["_row_track"] = True
         except Exception:  # pragma: no cover - marker is best-effort
             pass
@@ -1810,8 +1778,7 @@ class TxnLogDataSource(DataSource):
         """A catalog scan's target schema is the schema STORED AT CREATE
         TIME; refuse if the log has evolved past it (the per-file column
         mapping would conform files to a stale target)."""
-        fmt = TxnLogFormat()
-        sj = fmt._resolve_schema(fmt._commits(path))
+        sj = TxnLogFormat()._snapshot(path).schema
         stored = _strip_path_meta(schema)
         if str(self.options.get("readchangefeed", "false")).lower() \
                 == "true":
@@ -1830,10 +1797,9 @@ class TxnLogDataSource(DataSource):
 
     def schema(self):
         path = _plain_path(self.options["path"])
-        fmt = TxnLogFormat()
-        # the SAME restore-aware resolution every table reader uses — a
+        # the SAME restore-aware snapshot every table reader uses — a
         # newest-schema-bearing-commit walk would diverge after RESTORE
-        sj = fmt._resolve_schema(fmt._commits(path))
+        sj = TxnLogFormat()._snapshot(path).schema
         if sj:
             schema = StructType.fromJson(json.loads(sj))
             if str(self.options.get("readchangefeed",

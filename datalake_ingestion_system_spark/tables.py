@@ -92,7 +92,7 @@ def create_table(spark: SparkSession, name: str, path: str,
     evolution)."""
     ensure_registered(spark)
     fmt = TxnLogFormat()
-    sj = fmt._resolve_schema(fmt._commits(path)) if os.path.isdir(
+    sj = fmt._snapshot(path).schema if os.path.isdir(
         fmt._log_dir(path)) else None
     if sj is None:
         if schema is None:
@@ -1301,8 +1301,7 @@ def _route_alter(spark: SparkSession, s: str, flags: int):
         # table's CHECK set (set_properties validates EXISTING rows
         # first, Delta's rule); duplicate names raise
         cname = _unquote_ident(mm.group(1))
-        cur = dict(fmt._resolve_properties(fmt._commits(path))
-                   .get("constraints") or {})
+        cur = dict(fmt.properties(path).get("constraints") or {})
         if cname in cur:
             raise ValueError(
                 f"constraint {cname!r} already exists on {name}")
@@ -1313,8 +1312,7 @@ def _route_alter(spark: SparkSession, s: str, flags: int):
                        flags)
     if mm:
         cname = _unquote_ident(mm.group(1))
-        cur = dict(fmt._resolve_properties(fmt._commits(path))
-                   .get("constraints") or {})
+        cur = dict(fmt.properties(path).get("constraints") or {})
         if cname not in cur:
             raise ValueError(
                 f"no constraint {cname!r} on {name} — defined: "

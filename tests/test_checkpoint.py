@@ -22,7 +22,7 @@ import os
 
 import pytest
 
-from datalake_ingestion_system_spark.sinks import TxnLogFormat
+from datalake_ingestion_system_spark.sinks import Snapshot, TxnLogFormat
 
 
 def _mk(spark, lo, hi, tag="t"):
@@ -132,7 +132,7 @@ def test_checkpointed_read_plans_from_o_tail_files(tmp_path):
     parsed = fresh._log_cache[path]["recs"]
     assert len(parsed) == len(commits)
     # live entries carry the staged file names — planning needs no walk
-    live = fresh._resolve_live(commits)
+    live = Snapshot.fold(commits).live
     assert len(live) == 120
     assert all(e["files"] for e in live)
 
@@ -373,7 +373,7 @@ def _stream_reader(schema, path, **opts):
 
 @pytest.mark.slow
 def test_stream_detects_restore_folded_into_checkpoint(spark, tmp_path):
-    """ADVICE r8 medium: ``_resolve_live`` replays a RESTORE into pure
+    """ADVICE r8 medium: the snapshot fold replays a RESTORE into pure
     append entries, so a checkpoint that folds one used to look
     append-only to the stream — a restart with a pre-checkpoint offset
     silently skipped the retraction.  The checkpoint now persists a
@@ -545,7 +545,7 @@ def test_reader_survives_concurrent_checkpoint_and_prune(tmp_path):
             head = commits[-1]["version"]
             assert head >= seen_head, "visibility went backwards"
             seen_head = head
-            live = fmt._resolve_live(commits)
+            live = Snapshot.fold(commits).live
             assert len(live) == head + 1, \
                 f"inconsistent prefix: {len(live)} live at head {head}"
             fmt.details(path)
@@ -559,7 +559,7 @@ def test_reader_survives_concurrent_checkpoint_and_prune(tmp_path):
     fmt = TxnLogFormat()
     commits = fmt._commits(path)
     assert commits[0]["action"] == "checkpoint"
-    assert len(fmt._resolve_live(commits)) == 40
+    assert len(Snapshot.fold(commits).live) == 40
 
 
 @pytest.mark.slow
@@ -802,7 +802,7 @@ def test_vectorized_sidecar_skipping_matches_rowwise(spark, tmp_path):
     commits = fmt._commits(path)
     assert commits[0]["action"] == "checkpoint" \
         and commits[0].get("stats_sidecar")
-    alters = fmt._resolve_alters(commits)
+    snap = Snapshot.fold(commits)
     wheres = [
         "kk = 75", "kk >= 400", "kk < 50", "kk <= 0", "kk > 475",
         "kk BETWEEN 100 AND 200", "kk IN (75, 300)", "kk IN (9999)",
@@ -814,15 +814,14 @@ def test_vectorized_sidecar_skipping_matches_rowwise(spark, tmp_path):
     for where in wheres:
         clauses = fmt._skip_clauses(where)
         assert clauses, where
-        vec = fmt._clause_excluded_files(path, commits, alters, clauses)
+        vec = fmt._clause_excluded_files(path, snap, clauses)
         # force the row-wise JSON path
         orig = TxnLogFormat._sidecar_excluded
-        TxnLogFormat._sidecar_excluded = \
-            lambda self, p, r, m, _want_kept=False: None
+        TxnLogFormat._sidecar_excluded = classmethod(
+            lambda cls, p, r, m, _want_kept=False: None)
         try:
             fresh = TxnLogFormat()
-            row = fresh._clause_excluded_files(path, commits, alters,
-                                               clauses)
+            row = fresh._clause_excluded_files(path, snap, clauses)
         finally:
             TxnLogFormat._sidecar_excluded = orig
         assert vec == row, (where, vec ^ row)

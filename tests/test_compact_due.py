@@ -16,7 +16,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from datalake_ingestion_system_spark.sinks import TxnLogFormat
+from datalake_ingestion_system_spark.sinks import Snapshot, TxnLogFormat
 from datalake_ingestion_system_spark.sources.txnlog_stream import (
     TxnLogDataSource)
 
@@ -59,8 +59,9 @@ def test_sink_records_marker_and_read_fires_binpack(registered,
     _stream_epochs(spark, tmp_path, path, 20)
     def live_files(f, pth):
         cs = f._commits(pth)
-        removed = f._resolve_removed_files(cs)
-        return sum(1 for e in f._resolve_live(cs)
+        snap = Snapshot.fold(cs)
+        removed = snap.removed_files
+        return sum(1 for e in snap.live
                    for rf in (e.get("files") or []) if rf not in removed)
 
     commits = fmt._commits(path)

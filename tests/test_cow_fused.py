@@ -53,9 +53,9 @@ def _use_shape(monkeypatch, shape):
     seen: list[tuple[bool, set]] = []
     gate = TxnLogFormat._fuse_candidates.__func__
 
-    def spy(cls, info, cdf_on, track):
-        out = gate(cls, info, cdf_on, track)
-        seen.append((out, {_relfile(p) for p in info["paths"]}))
+    def spy(cls, plan, cdf_on, track):
+        out = gate(cls, plan, cdf_on, track)
+        seen.append((out, {_relfile(p) for p in plan.paths}))
         return out
 
     monkeypatch.setattr(TxnLogFormat, "_fuse_candidates",
@@ -227,13 +227,17 @@ def test_fused_cache_never_outlives_the_operation(
 
 
 def _prune_only_frames(monkeypatch):
-    """Columns of every ``_prune_only`` candidate frame ``read`` plans."""
+    """Columns of every candidate frame ``read`` scans: a given
+    ``_plan`` without a file restriction (the hot-file scans name
+    theirs) and without a row filter."""
     frames: list[list[str]] = []
     read = TxnLogFormat.read
 
     def spy(self, *a, **k):
         df = read(self, *a, **k)
-        if k.get("_prune_only"):
+        plan = k.get("_plan")
+        if plan is not None and plan.only_files is None \
+                and k.get("where") is None:
             frames.append(df.columns)
         return df
 
@@ -279,22 +283,59 @@ def test_probe_is_replanned_narrow_when_the_gate_rejects(
             assert ("_row_id" in frames[-1]) is has_ids
 
 
-def test_plan_info_reports_exact_scan_targets(spark, base_table):
+def test_plan_scan_reports_exact_scan_targets(spark, base_table):
     fmt = TxnLogFormat(checkpoint_interval=None)
-    info: dict = {}
-    fmt.read(spark, base_table, where="id < 10", _with_pos=True,
-             _prune_only=True, _plan_info=info)
-    assert info["exact"] is True
-    every: dict = {}
-    fmt.read(spark, base_table, _with_pos=True, _prune_only=True,
-             _plan_info=every)
+    snap = fmt._snapshot(base_table)
+    info = snap.plan_scan(base_table, fmt._skip_clauses("id < 10"))
+    assert info.exact is True
+    every = snap.plan_scan(base_table)
     # stats pruning drops the 20-39 and 40-59 files
-    assert len(info["paths"]) == len(every["paths"]) - 2
+    assert len(info.paths) == len(every.paths) - 2
     assert all(p.endswith(".parquet") and os.path.isfile(p)
-               for p in info["paths"])
+               for p in info.paths)
     # prune-only: the row filter is NOT applied (all 20 rows survive)
-    n = fmt.read(spark, base_table, where="id < 10",
-                 _prune_only=True).count()
+    n = fmt.read(spark, base_table, _plan=info).count()
     assert n == 20
     # ...while the default read applies it
     assert fmt.read(spark, base_table, where="id < 10").count() == 10
+
+
+def test_one_fold_per_operation(spark, base_table, tmp_path, monkeypatch):
+    """Each read and each copy-on-write DML call replays the log ONCE:
+    ``Snapshot.fold`` runs one time per operation — the op's own reads
+    plan from its snapshot.  Counted apart: the commit's row-id
+    re-check, where ``_commit`` re-lists the head after claiming a
+    version on a row-tracked table (safety code, one fold per
+    row-tracked commit)."""
+    import sys
+
+    from datalake_ingestion_system_spark.sinks import Snapshot
+    path = _copy(base_table, tmp_path, "t")
+    fmt = TxnLogFormat(checkpoint_interval=None)
+    folds: list[str] = []
+    fold = Snapshot.fold.__func__
+
+    def spy(cls, commits):
+        folds.append(sys._getframe(1).f_code.co_name)
+        return fold(cls, commits)
+
+    monkeypatch.setattr(Snapshot, "fold", classmethod(spy))
+
+    def count(op) -> dict:
+        folds.clear()
+        op()
+        return {"op": len(folds) - folds.count("_commit"),
+                "commit_recheck": folds.count("_commit")}
+
+    read_once = {"op": 1, "commit_recheck": 0}
+    write_once = {"op": 1, "commit_recheck": 1}
+    assert count(lambda: fmt.read(spark, path).collect()) == read_once
+    assert count(lambda: fmt.read(spark, path, where="id < 5")
+                 .collect()) == read_once
+    assert count(lambda: fmt.read(spark, path, as_of_version=2)
+                 .collect()) == read_once
+    assert count(lambda: fmt.delete_where(spark, path, "id = 1")) \
+        == write_once
+    assert count(lambda: fmt.update_where(spark, path, "id = 2",
+                                          {"v": "v + 1"})) == write_once
+    assert count(lambda: _cdc_merge(spark, fmt, path)) == write_once

@@ -82,7 +82,7 @@ def test_benign_retarget_survives_foreign_schema_serialization(
     path = str(tmp_path / "t")
     fmt.append(spark.createDataFrame([(i,) for i in range(5)],
                                      "id long"), path)
-    base = fmt._resolve_schema(fmt._commits(path))
+    base = fmt._snapshot(path).schema
     assert base != FOREIGN_SCHEMA                 # different strings...
     assert json.loads(base) == json.loads(FOREIGN_SCHEMA)  # ...same schema
 

@@ -99,7 +99,7 @@ def test_dir_level_pruning_skips_non_matching_commits(spark, tmp_path,
         "ts", F.date_add(F.lit("2024-03-01").cast("date"),
                          (F.col("id") % 20).cast("int"))
         .cast("timestamp")), path)                            # march
-    live = fmt._resolve_live(fmt._commits(path))
+    live = fmt._snapshot(path).live
     march_dir = live[-1]["dir"]
     jan_dir = live[-2]["dir"]
     probed = []

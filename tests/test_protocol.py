@@ -189,7 +189,7 @@ class TestUnknownAction:
 
     def test_unknown_action_is_not_misread_as_an_append(self, spark,
                                                         tmp_path):
-        """The hazard the gate exists for: _resolve_live's fallback arm
+        """The hazard the gate exists for: the snapshot fold's fallback arm
         treats unrecognized actions as append-shaped.  A 'reorg' that
         REMOVES rows, misread as an append, would silently resurrect
         them — assert the engine refuses instead of returning 30 rows."""

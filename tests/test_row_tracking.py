@@ -113,7 +113,7 @@ def test_merge_is_file_targeted_untouched_files_keep_identity(
     appended from fresh ranges."""
     fmt, path = tracked
     before = _ids(fmt, spark, path)
-    live = fmt._resolve_live(fmt._commits(path))
+    live = fmt._snapshot(path).live
     files_by_entry = {e["dir"]: set(e.get("files") or []) for e in live}
     all_before = set().union(*files_by_entry.values())
     # k=2 lives in the first append (k < 5); k=42 is a fresh insert
@@ -130,7 +130,7 @@ def test_merge_is_file_targeted_untouched_files_keep_identity(
     # untouched file stays live under its exact relfile name
     assert removed and removed < all_before
     untouched = all_before - removed
-    retired = set(fmt._resolve_removed_files(fmt._commits(path)))
+    retired = set(fmt._snapshot(path).removed_files)
     assert untouched and not (untouched & retired)  # identity kept
     after = _ids(fmt, spark, path)
     assert after[2] == before[2]                  # update keeps identity

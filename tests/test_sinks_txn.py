@@ -15,7 +15,7 @@ import pytest
 
 from datalake_ingestion_system_spark.plans import ingest as ing
 from datalake_ingestion_system_spark.sinks import (ConcurrentWriteError,
-                                                   TxnLogFormat)
+                                                   Snapshot, TxnLogFormat)
 from datalake_ingestion_system_spark.sources import registry
 
 
@@ -430,7 +430,7 @@ def test_multiprocess_writers_race_one_log(tmp_path):
     assert cps == [f"{v:012d}.checkpoint.json" for v in (10, 20, 30)]
     folded = fmt._commits(path)
     assert folded[0]["action"] == "checkpoint"
-    assert len(fmt._resolve_live(folded)) == len(commits)
+    assert len(Snapshot.fold(folded).live) == len(commits)
     leftovers = [n for n in os.listdir(os.path.join(path, "_txn_log"))
                  if n.endswith(".tmp")]
     assert leftovers == []
@@ -1260,7 +1260,7 @@ def test_deletion_vector_delete_is_merge_on_read(spark, tmp_path):
 def test_deletion_vectors_retire_at_compact_and_survive_vacuum(spark,
                                                                tmp_path):
     """compact materializes the DV-applied state and retires the vectors
-    (replace_all resets _resolve_dvs); vacuum never sweeps a LIVE
+    (replace_all resets the live vectors); vacuum never sweeps a LIVE
     vector's dir, and after compact the retired vector ages out."""
     fmt = TxnLogFormat()
     path = str(tmp_path / "t")
@@ -1278,7 +1278,7 @@ def test_deletion_vectors_retire_at_compact_and_survive_vacuum(spark,
     assert sorted(r.id for r in fmt.read(spark, path).collect()) \
         == [0, 2, 4]
     fmt.compact(spark, path)
-    assert fmt._resolve_dvs(fmt._commits(path)) == []
+    assert fmt._snapshot(path).dvs == []
     assert sorted(r.id for r in fmt.read(spark, path).collect()) \
         == [0, 2, 4]
     # retired vector + superseded data age out now
@@ -1334,7 +1334,7 @@ def test_update_where_dv_is_merge_on_read(spark, tmp_path):
     assert {r.id: r.v for r in
             fmt.read(spark, path, as_of_version=0).collect()}[3] == 30
     fmt.compact(spark, path)
-    assert fmt._resolve_dvs(fmt._commits(path)) == []
+    assert fmt._snapshot(path).dvs == []
     assert {r.id: r.v for r in fmt.read(spark, path).collect()}[3] == 3003
 
 
@@ -1530,7 +1530,7 @@ def test_compact_rewrites_only_dv_heavy_files(spark, tmp_path):
     assert len(files_before & files_after) == 1  # cold file B survives
     # vectors consolidated: exactly one live dir holding B's one entry
     commits = fmt._commits(path)
-    dvs = fmt._resolve_dvs(commits)
+    dvs = Snapshot.fold(commits).dvs
     assert len(dvs) == 1
     assert spark.read.parquet(os.path.join(path, dvs[0])).count() == 1
     # below-threshold pass is a no-op
@@ -1562,11 +1562,11 @@ def test_compact_dv_retires_fully_deleted_file(spark, tmp_path):
     assert sorted(r.id for r in fmt.read(spark, path).collect()) \
         == [100, 101, 102, 103, 104]
     # no vectors remain → dv-threshold compact is now a no-op
-    assert fmt._resolve_dvs(fmt._commits(path)) == []
+    assert fmt._snapshot(path).dvs == []
     # further row-level ops on the rewritten table behave normally
     fmt.delete_where_dv(spark, path, "id = 104")
     fmt.compact(spark, path)  # full rewrite resets files AND vectors
-    assert fmt._resolve_removed_files(fmt._commits(path)) == set()
+    assert fmt._snapshot(path).removed_files == set()
     assert sorted(r.id for r in fmt.read(spark, path).collect()) \
         == [100, 101, 102, 103]
 
@@ -1626,7 +1626,7 @@ def test_compact_small_files_composes_with_dvs(spark, tmp_path):
     got = fmt.read(spark, path)
     assert sorted(r.id for r in got.collect()) == before
     assert len(got.inputFiles()) == 1  # everything merged
-    assert fmt._resolve_dvs(fmt._commits(path)) == []
+    assert fmt._snapshot(path).dvs == []
 
 
 def test_alter_table_add_rename_drop(spark, tmp_path):
@@ -1782,7 +1782,7 @@ def test_data_skipping_still_prunes_after_rename(spark, tmp_path):
     # read itself still answers correctly: NULL c never matches, and
     # Catalyst folds the scan away entirely)
     fmt.alter_table(path, add_columns={"c": "int"})
-    alters = fmt._resolve_alters(fmt._commits(path))
+    alters = fmt._snapshot(path).alters
     assert TxnLogFormat._source_column("c", alters, 0) is None
     assert TxnLogFormat._source_column("b", alters, 0) == "a"
     assert fmt.read(spark, path, where="c <= 5").count() == 0
@@ -2391,7 +2391,7 @@ def test_multiprocess_race_auto_checkpoint_and_vacuum(spark, tmp_path):
     commits = fmt._commits(path)
     head = commits[-1]["version"]
     assert head == 39
-    live = fmt._resolve_live(commits)
+    live = Snapshot.fold(commits).live
     assert len(live) == 40  # gapless: every append resolved exactly once
     rows = sorted(r.id for r in fmt.read(spark, path).collect())
     assert rows == sorted(w * 1000 + i for w in range(2)
@@ -2523,21 +2523,21 @@ def test_alter_tolerates_same_schema_append(spark, tmp_path):
     fmt.append(spark.createDataFrame([(1, 1.0)], "id long, v double"), path)
     racer = TxnLogFormat()
     raced = {"done": False}
-    orig_rs = fmt._resolve_schema
+    orig_snapshot = fmt._snapshot
 
-    def racing_resolve(commits):
-        sj = orig_rs(commits)
+    def racing_snapshot(*a, **kw):
+        snap = orig_snapshot(*a, **kw)
         if not raced["done"]:
             raced["done"] = True
             racer.append(spark.createDataFrame(
                 [(2, 2.0)], "id long, v double"), path)
-        return sj
+        return snap
 
-    fmt._resolve_schema = racing_resolve
+    fmt._snapshot = racing_snapshot
     try:
         fmt.alter_table(path, rename_columns={"v": "val"})
     finally:
-        fmt._resolve_schema = orig_rs
+        fmt._snapshot = orig_snapshot
     out = fmt.read(spark, path)
     assert out.columns == ["id", "val"]
     assert sorted((r.id, r.val) for r in out.collect()) == \
@@ -2554,22 +2554,22 @@ def test_alter_conflicts_on_schema_divergent_append(spark, tmp_path):
     fmt.append(spark.createDataFrame([(1, 1.0)], "id long, v double"), path)
     racer = TxnLogFormat()
     raced = {"done": False}
-    orig_rs = fmt._resolve_schema
+    orig_snapshot = fmt._snapshot
 
-    def racing_resolve(commits):
-        sj = orig_rs(commits)
+    def racing_snapshot(*a, **kw):
+        snap = orig_snapshot(*a, **kw)
         if not raced["done"]:
             raced["done"] = True
             racer.append(spark.createDataFrame(
                 [(2, 2.0, "x")], "id long, v double, extra string"), path)
-        return sj
+        return snap
 
-    fmt._resolve_schema = racing_resolve
+    fmt._snapshot = racing_snapshot
     try:
         with pytest.raises(ConcurrentWriteError, match="advanced"):
             fmt.alter_table(path, rename_columns={"v": "val"})
     finally:
-        fmt._resolve_schema = orig_rs
+        fmt._snapshot = orig_snapshot
     # nothing lost: the widened append is live, schema keeps the column
     out = fmt.read(spark, path)
     assert set(out.columns) == {"id", "v", "extra"}
@@ -2865,6 +2865,28 @@ def test_set_properties_validates_existing_rows(spark, tmp_path):
                        validate_constraints=False)
     with pytest.raises(ValueError, match="v_pos"):
         fmt.append(spark.createDataFrame([(-1,)], "v long"), path)
+
+
+def test_constraint_set_during_an_append_binds_it(spark, tmp_path,
+                                                  monkeypatch):
+    """A CHECK constraint that lands after an append took its snapshot,
+    while its rows are being staged, still validates them: the staged
+    files are checked against the constraints at the log head, not the
+    ones the append saw when it started."""
+    from datalake_ingestion_system_spark.sinks import TxnLogFormat as T
+
+    fmt, other = T(), T()
+    path = str(tmp_path / "t")
+    fmt.append(spark.createDataFrame([(5,)], "v long"), path)
+
+    def racing(df, snap):
+        other.set_properties(spark, path, constraints={"v_pos": "v > 0"})
+        return T._with_identity(fmt, df, snap)
+
+    monkeypatch.setattr(fmt, "_with_identity", racing)
+    with pytest.raises(ValueError, match="v_pos"):
+        fmt.append(spark.createDataFrame([(-1,)], "v long"), path)
+    assert [r.v for r in fmt.read(spark, path).collect()] == [5]
 
 
 @pytest.mark.slow
@@ -3315,7 +3337,7 @@ sys.path.insert(0, {repo!r})
 import pyarrow as pa
 import pyarrow.parquet as pq
 from datalake_ingestion_system_spark.sinks import (
-    ConcurrentWriteError, TxnLogFormat)
+    ConcurrentWriteError, Snapshot, TxnLogFormat)
 
 path, tag = sys.argv[1], sys.argv[2]
 fmt = TxnLogFormat(checkpoint_interval=4)
@@ -3325,9 +3347,10 @@ fmt = TxnLogFormat(checkpoint_interval=4)
 for i in range(8):
     for attempt in range(60):
         commits = fmt._commits(path)
-        ident = fmt._resolve_properties(commits).get("identity_columns")
+        snap = Snapshot.fold(commits)
+        ident = snap.properties.get("identity_columns")
         spec = ident["rid"]
-        high = fmt._resolve_identity_high(commits).get(
+        high = snap.identity_high.get(
             "rid", spec["start"] - spec["step"])
         rel = os.path.join("_txn_data", f"{{tag}}_{{i:02d}}_{{attempt}}")
         os.makedirs(os.path.join(path, rel))
@@ -3452,7 +3475,7 @@ def test_full_compact_never_erases_a_racing_append(spark, tmp_path):
         [1, 2, 3, 4, 9, 9]
     # the retry's fresh snapshot folded EVERYTHING — including the
     # second interleaved append — into the one rewritten commit
-    live = fmt._resolve_live(fmt._commits(path))
+    live = fmt._snapshot(path).live
     assert [e["action"] for e in live] == ["replace_all"]
 
 
@@ -3764,11 +3787,11 @@ def test_timestamp_skipping_gated_off_non_utc(spark, tmp_path):
     fmt.append(spark.createDataFrame(
         [(i, dt.datetime(2024, 3, 1 + i, 12, 0)) for i in range(5)],
         "id long, ts timestamp").coalesce(1), path)
-    commits = fmt._commits(path)
+    types = fmt._snapshot(path).column_types()
     clauses = fmt._skip_clauses("ts < '2024-02-01'")
     spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
     try:
-        assert fmt._canonicalize_ts_clauses(clauses, commits) == []
+        assert fmt._canonicalize_ts_clauses(clauses, types) == []
         # ... and the END-TO-END read stays CORRECT: the Tokyo-zone
         # literal is 2024-01-31T15:00Z, so the January file (instants
         # at 12:00Z) must keep ALL its rows despite its canonical-UTC
@@ -3777,7 +3800,7 @@ def test_timestamp_skipping_gated_off_non_utc(spark, tmp_path):
         assert got.count() == 5
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    assert fmt._canonicalize_ts_clauses(clauses, commits) == [
+    assert fmt._canonicalize_ts_clauses(clauses, types) == [
         ("ts", "<", "2024-02-01 00:00:00.000000")]
 
 

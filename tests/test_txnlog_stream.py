@@ -92,20 +92,113 @@ def test_stream_fails_on_data_change_unless_ignored(registered, tmp_path):
     assert got == [(1, "a"), (2, "b")]
 
 
-def test_batch_source_matches_format_read(registered, tmp_path):
-    spark = registered
-    path = str(tmp_path / "t")
+def _shape_append(spark, path):
     fmt = TxnLogFormat()
     fmt.append(_mk(spark, (1, "a"), (2, "b")), path)
     fmt.append(_mk(spark, (3, "c")), path)
-    via_src = sorted((r.id, r.s) for r in
-                     spark.read.format("txnlog").load(path).collect())
-    via_fmt = sorted((r.id, r.s) for r in fmt.read(spark, path).collect())
-    assert via_src == via_fmt == [(1, "a"), (2, "b"), (3, "c")]
+    return fmt, None
+
+
+def _shape_deletion_vectors(spark, path):
+    fmt = TxnLogFormat()
+    fmt.append(_mk(spark, *[(i, "abc"[i % 3]) for i in range(6)]), path)
+    fmt.delete_where_dv(spark, path, "id = 1")
+    fmt.delete_where_dv(spark, path, "s = 'c'")
+    return fmt, None
+
+
+def _shape_null_partition_overwrite(spark, path):
+    fmt = TxnLogFormat()
+    schema = "id long, s string, p string"
+    fmt.overwrite_partitions(spark.createDataFrame(
+        [(1, "a", "x"), (2, "b", None), (3, "c", "y"), (4, "d", None)],
+        schema), path, "p")
+    # replaces the NULL partition (and only it) of the first dir
+    fmt.overwrite_partitions(spark.createDataFrame(
+        [(5, "e", None)], schema), path, "p")
+    return fmt, None
+
+
+def _shape_hidden_partition_transform(spark, path):
+    fmt = TxnLogFormat()
+    fmt.append(_mk(spark, (0, "z")), path)
+    fmt.set_properties(spark, path, partition_transform={
+        "source": "id", "kind": "bucket", "param": 4})
+    fmt.append(_mk(spark, *[(i, "s") for i in range(1, 12)]), path)
+    return fmt, None
+
+
+def _shape_alters(spark, path):
+    fmt = TxnLogFormat()
+    fmt.append(spark.createDataFrame([(1, "a", 10, "x"), (2, "b", 20, "y")],
+                                     "id long, s string, k int, gone string"),
+               path)
+    fmt.alter_table(path, rename_columns={"s": "name"},
+                    drop_columns=["gone"])
+    fmt.alter_table(path, add_columns={"n": "int"},
+                    column_defaults={"n": 7})
+    fmt.alter_table(path, widen_columns={"k": "long"})
+    fmt.append(spark.createDataFrame([(3, "c", 1 << 40, 8)],
+                                     "id long, name string, k long, n int"),
+               path)
+    return fmt, None
+
+
+def _shape_rewrite_survivors(spark, path):
+    fmt = TxnLogFormat()
+    fmt.append(_mk(spark, *[(i, "abc"[i % 3]) for i in range(6)])
+               .coalesce(1), path)
+    fmt.update_where(spark, path, "id = 1", {"s": "'z'"})
+    fmt.delete_where(spark, path, "id = 4")
+    return fmt, None
+
+
+def _shape_checkpointed(spark, path):
+    fmt = TxnLogFormat(checkpoint_interval=2)
+    for i in range(5):
+        fmt.append(_mk(spark, (i, "abc"[i % 3])), path)
+    fmt.delete_where_dv(spark, path, "id = 2")
+    fmt.update_where(spark, path, "id = 3", {"s": "'q'"})
+    return fmt, None
+
+
+def _shape_where_pruning(spark, path):
+    fmt = TxnLogFormat()
+    for lo in (0, 10, 20):
+        fmt.append(_mk(spark, *[(i, "w") for i in range(lo, lo + 10)])
+                   .coalesce(1), path)
+    return fmt, "id >= 12 AND id < 25"
+
+
+@pytest.mark.parametrize("shape", [
+    _shape_append, _shape_deletion_vectors,
+    _shape_null_partition_overwrite, _shape_hidden_partition_transform,
+    _shape_alters, _shape_rewrite_survivors, _shape_checkpointed,
+    _shape_where_pruning], ids=lambda f: f.__name__[len("_shape_"):])
+def test_batch_source_matches_format_read(registered, tmp_path, shape):
+    """``format("txnlog")`` and ``TxnLogFormat.read`` take their file
+    plan from one ``Snapshot.plan_scan``: every table shape must read the
+    same rows through both (``option("where")`` prunes files only; the
+    row filter is Spark's)."""
+    spark = registered
+    path = str(tmp_path / "t")
+    fmt, where = shape(spark, path)
+    via_fmt = fmt.read(spark, path, where=where)
+    src = spark.read.format("txnlog")
+    if where is not None:
+        src = src.option("where", where)
+    via_src = src.load(path)
     # schema came from the log, not inference
-    assert [f.name for f in
-            spark.read.format("txnlog").load(path).schema.fields] \
-        == ["id", "s"]
+    assert via_src.columns == via_fmt.columns
+    if where is not None:
+        via_src = via_src.filter(where)
+    got = sorted(map(tuple, via_src.collect()),
+                 key=lambda r: tuple((x is None, x) for x in r))
+    want = sorted(map(tuple, via_fmt.collect()),
+                  key=lambda r: tuple((x is None, x) for x in r))
+    assert got == want and got
+    if shape is _shape_append:
+        assert got == [(1, "a"), (2, "b"), (3, "c")]
 
 
 def test_batch_source_applies_dv_tables(registered, tmp_path):
