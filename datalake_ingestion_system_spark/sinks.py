@@ -24,7 +24,6 @@ import os
 import re as _re_mod
 import time as _time_mod
 import uuid
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 from functools import reduce, wraps
 
@@ -565,7 +564,7 @@ class Snapshot:
                 continue  # every file pruned, retired or not asked for
             require_dir(e)
             out.append((idx, e, files))
-        return ScanPlan(self, path, tuple(clauses),
+        return ScanPlan(self, tuple(clauses),
                         None if only_files is None
                         else frozenset(only_files), out)
 
@@ -573,24 +572,12 @@ class Snapshot:
 @dataclass(frozen=True)
 class ScanPlan:
     """``Snapshot.plan_scan``'s answer: the planned ``entries`` of
-    ``snap`` for the table at ``root``, with the inputs that produced
-    them (a reader whose log moved re-plans from those)."""
+    ``snap``, with the inputs that produced them (a reader whose log
+    moved re-plans from those)."""
     snap: Snapshot
-    root: str
     clauses: tuple
     only_files: frozenset | None
     entries: list
-
-    @property
-    def exact(self) -> bool:
-        """False when a legacy whole-dir scan hides its file list."""
-        return all(files is not None for _i, _e, files in self.entries)
-
-    @property
-    def paths(self) -> list[str]:
-        """Absolute paths of every listed file."""
-        return [os.path.join(self.root, rf)
-                for _i, _e, files in self.entries for rf in files or ()]
 
 
 class TxnLogFormat(TableFormat):
@@ -4909,167 +4896,91 @@ class TxnLogFormat(TableFormat):
         hit = F.coalesce(pred, F.lit(False))
         track = bool(snap.properties.get("row_tracking"))
         cdf_on = self._effective_config(snap)[2]
-        with self._cow_candidates(spark, path, snap, predicate,
-                                  track) as (cand, hot_rows):
-            if "_dv_file" not in cand.columns:
-                return 0  # zero-live-row table: nothing to change
-            if assignments is not None:
-                self._check_update_targets(snap, cand.columns,
-                                           assignments)
-            # the targeting step: files holding matching live rows and
-            # the matching-row count, in ONE Spark job
-            per_file = (cand.filter(pred).groupBy("_dv_file")
-                        .agg(F.count("*").alias("_n")).collect())
-            hot = sorted(r["_dv_file"] for r in per_file)
-            if not hot:
-                return 0
-            cur_hot = hot_rows(hot)
-            tcols = [c for c in cur_hot.columns
-                     if c not in ("_dv_file", "_dv_pos", "_row_id")]
-            # restaged rows keep their stable ids (moving a row, or an
-            # UPDATE of its values, never changes its identity); the
-            # sidecar rows carry them too, so a row-id mirror knows what
-            # a delete removed, and pre/post images of one row share the
-            # id even when the update rewrites a business-key column
-            idc = ([F.col("_row_id").alias(self._ROW_ID_COL)]
-                   if track else [])
-            if assignments is None:
-                new_data = cur_hot.filter(~hit).select(*tcols, *idc)
-                images = [(tcols, "delete")]
-            else:
-                types = dict(cur_hot.dtypes)
-                val = {c: F.expr(e).cast(types[c])
-                       for c, e in assignments.items()}
-                new_data = cur_hot.select(*(
-                    [F.when(hit, val[c]).otherwise(F.col(c)).alias(c)
-                     if c in val else F.col(c) for c in tcols] + idc))
-                images = [(tcols, "update_preimage"),
-                          ([val[c].alias(c) if c in val else F.col(c)
-                            for c in tcols], "update_postimage")]
-            cdf = ([(cur_hot.filter(hit).select(*cols, *idc), kind)
-                    for cols, kind in images] if cdf_on else None)
-            # a delete cannot introduce a constraint violation; an
-            # update re-validates the restaged rows (the only new data)
-            self._commit_rewrite(spark, path, snap, new_data, hot,
-                                 track, cdf, check=assignments is not None)
-            return int(sum(r["_n"] for r in per_file))
+        # the candidate scan: every row of the stats-pruned files,
+        # narrow (no row ids: only the exact hot-file scan pays the
+        # row-id join)
+        cand = self.read(spark, path, _with_pos=True, _plan=snap.plan_scan(
+            path, self._skip_clauses(predicate)))
+        if "_dv_file" not in cand.columns:
+            return 0  # zero-live-row table: nothing to change
+        if assignments is not None:
+            self._check_update_targets(snap, cand.columns, assignments)
+        # the targeting step: files holding matching live rows and the
+        # matching-row count, in ONE Spark job
+        per_file = (cand.filter(pred).groupBy("_dv_file")
+                    .agg(F.count("*").alias("_n")).collect())
+        hot = sorted(r["_dv_file"] for r in per_file)
+        if not hot:
+            return 0
+        cur_hot = self._hot_rows(spark, path, snap, hot, track)
+        tcols = [c for c in cur_hot.columns
+                 if c not in ("_dv_file", "_dv_pos", "_row_id")]
+        # restaged rows keep their stable ids (moving a row, or an
+        # UPDATE of its values, never changes its identity); the sidecar
+        # rows carry them too, so a row-id mirror knows what a delete
+        # removed, and pre/post images of one row share the id even
+        # when the update rewrites a business-key column
+        idc = [F.col("_row_id").alias(self._ROW_ID_COL)] if track else []
+        if assignments is None:
+            new_data = cur_hot.filter(~hit).select(*tcols, *idc)
+            images = [(None, [*tcols, *idc], "delete")]
+        else:
+            types = dict(cur_hot.dtypes)
+            val = {c: F.expr(e).cast(types[c])
+                   for c, e in assignments.items()}
+            new_data = cur_hot.select(*(
+                [F.when(hit, val[c]).otherwise(F.col(c)).alias(c)
+                 if c in val else F.col(c) for c in tcols] + idc))
+            images = [(None, [*tcols, *idc], "update_preimage"),
+                      (None, [*(val[c].alias(c) if c in val else F.col(c)
+                                for c in tcols), *idc], "update_postimage")]
+        cdf = (self._change_rows(cur_hot.filter(hit), images)
+               if cdf_on else None)
+        # a delete cannot introduce a constraint violation; an update
+        # re-validates the restaged rows (the only new data)
+        self._commit_rewrite(spark, path, snap, new_data, hot, track, cdf,
+                             check=assignments is not None)
+        return int(sum(r["_n"] for r in per_file))
+
+    def _hot_rows(self, spark: SparkSession, path: str, snap: Snapshot,
+                  hot: list[str], track: bool) -> DataFrame:
+        """The live rows (vectors applied) of exactly the files ``hot``
+        — the rows a copy-on-write rewrite restages, with their stable
+        ids on a row-tracked table."""
+        return self.read(spark, path, _with_pos=True, with_row_ids=track,
+                         _plan=snap.plan_scan(path, only_files=set(hot)))
+
+    @staticmethod
+    def _change_rows(df: DataFrame, images: list) -> DataFrame:
+        """The change-feed rows of one rewrite in ONE pass over ``df``:
+        each ``(condition, columns, change type)`` image emits its
+        ``columns`` for every row of ``df`` where its condition holds
+        (``None``: every row).  Every image lists the same column names
+        and types."""
+        arms = []
+        for cond, cols, kind in images:
+            arm = F.struct(*cols, F.lit(kind).alias("_change_type"))
+            arms.append(arm if cond is None else F.when(cond, arm))
+        return (df.select(F.explode(F.array(*arms)).alias("_img"))
+                .filter(F.col("_img").isNotNull()).select("_img.*"))
 
     #: max distinct source merge-key tuples collected for exact IN-list
     #: file pruning; larger CDC batches degrade to per-key min/max
     #: ranges (one tiny agg job) — the candidate set only widens
     _MERGE_PRUNE_KEYS_CAP = 1024
 
-    #: SINGLE-PASS copy-on-write gate (round 17, guide §1.2/§6): merge /
-    #: delete_where / update_where fuse their stats-pruned probe scan and
-    #: the hot-file rewrite scan into ONE cached candidate scan — but
-    #: only when the candidate files are provably small (count capped,
-    #: recorded on-disk bytes under the cap), because the fused form
-    #: caches every candidate row wide: for a well-pruned CDC merge that
-    #: is O(matched files) and the cache removes a scan plus a second
-    #: read-plan construction (and every change-feed pass re-reads it
-    #: free); for an unprunable predicate over a 100 TB table it would
-    #: materialize the table, so those fall back to the classic two-pass
-    #: shape (narrow probe + exact hot-file scan).  Both caps are
-    #: constants, not options; the cache lives on the executors, so the
-    #: byte cap stays well under any executor's storage memory.
-    _FUSE_MAX_FILES = 1024
-    _FUSE_MAX_BYTES = 256 << 20
-
-    @classmethod
-    def _fuse_candidates(cls, plan: "ScanPlan", cdf_on: bool,
-                         track: bool) -> bool:
-        """True when the planned candidate scan is small enough to
-        cache for the single-pass rewrite AND the cache replaces enough
-        repeated work to pay for itself.  Both
-        conditions were set empirically (same-session env-flip A/Bs,
-        sf0.1): without the change data feed the rewrite reads the hot
-        rows ONCE, so fusing trades a narrow column-pruned probe scan
-        for a wide cache write (measured neutral-to-negative, ~0.1-0.3
-        s/call slower); with the feed ON but tracking OFF the pre/post
-        passes are cheap page-cached parquet re-scans and the cache
-        encode still loses (~0.1-0.3 s); with BOTH on, every re-scan
-        also re-pays the row-id broadcast join + coalesce, and the
-        cache wins (update 1.64→1.47 / 1.32→1.07; the mirror pipelines
-        are exactly this shape).  At real-I/O scale the cache saves
-        actual re-reads, but the gate follows what is measured, not
-        what is hoped."""
-        if not (cdf_on and track):
-            return False
-        if not plan.exact:
-            return False
-        paths = plan.paths
-        if len(paths) > cls._FUSE_MAX_FILES:
-            return False
-        total = 0
-        for p in paths:
-            try:
-                total += os.path.getsize(p)
-            except OSError:
-                return False  # let the exact-scan path raise its error
-            if total > cls._FUSE_MAX_BYTES:
-                return False
-        return True
-
-    @contextmanager
-    def _cow_candidates(self, spark: SparkSession, path: str,
-                        snap: Snapshot, where: str | None,
-                        track: bool):
-        """The candidate scan of one copy-on-write DML call and its
-        cache lifecycle: every row of the files ``snap.plan_scan``
-        keeps for ``where`` (metadata pruning only, no row filter),
-        cached when ``_fuse_candidates`` admits the plan, and otherwise
-        NARROW (no row ids: only the exact hot-file scan pays the
-        row-id join).  Yields ``(cand, hot_rows)``; ``cand`` lacks
-        ``_dv_file`` when the table holds no live row, ``hot_rows(hot)``
-        returns the live rows of the files ``hot`` — the cached slice,
-        or the exact ``only_files`` scan when not fused or when ``hot``
-        reaches past the candidates (merge's NOT MATCHED BY SOURCE
-        sweep), which releases the cache.  Every exit releases it."""
-        cdf_on = self._effective_config(snap)[2]
-        plan = snap.plan_scan(path, self._skip_clauses(where))
-
-        def scan(row_ids: bool) -> DataFrame:
-            return self.read(spark, path, _with_pos=True,
-                             with_row_ids=row_ids, _plan=plan)
-
-        wide = bool(cdf_on and track)  # the only shape the gate can fuse
-        cand = scan(wide)
-        live = "_dv_file" in cand.columns
-        fused = live and self._fuse_candidates(plan, cdf_on, track)
-        if fused:
-            cand = cand.persist()
-            cand_files = {rf for _i, _e, fs in plan.entries for rf in fs}
-        elif wide and live:
-            cand = scan(False)  # one more DataFrame, no job
-
-        def hot_rows(hot: list[str]) -> DataFrame:
-            nonlocal fused
-            if fused and set(hot) <= cand_files:
-                return cand.filter(F.col("_dv_file").isin(hot))
-            if fused:
-                cand.unpersist()
-                fused = False
-            return self.read(spark, path, _with_pos=True,
-                             with_row_ids=track,
-                             _plan=snap.plan_scan(path, only_files=set(hot)))
-
-        try:
-            yield cand, hot_rows
-        finally:
-            if fused:
-                cand.unpersist()
-
     def _commit_rewrite(self, spark: SparkSession, path: str,
                         snap: Snapshot, new_data: DataFrame,
                         hot: list[str], track: bool,
-                        cdf: list | None, check: bool = True,
+                        cdf: DataFrame | None, check: bool = True,
                         evolved_add: dict | None = None,
                         identity: tuple | None = None) -> None:
         """Publish a copy-on-write rewrite of the files ``hot`` as ONE
         ``rewrite_files`` commit at the snapshot's ``head + 1``:
         ``new_data`` restages (``check`` runs the CHECK constraints),
-        ``cdf`` — ``(rows, change type)`` pairs — stages as the change-
-        feed sidecar, the deletion vectors that survive consolidate.
+        ``cdf`` — the change rows, ``_change_type`` included — stages as
+        the change-feed sidecar, the deletion vectors that survive
+        consolidate.
         ``identity`` is ``(identity columns, new high watermarks)``
         when a merge insert allocated values."""
         if cdf is not None:
@@ -5098,10 +5009,7 @@ class TxnLogFormat(TableFormat):
             # feed planner emits it without a storage listing.  It is NOT
             # table data: never a live entry, no skipping stats, vacuum-
             # protected exactly like a vector dir
-            changed = reduce(DataFrame.unionByName, [
-                rows.withColumn("_change_type", F.lit(kind))
-                for rows, kind in cdf])
-            rec["cdf_dir"] = self._stage(changed, path, None, check=False,
+            rec["cdf_dir"] = self._stage(cdf, path, None, check=False,
                                          index=False)
             rec["cdf_files"] = self._dir_files(path, rec["cdf_dir"])
         # vectors on rewritten (or already-retired) files materialized
@@ -5468,446 +5376,404 @@ class TxnLogFormat(TableFormat):
         # the same — every source key must satisfy it.
         prune = (_key_prune_where if _key_prune_where is not None
                  else self._merge_key_prune_where(source, keys))
-        # SINGLE-PASS probe-and-restage when ``_cow_candidates`` fuses
-        # (round 17): the probe aggregation, the hot-file rewrite, and
-        # every change-feed pass share ONE cached candidate scan, read
-        # without the row filter (pruning is purely access-path — the
-        # planned scan).  The probe re-applies ``prune`` as a plain
-        # filter — row-equivalent to ``read(where=prune)``, and every
-        # consumer joins on the merge keys, so the unfiltered rows of
-        # the cache are never counted.
-        with self._cow_candidates(spark, path, snap, prune,
-                                  track) as (cand, hot_rows):
-            empty_target = "_dv_file" not in cand.columns
-            probe = (cand.filter(F.expr(prune)) if prune is not None
-                     else cand)
-            tcols = [c for c in probe.columns
-                     if c not in ("_dv_file", "_dv_pos", "_row_id")]
-            assignments = matched_update_assignments
+        # the candidate scan: every row of the stats-pruned files, narrow
+        # (no row ids), read without the row filter (pruning is purely
+        # access-path).  The probe re-applies ``prune`` as a plain filter
+        # — row-equivalent to ``read(where=prune)``
+        cand = self.read(spark, path, _with_pos=True,
+                         _plan=snap.plan_scan(path,
+                                              self._skip_clauses(prune)))
+        empty_target = "_dv_file" not in cand.columns
+        probe = (cand.filter(F.expr(prune)) if prune is not None
+                 else cand)
+        tcols = [c for c in probe.columns
+                 if c not in ("_dv_file", "_dv_pos", "_row_id")]
+        assignments = matched_update_assignments
+        if assignments is not None:
+            if schema_evolution:
+                raise ValueError(
+                    "matched_update_assignments and schema_evolution "
+                    "are mutually exclusive — evolve with UPDATE SET * "
+                    "or pre-shape the source")
+            assignments = self._merge_targets(assignments, tcols,
+                                              keys, ident)
+        ins_asg = insert_assignments
+        if ins_asg is not None:
+            # column-list INSERT (round 16): same case-insensitive
+            # normalization discipline as the SET assignments
+            if schema_evolution:
+                raise ValueError(
+                    "insert_assignments and schema_evolution are "
+                    "mutually exclusive — INSERT * evolves, or "
+                    "pre-shape the source")
+            if not ins_asg:
+                raise ValueError(
+                    "insert_assignments needs at least one column")
+            ins_asg = self._merge_targets(ins_asg, tcols, keys, ident,
+                                          insert=True)
+            missing_keys = [k for k in keys if k not in ins_asg]
+            if missing_keys:
+                raise ValueError(
+                    f"MERGE INSERT column list must include every "
+                    f"merge key — missing {missing_keys} (a NULL-"
+                    "keyed insert is refused)")
+        missing = [c for c in tcols
+                   if c not in source.columns and c not in ident]
+        no_insert = (insert_condition is not None
+                     and insert_condition.strip().lower() == "false")
+        if missing and (assignments is None
+                        or not (no_insert or ins_asg is not None)):
+            raise ValueError(
+                f"merge source is missing target columns: {missing}"
+                + ("" if assignments is None else
+                   " — with column assignments a PARTIAL source is "
+                   "legal only without an INSERT * clause (pass "
+                   "insert_condition='false' or give "
+                   "insert_assignments); INSERT * needs every "
+                   "target column"))
+        if schema_evolution:
+            # Delta schema autoMerge (UPDATE SET * / INSERT * with
+            # spark.databricks.delta.schema.autoMerge.enabled): every
+            # source column ABSENT from the target becomes a new target
+            # column — matched/inserted rows take the source values,
+            # untouched target rows materialize typed NULLs in the
+            # rewrite, and the widened schema publishes with the
+            # rewrite_files commit like any schema change (untouched
+            # FILES map through the synthesized ``evolved_add`` alter —
+            # reads null-fill them).  Exactly
+            # Delta's rule, including its sharp edge: helper columns
+            # (CDC op flags) get ADDED too — project them off the
+            # source first.  Default stays False: extra source columns
+            # are consulted by the conditions, then projected away.
+            stypes = dict(source.dtypes)
+            extra = [c for c in source.columns if c not in tcols]
+            tcols = tcols + extra
+        del_cond = (F.coalesce(F.expr(matched_delete_condition),
+                               F.lit(False))
+                    if matched_delete_condition is not None
+                    else F.lit(False))
+        ins_cond = (F.coalesce(F.expr(insert_condition), F.lit(False))
+                    if insert_condition is not None else F.lit(True))
+        upd_cond = (F.coalesce(F.expr(matched_update_condition),
+                               F.lit(False))
+                    if matched_update_condition is not None
+                    else F.lit(True))
+        # DETERMINISTIC marker names (round 17, guide §5 — plan/codegen
+        # caches): a per-call uuid tag made every merge plan textually
+        # unique, so repeated merges re-paid Janino compilation of an
+        # identical plan shape.  The tag only needs to dodge caller
+        # column names (the docstring invites extra source columns) —
+        # derive it from what it must avoid, bumping on collision, so
+        # same-shaped merges emit identical generated code.
+        _avoid = set(source.columns) | set(tcols)
+        _n = 0
+        while any(c.startswith("_mrg_") and c.endswith(f"_{_n}")
+                  for c in _avoid):
+            _n += 1
+        tag = str(_n)
+        c_del, c_ins = f"_mrg_del_{tag}", f"_mrg_ins_{tag}"
+        c_upd = f"_mrg_upd_{tag}"
+        c_scnt, c_tcnt = f"_mrg_scnt_{tag}", f"_mrg_tcnt_{tag}"
+        types = dict(probe.dtypes)
+        if schema_evolution:
+            types.update({c: stypes[c] for c in extra})
+        src = (source.withColumn(c_del, del_cond)
+               .withColumn(c_ins, ins_cond).withColumn(c_upd, upd_cond))
+        # one combined guard + metrics + HOT-FILE pass over the PROBE:
+        # both ambiguity checks, all three clause counts, AND the set of
+        # files holding matched rows come out of a single aggregation
+        # job (the per-key file sets flatten driver-side at hot-file
+        # scale).  The probe's candidate set contains every target row
+        # whose key the source carries (pruning only drops files that
+        # provably hold none), so matched-key counts are exact.
+        s_agg = src.groupBy(*keys).agg(F.count("*").alias(c_scnt),
+                                       F.first(c_del).alias(c_del),
+                                       F.first(c_ins).alias(c_ins),
+                                       F.first(c_upd).alias(c_upd))
+        if empty_target:
+            row = s_agg.agg(
+                F.max(c_scnt).alias("max_s"),
+                F.lit(None).cast("long").alias("max_t"),
+                F.lit(0).cast("long").alias("updated"),
+                F.lit(0).cast("long").alias("deleted"),
+                F.sum(F.col(c_ins).cast("long")).alias("inserted"),
+                F.lit(None).cast("array<string>").alias("hot")).head()
+        else:
+            c_tf = f"_mrg_tf_{tag}"
+            t_cnt = probe.groupBy(*keys).agg(
+                F.count("*").alias(c_tcnt),
+                F.collect_set("_dv_file").alias(c_tf))
+            matched_flag = F.col(c_tcnt).isNotNull()
+            effective = F.col(c_del) | F.col(c_upd)
+            row = (s_agg.join(t_cnt, keys, "left")
+                   .agg(F.max(c_scnt).alias("max_s"),
+                        F.max(c_tcnt).alias("max_t"),
+                        F.sum((matched_flag & ~F.col(c_del)
+                               & F.col(c_upd)).cast("long"))
+                         .alias("updated"),
+                        F.sum((matched_flag & F.col(c_del)).cast("long"))
+                         .alias("deleted"),
+                        F.sum((~matched_flag & F.col(c_ins)).cast("long"))
+                         .alias("inserted"),
+                        # only files whose matched rows actually CHANGE
+                        # (delete or condition-passing update) are hot —
+                        # a conditional update must not rewrite files
+                        # it leaves untouched
+                        F.array_sort(F.array_distinct(F.flatten(
+                            F.collect_list(F.when(effective,
+                                                  F.col(c_tf))))))
+                        .alias("hot")).head())
+        if row["max_s"] is not None and row["max_s"] > 1:
+            raise ValueError(
+                "multiple source rows share a merge key — UPDATE SET * "
+                "is ambiguous (pre-aggregate the source to one row per "
+                "key, e.g. latest-wins by a CDC ordering column)")
+        if row["max_t"] is not None and row["max_t"] > 1:
+            raise ValueError(
+                "target holds multiple rows for a merge key the source "
+                "matches — the upsert would silently collapse them; "
+                "dedupe the target first (compact/apply-latest)")
+        if matched_update_condition is not None and not empty_target:
+            # With a CONDITIONAL update the hot set names only files
+            # with EFFECTIVE changes — a matched key whose condition
+            # fails keeps its target row in an untouched, unscanned
+            # file, so the routing join below would mistake its source
+            # row for an insert.  Gate the insert flag on true
+            # unmatchedness (one probe-keys anti pass, paid only by
+            # conditional-update merges).
+            c_um = f"_mrg_um_{tag}"
+            unmatched_keys = (src.join(probe.select(*keys), keys,
+                                       "left_anti")
+                              .select(*keys)
+                              .withColumn(c_um, F.lit(True)))
+            src = (src.join(unmatched_keys, keys, "left")
+                   .withColumn(c_ins,
+                               F.col(c_ins) & F.col(c_um).isNotNull())
+                   .drop(c_um))
+        # FILE TARGETING step 2 — the HOT SET (from the probe pass
+        # above): only files holding a matched live row with an
+        # EFFECTIVE change rewrite; everything else keeps its physical
+        # identity (and its rows' stable ids)
+        hot: list[str] = sorted(row["hot"] or [])
+        n_ins = int(row["inserted"] or 0)
+        nmbs = not_matched_by_source_delete_condition
+        n_nmbs = 0
+        if nmbs is not None and not empty_target:
+            # NOT MATCHED BY SOURCE discovery: files that may hold a
+            # condition-true row come from the ordinary stats tier
+            # (where=nmbs), their actual unmatched hits from one
+            # anti-join pass — a selective condition keeps the sweep
+            # targeted, "true" is a declared full sweep
+            nm_scan = self.read(spark, path, where=nmbs,
+                                _with_pos=True)
+            if "_dv_file" in nm_scan.columns:
+                per_file = (nm_scan
+                            .join(src.select(*keys), keys, "left_anti")
+                            .groupBy("_dv_file")
+                            .agg(F.count("*").alias("_n")).collect())
+                n_nmbs = int(sum(r["_n"] for r in per_file))
+                # may widen the hot set BEYOND the key-pruned
+                # candidates: the hot-file scan reads exactly these
+                hot = sorted(set(hot)
+                             | {r["_dv_file"] for r in per_file})
+        if not hot and n_ins == 0:
+            # no touched files, nothing to insert: a no-op merge
+            # publishes nothing (Delta likewise skips the commit)
+            return {"updated": 0, "deleted": 0, "inserted": 0}
+        ins_alloc = ident_high = None
+        if hot:
+            # exact-scan the hot files (vectors applied) and route EVERY
+            # output row through ONE full-outer join — matched keys are
+            # always in hot files, so cur_hot ∪ src covers the whole
+            # rewrite: target-only rows restage byte-identical, both-
+            # sides rows take the source values (UPDATE SET *) or drop
+            # (delete clause), source-only rows insert.  One shuffle
+            # join instead of kept-anti + upsert-semi + insert-anti +
+            # row-id graft — and the row id rides the join (NULL on the
+            # source-only side ⇒ fresh ids from this commit's range).
+            cur_hot = self._hot_rows(spark, path, snap, hot, track)
+            data_cols = [c for c in tcols if c not in keys]
+            # the source plane carries EVERY non-key source column
+            # (helper columns included): column-level assignments may
+            # reference any of them via s.<name>
+            s_src = [c for c in source.columns if c not in keys]
+            scol = {c: f"_mrg_s{i}_{tag}" for i, c in enumerate(
+                dict.fromkeys(s_src))}
+            src_j = src.select(*keys,
+                               *[F.col(c).alias(scol[c]) for c in scol],
+                               c_del, c_ins, c_upd)
+            c_t = f"_mrg_t_{tag}"
+            t_j = (cur_hot.drop("_dv_file", "_dv_pos")
+                   .withColumn(c_t, F.lit(True)))
+            j = t_j.join(src_j, keys, "full_outer")
+            s_present = F.col(c_ins).isNotNull()
+            t_present = F.col(c_t).isNotNull()
+            # a target row drops on a matched delete — or, target-only,
+            # on NOT MATCHED BY SOURCE ... DELETE when the condition
+            # holds (over TARGET columns, present under their own names
+            # on this side)
+            t_del = s_present & F.col(c_del)
+            if nmbs is not None:
+                t_del = t_del | (~s_present
+                                 & F.coalesce(F.expr(nmbs), F.lit(False)))
+            upd_row = t_present & s_present & F.col(c_upd)
+            ins_row = s_present & ~t_present
+            routed = j.filter((t_present & ~t_del)
+                              | (ins_row & F.col(c_ins)))
+            ins_res = self._merge_resolver(
+                keys, tcols, source.columns, scol, insert=True)
+            ins_j = ({c: F.expr(self._rewrite_merge_expr(ex, ins_res))
+                      for c, ex in ins_asg.items()}
+                     if ins_asg is not None else None)
+            # a matched row takes the source values only when the
+            # update condition passes (a failing condition leaves it
+            # byte-identical); inserts always take the source side
+            take_src = s_present & (F.col(c_upd) | ~t_present)
+            # a column-list INSERT's row takes its key from its VALUES
+            # expression (validated to cover every key); matched/kept
+            # rows keep the coalesced join key
+            sel = [(F.col(k) if ins_j is None else
+                    F.when(ins_row, ins_j[k]).otherwise(F.col(k)))
+                   .cast(types[k]).alias(k) for k in keys]
             if assignments is not None:
-                if schema_evolution:
-                    raise ValueError(
-                        "matched_update_assignments and schema_evolution "
-                        "are mutually exclusive — evolve with UPDATE SET * "
-                        "or pre-shape the source")
-                assignments = self._merge_targets(assignments, tcols,
-                                                  keys, ident)
-            ins_asg = insert_assignments
-            if ins_asg is not None:
-                # column-list INSERT (round 16): same case-insensitive
-                # normalization discipline as the SET assignments
-                if schema_evolution:
-                    raise ValueError(
-                        "insert_assignments and schema_evolution are "
-                        "mutually exclusive — INSERT * evolves, or "
-                        "pre-shape the source")
-                if not ins_asg:
-                    raise ValueError(
-                        "insert_assignments needs at least one column")
-                ins_asg = self._merge_targets(ins_asg, tcols, keys, ident,
-                                              insert=True)
-                missing_keys = [k for k in keys if k not in ins_asg]
-                if missing_keys:
-                    raise ValueError(
-                        f"MERGE INSERT column list must include every "
-                        f"merge key — missing {missing_keys} (a NULL-"
-                        "keyed insert is refused)")
-            missing = [c for c in tcols
-                       if c not in source.columns and c not in ident]
-            no_insert = (insert_condition is not None
-                         and insert_condition.strip().lower() == "false")
-            if missing and (assignments is None
-                            or not (no_insert or ins_asg is not None)):
-                raise ValueError(
-                    f"merge source is missing target columns: {missing}"
-                    + ("" if assignments is None else
-                       " — with column assignments a PARTIAL source is "
-                       "legal only without an INSERT * clause (pass "
-                       "insert_condition='false' or give "
-                       "insert_assignments); INSERT * needs every "
-                       "target column"))
-            if schema_evolution:
-                # Delta schema autoMerge (UPDATE SET * / INSERT * with
-                # spark.databricks.delta.schema.autoMerge.enabled): every
-                # source column ABSENT from the target becomes a new target
-                # column — matched/inserted rows take the source values,
-                # untouched target rows materialize typed NULLs in the
-                # rewrite, and the widened schema publishes with the
-                # rewrite_files commit like any schema change (untouched
-                # FILES map through the synthesized ``evolved_add`` alter —
-                # reads null-fill them).  Exactly
-                # Delta's rule, including its sharp edge: helper columns
-                # (CDC op flags) get ADDED too — project them off the
-                # source first.  Default stays False: extra source columns
-                # are consulted by the conditions, then projected away.
-                stypes = dict(source.dtypes)
-                extra = [c for c in source.columns if c not in tcols]
-                tcols = tcols + extra
-            del_cond = (F.coalesce(F.expr(matched_delete_condition),
-                                   F.lit(False))
-                        if matched_delete_condition is not None
-                        else F.lit(False))
-            ins_cond = (F.coalesce(F.expr(insert_condition), F.lit(False))
-                        if insert_condition is not None else F.lit(True))
-            upd_cond = (F.coalesce(F.expr(matched_update_condition),
-                                   F.lit(False))
-                        if matched_update_condition is not None
-                        else F.lit(True))
-            # DETERMINISTIC marker names (round 17, guide §5 — plan/codegen
-            # caches): a per-call uuid tag made every merge plan textually
-            # unique, so repeated merges re-paid Janino compilation of an
-            # identical plan shape.  The tag only needs to dodge caller
-            # column names (the docstring invites extra source columns) —
-            # derive it from what it must avoid, bumping on collision, so
-            # same-shaped merges emit identical generated code.
-            _avoid = set(source.columns) | set(tcols)
-            _n = 0
-            while any(c.startswith("_mrg_") and c.endswith(f"_{_n}")
-                      for c in _avoid):
-                _n += 1
-            tag = str(_n)
-            c_del, c_ins = f"_mrg_del_{tag}", f"_mrg_ins_{tag}"
-            c_upd = f"_mrg_upd_{tag}"
-            c_scnt, c_tcnt = f"_mrg_scnt_{tag}", f"_mrg_tcnt_{tag}"
-            types = dict(probe.dtypes)
-            if schema_evolution:
-                types.update({c: stypes[c] for c in extra})
-            src = (source.withColumn(c_del, del_cond)
-                   .withColumn(c_ins, ins_cond).withColumn(c_upd, upd_cond))
-            # one combined guard + metrics + HOT-FILE pass over the PROBE:
-            # both ambiguity checks, all three clause counts, AND the set of
-            # files holding matched rows come out of a single aggregation
-            # job (the per-key file sets flatten driver-side at hot-file
-            # scale).  The probe's candidate set contains every target row
-            # whose key the source carries (pruning only drops files that
-            # provably hold none), so matched-key counts are exact.
-            s_agg = src.groupBy(*keys).agg(F.count("*").alias(c_scnt),
-                                           F.first(c_del).alias(c_del),
-                                           F.first(c_ins).alias(c_ins),
-                                           F.first(c_upd).alias(c_upd))
-            if empty_target:
-                row = s_agg.agg(
-                    F.max(c_scnt).alias("max_s"),
-                    F.lit(None).cast("long").alias("max_t"),
-                    F.lit(0).cast("long").alias("updated"),
-                    F.lit(0).cast("long").alias("deleted"),
-                    F.sum(F.col(c_ins).cast("long")).alias("inserted"),
-                    F.lit(None).cast("array<string>").alias("hot")).head()
+                # COLUMN-LEVEL UPDATE SET (round 13 — Delta's most
+                # common merge form): assigned columns evaluate their
+                # expression on the join plane (t.*/s.* qualified);
+                # unassigned columns KEEP the target value on matched
+                # rows; inserts still take the source side whole
+                set_res = self._merge_resolver(keys, tcols,
+                                               source.columns, scol)
+                assigned = {
+                    c: F.expr(self._rewrite_merge_expr(ex, set_res))
+                    for c, ex in assignments.items()}
+                for c in data_cols:
+                    upd_val = assigned.get(c, F.col(c))
+                    pieces = F.when(upd_row, upd_val)
+                    if ins_j is not None:
+                        # column-list INSERT: listed columns take their
+                        # expression; unlisted fall through to the
+                        # target side, NULL on an insert row
+                        if c in ins_j:
+                            pieces = pieces.when(ins_row, ins_j[c])
+                    elif c in scol:  # source carries it: inserts take it
+                        pieces = pieces.when(ins_row, F.col(scol[c]))
+                    sel.append(pieces.otherwise(F.col(c))
+                               .cast(types[c]).alias(c))
             else:
-                c_tf = f"_mrg_tf_{tag}"
-                t_cnt = probe.groupBy(*keys).agg(
-                    F.count("*").alias(c_tcnt),
-                    F.collect_set("_dv_file").alias(c_tf))
-                matched_flag = F.col(c_tcnt).isNotNull()
-                effective = F.col(c_del) | F.col(c_upd)
-                row = (s_agg.join(t_cnt, keys, "left")
-                       .agg(F.max(c_scnt).alias("max_s"),
-                            F.max(c_tcnt).alias("max_t"),
-                            F.sum((matched_flag & ~F.col(c_del)
-                                   & F.col(c_upd)).cast("long"))
-                             .alias("updated"),
-                            F.sum((matched_flag & F.col(c_del)).cast("long"))
-                             .alias("deleted"),
-                            F.sum((~matched_flag & F.col(c_ins)).cast("long"))
-                             .alias("inserted"),
-                            # only files whose matched rows actually CHANGE
-                            # (delete or condition-passing update) are hot —
-                            # a conditional update must not rewrite files
-                            # it leaves untouched
-                            F.array_sort(F.array_distinct(F.flatten(
-                                F.collect_list(F.when(effective,
-                                                      F.col(c_tf))))))
-                            .alias("hot")).head())
-            if row["max_s"] is not None and row["max_s"] > 1:
-                raise ValueError(
-                    "multiple source rows share a merge key — UPDATE SET * "
-                    "is ambiguous (pre-aggregate the source to one row per "
-                    "key, e.g. latest-wins by a CDC ordering column)")
-            if row["max_t"] is not None and row["max_t"] > 1:
-                raise ValueError(
-                    "target holds multiple rows for a merge key the source "
-                    "matches — the upsert would silently collapse them; "
-                    "dedupe the target first (compact/apply-latest)")
-            as_target = [F.col(c).cast(types[c]).alias(c) for c in tcols]
-            if matched_update_condition is not None and not empty_target:
-                # With a CONDITIONAL update the hot set names only files
-                # with EFFECTIVE changes — a matched key whose condition
-                # fails keeps its target row in an untouched, unscanned
-                # file, so the routing join below would mistake its source
-                # row for an insert.  Gate the insert flag on true
-                # unmatchedness (one probe-keys anti pass, paid only by
-                # conditional-update merges).
-                c_um = f"_mrg_um_{tag}"
-                unmatched_keys = (src.join(probe.select(*keys), keys,
-                                           "left_anti")
-                                  .select(*keys)
-                                  .withColumn(c_um, F.lit(True)))
-                src = (src.join(unmatched_keys, keys, "left")
-                       .withColumn(c_ins,
-                                   F.col(c_ins) & F.col(c_um).isNotNull())
-                       .drop(c_um))
-            # FILE TARGETING step 2 — the HOT SET (from the fused pass
-            # above): only files holding a matched live row with an
-            # EFFECTIVE change rewrite; everything else keeps its physical
-            # identity (and its rows' stable ids)
-            hot: list[str] = sorted(row["hot"] or [])
-            n_ins = int(row["inserted"] or 0)
-            nmbs = not_matched_by_source_delete_condition
-            n_nmbs = 0
-            if nmbs is not None and not empty_target:
-                # NOT MATCHED BY SOURCE discovery: files that may hold a
-                # condition-true row come from the ordinary stats tier
-                # (where=nmbs), their actual unmatched hits from one
-                # anti-join pass — a selective condition keeps the sweep
-                # targeted, "true" is a declared full sweep
-                nm_scan = self.read(spark, path, where=nmbs,
-                                    _with_pos=True)
-                if "_dv_file" in nm_scan.columns:
-                    per_file = (nm_scan
-                                .join(src.select(*keys), keys, "left_anti")
-                                .groupBy("_dv_file")
-                                .agg(F.count("*").alias("_n")).collect())
-                    n_nmbs = int(sum(r["_n"] for r in per_file))
-                    # may widen the hot set BEYOND the key-pruned
-                    # candidates: ``hot_rows`` then reads the exact files
-                    hot = sorted(set(hot)
-                                 | {r["_dv_file"] for r in per_file})
-            if not hot and n_ins == 0:
-                # no touched files, nothing to insert: a no-op merge
-                # publishes nothing (Delta likewise skips the commit)
-                return {"updated": 0, "deleted": 0, "inserted": 0}
-            ins_alloc = ident_high = None
+                for c in data_cols:
+                    if c in ident:
+                        # GENERATED ALWAYS: matched/kept rows keep the
+                        # target value; the insert slice allocates below
+                        sel.append(F.col(c).cast(types[c]).alias(c))
+                        continue
+                    tgt_side = (F.lit(None) if (schema_evolution
+                                                and c in extra)
+                                else F.col(c))
+                    if ins_j is not None:
+                        # UPDATE SET * + column-list INSERT: updates
+                        # take the source value, inserts their VALUES
+                        # expression (NULL when unlisted)
+                        sel.append(
+                            F.when(upd_row, F.col(scol[c]))
+                            .when(ins_row, ins_j.get(c, F.lit(None)))
+                            .otherwise(tgt_side)
+                            .cast(types[c]).alias(c))
+                    else:
+                        sel.append(F.when(take_src, F.col(scol[c]))
+                                   .otherwise(tgt_side)
+                                   .cast(types[c]).alias(c))
+            if track:
+                # target-side id for kept/updated rows, NULL (fresh
+                # range) for inserts — Delta row-tracking semantics
+                sel.append(F.col("_row_id").alias(self._ROW_ID_COL))
+            out_cols = ([*keys, *data_cols]
+                        + ([self._ROW_ID_COL] if track else []))
+            named = dict(zip(out_cols, sel))
+            if ident and n_ins:
+                # identity allocation rides ONLY the insert slice: the
+                # kept/updated slice keeps its values byte-identical,
+                # the slice allocates from the commit-snapshot
+                # watermark (pinned by _with_identity's checkpoint)
+                kept_part = routed.filter(~ins_row).select(*sel)
+                ins_raw = routed.filter(ins_row).select(
+                    *[named[c] for c in out_cols if c not in ident])
+                ins_alloc, ident_high = self._with_identity(
+                    ins_raw, snap)
+                ins_alloc = ins_alloc.select(
+                    *[F.col(c).cast(types[c]).alias(c)
+                      if c in ident else F.col(c) for c in out_cols])
+                new_data = kept_part.unionByName(ins_alloc)
+            else:
+                new_data = routed.select(*sel)
+        else:
+            # pure-insert merge (no matched files): no join needed; a
+            # column-list INSERT evaluates on the RAW source plane
             raw_ins: dict = {}
             if ins_asg is not None:
-                # column-list INSERT values on the RAW source plane: the
-                # pure-insert rows and the sidecar's insert rows
                 raw = self._merge_resolver(
                     keys, tcols, source.columns,
                     {c: c for c in source.columns}, insert=True)
                 raw_ins = {c: F.expr(self._rewrite_merge_expr(ex, raw))
                            for c, ex in ins_asg.items()}
-            if hot:
-                # exact-scan the hot files (vectors applied) and route EVERY
-                # output row through ONE full-outer join — matched keys are
-                # always in hot files, so cur_hot ∪ src covers the whole
-                # rewrite: target-only rows restage byte-identical, both-
-                # sides rows take the source values (UPDATE SET *) or drop
-                # (delete clause), source-only rows insert.  One shuffle
-                # join instead of kept-anti + upsert-semi + insert-anti +
-                # row-id graft — and the row id rides the join (NULL on the
-                # source-only side ⇒ fresh ids from this commit's range).
-                cur_hot = hot_rows(hot)
-                base_cols = [c for c in cur_hot.columns
-                             if c not in ("_dv_file", "_dv_pos", "_row_id")]
-                data_cols = [c for c in tcols if c not in keys]
-                # the source plane carries EVERY non-key source column
-                # (helper columns included): column-level assignments may
-                # reference any of them via s.<name>
-                s_src = [c for c in source.columns if c not in keys]
-                scol = {c: f"_mrg_s{i}_{tag}" for i, c in enumerate(
-                    dict.fromkeys(s_src))}
-                src_j = src.select(*keys,
-                                   *[F.col(c).alias(scol[c]) for c in scol],
-                                   c_del, c_ins, c_upd)
-                c_t = f"_mrg_t_{tag}"
-                t_j = (cur_hot.drop("_dv_file", "_dv_pos")
-                       .withColumn(c_t, F.lit(True)))
-                j = t_j.join(src_j, keys, "full_outer")
-                s_present = F.col(c_ins).isNotNull()
-                t_present = F.col(c_t).isNotNull()
-                keep_tonly = t_present & ~s_present
-                if nmbs is not None:
-                    # NOT MATCHED BY SOURCE ... DELETE: a target-only row
-                    # passing the condition drops (condition over TARGET
-                    # columns — present under their own names on this side)
-                    keep_tonly = keep_tonly & ~F.coalesce(F.expr(nmbs),
-                                                          F.lit(False))
-                routed = j.filter(keep_tonly
-                                  | (t_present & s_present & ~F.col(c_del))
-                                  | (~t_present & s_present & F.col(c_ins)))
-                ins_res = self._merge_resolver(
-                    keys, tcols, source.columns, scol, insert=True)
-                ins_j = ({c: F.expr(self._rewrite_merge_expr(ex, ins_res))
-                          for c, ex in ins_asg.items()}
-                         if ins_asg is not None else None)
-                # a matched row takes the source values only when the
-                # update condition passes (a failing condition leaves it
-                # byte-identical); inserts always take the source side
-                take_src = s_present & (F.col(c_upd) | ~t_present)
-                upd_row = t_present & s_present & F.col(c_upd)
-                ins_row = s_present & ~t_present
-                # a column-list INSERT's row takes its key from its VALUES
-                # expression (validated to cover every key); matched/kept
-                # rows keep the coalesced join key
-                sel = [(F.col(k) if ins_j is None else
-                        F.when(ins_row, ins_j[k]).otherwise(F.col(k)))
-                       .cast(types[k]).alias(k) for k in keys]
-                if assignments is not None:
-                    # COLUMN-LEVEL UPDATE SET (round 13 — Delta's most
-                    # common merge form): assigned columns evaluate their
-                    # expression on the join plane (t.*/s.* qualified);
-                    # unassigned columns KEEP the target value on matched
-                    # rows; inserts still take the source side whole
-                    set_res = self._merge_resolver(keys, tcols,
-                                                   source.columns, scol)
-                    assigned = {
-                        c: F.expr(self._rewrite_merge_expr(ex, set_res))
-                        for c, ex in assignments.items()}
-                    for c in data_cols:
-                        upd_val = assigned.get(c, F.col(c))
-                        pieces = F.when(upd_row, upd_val)
-                        if ins_j is not None:
-                            # column-list INSERT: listed columns take their
-                            # expression; unlisted fall through to the
-                            # target side, NULL on an insert row
-                            if c in ins_j:
-                                pieces = pieces.when(ins_row, ins_j[c])
-                        elif c in scol:  # source carries it: inserts take it
-                            pieces = pieces.when(ins_row, F.col(scol[c]))
-                        sel.append(pieces.otherwise(F.col(c))
-                                   .cast(types[c]).alias(c))
-                else:
-                    for c in data_cols:
-                        if c in ident:
-                            # GENERATED ALWAYS: matched/kept rows keep the
-                            # target value; the insert slice allocates below
-                            sel.append(F.col(c).cast(types[c]).alias(c))
-                            continue
-                        tgt_side = (F.lit(None) if (schema_evolution
-                                                    and c in extra)
-                                    else F.col(c))
-                        if ins_j is not None:
-                            # UPDATE SET * + column-list INSERT: updates
-                            # take the source value, inserts their VALUES
-                            # expression (NULL when unlisted)
-                            sel.append(
-                                F.when(upd_row, F.col(scol[c]))
-                                .when(ins_row, ins_j.get(c, F.lit(None)))
-                                .otherwise(tgt_side)
-                                .cast(types[c]).alias(c))
-                        else:
-                            sel.append(F.when(take_src, F.col(scol[c]))
-                                       .otherwise(tgt_side)
-                                       .cast(types[c]).alias(c))
-                if track:
-                    # target-side id for kept/updated rows, NULL (fresh
-                    # range) for inserts — Delta row-tracking semantics
-                    sel.append(F.col("_row_id").alias(self._ROW_ID_COL))
-                if ident and n_ins:
-                    # identity allocation rides ONLY the insert slice: the
-                    # kept/updated slice keeps its values byte-identical,
-                    # the slice allocates from the commit-snapshot
-                    # watermark (pinned by _with_identity's checkpoint)
-                    out_cols = ([*keys, *data_cols]
-                                + ([self._ROW_ID_COL] if track else []))
-                    named = dict(zip(out_cols, sel))
-                    kept_part = routed.filter(~ins_row).select(*sel)
-                    ins_raw = routed.filter(ins_row).select(
-                        *[named[c] for c in out_cols if c not in ident])
-                    ins_alloc, ident_high = self._with_identity(
-                        ins_raw, snap)
-                    ins_alloc = ins_alloc.select(
-                        *[F.col(c).cast(types[c]).alias(c)
-                          if c in ident else F.col(c) for c in out_cols])
-                    new_data = kept_part.unionByName(ins_alloc)
-                else:
-                    new_data = routed.select(*sel)
-            else:
-                # pure-insert merge (no matched files): no join needed
-                ins_cols = [c for c in tcols if c not in ident]
-                new_data = src.filter(F.col(c_ins)).select(
-                    *[(raw_ins.get(c, F.lit(None)) if ins_asg is not None
-                       else F.col(c)).cast(types[c]).alias(c)
-                      for c in ins_cols])
-                if ident:
-                    new_data, ident_high = self._with_identity(
-                        new_data, snap)
-                    new_data = new_data.select(
-                        *[F.col(c).cast(types[c]).alias(c) for c in tcols])
-                if track:
-                    new_data = new_data.withColumn(
-                        self._ROW_ID_COL, F.lit(None).cast("long"))
-                ins_alloc = new_data
-            cdf = None
-            if self._effective_config(snap)[2]:
-                # exact per-row changes, each side keyed off the already-
-                # pinned source (localCheckpoint above), so the sidecar and
-                # the committed state cannot diverge.  Every matched target
-                # row lives in a hot file, so pre-images, post-images, and
-                # the matched/unmatched split all come from cur_hot + src
-                # (an extra O(changed rows) pass only when the feed is on).
-                cdf = []
-                # row-tracked sidecars carry each change row's id
-                # (materialized __row_id): pre/post images of one logical
-                # row share it — the key-independent lineage join.  Merge
-                # INSERTS read NULL (their ids are allocated at commit
-                # time, after the sidecar stages).
-                idc = ([F.col("_row_id").alias(self._ROW_ID_COL)]
-                       if track else [])
-                ins_id = ([F.lit(None).cast("long")
-                           .alias(self._ROW_ID_COL)] if track else [])
-                if hot:
-                    t_pre = cur_hot.select(*base_cols, *idc)
-                    if schema_evolution and extra:
-                        t_pre = t_pre.withColumns(
-                            {c: F.lit(None).cast(stypes[c]) for c in extra})
-                    t_pre = t_pre.select(*tcols, *(
-                        [self._ROW_ID_COL] if track else []))
-                    cdf += [
-                        (t_pre.join(src.filter(F.col(c_del)).select(*keys),
-                                    keys, "left_semi"), "delete"),
-                        (t_pre.join(src.filter(~F.col(c_del) & F.col(c_upd))
-                                    .select(*keys), keys, "left_semi"),
-                         "update_preimage")]
-                    if nmbs is not None:
-                        cdf.append((
-                            t_pre.join(src.select(*keys), keys, "left_anti")
-                            .filter(F.coalesce(F.expr(nmbs), F.lit(False))),
-                            "delete"))
-                    if assignments is not None:
-                        # column-level SET: the postimage is the routed
-                        # join's own output for update rows (assigned
-                        # expressions applied, unassigned columns kept) —
-                        # `sel` already carries the row id when tracked
-                        post = routed.filter(upd_row).select(*sel)
-                    else:
-                        # identity columns (never in the source) and
-                        # the row id come from the TARGET side: the
-                        # postimage keeps the matched row's values
-                        hot_keys = cur_hot.select(*keys, *ident, *idc)
-                        post = (src.join(hot_keys, keys,
-                                         "inner" if track or ident
-                                         else "left_semi")
-                                .filter(~F.col(c_del) & F.col(c_upd))
-                                .select(*as_target, *(
-                                    [self._ROW_ID_COL] if track else [])))
-                    cdf.append((post, "update_postimage"))
-                # no insert rows, no insert piece: a PARTIAL source
-                # (column assignments, no INSERT clause) cannot even
-                # project the target columns an insert row would need
-                if n_ins and ident:
-                    # the allocated insert slice IS the post-state: ride
-                    # it so the sidecar carries the generated values
-                    cdf.append((ins_alloc, "insert"))
-                elif n_ins:
-                    ins_src = (src.join(cur_hot.select(*keys), keys,
-                                        "left_anti") if hot else src)
-                    # a column-list INSERT's sidecar rows carry the
-                    # ASSIGNED values (ins_src is src-shaped)
-                    ins_tgt = ([raw_ins.get(c, F.lit(None)).cast(types[c])
-                                .alias(c) for c in tcols]
-                               if ins_asg is not None else as_target)
-                    cdf.append((ins_src.filter(F.col(c_ins))
-                                .select(*ins_tgt, *ins_id), "insert"))
-            self._commit_rewrite(
-                spark, path, snap, new_data, hot, track, cdf,
-                evolved_add=({c: stypes[c] for c in extra}
-                             if schema_evolution else None),
-                identity=((frozenset(ident), ident_high) if ident_high
-                          else None))
-            return {"updated": int(row["updated"] or 0),
-                    "deleted": int(row["deleted"] or 0) + n_nmbs,
-                    "inserted": n_ins}
+            ins_cols = [c for c in tcols if c not in ident]
+            new_data = src.filter(F.col(c_ins)).select(
+                *[(raw_ins.get(c, F.lit(None)) if ins_asg is not None
+                   else F.col(c)).cast(types[c]).alias(c)
+                  for c in ins_cols])
+            if ident:
+                new_data, ident_high = self._with_identity(
+                    new_data, snap)
+                new_data = new_data.select(
+                    *[F.col(c).cast(types[c]).alias(c) for c in tcols])
+            if track:
+                new_data = new_data.withColumn(
+                    self._ROW_ID_COL, F.lit(None).cast("long"))
+            ins_alloc = new_data
+        cdf = None
+        cdf_on = self._effective_config(snap)[2]
+        if cdf_on and not hot:
+            # pure-insert merge: the staged rows ARE the change set
+            cdf = ins_alloc.withColumn("_change_type", F.lit("insert"))
+        elif cdf_on:
+            # exact per-row changes from the routed join itself, in ONE
+            # pass: every matched target row lives in a hot file, so j
+            # holds each pre-image (its target columns) next to the
+            # source row that deletes or updates it, and ``sel`` is the
+            # post-image and the insert row.  j reads only the hot files
+            # and the pinned source (localCheckpoint above), so the
+            # sidecar and the committed state cannot diverge.  Row-
+            # tracked sidecars carry
+            # each change row's id (materialized __row_id): pre/post
+            # images of one logical row share it — the key-independent
+            # lineage join.  Merge INSERTS read NULL (their ids are
+            # allocated at commit time, after the sidecar stages).
+            pre = [(F.lit(None) if schema_evolution and c in extra
+                    else F.col(c)).cast(types[c]).alias(c) for c in tcols]
+            post = [named[c] for c in tcols]
+            if track:
+                pre.append(F.col("_row_id").alias(self._ROW_ID_COL))
+                post.append(named[self._ROW_ID_COL])
+            upd = upd_row & ~F.col(c_del)
+            images = [(t_present & t_del, pre, "delete"),
+                      (upd, pre, "update_preimage"),
+                      (upd, post, "update_postimage")]
+            if ins_alloc is None:
+                images.append((ins_row & F.col(c_ins), post, "insert"))
+            cdf = self._change_rows(j, images)
+            if ins_alloc is not None:
+                # the allocated insert slice IS the post-state: it
+                # carries the generated identity values
+                cdf = cdf.unionByName(
+                    ins_alloc.withColumn("_change_type", F.lit("insert")))
+        self._commit_rewrite(
+            spark, path, snap, new_data, hot, track, cdf,
+            evolved_add=({c: stypes[c] for c in extra}
+                         if schema_evolution else None),
+            identity=((frozenset(ident), ident_high) if ident_high
+                      else None))
+        return {"updated": int(row["updated"] or 0),
+                "deleted": int(row["deleted"] or 0) + n_nmbs,
+                "inserted": n_ins}
 
     def restore(self, spark: SparkSession, path: str,
                 version: int | None = None,
@@ -6627,9 +6493,9 @@ class TxnLogFormat(TableFormat):
           re-record them.
 
         A rewrite touches O(rows in hot files), not O(table); cold files
-        and their sparse vectors are left alone.  Returns
+        and their sparse vectors are left alone.  Every form returns
         ``{"rewritten_files": n, "retired_dv_entries": n}`` (the full
-        form returns ``None``).
+        form rewrites every live file and retires every vector entry).
 
         Scale shape: DV fractions come from two keyed counts (one over
         the live rows, one over the vectors — both reduced per FILE, so
@@ -6714,7 +6580,14 @@ class TxnLogFormat(TableFormat):
             else:
                 rec["dir"] = self._stage(current, path, partition_col)
             self._commit(path, rec, expected_version=snap.version + 1)
-            return None
+            retired = (reduce(DataFrame.unionByName, [
+                spark.read.parquet(os.path.join(path, d))
+                for d in snap.dvs]).count() if snap.dvs else 0)
+            return {"rewritten_files": sum(
+                        len(fs if fs is not None
+                            else self._dir_files(path, e["dir"]))
+                        for _i, e, fs in snap.plan_scan(path).entries),
+                    "retired_dv_entries": int(retired)}
         if cluster_by:
             raise ValueError(
                 "cluster_by only applies to the full rewrite (the "

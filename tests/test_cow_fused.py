@@ -1,12 +1,12 @@
-"""Single-pass copy-on-write fusion (round 17): merge / delete_where /
-update_where fuse their probe and rewrite scans into one cached
-candidate scan when the candidate set is small (``_fuse_candidates``),
-and fall back to the classic two-pass shape otherwise.  Both shapes
-must commit identical state — including change-feed sidecars and row
-ids — and the fused cache must never outlive the operation.
+"""Copy-on-write DML (merge / delete_where / update_where) and its
+change feed.  Every verb scans its stats-pruned candidate files narrow
+(no row ids), restages the exact hot files, and builds every change-feed
+image in ONE pass over the frame the rewrite already builds.
 
-The two-pass shape is forced by setting the byte cap
-``TxnLogFormat._FUSE_MAX_BYTES`` to 0."""
+The oracle test checks the sidecar against a model that knows nothing of
+how it is built: the rows a verb commits to the feed must equal the diff
+of the table before and after it, joined on the stable row id (on the
+business key where the table tracks no row ids)."""
 
 from __future__ import annotations
 
@@ -15,28 +15,45 @@ import shutil
 
 import pytest
 
-from datalake_ingestion_system_spark.sinks import TxnLogFormat, _relfile
+from datalake_ingestion_system_spark.sinks import TxnLogFormat
 
-SHAPES = ("fused", "two_pass")
+SCHEMA = "id long, v double, g string"
+
+#: base table kind -> the properties set before any row lands
+KINDS = {
+    "tracked": {"row_tracking": True, "change_data_feed": True},
+    "identity": {"change_data_feed": True,
+                 "identity_columns": {"rid": {"start": 1, "step": 1}}},
+    "untracked": {"change_data_feed": True},
+}
 
 
 @pytest.fixture(scope="module")
-def base_table(spark, tmp_path_factory):
-    """A CDF + row-tracking table of 60 rows in three files with
-    disjoint id ranges (0-19, 20-39, 40-59), so key pruning can leave
-    files out of a candidate scan.  Tests copy it: every shape starts
-    from byte-identical files and row ids."""
-    path = str(tmp_path_factory.mktemp("cow") / "base")
-    fmt = TxnLogFormat(checkpoint_interval=None)
-    schema = "id long, v double, g string"
-    fmt.append(spark.createDataFrame([], schema), path)
-    fmt.set_properties(spark, path, row_tracking=True,
-                       change_data_feed=True)
-    for lo in (0, 20, 40):
-        fmt.append(spark.createDataFrame(
-            [(i, float(i), "ab"[i % 2]) for i in range(lo, lo + 20)],
-            schema).coalesce(1), path)
-    return path
+def bases(spark, tmp_path_factory):
+    """Base tables by kind, built on first use: 60 rows in three files
+    with disjoint id ranges (0-19, 20-39, 40-59), so key pruning can
+    leave files out of a candidate scan.  Tests copy them."""
+    from datalake_ingestion_system_spark.sources.txnlog_stream import (
+        TxnLogDataSource)
+
+    spark.dataSource.register(TxnLogDataSource)
+    root = tmp_path_factory.mktemp("cow")
+    made: dict[str, str] = {}
+
+    def get(kind: str) -> str:
+        if kind not in made:
+            path = str(root / kind)
+            fmt = TxnLogFormat(checkpoint_interval=None)
+            fmt.append(spark.createDataFrame([], SCHEMA), path)
+            fmt.set_properties(spark, path, **KINDS[kind])
+            for lo in (0, 20, 40):
+                fmt.append(spark.createDataFrame(
+                    [(i, float(i), "ab"[i % 2]) for i in range(lo, lo + 20)],
+                    SCHEMA).coalesce(1), path)
+            made[kind] = path
+        return made[kind]
+
+    return get
 
 
 def _copy(base, tmp_path, name):
@@ -45,25 +62,7 @@ def _copy(base, tmp_path, name):
     return dst
 
 
-def _use_shape(monkeypatch, shape):
-    """Force ``shape`` and record every fuse decision taken, with the
-    candidate files it was taken on."""
-    if shape == "two_pass":
-        monkeypatch.setattr(TxnLogFormat, "_FUSE_MAX_BYTES", 0)
-    seen: list[tuple[bool, set]] = []
-    gate = TxnLogFormat._fuse_candidates.__func__
-
-    def spy(cls, plan, cdf_on, track):
-        out = gate(cls, plan, cdf_on, track)
-        seen.append((out, {_relfile(p) for p in plan.paths}))
-        return out
-
-    monkeypatch.setattr(TxnLogFormat, "_fuse_candidates",
-                        classmethod(spy))
-    return seen
-
-
-def _src(spark, rows, schema="id long, v double, g string"):
+def _src(spark, rows, schema=SCHEMA):
     return spark.createDataFrame(rows, schema)
 
 
@@ -76,23 +75,28 @@ def _cdc_merge(spark, fmt, path):
                      insert_condition="op <> 'D'")
 
 
-#: case -> (operation, its expected return value)
+#: case -> (base table kind, operation, its expected return value)
 CASES = {
     "delete_where": (
+        "tracked",
         lambda spark, fmt, path: fmt.delete_where(
             spark, path, "id < 5 OR id = 45"), 6),
     "update_where": (
+        "tracked",
         lambda spark, fmt, path: fmt.update_where(
             spark, path, "id >= 55", {"v": "v + 0.25", "g": "upper(g)"}),
         5),
-    "merge_cdc": (_cdc_merge, {"updated": 1, "deleted": 1, "inserted": 1}),
+    "merge_cdc": ("tracked", _cdc_merge,
+                  {"updated": 1, "deleted": 1, "inserted": 1}),
     "merge_update_condition": (
+        "tracked",
         lambda spark, fmt, path: fmt.merge(
             spark, path,
             _src(spark, [(3, 30.5, "x"), (4, 1.0, "y"), (1000, 5.0, "n")]),
             "id", matched_update_condition="v > 10"),
         {"updated": 1, "deleted": 0, "inserted": 1}),
     "merge_update_assignments": (
+        "tracked",
         lambda spark, fmt, path: fmt.merge(
             spark, path, _src(spark, [(6, 2.0), (7, 3.0)], "id long, dv "
                               "double"),
@@ -103,80 +107,116 @@ CASES = {
     # the source keys prune the candidates to the 0-19 file; the NOT
     # MATCHED BY SOURCE sweep also hits the 40-59 file, past them
     "merge_not_matched_by_source": (
+        "tracked",
         lambda spark, fmt, path: fmt.merge(
             spark, path, _src(spark, [(1, 11.0, "a"), (2, 12.0, "b")]),
             "id", not_matched_by_source_delete_condition="id >= 50"),
         {"updated": 2, "deleted": 10, "inserted": 0}),
+    # identity values never come from the source: the post-image keeps
+    # the matched row's value, the insert carries the allocated one
+    "merge_identity_cdc": ("identity", _cdc_merge,
+                           {"updated": 1, "deleted": 1, "inserted": 1}),
+    "merge_schema_evolution": (
+        "tracked",
+        lambda spark, fmt, path: fmt.merge(
+            spark, path,
+            _src(spark, [(3, 3.5, "c", 7), (1001, 1.0, "n", 8)],
+                 SCHEMA + ", w int"),
+            "id", schema_evolution=True),
+        {"updated": 1, "deleted": 0, "inserted": 1}),
+    "merge_column_list_insert": (
+        "tracked",
+        lambda spark, fmt, path: fmt.merge(
+            spark, path, _src(spark, [(8, 80.0), (500, 5.0)],
+                              "id long, v double"),
+            "id", matched_update_assignments={"v": "s.v"},
+            insert_assignments={"id": "s.id", "v": "s.v * 2"}),
+        {"updated": 1, "deleted": 0, "inserted": 1}),
+    "merge_pure_insert": (
+        "tracked",
+        lambda spark, fmt, path: fmt.merge(
+            spark, path, _src(spark, [(1000, 1.0, "p"), (1001, 2.0, "q")]),
+            "id"),
+        {"updated": 0, "deleted": 0, "inserted": 2}),
+    "cdf_without_row_tracking": ("untracked", _cdc_merge,
+                                 {"updated": 1, "deleted": 1,
+                                  "inserted": 1}),
 }
 
+_META = ("_dv_file", "_dv_pos", "_row_id")
 
-def _outcome(spark, fmt, path):
-    rows = sorted((r.id, r.v, r.g, r._row_id) for r in
-                  fmt.read(spark, path, with_row_ids=True).collect())
-    feed = sorted(
-        (r.id, r.v, r.g, r._change_type, r._commit_version, r._row_id)
-        for r in (spark.read.format("txnlog")
-                  .option("readChangeFeed", "true")
-                  .option("rowIds", "true")
-                  .option("startingVersion", "5").load(path)).collect())
-    last = fmt._commits(path)[-1]
-    record = (last["action"], last.get("removed_files"),
-              sorted(k for k in last if k not in ("timestamp",)))
-    return rows, feed, record
+
+def _state(spark, fmt, path, key):
+    """Live rows by ``key``, each with the file holding it."""
+    df = fmt.read(spark, path, _with_pos=True,
+                  with_row_ids=key == "_row_id")
+    rows = [r.asDict() for r in df.collect()]
+    by_key = {r[key]: r for r in rows}
+    assert len(by_key) == len(rows) and None not in by_key
+    return by_key, [c for c in df.columns if c not in _META]
+
+
+def _expected_feed(before, after, cols, tracked):
+    """The change set the diff of two states implies: a key gone is a
+    delete, a key whose values changed an update pre/post-image pair, a
+    new key an insert (whose row id reads NULL in the sidecar: ids are
+    allocated at commit time).  Also returns the files that held a
+    deleted or changed row — exactly the files the op must rewrite."""
+    def row(d, kind, rid):
+        return (*(d.get(c) for c in cols), kind) + ((rid,) if tracked
+                                                    else ())
+
+    feed, files = [], set()
+    for k, b in before.items():
+        a = after.get(k)
+        if a is None:
+            feed.append(row(b, "delete", k))
+        elif any(a.get(c) != b.get(c) for c in cols):
+            feed += [row(b, "update_preimage", k),
+                     row(a, "update_postimage", k)]
+        else:
+            continue
+        files.add(b["_dv_file"])
+    feed += [row(a, "insert", None) for k, a in after.items()
+             if k not in before]
+    return sorted(feed, key=repr), sorted(files)
 
 
 @pytest.mark.parametrize("case", sorted(CASES))
-def test_fused_and_two_pass_commit_identical_state(
-        spark, base_table, tmp_path, monkeypatch, case):
-    from datalake_ingestion_system_spark.sources.txnlog_stream import (
-        TxnLogDataSource)
-
-    spark.dataSource.register(TxnLogDataSource)
-    op, expected = CASES[case]
-    out = {}
-    for shape in SHAPES:
-        with monkeypatch.context() as mp:
-            seen = _use_shape(mp, shape)
-            path = _copy(base_table, tmp_path, shape)
-            fmt = TxnLogFormat(checkpoint_interval=None)
-            assert op(spark, fmt, path) == expected
-            assert [f for f, _n in seen] == [shape == "fused"]
-            out[shape] = _outcome(spark, fmt, path)
-            if case == "merge_not_matched_by_source":
-                # the hot set really reached past the candidate scan
-                assert not set(out[shape][2][1]) <= seen[0][1]
-    rows, feed, record = out["fused"]
-    # equal rows WITH their row ids, change-feed rows, commit record
-    assert rows == out["two_pass"][0]
-    assert feed == out["two_pass"][1]
-    assert record == out["two_pass"][2]
-    assert feed and all(r[-1] is not None for r in rows)
-
-
-def _spy_cache(monkeypatch, spark):
-    """Track DataFrames persisted and not yet unpersisted."""
-    cls = type(spark.range(1))
-    live: set[int] = set()
-    persisted: list[int] = []
-    persist, unpersist = cls.persist, cls.unpersist
-
-    def p(self, *a, **k):
-        live.add(id(self))
-        persisted.append(id(self))
-        return persist(self, *a, **k)
-
-    def u(self, *a, **k):
-        live.discard(id(self))
-        return unpersist(self, *a, **k)
-
-    monkeypatch.setattr(cls, "persist", p)
-    monkeypatch.setattr(cls, "unpersist", u)
-    return live, persisted
+def test_change_feed_matches_state_diff(spark, bases, tmp_path, case):
+    kind, op, expected = CASES[case]
+    tracked = kind == "tracked"
+    key = "_row_id" if tracked else "id"
+    path = _copy(bases(kind), tmp_path, case)
+    fmt = TxnLogFormat(checkpoint_interval=None)
+    before, _cols = _state(spark, fmt, path, key)
+    assert op(spark, fmt, path) == expected
+    after, cols = _state(spark, fmt, path, key)
+    want, hot = _expected_feed(before, after, cols, tracked)
+    last = fmt._commits(path)[-1]
+    reader = (spark.read.format("txnlog").option("readChangeFeed", "true")
+              .option("startingVersion", str(last["version"])))
+    if tracked:
+        reader = reader.option("rowIds", "true")
+    got = [r.asDict() for r in reader.load(path).collect()]
+    assert {r["_commit_version"] for r in got} == {last["version"]}
+    feed = sorted(((*(r[c] for c in cols), r["_change_type"])
+                   + ((r["_row_id"],) if tracked else ()) for r in got),
+                  key=repr)
+    assert feed == want and feed
+    # the commit rewrote exactly the files holding changed rows, and
+    # recorded the sidecar with it
+    assert last["action"] == "rewrite_files"
+    assert last["removed_files"] == hot
+    assert {"cdf_dir", "cdf_files", "data_change", "removed_files",
+            "schema"} <= set(last)
+    assert ("identity_high" in last) == (kind == "identity")
+    assert ("evolved_add" in last) == (case == "merge_schema_evolution")
 
 
 #: verb -> (success, no-op, guard-raise) calls and the error raised;
 #: each no-op names keys the stats cannot rule out, so it still plans
-#: (and, fused, caches) a non-empty candidate scan
+#: and scans a non-empty candidate set
 EXITS = {
     "delete_where": (
         lambda s, f, p: f.delete_where(s, p, "id = 3"),
@@ -200,30 +240,40 @@ EXITS = {
 }
 
 
-@pytest.mark.parametrize("shape", SHAPES)
+#: shape id -> base table kind.  ``fused``: CDF + row tracking, the
+#: only table the deleted fused shape ever cached; ``two_pass``: CDF
+#: without row tracking, which always took the uncached shape
+SHAPES = {"fused": "tracked", "two_pass": "untracked"}
+
+
+@pytest.mark.parametrize("shape", sorted(SHAPES))
 @pytest.mark.parametrize("verb", sorted(EXITS))
-def test_fused_cache_never_outlives_the_operation(
-        spark, base_table, tmp_path, monkeypatch, verb, shape):
-    seen = _use_shape(monkeypatch, shape)
-    live, persisted = _spy_cache(monkeypatch, spark)
-    path = _copy(base_table, tmp_path, "t")
+def test_fused_cache_never_outlives_the_operation(spark, bases, tmp_path,
+                                                  monkeypatch, verb, shape):
+    """A success commits one version, a no-op and a guard raise commit
+    nothing, and no exit persists a DataFrame, on either table shape:
+    the copy-on-write path holds no cache that could outlive it."""
+    persisted: list[int] = []
+    cls = type(spark.range(1))
+    persist = cls.persist
+
+    def spy(self, *a, **k):
+        persisted.append(id(self))
+        return persist(self, *a, **k)
+
+    monkeypatch.setattr(cls, "persist", spy)
+    path = _copy(bases(SHAPES[shape]), tmp_path, "t")
     fmt = TxnLogFormat(checkpoint_interval=None)
     success, noop, guard, err = EXITS[verb]
     version = fmt._commits(path)[-1]["version"]
     assert success(spark, fmt, path)
-    assert not live
     assert fmt._commits(path)[-1]["version"] == version + 1
     assert noop(spark, fmt, path) in (0, {"updated": 0, "deleted": 0,
                                           "inserted": 0})
-    assert not live
     with pytest.raises(err):
         guard(spark, fmt, path)
-    assert not live
     assert fmt._commits(path)[-1]["version"] == version + 1
-    fused = [f for f, _n in seen]
-    assert fused == [shape == "fused"] * 3
-    # a cache is taken exactly when the gate fuses
-    assert len(persisted) == (3 if shape == "fused" else 0)
+    assert persisted == []
 
 
 def _prune_only_frames(monkeypatch):
@@ -245,16 +295,19 @@ def _prune_only_frames(monkeypatch):
     return frames
 
 
-def test_probe_is_narrow_when_fusion_cannot_apply(spark, tmp_path,
-                                                  monkeypatch):
-    """A row-tracked table without the change feed can never fuse, so
-    its candidate scan must not pay the row-id join: the frame the
-    hot-file discovery reads carries no ``_row_id``."""
+@pytest.mark.parametrize("cdf", [False, True], ids=["cdf_off", "cdf_on"])
+def test_candidate_scan_never_carries_row_ids(spark, tmp_path,
+                                              monkeypatch, cdf):
+    """The candidate scan of every verb is narrow, with the change feed
+    on or off: the frame the hot-file discovery reads carries no
+    ``_row_id`` (only the exact hot-file scan pays the row-id join),
+    and the committed rows keep unique ids."""
     path = str(tmp_path / "t")
     fmt = TxnLogFormat(checkpoint_interval=None)
     df = _src(spark, [(i, float(i), "ab"[i % 2]) for i in range(20)])
     fmt.append(df.limit(0), path)
-    fmt.set_properties(spark, path, row_tracking=True)
+    fmt.set_properties(spark, path, row_tracking=True,
+                       change_data_feed=cdf)
     fmt.append(df.coalesce(2), path)
     frames = _prune_only_frames(monkeypatch)
     assert fmt.delete_where(spark, path, "id < 3") == 3
@@ -268,39 +321,27 @@ def test_probe_is_narrow_when_fusion_cannot_apply(spark, tmp_path,
     assert len(ids) == 17 and len(set(ids)) == 17 and None not in ids
 
 
-def test_probe_is_replanned_narrow_when_the_gate_rejects(
-        spark, base_table, tmp_path, monkeypatch):
-    """With CDF + row tracking the scan is planned wide (the only shape
-    the gate can fuse); when the size gate rejects it the probe is
-    re-planned without row ids, and the fused probe keeps them."""
-    for shape, has_ids in (("two_pass", False), ("fused", True)):
-        with monkeypatch.context() as mp:
-            _use_shape(mp, shape)
-            frames = _prune_only_frames(mp)
-            path = _copy(base_table, tmp_path, shape)
-            fmt = TxnLogFormat(checkpoint_interval=None)
-            assert fmt.delete_where(spark, path, "id = 1") == 1
-            assert ("_row_id" in frames[-1]) is has_ids
-
-
-def test_plan_scan_reports_exact_scan_targets(spark, base_table):
+def test_plan_scan_reports_exact_scan_targets(spark, bases):
+    base = bases("tracked")
     fmt = TxnLogFormat(checkpoint_interval=None)
-    snap = fmt._snapshot(base_table)
-    info = snap.plan_scan(base_table, fmt._skip_clauses("id < 10"))
-    assert info.exact is True
-    every = snap.plan_scan(base_table)
+    snap = fmt._snapshot(base)
+
+    def files(plan):
+        return [rf for _i, _e, fs in plan.entries for rf in fs]
+
+    info = snap.plan_scan(base, fmt._skip_clauses("id < 10"))
     # stats pruning drops the 20-39 and 40-59 files
-    assert len(info.paths) == len(every.paths) - 2
-    assert all(p.endswith(".parquet") and os.path.isfile(p)
-               for p in info.paths)
+    assert len(files(info)) == len(files(snap.plan_scan(base))) - 2
+    assert all(rf.endswith(".parquet")
+               and os.path.isfile(os.path.join(base, rf))
+               for rf in files(info))
     # prune-only: the row filter is NOT applied (all 20 rows survive)
-    n = fmt.read(spark, base_table, _plan=info).count()
-    assert n == 20
+    assert fmt.read(spark, base, _plan=info).count() == 20
     # ...while the default read applies it
-    assert fmt.read(spark, base_table, where="id < 10").count() == 10
+    assert fmt.read(spark, base, where="id < 10").count() == 10
 
 
-def test_one_fold_per_operation(spark, base_table, tmp_path, monkeypatch):
+def test_one_fold_per_operation(spark, bases, tmp_path, monkeypatch):
     """Each read and each copy-on-write DML call replays the log ONCE:
     ``Snapshot.fold`` runs one time per operation — the op's own reads
     plan from its snapshot.  Counted apart: the commit's row-id
@@ -310,7 +351,7 @@ def test_one_fold_per_operation(spark, base_table, tmp_path, monkeypatch):
     import sys
 
     from datalake_ingestion_system_spark.sinks import Snapshot
-    path = _copy(base_table, tmp_path, "t")
+    path = _copy(bases("tracked"), tmp_path, "t")
     fmt = TxnLogFormat(checkpoint_interval=None)
     folds: list[str] = []
     fold = Snapshot.fold.__func__

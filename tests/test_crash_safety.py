@@ -45,7 +45,6 @@ def assert_converged(spark, fx):
     assert q.count() == 4  # 1 UNMATCH + 1 OUTOFCONFIG + 2 IRREGULAR
 
 
-@pytest.mark.slow
 def test_crash_after_data_write_then_recover(spark, landing, monkeypatch):
     """Crash before ANY state/quarantine append: re-run reprocesses the same
     files (partition overwrite, not append) and lands state exactly once."""
@@ -61,7 +60,6 @@ def test_crash_after_data_write_then_recover(spark, landing, monkeypatch):
     assert_converged(spark, landing)
 
 
-@pytest.mark.slow
 def test_crash_between_quarantine_and_state(spark, landing, monkeypatch):
     """Crash after the quarantine append but before state: re-run must not
     duplicate quarantine rows (deduped append) and completes state."""
@@ -74,7 +72,6 @@ def test_crash_between_quarantine_and_state(spark, landing, monkeypatch):
     assert_converged(spark, landing)
 
 
-@pytest.mark.slow
 def test_double_state_append_converges(spark, landing):
     """Two racing/replayed runs may both append state; dedup-on-read makes the
     duplicate harmless and a third run sees nothing pending."""
@@ -91,7 +88,6 @@ def test_double_state_append_converges(spark, landing):
     assert df.count() == 5  # partition overwrite kept data exactly-once
 
 
-@pytest.mark.slow
 def test_quarantine_log_bounded_across_reruns(spark, landing):
     """Quarantined files re-route every run (so a config fix picks them up)
     but the log must not grow (ADVICE r1: unbounded duplicate growth)."""
@@ -103,7 +99,6 @@ def test_quarantine_log_bounded_across_reruns(spark, landing):
     assert q.groupBy("FILENAME", "TYPE").count().filter("count > 1").count() == 0
 
 
-@pytest.mark.slow
 def test_quarantine_retry_after_config_fix(spark, landing):
     """An OUTOFCONFIG file becomes ingestable once its table gains a config
     row — exactly because quarantined files are NOT frozen into state."""
@@ -117,7 +112,6 @@ def test_quarantine_retry_after_config_fix(spark, landing):
     assert df.count() == 1
 
 
-@pytest.mark.slow
 def test_run_report_persisted_and_notified(spark, landing):
     """O6: one ingest_runs row per run with the reference's report fields
     (D:183-215), plus the pluggable notifier hook."""
@@ -135,7 +129,6 @@ def test_run_report_persisted_and_notified(spark, landing):
     assert r1.tables_written == ["CUSTOMER_MASTER"]
 
 
-@pytest.mark.slow
 def test_concurrent_run_is_fenced(spark, landing, monkeypatch):
     """VERDICT r2 item 3: two simultaneous runs over one state dir must not
     both reach the quarantine append.  Simulated by launching run B from

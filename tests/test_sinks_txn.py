@@ -1565,7 +1565,10 @@ def test_compact_dv_retires_fully_deleted_file(spark, tmp_path):
     assert fmt._snapshot(path).dvs == []
     # further row-level ops on the rewritten table behave normally
     fmt.delete_where_dv(spark, path, "id = 104")
-    fmt.compact(spark, path)  # full rewrite resets files AND vectors
+    files = fmt.details(path)["num_live_files"]
+    # full rewrite resets files AND vectors, and says how many of each
+    assert fmt.compact(spark, path) == {"rewritten_files": files,
+                                        "retired_dv_entries": 1}
     assert fmt._snapshot(path).removed_files == set()
     assert sorted(r.id for r in fmt.read(spark, path).collect()) \
         == [100, 101, 102, 103]

@@ -970,15 +970,17 @@ def test_sql_router_accepts_comments(spark, cat):
     # multi-line: leading comment line, inline comments in the middle
     before = sorted(map(tuple, tables.table(spark, name).collect()))
     head = cat["fmt"]._commits(cat["path"])[-1]["version"]
+    files = cat["fmt"].details(cat["path"])["num_live_files"]
+    assert files > 0
     n = tables.sql(spark, f"""
         -- routed maintenance below
         OPTIMIZE {name} /* full table,
            nested /* inner */ bracket */
         -- done
     """)
-    # the full-table compact ran (its result is None: only the targeted
-    # forms return a file-count dict) and moved bytes, not rows
-    assert n is None
+    # the full-table compact ran, rewrote every live file (the table
+    # holds no deletion vectors) and moved bytes, not rows
+    assert n == {"rewritten_files": files, "retired_dv_entries": 0}
     last = cat["fmt"]._commits(cat["path"])[-1]
     assert (last["version"], last["action"]) == (head + 1, "replace_all")
     assert sorted(map(tuple, tables.table(spark, name).collect())) == before
